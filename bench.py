@@ -184,7 +184,9 @@ def compact_line(detail: dict, queries_n: int, budget: int = 1700) -> str:
         "unit": "sec",
         "cold_value": detail["cold_value"],
         "queries_n": queries_n,
-        "omitted_n": 0,  # placeholder so the budget check reserves room
+        # placeholder at the widest value omitted_n can take (it counts
+        # at most queries_n entries), so the budget check reserves its room
+        "omitted_n": queries_n,
         "sf": detail["sf"],
         "queries": {},
     }

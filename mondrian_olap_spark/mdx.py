@@ -25,6 +25,7 @@ Parse errors raise :class:`MdxError` carrying the offending fragment
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from .members import format_name, quote_segment
@@ -169,34 +170,6 @@ _SET_FUNCTIONS = {
 
 _AXIS_NAMES = {"columns": 0, "rows": 1, "pages": 2, "chapters": 3, "sections": 4}
 
-#: VBA scalar-function names → Spark builtins (names Spark already has —
-#: UCase/LCase/InStr/Chr/Space/Len — pass through untouched)
-_VBA_FN_ALIASES = {
-    "sqr": "sqrt",
-    "mid": "substring",
-    "atn": "atan",
-    "asc": "ascii",
-    "ascb": "ascii",
-    "ascw": "ascii",
-    "chrb": "chr",
-    "chrw": "chr",
-    "cdbl": "double",
-    # DateSerial(y, m, d) → DATE (mondrian_test.rb:526 CoalesceEmpty
-    # fallback; jar!mondrian/olap/fun/vba/Vba dateSerial)
-    "dateserial": "make_date",
-    # breadth pass (jar!mondrian/olap/fun/vba/Vba method list):
-    "strreverse": "reverse",
-    "datevalue": "to_date",
-    "cdate": "to_timestamp",
-    "formatnumber": "format_number",
-    # round-8 breadth (Vba.uCase/lCase, Excel.fact — Space/LTrim/RTrim/
-    # Replace/Degrees/Radians/Acosh/Asinh/Atanh need no alias: the Spark
-    # builtin already carries the VBA/Excel name)
-    "ucase": "upper",
-    "lcase": "lower",
-    "fact": "factorial",
-}
-
 #: VBA DatePart/DateAdd/DateDiff interval literals → Spark extract
 #: function / timestampadd-timestampdiff unit (Vba.datePart/dateAdd/
 #: dateDiff interval grammar: yyyy q m y d w ww h n s)
@@ -256,328 +229,322 @@ _SETSTAT_STRICT = {
 }
 
 
-def _split_set_args(inner: str) -> list[str]:
-    """Split on TOP-LEVEL commas, aware of (), {} nesting AND []-quoted
-    identifier spans (member names may legally contain commas)."""
+# ------------------------------------------------- calls and their arguments
+#: spans a scan steps over whole: ``[...]`` identifiers (``]]`` escapes a
+#: ``]`` — the ``_TOKEN_RE`` bracket rule) and ``'...'`` string literals
+_OPAQUE = r"\[(?:[^\]]|\]\])*\]|'(?:[^']|'')*'"
+_ARG_RE = re.compile(_OPAQUE + r"|[(){},]")
+_CALL_RE = re.compile(_OPAQUE + r"|\b([A-Za-z_]\w*+)\s*\(|[()]")
+
+
+def split_args(inner: str) -> list[str]:
+    """Split a call's argument text on its TOP-LEVEL commas — not inside
+    ``()``/``{}`` nesting, ``[...]`` identifiers (member names may contain
+    commas) or string literals.  Blank text has no arguments."""
+    if not inner.strip():
+        return []
     args: list[str] = []
-    buf: list[str] = []
-    depth, inbr = 0, False
-    for ch in inner:
-        if inbr:
-            buf.append(ch)
-            if ch == "]":
-                inbr = False
-            continue
-        if ch == "[":
-            inbr = True
-            buf.append(ch)
-            continue
-        if ch in "{(":
+    depth = start = 0
+    for m in _ARG_RE.finditer(inner):
+        tok = m.group()
+        if tok in ("(", "{"):
             depth += 1
-        elif ch in "})":
+        elif tok in (")", "}"):
             depth -= 1
-        if ch == "," and depth == 0:
-            args.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-    args.append("".join(buf))
-    return [a.strip() for a in args]
+        elif tok == "," and depth == 0:
+            args.append(inner[start : m.start()].strip())
+            start = m.end()
+    args.append(inner[start:].strip())
+    return args
 
 
-def _split_top_args(inner: str) -> list[str]:
-    """Split a call's argument text on TOP-LEVEL commas (paren-aware).
-    Safe against commas inside string literals because callers run after
-    the literal-masking pass."""
-    args: list[str] = []
-    depth, start = 0, 0
-    for i, ch in enumerate(inner):
-        if ch == "(":
+def rewrite_calls(text: str, table: dict, *ctx) -> str:
+    """The call rewriter: each ``NAME(args)`` whose lower-case NAME is a
+    ``table`` key becomes ``table[name](args, *ctx)``, where ``args`` is
+    the :func:`split_args` list with the arguments' own calls already
+    rewritten; a ``None`` result keeps the call as written.  A
+    replacement is never rescanned, so a builder may emit any text — a
+    call of a table name included.  ``[...]`` identifiers and string
+    literals are never looked inside."""
+    return _scan(text, 0, table, ctx, False)[0]
+
+
+def _scan(text: str, pos: int, table: dict, ctx: tuple, nested: bool):
+    """Rewrite ``text`` from ``pos`` to its end or, when ``nested``, to the
+    first unbalanced ``)`` → (rewritten text, index where the scan
+    stopped)."""
+    out: list[str] = []
+    depth, last = 0, pos
+    while (m := _CALL_RE.search(text, pos)) is not None:
+        pos = m.end()
+        name = m.group(1)
+        fn = table.get(name.lower()) if name else None
+        if fn is not None:
+            inner, close = _scan(text, pos, table, ctx, True)
+            if close == len(text):  # unbalanced: not a call
+                out.append(text[last:pos] + inner)
+                return "".join(out), close
+            new = fn(split_args(inner), *ctx)
+            if new is None:
+                out.append(text[last:pos] + inner + ")")
+            else:
+                out.append(text[last : m.start()] + new)
+            pos = last = close + 1
+        elif m.group()[-1] == "(":
             depth += 1
-        elif ch == ")":
+        elif m.group() == ")":
+            if nested and depth == 0:
+                out.append(text[last : m.start()])
+                return "".join(out), m.start()
             depth -= 1
-        elif ch == "," and depth == 0:
-            args.append(inner[start:i])
-            start = i + 1
-    args.append(inner[start:])
-    return [a.strip() for a in args]
+    out.append(text[last:])
+    return "".join(out), len(text)
 
 
-def _vba_strcomp(inner: str):
-    """StrComp(a, b) → -1/0/1 (Vba.strComp, binary compare; the optional
-    third compare-mode argument is accepted and ignored — binary is the
-    VBA default)."""
-    args = _split_top_args(inner)
-    if len(args) not in (2, 3):
+def _call_args(text: str, name: str) -> list[str] | None:
+    """The arguments when ``text`` is exactly one ``name(...)`` call."""
+    m = re.match(rf"(?i)\s*{name}\s*\(", text)
+    if m is None:
         return None
-    a, b = args[0], args[1]
+    inner, close = _scan(text, m.end(), {}, (), True)
+    if close == len(text) or text[close + 1 :].strip():
+        return None
+    return split_args(inner)
+
+
+# ------------------------------------------------ VBA / Excel function table
+# (jar!mondrian/olap/fun/vba/Vba.class and Excel.class; SURVEY.md §2.7).
+# Functions Spark already has under the VBA/Excel name and meaning —
+# Len/Left/Right/Replace/Trim/LTrim/RTrim/Space/Chr, InStr(h, n), Round,
+# Power and the trig/log family (Degrees/Radians/Acosh/Asinh/Atanh …) —
+# are not in the table: they reach Spark as written.
+@dataclass(frozen=True)
+class _Fn:
+    """One table entry: the argument counts it accepts (``hi`` None = no
+    upper bound) and the builder lowering the split arguments to Spark
+    SQL.  A call outside the arity, or one the builder declines (None),
+    stays as written — Spark may have a same-named builtin for that form.
+    ``literal``: the first argument must be a string literal, passed to
+    the builder as its unquoted lower-case value (None when it is not
+    one)."""
+
+    lo: int
+    hi: int | None
+    build: Callable[..., str | None]
+    literal: bool = False
+
+    def __call__(self, args: list[str], literals: list[str]) -> str | None:
+        if len(args) < self.lo or (self.hi is not None and len(args) > self.hi):
+            return None
+        if self.literal:
+            m = re.fullmatch(r"\x00(\d+)\x00", args[0])
+            lit = _unquote(literals[int(m.group(1))]).lower() if m else None
+            args = [lit, *args[1:]]
+        return self.build(*args)
+
+
+def _rename(spark_name: str):
+    """A function Spark has under another name."""
+    return lambda *args: f"{spark_name}({', '.join(args)})"
+
+
+def _wrap(head: str, tail: str):
+    """A one-argument function lowered to ``head + arg + tail``."""
+    return lambda x: head + x + tail
+
+
+def _paren(*args: str) -> list[str]:
+    return [f"({a})" for a in args]
+
+
+def _strcomp(a, b, _compare=None):
+    """StrComp(a, b[, compare]) → -1/0/1 (Vba.strComp, binary compare; the
+    compare mode is accepted and ignored — binary is the VBA default)."""
     return (
         f"(case when ({a}) < ({b}) then -1 "
         f"when ({a}) = ({b}) then 0 else 1 end)"
     )
 
 
-def _vba_string(inner: str):
-    """String(n, char) — char repeated n times (Vba.string; only the
-    first character of a longer string counts, per VBA)."""
-    args = _split_top_args(inner)
-    if len(args) != 2:
-        return None
-    return f"repeat(substring(({args[1]}), 1, 1), cast(({args[0]}) as int))"
+def _string(n, char):
+    """String(n, char) — char repeated n times (Vba.string; only the first
+    character of a longer string counts, per VBA)."""
+    return f"repeat(substring(({char}), 1, 1), cast(({n}) as int))"
 
 
-def _excel_mod(inner: str):
+def _mod(n, d):
     """Excel MOD(n, d): FLOORED modulo — the result takes the DIVISOR's
     sign (Excel.mod; MOD(-3, 2) = 1), unlike Spark's %/mod (dividend's
     sign)."""
-    args = _split_top_args(inner)
-    if len(args) != 2:
-        return None
-    n, d = args
     return f"(({n}) - ({d}) * floor(({n}) / ({d})))"
 
 
-def _excel_atan2(inner: str):
+def _atan2(x, y):
     """Excel ATAN2(x, y) takes (x, y) — the REVERSE of the Java/Spark
-    atan2(y, x) convention (Excel.atan2 swaps before delegating).  Emits
-    a sentinel name so the recursive rewriter terminates (the output
-    would otherwise re-match and re-swap forever); the caller restores
-    the real name after the pass."""
-    args = _split_top_args(inner)
-    if len(args) != 2:
-        return None
-    return f"__atan2_swapped__(({args[1]}), ({args[0]}))"
+    atan2(y, x) convention (Excel.atan2 swaps before delegating)."""
+    return f"atan2(({y}), ({x}))"
 
 
-def _vba_sln(inner: str):
+def _sln(c, s, life):
     """SLN(cost, salvage, life) — straight-line depreciation (Vba.sLN)."""
-    args = _split_top_args(inner)
-    if len(args) != 3:
-        return None
-    c, s, life = args
     return f"((({c}) - ({s})) / ({life}))"
 
 
-def _vba_syd(inner: str):
+def _syd(c, s, life, p):
     """SYD(cost, salvage, life, period) — sum-of-years'-digits
     depreciation (Vba.sYD)."""
-    args = _split_top_args(inner)
-    if len(args) != 4:
-        return None
-    c, s, life, p = args
     return (
         f"((({c}) - ({s})) * (({life}) - ({p}) + 1) * 2 "
         f"/ (({life}) * (({life}) + 1)))"
     )
 
 
-def _vba_annuity(name: str):
-    """VBA financial functions (Vba.pmt/fV/pV/nPer/iPmt/pPmt/dDB —
-    standard time-value-of-money closed forms with the VBA sign
-    convention: outgoing payments are negative).  Optional trailing args
-    default to fv/pv = 0, type = 0 (payments at period END), DDB factor
-    = 2; rate = 0 falls back to the linear form via CASE.  IPmt composes
-    the Pmt and FV forms (balance after per-1 payments × rate); PPmt =
-    Pmt − IPmt; Rate solves f(r)=0 by a 40-step Newton fold (see its
-    branch).  IRR/MIRR/NPV stay unimplemented (array cashflow inputs —
-    the MDX scalar surface has no natural encoding); they raise at
-    translation time via the normal unknown-function path."""
-
-    def repl(inner: str):
-        args = [f"({a})" for a in _split_top_args(inner)]
-        if name == "pmt":
-            if len(args) not in (3, 4, 5):
-                return None
-            rate, nper, pv = args[:3]
-            fv = args[3] if len(args) > 3 else "(0)"
-            typ = args[4] if len(args) > 4 else "(0)"
-            t = f"power(1 + {rate}, {nper})"
-            return (
-                f"(case when {rate} = 0 then -({pv} + {fv}) / {nper} "
-                f"else -({fv} + {pv} * {t}) * {rate} "
-                f"/ ((1 + {rate} * {typ}) * ({t} - 1)) end)"
-            )
-        if name == "fv":
-            if len(args) not in (3, 4, 5):
-                return None
-            rate, nper, pmt = args[:3]
-            pv = args[3] if len(args) > 3 else "(0)"
-            typ = args[4] if len(args) > 4 else "(0)"
-            t = f"power(1 + {rate}, {nper})"
-            return (
-                f"(case when {rate} = 0 then -({pv} + {pmt} * {nper}) "
-                f"else -({pv} * {t} + {pmt} * (1 + {rate} * {typ}) "
-                f"* ({t} - 1) / {rate}) end)"
-            )
-        if name == "pv":
-            if len(args) not in (3, 4, 5):
-                return None
-            rate, nper, pmt = args[:3]
-            fv = args[3] if len(args) > 3 else "(0)"
-            typ = args[4] if len(args) > 4 else "(0)"
-            t = f"power(1 + {rate}, {nper})"
-            return (
-                f"(case when {rate} = 0 then -({fv} + {pmt} * {nper}) "
-                f"else -({fv} + {pmt} * (1 + {rate} * {typ}) "
-                f"* ({t} - 1) / {rate}) / {t} end)"
-            )
-        if name == "nper":
-            if len(args) not in (3, 4, 5):
-                return None
-            rate, pmt, pv = args[:3]
-            fv = args[3] if len(args) > 3 else "(0)"
-            typ = args[4] if len(args) > 4 else "(0)"
-            adj = f"({pmt} * (1 + {rate} * {typ}))"
-            return (
-                f"(case when {rate} = 0 then -({pv} + {fv}) / {pmt} "
-                f"else ln(({adj} - {fv} * {rate}) "
-                f"/ ({adj} + {pv} * {rate})) / ln(1 + {rate}) end)"
-            )
-        if name == "ipmt":
-            # IPmt(rate, per, nper, pv[, fv[, type]]): interest share of
-            # period `per`'s payment = the balance after per-1 payments
-            # (an FV) times the rate; a begin-of-period payment (type=1)
-            # accrues no interest in period 1 and discounts one period
-            # otherwise (Vba.iPmt composes pmt+fv exactly this way)
-            if len(args) not in (4, 5, 6):
-                return None
-            rate, per, nper, pv = args[:4]
-            fv = args[4] if len(args) > 4 else "(0)"
-            typ = args[5] if len(args) > 5 else "(0)"
-            pmt_txt = _vba_annuity("pmt")(
-                f"{rate}, {nper}, {pv}, {fv}, {typ}"
-            )
-            bal = _vba_annuity("fv")(
-                f"{rate}, ({per}) - 1, {pmt_txt}, {pv}, {typ}"
-            )
-            return (
-                f"(case when {typ} = 1 and {per} = 1 then 0.0 "
-                f"when {typ} = 1 then {bal} * {rate} / (1 + {rate}) "
-                f"else {bal} * {rate} end)"
-            )
-        if name == "ppmt":
-            # PPmt = Pmt − IPmt (Vba.pPmt)
-            if len(args) not in (4, 5, 6):
-                return None
-            rate, per, nper, pv = args[:4]
-            fv = args[4] if len(args) > 4 else "(0)"
-            typ = args[5] if len(args) > 5 else "(0)"
-            pmt_txt = _vba_annuity("pmt")(
-                f"{rate}, {nper}, {pv}, {fv}, {typ}"
-            )
-            ipmt_txt = _vba_annuity("ipmt")(
-                f"{rate}, {per}, {nper}, {pv}, {fv}, {typ}"
-            )
-            return f"({pmt_txt} - {ipmt_txt})"
-        if name == "rate":
-            # Rate(nper, pmt, pv[, fv[, type[, guess]]]) (Vba.rate): the
-            # annuity rate has no closed form — solve f(r)=0 by 40 Newton
-            # steps expressed as ONE fold over a constant sequence
-            # (Spark's `aggregate` higher-order function), so the
-            # iteration stays a scalar expression inside codegen: no UDF,
-            # no driver loop.  f(r) = pv*t + pmt*(1+r*type)*(t-1)/r + fv
-            # with t=(1+r)^nper; 40 steps from the VBA default guess 0.1
-            # converge to double precision for any realistic annuity.
-            if len(args) not in (3, 4, 5, 6):
-                return None
-            nper, pmt, pv = args[:3]
-            fv = args[3] if len(args) > 3 else "(0)"
-            typ = args[4] if len(args) > 4 else "(0)"
-            guess = args[5] if len(args) > 5 else "(0.1)"
-            t = f"power(1 + nr, {nper})"
-            t1 = f"power(1 + nr, ({nper}) - 1)"
-            f_r = (
-                f"({pv} * {t} + {pmt} * (1 + nr * {typ}) "
-                f"* ({t} - 1) / nr + {fv})"
-            )
-            fp_r = (
-                f"(({nper}) * {pv} * {t1} "
-                f"+ {pmt} * {typ} * ({t} - 1) / nr "
-                f"+ {pmt} * (1 + nr * {typ}) "
-                f"* (({nper}) * {t1} * nr - ({t} - 1)) / (nr * nr))"
-            )
-            return (
-                f"aggregate(sequence(1, 40), cast({guess} as double), "
-                f"(nr, ii) -> nr - {f_r} / {fp_r})"
-            )
-        if name == "ddb":
-            # DDB(cost, salvage, life, period[, factor=2]): declining-
-            # balance depreciation for ONE period, floored so the book
-            # value never depreciates below salvage (Vba.dDB closed form)
-            if len(args) not in (4, 5):
-                return None
-            c, s, life, p = args[:4]
-            factor = args[4] if len(args) > 4 else "(2)"
-            r = f"({factor} / {life})"
-            book = f"({c} * power(1 - {r}, ({p}) - 1))"
-            return (
-                f"(least({book} * {r}, "
-                f"greatest({book} - ({s}), 0.0)))"
-            )
-        return None
-
-    return repl
+# VBA financial functions (Vba.pmt/fV/pV/nPer/iPmt/pPmt/rate/dDB —
+# standard time-value-of-money closed forms with the VBA sign convention:
+# outgoing payments are negative).  Optional trailing args default to
+# fv/pv = 0, type = 0 (payments at period END), DDB factor = 2; rate = 0
+# falls back to the linear form via CASE.  IRR/MIRR/NPV stay
+# unimplemented (array cashflow inputs — the MDX scalar surface has no
+# natural encoding); they raise at translation time via the normal
+# unknown-function path.
+def _pmt(rate, nper, pv, fv="0", typ="0"):
+    rate, nper, pv, fv, typ = _paren(rate, nper, pv, fv, typ)
+    t = f"power(1 + {rate}, {nper})"
+    return (
+        f"(case when {rate} = 0 then -({pv} + {fv}) / {nper} "
+        f"else -({fv} + {pv} * {t}) * {rate} "
+        f"/ ((1 + {rate} * {typ}) * ({t} - 1)) end)"
+    )
 
 
-def _vba_choose(inner: str):
+def _fv(rate, nper, pmt, pv="0", typ="0"):
+    rate, nper, pmt, pv, typ = _paren(rate, nper, pmt, pv, typ)
+    t = f"power(1 + {rate}, {nper})"
+    return (
+        f"(case when {rate} = 0 then -({pv} + {pmt} * {nper}) "
+        f"else -({pv} * {t} + {pmt} * (1 + {rate} * {typ}) "
+        f"* ({t} - 1) / {rate}) end)"
+    )
+
+
+def _pv(rate, nper, pmt, fv="0", typ="0"):
+    rate, nper, pmt, fv, typ = _paren(rate, nper, pmt, fv, typ)
+    t = f"power(1 + {rate}, {nper})"
+    return (
+        f"(case when {rate} = 0 then -({fv} + {pmt} * {nper}) "
+        f"else -({fv} + {pmt} * (1 + {rate} * {typ}) "
+        f"* ({t} - 1) / {rate}) / {t} end)"
+    )
+
+
+def _nper(rate, pmt, pv, fv="0", typ="0"):
+    rate, pmt, pv, fv, typ = _paren(rate, pmt, pv, fv, typ)
+    adj = f"({pmt} * (1 + {rate} * {typ}))"
+    return (
+        f"(case when {rate} = 0 then -({pv} + {fv}) / {pmt} "
+        f"else ln(({adj} - {fv} * {rate}) "
+        f"/ ({adj} + {pv} * {rate})) / ln(1 + {rate}) end)"
+    )
+
+
+def _ipmt(rate, per, nper, pv, fv="0", typ="0"):
+    """IPmt(rate, per, nper, pv[, fv[, type]]): the interest share of
+    period ``per``'s payment = the balance after per-1 payments (an FV)
+    times the rate; a begin-of-period payment (type=1) accrues no
+    interest in period 1 and discounts one period otherwise (Vba.iPmt
+    composes pmt+fv exactly this way)."""
+    rate, per, nper, pv, fv, typ = _paren(rate, per, nper, pv, fv, typ)
+    bal = _fv(rate, f"({per}) - 1", _pmt(rate, nper, pv, fv, typ), pv, typ)
+    return (
+        f"(case when {typ} = 1 and {per} = 1 then 0.0 "
+        f"when {typ} = 1 then {bal} * {rate} / (1 + {rate}) "
+        f"else {bal} * {rate} end)"
+    )
+
+
+def _ppmt(rate, per, nper, pv, fv="0", typ="0"):
+    """PPmt = Pmt − IPmt (Vba.pPmt)."""
+    rate, per, nper, pv, fv, typ = _paren(rate, per, nper, pv, fv, typ)
+    pmt = _pmt(rate, nper, pv, fv, typ)
+    return f"({pmt} - {_ipmt(rate, per, nper, pv, fv, typ)})"
+
+
+def _rate(nper, pmt, pv, fv="0", typ="0", guess="0.1"):
+    """Rate(nper, pmt, pv[, fv[, type[, guess]]]) (Vba.rate): the annuity
+    rate has no closed form — solve f(r)=0 by 40 Newton steps expressed
+    as ONE fold over a constant sequence (Spark's ``aggregate``
+    higher-order function), so the iteration stays a scalar expression
+    inside codegen: no UDF, no driver loop.  f(r) = pv*t +
+    pmt*(1+r*type)*(t-1)/r + fv with t=(1+r)^nper; 40 steps from the VBA
+    default guess 0.1 converge to double precision for any realistic
+    annuity."""
+    nper, pmt, pv, fv, typ, guess = _paren(nper, pmt, pv, fv, typ, guess)
+    t = f"power(1 + nr, {nper})"
+    t1 = f"power(1 + nr, ({nper}) - 1)"
+    f_r = f"({pv} * {t} + {pmt} * (1 + nr * {typ}) * ({t} - 1) / nr + {fv})"
+    fp_r = (
+        f"(({nper}) * {pv} * {t1} "
+        f"+ {pmt} * {typ} * ({t} - 1) / nr "
+        f"+ {pmt} * (1 + nr * {typ}) "
+        f"* (({nper}) * {t1} * nr - ({t} - 1)) / (nr * nr))"
+    )
+    return (
+        f"aggregate(sequence(1, 40), cast({guess} as double), "
+        f"(nr, ii) -> nr - {f_r} / {fp_r})"
+    )
+
+
+def _ddb(c, s, life, p, factor="2"):
+    """DDB(cost, salvage, life, period[, factor=2]): declining-balance
+    depreciation for ONE period, floored so the book value never
+    depreciates below salvage (Vba.dDB closed form)."""
+    c, s, life, p, factor = _paren(c, s, life, p, factor)
+    r = f"({factor} / {life})"
+    book = f"({c} * power(1 - {r}, ({p}) - 1))"
+    return f"(least({book} * {r}, greatest({book} - ({s}), 0.0)))"
+
+
+def _choose(index, *values):
     """Choose(index, v1, v2, ...) (Vba.choose): 1-based selection, NULL
     out of range.  The index coerces the VBA way (CInt — banker's
-    rounding); Spark ``elt`` already returns NULL past either end."""
-    args = _split_top_args(inner)
-    if len(args) < 2:
-        return None
-    rest = ", ".join(args[1:])
-    # get() is 0-based and NULL out of range on either side — elt()
-    # throws under Spark 4's ANSI default, which is not the VBA contract
-    return f"get(array({rest}), int(bround({args[0]})) - 1)"
+    rounding).  get() is 0-based and NULL out of range on either side —
+    elt() throws under Spark 4's ANSI default, which is not the VBA
+    contract."""
+    return f"get(array({', '.join(values)}), int(bround({index})) - 1)"
 
 
-def _vba_switch(inner: str):
+def _switch(*args):
     """Switch(cond1, v1[, cond2, v2, ...]) (Vba.switch): first true
     condition wins; NULL when none match — a CASE chain."""
-    args = _split_top_args(inner)
-    if len(args) < 2 or len(args) % 2 != 0:
+    if len(args) % 2:
         return None
     whens = " ".join(
-        f"WHEN ({args[i]}) THEN ({args[i + 1]})"
-        for i in range(0, len(args), 2)
+        f"WHEN ({c}) THEN ({v})" for c, v in zip(args[::2], args[1::2])
     )
     return f"(CASE {whens} END)"
 
 
-def _vba_instr(inner: str):
-    """InStr([start, ]haystack, needle) (Vba.inStr): 1-based position,
-    0 when absent.  The 3-arg form maps to Spark ``locate(needle,
-    haystack, start)`` — note VBA's argument order differs from both
-    Spark builtins."""
-    args = _split_top_args(inner)
-    # 2-arg form: Spark's own instr(haystack, needle) IS the VBA
-    # semantics — leave untouched (None also keeps the rewrite recursion
-    # convergent: the output may not contain a bare instr( call).
-    # The 4-arg compare argument is accepted and ignored (binary
-    # compare — the _vba_strcomp precedent); rejecting it would turn a
-    # legal VBA call into an opaque Spark arity error.
-    if len(args) in (3, 4):
-        return f"locate({args[2]}, {args[1]}, cast(({args[0]}) as int))"
-    return None
+def _instr(start, h, n, _compare=None):
+    """InStr(start, haystack, needle[, compare]) (Vba.inStr): 1-based
+    position, 0 when absent — Spark ``locate(needle, haystack, start)``;
+    VBA's argument order differs from both Spark builtins.  The 2-arg
+    form is outside the arity: Spark's own instr(haystack, needle) IS the
+    VBA semantics.  The compare argument is accepted and ignored (binary
+    compare, as in StrComp)."""
+    return f"locate({n}, {h}, cast(({start}) as int))"
 
 
-def _vba_instrrev(inner: str):
-    """InStrRev(haystack, needle[, start[, compare]]) (Vba.inStrRev):
-    the position of the LAST occurrence, 0 when absent — found via the
+def _instrrev(h, n, start=None, _compare=None):
+    """InStrRev(haystack, needle[, start[, compare]]) (Vba.inStrRev): the
+    position of the LAST occurrence, 0 when absent — found via the
     reversed-string instr, re-based to the forward 1-index.  ``start``
     bounds the backward search (the match must END at or before it; the
-    VBA -1 sentinel means the whole string); ``compare`` is accepted
-    and ignored (binary compare, the _vba_strcomp precedent)."""
-    args = _split_top_args(inner)
-    if len(args) not in (2, 3, 4):
-        return None
-    h, n = args[0], args[1]
-    if len(args) >= 3:
-        s = args[2]
+    VBA -1 sentinel means the whole string); ``compare`` is accepted and
+    ignored (binary compare, as in StrComp)."""
+    if start is not None:
         h = (
-            f"(CASE WHEN ({s}) = -1 THEN ({h}) "
-            f"ELSE substring(({h}), 1, cast(({s}) as int)) END)"
+            f"(CASE WHEN ({start}) = -1 THEN ({h}) "
+            f"ELSE substring(({h}), 1, cast(({start}) as int)) END)"
         )
     return (
         f"(CASE WHEN instr(({h}), ({n})) = 0 THEN 0 "
@@ -586,24 +553,20 @@ def _vba_instrrev(inner: str):
     )
 
 
-def _vba_strconv(inner: str):
+def _strconv(s, mode):
     """StrConv(s, conversion) (Vba.strConv): 1 = vbUpperCase,
     2 = vbLowerCase, 3 = vbProperCase; other modes (unicode/byte
     conversions) are charset operations with no analytic meaning here."""
-    args = _split_top_args(inner)
-    if len(args) != 2:
-        return None
-    mode = args[1].strip()
     fn = {"1": "upper", "2": "lower", "3": "initcap"}.get(mode)
     if fn is None:
         raise MdxError(
             f"StrConv: conversion must be a literal 1 (upper), 2 (lower) "
             f"or 3 (proper case), got {mode!r}"
         )
-    return f"{fn}({args[0]})"
+    return f"{fn}({s})"
 
 
-def _vba_partition(inner: str):
+def _partition(num, start, stop, interval):
     """Partition(number, start, stop, interval) (Vba.partition): the
     "lower:upper" range label the number falls into, both sides
     right-aligned to ``len(str(stop)) + 1`` characters (the VBA layout
@@ -612,14 +575,8 @@ def _vba_partition(inner: str):
     ``stop+1`` and the upper side is blank.  start/stop/interval must
     be integer literals — the label WIDTH is a formatting constant the
     rewrite must fold."""
-    args = _split_top_args(inner)
-    if len(args) != 4:
-        return None
-    num = args[0]
     try:
-        start = int(args[1].strip())
-        stop = int(args[2].strip())
-        interval = int(args[3].strip())
+        start, stop, interval = int(start), int(stop), int(interval)
     except ValueError:
         raise MdxError(
             "Partition: start, stop and interval must be integer literals"
@@ -643,27 +600,19 @@ def _vba_partition(inner: str):
     )
 
 
-def _vba_str(inner: str):
-    """Str(number) (Vba.str_): stringify with VBA's sign slot — a
-    leading space for non-negative values, the minus sign otherwise."""
-    args = _split_top_args(inner)
-    if len(args) != 1:
-        return None
-    x = args[0]
+def _str(x):
+    """Str(number) (Vba.str_): stringify with VBA's sign slot — a leading
+    space for non-negative values, the minus sign otherwise."""
     return (
         f"(CASE WHEN ({x}) < 0 THEN cast(({x}) as string) "
         f"ELSE concat(' ', cast(({x}) as string)) END)"
     )
 
 
-def _vba_timeserial(inner: str):
+def _timeserial(h, m, s):
     """TimeSerial(hour, minute, second) (Vba.timeSerial): a time-of-day
     timestamp on the VBA zero date (1899-12-30), with out-of-range parts
     carrying over exactly as VBA does (TimeSerial(0, 90, 0) = 01:30)."""
-    args = _split_top_args(inner)
-    if len(args) != 3:
-        return None
-    h, m, s = args
     return (
         f"timestampadd(SECOND, cast(({h}) as int) * 3600 + "
         f"cast(({m}) as int) * 60 + cast(({s}) as int), "
@@ -671,33 +620,25 @@ def _vba_timeserial(inner: str):
     )
 
 
-def _vba_weekday(inner: str):
+def _weekday(d, fdw=None):
     """Weekday(date[, firstdayofweek]) (Vba.weekday): 1-arg form is the
     vbSunday default — exactly Spark's dayofweek numbering (1=Sunday..
     7=Saturday).  The 2-arg form rotates so the result is 1 when the day
     IS firstdayofweek: ``pmod(dayofweek(d) - fdw, 7) + 1``.  The
     vbUseSystemDayOfWeek sentinel (literal 0) resolves to vbSunday, the
     reference's default locale."""
-    args = _split_top_args(inner)
-    if len(args) not in (1, 2):
-        return None
-    if len(args) == 1:
-        return f"dayofweek({args[0]})"
-    fdw = args[1].strip()
-    if fdw == "0":  # vbUseSystemDayOfWeek → default-locale Sunday
+    if fdw is None:
+        return f"dayofweek({d})"
+    if fdw == "0":
         fdw = "1"
-    return f"(pmod(dayofweek({args[0]}) - ({fdw}), 7) + 1)"
+    return f"(pmod(dayofweek({d}) - ({fdw}), 7) + 1)"
 
 
-def _vba_format_datetime(inner: str):
+def _format_datetime(d, fmt="0"):
     """FormatDateTime(date[, namedformat]) (Vba.formatDateTime): named
     formats 1 = long date, 2 = short date, 3 = long time, 4 = short
     time, 0/default = general (short date + time).  US-English
     patterns, matching the reference's default-locale Java DateFormat."""
-    args = _split_top_args(inner)
-    if len(args) not in (1, 2):
-        return None
-    fmt = args[1].strip() if len(args) == 2 else "0"
     pattern = {
         "0": "M/d/yyyy h:mm:ss a",
         "1": "EEEE, MMMM d, yyyy",
@@ -707,96 +648,179 @@ def _vba_format_datetime(inner: str):
     }.get(fmt)
     if pattern is None:
         raise MdxError(
-            f"FormatDateTime: named format must be a literal 0-4, "
-            f"got {fmt!r}"
+            f"FormatDateTime: named format must be a literal 0-4, got {fmt!r}"
         )
     if fmt == "0":
         # VBA general date omits the time portion when it is midnight
         # (the common DateSerial case) — Java DateFormat.getDateTime
         # renders it, VBA does not; match VBA
-        a = args[0]
         return (
-            f"(CASE WHEN cast(({a}) as timestamp) = "
-            f"cast(cast(({a}) as date) as timestamp) "
-            f"THEN date_format(({a}), 'M/d/yyyy') "
-            f"ELSE date_format(({a}), '{pattern}') END)"
+            f"(CASE WHEN cast(({d}) as timestamp) = "
+            f"cast(cast(({d}) as date) as timestamp) "
+            f"THEN date_format(({d}), 'M/d/yyyy') "
+            f"ELSE date_format(({d}), '{pattern}') END)"
         )
-    return f"date_format(({args[0]}), '{pattern}')"
+    return f"date_format(({d}), '{pattern}')"
 
 
-def _vba_format_percent(inner: str):
-    """FormatPercent(x[, digits]) (Vba.formatPercent; digits default 2,
-    the common locale default for the VBA -1 sentinel)."""
-    args = _split_top_args(inner)
-    if len(args) not in (1, 2):
-        return None
-    d = args[1] if len(args) == 2 else "2"
-    return f"concat(format_number(({args[0]}) * 100, {d}), '%')"
+def _interval(iv: str | None, where: str) -> str:
+    if iv is None:
+        raise MdxError(
+            f"{where}: the interval argument must be a string literal "
+            f"('yyyy', 'q', 'm', 'y', 'd', 'w', 'ww', 'h', 'n', 's')"
+        )
+    if iv not in _VBA_DATEPART_FN:
+        raise MdxError(f"{where}: unknown interval {iv!r}")
+    return iv
 
 
-def _vba_format_currency(inner: str):
-    """FormatCurrency(x[, digits]) (Vba.formatCurrency; '$' + grouped
-    number, digits default 2)."""
-    args = _split_top_args(inner)
-    if len(args) not in (1, 2):
-        return None
-    d = args[1] if len(args) == 2 else "2"
-    return f"concat('$', format_number(({args[0]}), {d}))"
+def _datepart(iv, d):
+    return f"{_VBA_DATEPART_FN[_interval(iv, 'DatePart')]}(({d}))"
 
 
-def _rewrite_paren_call(text: str, name: str, repl) -> str:
-    """Paren-aware ``NAME(args)`` rewrite: passes the balanced argument
-    text to ``repl(inner) -> str | None`` (None = leave the call as-is).
-    Recurses into each replacement so nested same-name calls rewrite too
-    (``CoalesceEmpty(CoalesceEmpty(a, b), c)``) — ``repl`` must eliminate
-    the outer NAME from its output or the recursion would not converge."""
-    pat = re.compile(rf"(?i)\b{name}\s*\(")
-    out: list[str] = []
-    i = 0
-    while True:
-        m = pat.search(text, i)
-        if not m:
-            out.append(text[i:])
-            return "".join(out)
-        depth, j = 1, m.end()
-        while j < len(text) and depth:
-            if text[j] == "(":
-                depth += 1
-            elif text[j] == ")":
-                depth -= 1
-            j += 1
-        replaced = repl(text[m.end() : j - 1])
-        if replaced is not None:
-            replaced = _rewrite_paren_call(replaced, name, repl)
-        out.append(text[i : m.start()])
-        out.append(text[m.start() : j] if replaced is None else replaced)
-        i = j
+def _dateadd(iv, n, d):
+    unit = _VBA_DATE_UNIT[_interval(iv, "DateAdd")]
+    return f"timestampadd({unit}, cast(({n}) as int), ({d}))"
 
 
-def _rewrite_call(text: str, name: str, open_repl: str, close_repl: str) -> str:
-    """Paren-aware ``NAME(args)`` → ``open_repl args close_repl`` — for VBA
-    functions whose Spark equivalent needs wrapping, not just renaming."""
-    pat = re.compile(rf"(?i)\b{name}\s*\(")
-    out: list[str] = []
-    i = 0
-    while True:
-        m = pat.search(text, i)
-        if not m:
-            out.append(text[i:])
-            return "".join(out)
-        out.append(text[i : m.start()])
-        depth, j = 1, m.end()
-        while j < len(text) and depth:
-            if text[j] == "(":
-                depth += 1
-            elif text[j] == ")":
-                depth -= 1
-            j += 1
-        # recurse into the argument segment: Sgn(a + Sgn(b)) must rewrite
-        # the inner call too (search resumes at j, which skips it)
-        arg = _rewrite_call(text[m.end() : j - 1], name, open_repl, close_repl)
-        out.append(open_repl + arg + close_repl)
-        i = j
+def _datediff(iv, d1, d2):
+    unit = _VBA_DATE_UNIT[_interval(iv, "DateDiff")]
+    return f"timestampdiff({unit}, ({d1}), ({d2}))"
+
+
+def _val(x):
+    """VBA Val (query_test.rb:343-358 profit-margin formulas; Vba.val):
+    numeric input passes through as DOUBLE; a string parses its leading
+    numeric prefix with embedded whitespace stripped ('1 000.5x' →
+    1000.5); anything else → 0.  The try_cast chain dispatches without
+    knowing the arg's type: direct double cast first (no lossy string
+    round-trip for numeric inputs), &H/&O radix literals next (reference
+    Vba.val parses them; conv() does the base conversion, and nullif
+    keeps a non-match falling through instead of conv('') = '0'
+    short-circuiting the chain), decimal prefix parse after, 0 last."""
+    stripped = f"regexp_replace(cast(({x}) as string), '\\\\s+', '')"
+    prefix = (
+        f"regexp_extract({stripped}, "
+        f"'^[+-]?(\\\\d+\\\\.?\\\\d*|\\\\.\\\\d+)([eE][+-]?\\\\d+)?', 0)"
+    )
+    hexp = (
+        f"try_cast(conv(nullif(regexp_extract({stripped}, "
+        f"'^&[hH]([0-9a-fA-F]+)', 1), ''), 16, 10) as double)"
+    )
+    octp = (
+        f"try_cast(conv(nullif(regexp_extract({stripped}, "
+        f"'^&[oO]([0-7]+)', 1), ''), 8, 10) as double)"
+    )
+    return (
+        f"coalesce(try_cast(({x}) as double), {hexp}, {octp}, "
+        f"try_cast({prefix} as double), cast(0 as double))"
+    )
+
+
+#: lower-case VBA/Excel name → arity + builder; applied by
+#: :func:`rewrite_calls` (MdxParser.translate_expression_text)
+_VBA_EXCEL: dict[str, _Fn] = {
+    # same arguments, another Spark name; DateSerial(y, m, d) → DATE
+    # (mondrian_test.rb:526 CoalesceEmpty fallback)
+    "sqr": _Fn(1, 1, _rename("sqrt")),
+    "mid": _Fn(2, 3, _rename("substring")),
+    "atn": _Fn(1, 1, _rename("atan")),
+    "asc": _Fn(1, 1, _rename("ascii")),
+    "ascb": _Fn(1, 1, _rename("ascii")),
+    "ascw": _Fn(1, 1, _rename("ascii")),
+    "chrb": _Fn(1, 1, _rename("chr")),
+    "chrw": _Fn(1, 1, _rename("chr")),
+    "cdbl": _Fn(1, 1, _rename("double")),
+    "dateserial": _Fn(3, 3, _rename("make_date")),
+    "strreverse": _Fn(1, 1, _rename("reverse")),
+    "datevalue": _Fn(1, 1, _rename("to_date")),
+    "cdate": _Fn(1, 1, _rename("to_timestamp")),
+    "formatnumber": _Fn(2, 2, _rename("format_number")),
+    "ucase": _Fn(1, 1, _rename("upper")),
+    "lcase": _Fn(1, 1, _rename("lower")),
+    "fact": _Fn(1, 1, _rename("factorial")),
+    # Int FLOORS (Int(-8.4) = -9 — Vba.int_); Fix truncates toward zero;
+    # CInt ROUNDS half-to-even (Vba.cInt); Sgn returns Integer where
+    # Spark sign() returns double
+    "int": _Fn(1, 1, _wrap("floor(", ")")),
+    "fix": _Fn(1, 1, _wrap("cast((", ") as bigint)")),
+    "cint": _Fn(1, 1, _wrap("int(bround(", "))")),
+    "sgn": _Fn(1, 1, _wrap("cast(sign(", ") as int)")),
+    "cbool": _Fn(1, 1, _wrap("cast((", ") as boolean)")),
+    # VBA Byte is UNSIGNED 0..255 — a tinyint cast would wrap CByte(200)
+    # to -56 under Spark's non-ANSI cast; smallint holds the whole Byte
+    # range (values above 255 overflow in VBA; here they pass through,
+    # documented deviation)
+    "cbyte": _Fn(1, 1, _wrap("cast(bround(", ") as smallint)")),
+    # CStr / CSng / CCur coercions (VBA Currency is a fixed-point
+    # DECIMAL(19,4))
+    "cstr": _Fn(1, 1, _wrap("cast((", ") as string)")),
+    "csng": _Fn(1, 1, _wrap("cast((", ") as float)")),
+    "ccur": _Fn(1, 1, _wrap("cast((", ") as decimal(19,4))")),
+    # Hex/Oct round their argument first (Vba.hex/oct on Double)
+    "hex": _Fn(1, 1, _wrap("hex(cast(bround(", ") as bigint))")),
+    "oct": _Fn(1, 1, _wrap("conv(cast(bround(", ") as bigint), 10, 8)")),
+    # Excel.sqrtPi(x) = sqrt(x * pi)
+    "sqrtpi": _Fn(1, 1, _wrap("sqrt((", ") * pi())")),
+    # MonthName(m) / WeekdayName(n) — English names, n=1=Sunday (the VBA
+    # firstdayofweek default); 2000-01-02 is a Sunday anchor
+    "monthname": _Fn(1, 1, _wrap(
+        "date_format(make_date(2000, cast((", ") as int), 1), 'MMMM')"
+    )),
+    "weekdayname": _Fn(1, 1, _wrap(
+        "date_format(date_add(DATE'2000-01-02', cast((",
+        ") as int) - 1), 'EEEE')",
+    )),
+    # IsDate / IsNumeric: parseable as a timestamp / double (junk → false)
+    "isdate": _Fn(1, 1, _wrap(
+        "(try_cast(cast((", ") as string) as timestamp) is not null)"
+    )),
+    "isnumeric": _Fn(1, 1, _wrap(
+        "(try_cast(cast((", ") as string) as double) is not null)"
+    )),
+    "isnull": _Fn(1, 1, _wrap("((", ") is null)")),
+    # TimeValue: a time-of-day timestamp on the VBA zero date
+    "timevalue": _Fn(1, 1, _wrap(
+        "to_timestamp(concat('1899-12-30 ', cast((", ") as string)))"
+    )),
+    "str": _Fn(1, 1, _str),
+    "timeserial": _Fn(3, 3, _timeserial),
+    "weekday": _Fn(1, 2, _weekday),
+    "partition": _Fn(4, 4, _partition),
+    "choose": _Fn(2, None, _choose),
+    "switch": _Fn(2, None, _switch),
+    "instr": _Fn(3, 4, _instr),
+    "instrrev": _Fn(2, 4, _instrrev),
+    "strconv": _Fn(2, 2, _strconv),
+    "strcomp": _Fn(2, 3, _strcomp),
+    "string": _Fn(2, 2, _string),
+    "mod": _Fn(2, 2, _mod),
+    "atan2": _Fn(2, 2, _atan2),
+    "sln": _Fn(3, 3, _sln),
+    "syd": _Fn(4, 4, _syd),
+    "pmt": _Fn(3, 5, _pmt),
+    "fv": _Fn(3, 5, _fv),
+    "pv": _Fn(3, 5, _pv),
+    "nper": _Fn(3, 5, _nper),
+    "ipmt": _Fn(4, 6, _ipmt),
+    "ppmt": _Fn(4, 6, _ppmt),
+    "rate": _Fn(3, 6, _rate),
+    "ddb": _Fn(4, 5, _ddb),
+    # FormatPercent / FormatCurrency: digits default 2, the common locale
+    # default for the VBA -1 sentinel; currency is '$' + grouped number
+    "formatpercent": _Fn(1, 2, lambda x, d="2": (
+        f"concat(format_number(({x}) * 100, {d}), '%')"
+    )),
+    "formatcurrency": _Fn(1, 2, lambda x, d="2": (
+        f"concat('$', format_number(({x}), {d}))"
+    )),
+    "formatdatetime": _Fn(1, 2, _format_datetime),
+    # DatePart/DateAdd/DateDiff take the VBA interval grammar
+    "datepart": _Fn(2, 2, _datepart, literal=True),
+    "dateadd": _Fn(3, 3, _dateadd, literal=True),
+    "datediff": _Fn(3, 3, _datediff, literal=True),
+    "val": _Fn(1, 1, _val),
+}
 
 
 def _alias_self_ref(cond: str, alias) -> bool:
@@ -821,6 +845,10 @@ class MdxParser:
         self.toks = _splice_strtomember(tokenize(mdx))
         self.i = 0
         self.q = Query(engine)
+        #: WITH MEMBER [Measures] name (lower case) → its formula as
+        #: written; Generate's string form translates an inlined formula
+        #: again, and MDX, unlike the formula's SQL, lowers exactly once
+        self._with_mdx: dict[str, str] = {}
         self.params = dict(parameters or {})
         self.defined_params: dict[str, object] = {}
         # schema-declared parameters: type + modifiability enforced on
@@ -1171,13 +1199,17 @@ class MdxParser:
         self._defining_measure = name_segs[1]
         try:
             if t.kind == "string":
-                expr_sql = self.translate_expression_text(_unquote(t.text))
+                formula = _unquote(t.text)
+                expr_sql = self.translate_expression_text(formula)
             else:
                 # unquoted expression form: re-parse from this token
                 self.i -= 1
+                start = self.i
                 expr_sql = self.parse_value_expression()
+                formula = " ".join(x.text for x in self.toks[start : self.i])
         finally:
             self._defining_measure = None
+        self._with_mdx[name_segs[1].lower()] = formula
         solve_order = 0
         format_string = None
         while self.at_op(","):
@@ -3050,180 +3082,6 @@ class MdxParser:
             out,
         )
 
-        # VBA function names without a same-named Spark builtin
-        # (jar!mondrian/olap/fun/vba/Vba; SURVEY.md §2.7 — UCase/LCase/
-        # InStr/Chr/Space/Left/Right/Replace/Trim and the trig/log family
-        # already exist in Spark under their VBA names)
-        out = re.sub(
-            r"(?i)\b(" + "|".join(_VBA_FN_ALIASES) + r")\s*\(",
-            lambda m: _VBA_FN_ALIASES[m.group(1).lower()] + "(",
-            out,
-        )
-        # VBA Int FLOORS (Int(-8.4) = -9 — Vba.int_); Fix truncates
-        # toward zero.  Int must rewrite BEFORE CInt below, whose
-        # expansion emits a literal Spark int( cast that this pass must
-        # not touch.
-        out = _rewrite_call(out, "int", "floor(", ")")
-        out = _rewrite_call(out, "fix", "cast((", ") as bigint)")
-        # CInt ROUNDS (half-to-even, per the reference Vba.cInt) — a bare
-        # int() cast would truncate; Sgn returns Integer, Spark sign()
-        # returns double — both need wrapping, not renaming
-        out = _rewrite_call(out, "cint", "int(bround(", "))")
-        out = _rewrite_call(out, "sgn", "cast(sign(", ") as int)")
-        # breadth pass over the remaining Vba.class / Excel.class names
-        # a same-named builtin can't cover (single-argument wraps):
-        out = _rewrite_call(out, "cbool", "cast((", ") as boolean)")
-        # VBA Byte is UNSIGNED 0..255 — a tinyint cast would wrap
-        # CByte(200) to -56 under Spark's non-ANSI cast; smallint holds
-        # the whole Byte range (values above 255 overflow in VBA; here
-        # they pass through, documented deviation)
-        out = _rewrite_call(out, "cbyte", "cast(bround(", ") as smallint)")
-        # Hex/Oct round their argument first (Vba.hex/oct on Double)
-        out = _rewrite_call(out, "hex", "hex(cast(bround(", ") as bigint))")
-        out = _rewrite_call(
-            out, "oct", "conv(cast(bround(", ") as bigint), 10, 8)"
-        )
-        # Excel.sqrtPi(x) = sqrt(x * pi)
-        out = _rewrite_call(out, "sqrtpi", "sqrt((", ") * pi())")
-        # MonthName(m) / WeekdayName(n) — English names, n=1=Sunday (the
-        # VBA firstdayofweek default); 2000-01-02 is a Sunday anchor
-        out = _rewrite_call(
-            out, "monthname",
-            "date_format(make_date(2000, cast((", ") as int), 1), 'MMMM')",
-        )
-        out = _rewrite_call(
-            out, "weekdayname",
-            "date_format(date_add(DATE'2000-01-02', cast((",
-            ") as int) - 1), 'EEEE')",
-        )
-        # IsDate: parseable as a timestamp/date (numbers and junk → false)
-        out = _rewrite_call(
-            out, "isdate",
-            "(try_cast(cast((", ") as string) as timestamp) is not null)",
-        )
-        # round-8 continuation of the Vba.class inventory:
-        # IsNumeric / IsNull tests; CStr / CSng / CCur coercions (VBA
-        # Currency is a fixed-point DECIMAL(19,4)); Str prefixes
-        # non-negative numbers with a space (Vba.str_); TimeSerial /
-        # TimeValue build time-of-day timestamps on the VBA zero date
-        out = _rewrite_call(
-            out, "isnumeric",
-            "(try_cast(cast((", ") as string) as double) is not null)",
-        )
-        out = _rewrite_call(out, "isnull", "((", ") is null)")
-        out = _rewrite_call(out, "cstr", "cast((", ") as string)")
-        out = _rewrite_call(out, "csng", "cast((", ") as float)")
-        out = _rewrite_call(out, "ccur", "cast((", ") as decimal(19,4))")
-        out = _rewrite_paren_call(out, "partition", _vba_partition)
-        out = _rewrite_paren_call(out, "str", _vba_str)
-        out = _rewrite_paren_call(out, "timeserial", _vba_timeserial)
-        out = _rewrite_call(
-            out, "timevalue",
-            "to_timestamp(concat('1899-12-30 ', cast((", ") as string)))",
-        )
-        out = _rewrite_paren_call(out, "weekday", _vba_weekday)
-        out = _rewrite_paren_call(out, "choose", _vba_choose)
-        out = _rewrite_paren_call(out, "switch", _vba_switch)
-        # InStrRev before InStr: `\binstr\s*\(` cannot match "instrrev("
-        # (the 'rev' intervenes), but keep the more specific name first
-        out = _rewrite_paren_call(out, "instrrev", _vba_instrrev)
-        out = _rewrite_paren_call(out, "instr", _vba_instr)
-        out = _rewrite_paren_call(out, "strconv", _vba_strconv)
-        out = _rewrite_paren_call(out, "strcomp", _vba_strcomp)
-        out = _rewrite_paren_call(out, "string", _vba_string)
-        out = _rewrite_paren_call(out, "mod", _excel_mod)
-        out = _rewrite_paren_call(out, "atan2", _excel_atan2)
-        out = out.replace("__atan2_swapped__", "atan2")
-        out = _rewrite_paren_call(out, "sln", _vba_sln)
-        out = _rewrite_paren_call(out, "syd", _vba_syd)
-        # ipmt/ppmt/ddb/rate FIRST: their expansions embed pmt/fv text
-        # that must not be re-expanded (it is already final SQL)
-        for _ann in ("ipmt", "ppmt", "ddb", "rate", "pmt", "fv", "pv",
-                     "nper"):
-            out = _rewrite_paren_call(out, _ann, _vba_annuity(_ann))
-        out = _rewrite_paren_call(out, "formatpercent", _vba_format_percent)
-        out = _rewrite_paren_call(out, "formatcurrency", _vba_format_currency)
-        out = _rewrite_paren_call(out, "formatdatetime", _vba_format_datetime)
-
-        def _interval_of(arg: str, where: str) -> str:
-            mm = re.fullmatch(r"\x00(\d+)\x00", arg.strip())
-            if not mm:
-                raise MdxError(
-                    f"{where}: the interval argument must be a string "
-                    f"literal ('yyyy', 'q', 'm', 'y', 'd', 'w', 'ww', "
-                    f"'h', 'n', 's'), got {arg!r}"
-                )
-            iv = _masked[int(mm.group(1))].strip("'\"").lower()
-            if iv not in _VBA_DATEPART_FN:
-                raise MdxError(f"{where}: unknown interval {iv!r}")
-            return iv
-
-        def _date_part(inner: str) -> str:
-            args = _split_top_args(inner)
-            if len(args) != 2:
-                return None
-            iv = _interval_of(args[0], "DatePart")
-            return f"{_VBA_DATEPART_FN[iv]}(({args[1]}))"
-
-        def _date_add(inner: str) -> str:
-            args = _split_top_args(inner)
-            if len(args) != 3:
-                return None
-            iv = _interval_of(args[0], "DateAdd")
-            return (
-                f"timestampadd({_VBA_DATE_UNIT[iv]}, "
-                f"cast(({args[1]}) as int), ({args[2]}))"
-            )
-
-        def _date_diff(inner: str) -> str:
-            args = _split_top_args(inner)
-            if len(args) != 3:
-                return None
-            iv = _interval_of(args[0], "DateDiff")
-            return (
-                f"timestampdiff({_VBA_DATE_UNIT[iv]}, ({args[1]}), "
-                f"({args[2]}))"
-            )
-
-        out = _rewrite_paren_call(out, "datepart", _date_part)
-        out = _rewrite_paren_call(out, "dateadd", _date_add)
-        out = _rewrite_paren_call(out, "datediff", _date_diff)
-
-        def _val_repl(inner: str) -> str:
-            # VBA Val (query_test.rb:343-358 profit-margin formulas;
-            # Vba.val): numeric input passes through as DOUBLE; a string
-            # parses its leading numeric prefix with embedded whitespace
-            # stripped ('1 000.5x' → 1000.5); anything else → 0.  The
-            # try_cast chain dispatches without knowing the arg's type:
-            # direct double cast first (no lossy string round-trip for
-            # numeric inputs), &H/&O radix literals next (reference
-            # Vba.val parses them; conv() does the base conversion, and
-            # nullif keeps a non-match falling through instead of
-            # conv('') = '0' short-circuiting the chain), decimal prefix
-            # parse after, 0 last.
-            stripped = (
-                f"regexp_replace(cast(({inner}) as string), '\\\\s+', '')"
-            )
-            prefix = (
-                f"regexp_extract({stripped}, "
-                f"'^[+-]?(\\\\d+\\\\.?\\\\d*|\\\\.\\\\d+)([eE][+-]?\\\\d+)?', 0)"
-            )
-            hexp = (
-                f"try_cast(conv(nullif(regexp_extract({stripped}, "
-                f"'^&[hH]([0-9a-fA-F]+)', 1), ''), 16, 10) as double)"
-            )
-            octp = (
-                f"try_cast(conv(nullif(regexp_extract({stripped}, "
-                f"'^&[oO]([0-7]+)', 1), ''), 8, 10) as double)"
-            )
-            return (
-                f"coalesce(try_cast(({inner}) as double), "
-                f"{hexp}, {octp}, "
-                f"try_cast({prefix} as double), cast(0 as double))"
-            )
-
-        out = _rewrite_paren_call(out, "val", _val_repl)
-
         def repl_case_name(m: re.Match) -> str:
             # CASE … END.Name returns the winning *member's name* as a
             # string (mondrian_test.rb:382-397): rewrite member references
@@ -3467,7 +3325,7 @@ class MdxParser:
             out,
         )
 
-        def repl_aggregate_value(m: re.Match) -> str:
+        def repl_aggregate_value(args: list[str]):
             # Aggregate() as a VALUE inside a Measures formula
             # (mondrian_test.rb:197-228): three forms —
             #   Aggregate({m1, m2})               implicit current measure
@@ -3479,21 +3337,13 @@ class MdxParser:
             # sub-aggregate + additive combine (plan._attach_agg_scalar).
             from .members import parse_identifier
 
-            inner = m
-            sets_part, expr_part = inner, None
-            # split a top-level ", expr" tail (not inside braces/parens)
-            depth = 0
-            for i, ch in enumerate(inner):
-                if ch in "{(":
-                    depth += 1
-                elif ch in "})":
-                    depth -= 1
-                elif ch == "," and depth == 0:
-                    sets_part, expr_part = inner[:i], inner[i + 1 :]
-                    break
+            sets_part = args[0] if args else ""
             sets = re.findall(r"\{(.*?)\}", sets_part)
             if not sets:
                 return None  # not the set form — leave untouched
+            if len(args) > 2:
+                raise MdxError("Aggregate takes (set[, expression])")
+            expr_part = args[1] if len(args) == 2 else None
             n_between = re.sub(r"\{.*?\}", "", sets_part)
             if n_between.count("*") != len(sets) - 1 or re.sub(
                 r"[\s*]", "", n_between
@@ -3574,7 +3424,7 @@ class MdxParser:
             )
             return out_name
 
-        out = _rewrite_paren_call(out, "aggregate", repl_aggregate_value)
+        out = rewrite_calls(out, {"aggregate": repl_aggregate_value})
 
         # ---- set statistics as VALUE expressions ----------------------
         # Median/Stdev/Var/…(set, expr), Correlation/Covariance/LinReg*
@@ -3695,24 +3545,21 @@ class MdxParser:
             # Rank(<dim>.CurrentMember, <this set>) → __setrank, the
             # member's 1-based hierarchy-order position (data-independent;
             # the planner joins it from the member list)
-            def repl_rank(inner):
-                ps = _split_set_args(inner)
-                if len(ps) != 2:
-                    return None
-                if not re.fullmatch(
-                    rf"{_id_pat}\s*\.\s*CurrentMember", ps[0], re.IGNORECASE
+            def repl_rank(ps: list[str]) -> str:
+                if (
+                    len(ps) != 2
+                    or not re.fullmatch(
+                        rf"{_id_pat}\s*\.\s*CurrentMember", ps[0], re.I
+                    )
+                    or _canon_frag(ps[1]) != set_canon
                 ):
-                    return None
-                if _canon_frag(ps[1]) != set_canon:
-                    return None
+                    raise MdxError(
+                        "Rank() inside a set statistic is supported only as "
+                        "Rank(<dim>.CurrentMember, <the statistic's own set>)"
+                    )
                 return " __setrank "
 
-            raw = _rewrite_paren_call(raw, "rank", repl_rank)
-            if re.search(r"(?i)\brank\s*\(", raw):
-                raise MdxError(
-                    "Rank() inside a set statistic is supported only as "
-                    "Rank(<dim>.CurrentMember, <the statistic's own set>)"
-                )
+            raw = rewrite_calls(raw, {"rank": repl_rank})
             # restore the outer pass's literal masks before recursing —
             # the recursive call owns its own mask list
             raw = re.sub(
@@ -3738,8 +3585,7 @@ class MdxParser:
             fn = _SETSTAT_FN[mdx_name]
             nan_wrap = mdx_name in _SETSTAT_NAN
 
-            def repl(inner: str):
-                parts = _split_set_args(inner)
+            def repl(parts: list[str]):
                 arg = None
                 if mdx_name == "linregpoint":
                     # LinRegPoint(x0, set, y, x) = slope·x0 + intercept
@@ -3760,7 +3606,7 @@ class MdxParser:
                 # grid's own grain for the set's dimension instead of
                 # overriding it, so each cell sees only the members that
                 # share fact rows with its coordinates + the slicer
-                set_src = parts[0]
+                set_src = parts[0] if parts else ""
                 m_ex = re.match(r"(?is)^\s*existing\b(.*)$", set_src)
                 existing = bool(m_ex)
                 if m_ex:
@@ -3771,25 +3617,16 @@ class MdxParser:
                 # current context): the condition lowers into the stat
                 # sub-aggregate as a row filter before the collapse
                 where_cond = None
-                mf = re.match(r"(?is)^\s*filter\s*\(", set_src)
-                if mf:
-                    depth, j = 1, mf.end()
-                    while j < len(set_src) and depth:
-                        if set_src[j] == "(":
-                            depth += 1
-                        elif set_src[j] == ")":
-                            depth -= 1
-                        j += 1
-                    if depth == 0 and not set_src[j:].strip():
-                        fparts = _split_set_args(set_src[mf.end() : j - 1])
-                        if (
-                            len(fparts) == 2
-                            and _parse_set_arg(fparts[0]) is not None
-                        ):
-                            set_src = fparts[0]
-                            where_cond = _translate_stat_expr(
-                                fparts[1], _canon_frag(fparts[0])
-                            )
+                fparts = _call_args(set_src, "filter")
+                if (
+                    fparts is not None
+                    and len(fparts) == 2
+                    and _parse_set_arg(fparts[0]) is not None
+                ):
+                    set_src = fparts[0]
+                    where_cond = _translate_stat_expr(
+                        fparts[1], _canon_frag(fparts[0])
+                    )
                 member_strs = _parse_set_arg(set_src)
                 if member_strs is None:
                     # a FILTER-defined named set splices like an inline
@@ -3890,9 +3727,9 @@ class MdxParser:
 
             return repl
 
-        if re.search(rf"(?i)\b({'|'.join(_SETSTAT_FN)})\s*\(", out):
-            for _name in _SETSTAT_FN:
-                out = _rewrite_paren_call(out, _name, _setstat_handler(_name))
+        out = rewrite_calls(
+            out, {name: _setstat_handler(name) for name in _SETSTAT_FN}
+        )
 
         # ---- GENERATE in VALUE expressions -----------------------------
         # (jar!mondrian/olap/fun/GenerateFunDef; reference WITH MEMBER
@@ -3943,7 +3780,9 @@ class MdxParser:
                     # text, not a template — a backslash or \1 inside it
                     # must not be interpreted as a regex escape
                     pat,
-                    lambda _m, _e=cm.expression: "(" + _e + ")",
+                    lambda _m, _e=self._with_mdx.get(
+                        cm.name.lower(), cm.expression
+                    ): "(" + _e + ")",
                     raw,
                     flags=re.IGNORECASE,
                 )
@@ -4002,8 +3841,7 @@ class MdxParser:
                 )
             return _translate_stat_expr(raw, set_canon)
 
-        def repl_generate_string(inner: str):
-            parts = _split_set_args(inner)
+        def repl_generate_string(parts: list[str]):
             if len(parts) not in (2, 3):
                 return None
             member_strs = _parse_set_arg(parts[0])
@@ -4111,20 +3949,10 @@ class MdxParser:
                 "genconcat", (expr_sql, order_expr), member_strs, sep, False
             )
 
-        def repl_settostr_generate(inner: str):
-            m0 = re.match(r"(?is)\s*generate\s*\(", inner)
-            if not m0:
+        def repl_settostr_generate(args: list[str]):
+            parts = _call_args(args[0], "generate") if len(args) == 1 else None
+            if parts is None:
                 return None  # the zero-arg set-UDF pass already ran
-            gdepth, j = 1, m0.end()
-            while j < len(inner) and gdepth:
-                if inner[j] == "(":
-                    gdepth += 1
-                elif inner[j] == ")":
-                    gdepth -= 1
-                j += 1
-            if gdepth or inner[j:].strip():
-                return None
-            parts = _split_set_args(inner[m0.end() : j - 1])
             all_flag = len(parts) >= 3 and parts[-1].strip().lower() == "all"
             if all_flag:
                 parts = parts[:-1]
@@ -4209,11 +4037,14 @@ class MdxParser:
             _masked.append("'" + rendered.replace("'", "''") + "'")
             return f"\x00{len(_masked) - 1}\x00"
 
-        if re.search(r"(?i)\bgenerate\s*\(", out):
-            out = _rewrite_paren_call(
-                out, "settostr", repl_settostr_generate
-            )
-            out = _rewrite_paren_call(out, "generate", repl_generate_string)
+        # SetToStr first: its handler reads the Generate call it wraps
+        out = rewrite_calls(out, {"settostr": repl_settostr_generate})
+        out = rewrite_calls(out, {"generate": repl_generate_string})
+
+        # VBA/Excel functions, after the passes above so that the
+        # sub-expressions they translate again still hold MDX: every call
+        # is lowered exactly once
+        out = rewrite_calls(out, _VBA_EXCEL, _masked)
 
         def repl_tuple(m: re.Match) -> str:
             # tuple scalar ([Measures].[X], [Dim].[M], …): the cell value
@@ -4409,54 +4240,38 @@ class MdxParser:
         # can win on different rows, a Spark column is monotyped — the
         # args unify as strings (the one lossless common type), where the
         # reference keeps the winning branch's own type per cell.
-        def repl_coalesceempty(inner: str) -> str:
-            args, depth, start = [], 0, 0
-            for i, ch in enumerate(inner):
-                if ch in "({":
-                    depth += 1
-                elif ch in ")}":
-                    depth -= 1
-                elif ch == "," and depth == 0:
-                    args.append(inner[start:i])
-                    start = i + 1
-            args.append(inner[start:])
-
-            def _literal(a: str) -> bool:
-                s = a.strip()
-                return bool(
-                    re.fullmatch(r"\x00\d+\x00", s)  # masked string literal
-                    or re.fullmatch(
-                        r"[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?", s
-                    )
-                )
-
+        def repl_coalesceempty(args: list[str]):
+            if not args:
+                return None
             for i, a in enumerate(args):
-                if _literal(a):
+                if re.fullmatch(
+                    # masked string literal or number
+                    r"\x00\d+\x00|[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?",
+                    a,
+                ):
                     args = args[: i + 1]  # later branches are dead
                     break
             if len(args) == 1:
-                return args[0].strip()  # single live branch: native type
-            is_str = [
-                bool(re.fullmatch(r"\s*\x00\d+\x00\s*", a)) for a in args
-            ]
+                return args[0]  # single live branch: native type
+            is_str = [bool(re.fullmatch(r"\x00\d+\x00", a)) for a in args]
             if any(is_str) and not all(is_str):
                 args = [
-                    a if s else f"cast(({a.strip()}) as string)"
+                    a if s else f"cast(({a}) as string)"
                     for a, s in zip(args, is_str)
                 ]
-            return "coalesce(" + ", ".join(a.strip() for a in args) + ")"
-
-        out = _rewrite_paren_call(out, "coalesceempty", repl_coalesceempty)
+            return "coalesce(" + ", ".join(args) + ")"
 
         # Cache(expr) (jar!mondrian/olap/fun/CacheFunDef): transparent for
         # values — unwrap and evaluate; the wrapper sets the query's cache
         # hint so the evaluated grid persists (intra-result reuse; the
         # engine aggregate cache covers cross-query reuse when enabled)
-        def repl_cache(inner: str) -> str:
+        def repl_cache(args: list[str]) -> str:
             self.q._cache_hint = True
-            return "(" + inner + ")"
+            return "(" + ", ".join(args) + ")"
 
-        out = _rewrite_paren_call(out, "cache", repl_cache)
+        out = rewrite_calls(
+            out, {"coalesceempty": repl_coalesceempty, "cache": repl_cache}
+        )
         # IsDirty(): cache-dirty introspection (mondrian_test.rb:241-247).
         # Aggregates here are always (re)computed from consistent source
         # snapshots — a cell is never served from a stale segment — so the

@@ -39,6 +39,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .mdx import rewrite_calls, split_args
 from .members import MeasureRef, MemberParseError, MemberSetRef, resolve
 from .model import CalculatedMember, Measure
 from .plan import Planner
@@ -1920,7 +1921,6 @@ class Query:
         lowering depends on which time columns the axes project.  Member
         references are relative (the current row); absolute-member set
         forms belong on axes (:meth:`periods_to_date` / :meth:`xtd`)."""
-        from .mdx import _rewrite_paren_call, _split_set_args
         from .members import parse_identifier
 
         def grid_levels(dim):
@@ -2058,8 +2058,7 @@ class Query:
         out = expr
 
         def make_agg_repl(aggname: str):
-            def repl(inner: str):
-                parts = _split_set_args(inner)
+            def repl(parts: list[str]):
                 if len(parts) != 2:
                     return None
                 m_xtd = re.fullmatch(
@@ -2169,8 +2168,10 @@ class Query:
 
             return repl
 
-        for _agg in ("sum", "avg", "min", "max", "count"):
-            out = _rewrite_paren_call(out, _agg, make_agg_repl(_agg))
+        out = rewrite_calls(
+            out,
+            {a: make_agg_repl(a) for a in ("sum", "avg", "min", "max", "count")},
+        )
 
         # (measure, [Dim].PrevMember/NextMember/Lag(n)/Lead(n)) tuples —
         # the reference fixture's own "Profit last Period" idiom
@@ -2249,11 +2250,7 @@ class Query:
                     "measure in this subset"
                 )
             mout = measure_out(mo.group("m1") or mo.group("m2"))
-            args = (
-                [a.strip() for a in _split_set_args(mo.group("args"))]
-                if mo.group("args").strip()
-                else []
-            )
+            args = split_args(mo.group("args"))
             if not args:
                 raise QueryError(
                     f"{fn} needs an explicit level argument in this subset"
@@ -2782,49 +2779,31 @@ class Query:
             rf"(?i)ISEMPTY\s*\(\s*{a}\s*\.\s*CURRENT\s*\)",
             lambda m: empty_test(False), cond)
 
-        # RANK head matched by regex, the optional expression argument by a
-        # balanced-paren scan (a regex cannot bound parenthesized exprs);
-        # loop so every occurrence lowers, each to its own window column
-        rank_head = rf"(?i)RANK\s*\(\s*{a}\s*\.\s*CURRENT\s*,\s*{a}\s*"
-        rank_i = 0
-        while True:
-            m = _re.search(rank_head, cond)
-            if m is None:
-                break
-            out_col = f"__set_rank_{rank_i}"
-            rank_i += 1
-            i = m.end()
-            expr = None
-            if i < len(cond) and cond[i] == ",":
-                j, depth = i + 1, 0
-                while j < len(cond):
-                    ch = cond[j]
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        if depth == 0:
-                            break
-                        depth -= 1
-                    j += 1
-                if j >= len(cond):
-                    raise QueryError(f"unbalanced RANK() in condition {cond!r}")
-                expr = cond[i + 1:j].strip()
-                end = j + 1
-            elif i < len(cond) and cond[i] == ")":
-                end = i + 1
-            else:
+        # every RANK(S.Current, S[, expr]) lowers to its own window column
+        def repl_rank(args: list[str]):
+            nonlocal df
+            if (
+                len(args) < 2
+                or not _re.fullmatch(rf"(?i){a}\s*\.\s*CURRENT", args[0])
+                or not _re.fullmatch(rf"(?i){a}", args[1])
+            ):
+                return None
+            if len(args) > 3:
                 raise QueryError(f"malformed RANK() in condition {cond!r}")
-            if expr:
+            out_col = f"__set_rank_{len(drops)}"
+            if len(args) == 3:
                 # Rank(t, set, expr): position when the set is sorted by expr
                 # descending; ties share a rank (RankFunDef 3-arg form)
-                w = Window.orderBy(F.expr(expr).desc())
+                w = Window.orderBy(F.expr(args[2]).desc())
                 df = df.withColumn(out_col, F.rank().over(w))
             else:
                 # 2-arg Rank: 1-based position in the set's own order
                 w = Window.orderBy(*order)
                 df = df.withColumn(out_col, F.row_number().over(w))
-            cond = cond[: m.start()] + out_col + cond[end:]
             drops.append(out_col)
+            return out_col
+
+        cond = rewrite_calls(cond, {"rank": repl_rank})
         if _re.search(rf"(?i){a}\s*\.\s*CURRENTORDINAL", cond):
             w = Window.orderBy(*order)
             df = df.withColumn("__set_ordinal", F.row_number().over(w) - F.lit(1))

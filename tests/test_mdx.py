@@ -2208,6 +2208,44 @@ def test_vba_nested_same_name_calls(engine):
     assert [row["a"], row["b"], row["c"]] == [1, 3, -1]
 
 
+@pytest.mark.parametrize(
+    "defs, formula, expected",
+    [
+        # a set statistic / Aggregate translates its expression argument
+        # again: Atan2 must still be lowered (and swapped) exactly once
+        ("", "Max({[Customer].[ASIA]}, Atan2(1, 2))", 1.1071487177940904),
+        (
+            "",
+            "Aggregate({[Customer].[ASIA]}, "
+            "Atan2(1, 2) + 0 * [Measures].[Sum Qty])",
+            1.1071487177940904,
+        ),
+        # Generate's string form translates an inlined WITH formula again
+        (
+            "MEMBER [Measures].[a] AS 'Atan2(1, 2)'",
+            "Generate({[Customer].[ASIA]}, CStr([Measures].[a]))",
+            "1.1071487177940904",
+        ),
+        # a comma inside a [...] name does not split Mod's arguments
+        ("MEMBER [Measures].[A, B] AS '0 - 3'", "Mod([Measures].[A, B], 2)", 1),
+        # function names inside a [...] name are not calls
+        ("MEMBER [Measures].[Int (x)] AS '2'", "[Measures].[Int (x)] + 1", 3),
+        ("MEMBER [Measures].[Str (x)] AS '2'", "[Measures].[Str (x)] + 1", 3),
+    ],
+)
+def test_vba_calls_lowered_once_never_inside_names(
+    engine, defs, formula, expected
+):
+    """VBA/Excel calls are lowered exactly once, with their arguments
+    split around [...] identifiers, and never looked for inside one."""
+    r = execute_mdx(
+        engine,
+        f"WITH {defs} MEMBER [Measures].[v] AS '{formula}' "
+        "SELECT {[Measures].[v]} ON COLUMNS FROM [Sales]",
+    )
+    assert r.df.collect()[0]["v"] == expected
+
+
 def test_accessor_bogus_member_raises(engine):
     """Member-path accessors validate existence before folding
     ([Customer].[Bogus].Name must raise the reference's member-not-found

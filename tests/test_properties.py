@@ -12,6 +12,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mondrian_olap_spark.formats import format_value
+from mondrian_olap_spark.mdx import _VBA_EXCEL, rewrite_calls, split_args
 from mondrian_olap_spark.members import format_name, parse_identifier, quote_segment
 
 segments = st.lists(
@@ -34,6 +35,34 @@ def test_identifier_roundtrip(segs):
 def test_quote_always_parses(seg):
     parsed = parse_identifier(quote_segment(seg))
     assert parsed == [seg]
+
+
+#: measure names built from the characters a call scanner could trip on
+#: and from the function table's own names
+_scanner_names = st.lists(
+    st.sampled_from(["(", ")", ",", "'", "]", " ", *_VBA_EXCEL]),
+    min_size=1,
+    max_size=12,
+).map("".join)
+
+
+@given(_scanner_names)
+@settings(max_examples=300)
+def test_call_scanner_keeps_bracketed_names_whole(name):
+    """A quoted ``[Measures].[<name>]`` is opaque to the call scanner and
+    the argument splitter (``]]`` escapes ``]``), whatever function
+    names, parentheses, commas or quotes the name holds."""
+    ref = "[Measures]." + quote_segment(name)
+    assert rewrite_calls(ref, _VBA_EXCEL, []) == ref
+    assert split_args(ref) == [ref]
+    seen = []
+    table = {"f": lambda args: seen.append(args) or "x"}
+    assert rewrite_calls(f"f({ref}, 2) + {ref}", table) == f"x + {ref}"
+    assert seen == [[ref, "2"]]
+
+
+def test_split_args_escaped_bracket():
+    assert split_args("[Customer].[a]],b], 2") == ["[Customer].[a]],b]", "2"]
 
 
 number_formats = st.sampled_from(

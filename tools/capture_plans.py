@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Capture plans/<round>/<name>_<suffix>.txt for the named entries.
 
-Usage: capture_plans.py [--out plans/r13] [--suffix after] name [name ...]
+Usage: capture_plans.py --out plans/r13 [--suffix after] name [name ...]
 
 Run from the tree whose plans you want (a detached baseline worktree for
 ``--suffix before``); PLAN_OUT_DIR may be absolute so before/after land in
@@ -14,9 +14,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 args = sys.argv[1:]
-out_dir = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12"
-)
+out_dir = None
 suffix = "after"
 while args and args[0].startswith("--"):
     flag = args.pop(0)
@@ -26,6 +24,8 @@ while args and args[0].startswith("--"):
         suffix = args.pop(0)
     else:
         raise SystemExit(f"unknown flag {flag}")
+if out_dir is None:
+    raise SystemExit("capture_plans.py: --out DIR is required")
 
 import bench  # noqa: E402
 
