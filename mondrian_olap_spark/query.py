@@ -39,7 +39,17 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .mdx import rewrite_calls, split_args
+from .mdx import (
+    _OPAQUE,
+    _SEG,
+    MdxError,
+    _call_args,
+    current_member,
+    current_members,
+    hierarchy_dimension,
+    lower_member_properties,
+    rewrite_calls,
+)
 from .members import MeasureRef, MemberParseError, MemberSetRef, resolve
 from .model import CalculatedMember, Measure
 from .plan import Planner
@@ -67,13 +77,20 @@ class _Axis:
     raw_override_ops_from: int = 0
 
 
-#: time-intelligence function names whose VALUE forms lower to window SQL
-#: at execute() time (query._rewrite_time_intel)
+#: a time-intelligence form left over after the lowering — scanned with
+#: identifiers and string literals stepped over (query._lower_formula)
 _TIME_INTEL_RE = re.compile(
-    r"(?i)(\b(ytd|qtd|mtd|wtd|periodstodate|lastperiods|parallelperiod|"
+    _OPAQUE
+    + r"|(?i:(\b(?:ytd|qtd|mtd|wtd|periodstodate|lastperiods|parallelperiod|"
     r"openingperiod|closingperiod|ancestor)\s*\("
-    r"|\.\s*(prevmember|nextmember)\b"
-    r"|\.\s*(lag|lead)\s*\()"
+    r"|\.\s*(?:prevmember|nextmember)\b"
+    r"|\.\s*(?:lag|lead)\s*\())"
+)
+#: ``<hierarchy>.PrevMember|NextMember|Lag(n)|Lead(n)``
+_NAV_RE = re.compile(
+    rf"\s*({_SEG}(?:\s*\.\s*{_SEG})*)\s*\.\s*"
+    r"(prevmember|nextmember|lag|lead)(?:\s*\(\s*(-?\d+)\s*\))?\s*",
+    re.I,
 )
 
 
@@ -564,16 +581,11 @@ class Query:
             raise QueryError("generate needs a set on the current axis")
         plain_refs: list = []
         for m in members:
-            cm = _re.match(
-                r"(?is)^\s*(\[(?:[^\]]|\]\])*\])\s*\.\s*currentmember"
-                r"(\s*\.\s*children)?\s*$",
-                m,
-            )
-            if cm:
-                from .members import parse_identifier
-
-                dim = self.cube.dimension(parse_identifier(cm.group(1))[0])
-                if cm.group(2):  # CurrentMember.Children — drill one level
+            cur = current_member(self.cube, m)
+            drill = cur and _re.fullmatch(r"(?i)\.\s*children\s*", m[cur[1]:])
+            if cur and (drill or cur[1] == len(m)):
+                dim = cur[0]
+                if drill:  # CurrentMember.Children — drill one level
                     new_sets = []
                     for s_ in ax.sets:
                         if s_.dimension.name == dim.name:
@@ -1086,18 +1098,12 @@ class Query:
                 f"Axis #{idxs[-1]} specified but axis #{missing} is not"
             )
         axes = [self._axes[i] for i in idxs]
-        # [Dim].CurrentMember.<Prop>[(args)] in calc-member formulas: the
-        # current row's member of an axis dimension — .Name/.Caption
-        # builtins, or a registered scalar UDF applied to the member name
-        # (the reference's Ruby member-property/method UDFs,
-        # schema_definition_test.rb:1055-1071).  Rewritten per query
-        # because the binding depends on which level of the dimension the
-        # axes project; to_mdx keeps the original text (self._with is
-        # never mutated).
         import dataclasses as _dc
 
+        # calc-member formulas lowered for these axes (to_mdx keeps the
+        # original text: self._with is never mutated)
         rewritten: dict[str, CalculatedMember] = {}
-        rewrite_errors: dict[str, QueryError] = {}
+        rewrite_errors: dict[str, ValueError] = {}
         # cube-level (schema-declared) calculated members get the SAME
         # per-query rewrites as WITH members — a Mondrian-XML-imported
         # formula like '(Measures.[Profit], [Time].[Time].PREVMEMBER)'
@@ -1144,42 +1150,23 @@ class Query:
         rewrite_candidates = list(self._with) + list(
             used_cube_calcs.values()
         )
-        for cm in rewrite_candidates:
-            if "currentmember" in cm.expression.lower():
-                # a WITH member the query never evaluates must not fail it
-                # (Mondrian computes calc members lazily): defer the
-                # "needs the dimension on an axis" raise until the member
-                # is actually selected
-                try:
-                    rewritten[cm.name] = _dc.replace(
-                        cm,
-                        expression=self._rewrite_current_member(
-                            cm.expression, axes
-                        ),
-                    )
-                except QueryError as e:
-                    rewrite_errors[cm.name] = e
-        # time-intelligence value forms — Sum(Ytd(), m), ParallelPeriod
-        # tuples, … — lower to window SQL over the grid's time columns,
-        # which are only known once the axes are (same per-query timing
-        # as the CurrentMember rewrite above).  Rewrites may register
-        # grid enrichers (transient columns like position-within-parent
-        # that the lowered windows reference).
+        # CurrentMember properties and time-intelligence value forms —
+        # Sum(Ytd(), m), ParallelPeriod tuples, … — lower over the grid's
+        # columns, which are only known once the axes are (the binding
+        # depends on which levels the axes project).  A member the
+        # query never evaluates must not fail it (Mondrian computes calc
+        # members lazily): its error is deferred until it is selected.
+        # Lowerings may register grid enrichers (transient columns like
+        # position-within-parent that the lowered windows reference).
         grid_enrichers: list = []
         for cm in rewrite_candidates:
-            base = rewritten.get(cm.name, cm)
-            if cm.name not in rewrite_errors and _TIME_INTEL_RE.search(
-                base.expression
-            ):
-                try:
-                    rewritten[cm.name] = _dc.replace(
-                        base,
-                        expression=self._rewrite_time_intel(
-                            base.expression, axes, grid_enrichers
-                        ),
-                    )
-                except QueryError as e:
-                    rewrite_errors[cm.name] = e
+            try:
+                expr = self._lower_formula(cm.expression, axes, grid_enrichers)
+            except (QueryError, MdxError) as e:
+                rewrite_errors[cm.name] = e
+                continue
+            if expr != cm.expression:
+                rewritten[cm.name] = _dc.replace(cm, expression=expr)
         with_list = tuple(
             rewritten.get(cm.name, cm)
             for cm in rewrite_candidates
@@ -1363,10 +1350,7 @@ class Query:
             )
             sort_specs.append(ax_spec)
         sort_spec = [e for spec in sort_specs for e in spec]
-        axis_cols = [
-            [lv.out for s in ax.sets for lv in self._visible_levels(s)]
-            for ax in axes
-        ]
+        axis_cols = [self._group_cols_of(ax) for ax in axes]
         formats: dict = {m.out: m.format_string for m in measures if m.format_string}
         # schema-declared cell formatters (model.Measure.cell_formatter,
         # schema_definition_test.rb:1235-1250): callables win over format
@@ -1830,19 +1814,12 @@ class Query:
 
         from pyspark.sql import functions as F
 
-        pat = _re.compile(
-            r"\[((?:[^\]]|\]\])+)\]\s*\.\s*CurrentMember\s*\.\s*"
-            r"Properties\s*\(\s*'([^']*)'\s*\)",
-            _re.IGNORECASE,
-        )
+        prop_re = _re.compile(r"(?i)\.\s*Properties\s*\(\s*'([^']*)'\s*\)")
         drops: list[str] = []
         joined_dims: set[str] = set()
 
-        def repl(m: _re.Match) -> str:
+        def repl(dim, pname: str) -> str:
             nonlocal df
-            dim_name = m.group(1).replace("]]", "]")
-            pname = m.group(2)
-            dim = self.cube.dimension(dim_name)
             present = [lv for lv in dim.levels if lv.out in df.columns]
             if not present:
                 raise QueryError(
@@ -1886,14 +1863,25 @@ class Query:
                 drops.extend(n for n, _e, _f in lv.property_defs)
             return f"`{col}`"
 
-        new_cond = pat.sub(repl, cond)
-        return df, new_cond, [c for c in drops if c in df.columns]
+        out: list[str] = []
+        last = 0
+        for start, dim, end in current_members(self.cube, cond):
+            p = prop_re.match(cond, end)
+            if p is not None:
+                out.append(cond[last:start] + repl(dim, p.group(1)))
+                last = p.end()
+        out.append(cond[last:])
+        return df, "".join(out), [c for c in drops if c in df.columns]
 
-    def _rewrite_time_intel(self, expr: str, axes, enrichers: list) -> str:
-        """Time-intelligence VALUE forms in calc-member formulas → window
-        SQL over the grid's time columns (SURVEY.md §2.5; jar!mondrian/
-        olap/fun/{XtdFunDef,PeriodsToDateFunDef,LastPeriodsFunDef,
-        ParallelPeriodFunDef,OpeningClosingPeriodFunDef}).  Supported:
+    def _lower_formula(self, expr: str, axes, enrichers: list) -> str:
+        """Lower a calc-member formula for these axes.  Each
+        ``[Dim].CurrentMember.<Prop>`` becomes SQL over the member column
+        of the deepest ``Dim`` level projected on any axis
+        (:func:`..mdx.lower_member_properties`).  Time-intelligence VALUE
+        forms become window SQL over the grid's time columns (SURVEY.md
+        §2.5; jar!mondrian/olap/fun/{XtdFunDef,PeriodsToDateFunDef,
+        LastPeriodsFunDef,ParallelPeriodFunDef,OpeningClosingPeriodFunDef,
+        LeadLagFunDef}).  Supported:
 
         * ``Sum|Avg|Min|Max|Count(Ytd|Qtd|Mtd|Wtd(), <measure>)`` —
           running aggregate from the period start, partitioned by the
@@ -1913,14 +1901,17 @@ class Query:
           via a grid enricher — month 5's cousin one quarter back is
           month 2, the same position in Q1, never month 5 of an earlier
           year);
-        * ``(<measure>, OpeningPeriod|ClosingPeriod([T].[Level]))`` —
-          first/last value of the level's periods within the current
-          parent.
+        * ``(<measure>, OpeningPeriod|ClosingPeriod([T].[Level][, m]))``
+          — first/last value of the level's periods within the current
+          parent, or within ``m = Ancestor([T].CurrentMember, [T].[L])``;
+        * ``(<measure>, [T].PrevMember|NextMember|Lag(n)|Lead(n))`` —
+          lag/lead over the dimension's grid columns in level order (the
+          reference fixture's "Profit last Period" idiom,
+          MondrianTest.xml:116).
 
-        Runs at execute() time — like the CurrentMember rewrite, the
-        lowering depends on which time columns the axes project.  Member
-        references are relative (the current row); absolute-member set
-        forms belong on axes (:meth:`periods_to_date` / :meth:`xtd`)."""
+        Tuples are read in either order.  Member references are relative
+        (the current row); absolute-member set forms belong on axes
+        (:meth:`periods_to_date` / :meth:`xtd`)."""
         from .members import parse_identifier
 
         def grid_levels(dim):
@@ -1933,6 +1924,15 @@ class Query:
                     if len(levels) > len(best):
                         best = list(levels)
             return [lv.out for lv in best]
+
+        def level_of(dim):
+            cols = grid_levels(dim)
+            if not cols:
+                raise QueryError(
+                    f"CurrentMember of [{dim.name}] needs the dimension on "
+                    "an axis"
+                )
+            return next(lv for lv in dim.levels if lv.out == cols[-1])
 
         def other_cols(dim):
             cols: list[str] = []
@@ -2055,8 +2055,6 @@ class Query:
             enrichers.append(enrich)
             return idx
 
-        out = expr
-
         def make_agg_repl(aggname: str):
             def repl(parts: list[str]):
                 if len(parts) != 2:
@@ -2168,51 +2166,23 @@ class Query:
 
             return repl
 
-        out = rewrite_calls(
-            out,
-            {a: make_agg_repl(a) for a in ("sum", "avg", "min", "max", "count")},
-        )
+        def is_current(text: str) -> bool:
+            cur = current_member(self.cube, text)
+            return cur is not None and cur[1] == len(text)
 
-        # (measure, [Dim].PrevMember/NextMember/Lag(n)/Lead(n)) tuples —
-        # the reference fixture's own "Profit last Period" idiom
-        # (MondrianTest.xml:116 COALESCEEMPTY((Measures.[Profit],
-        # [Time].[Time].PREVMEMBER), …); jar!...LeadLagFunDef).  Lowered
-        # to lag/lead over the dimension's grid columns in level order.
-        nav = re.compile(
-            r"(?i)\(\s*(?:(?P<m1>\[[^()]+?\]|\w+)\s*,\s*)?"
-            r"(?P<dim>\[[^\]()]+\](?:\s*\.\s*\[[^\]()]+\])*)\s*\.\s*"
-            r"(?P<fn>prevmember|nextmember|lag|lead)"
-            r"(?:\s*\(\s*(?P<n>-?\d+)\s*\))?"
-            r"\s*(?:,\s*(?P<m2>\[[^()]+?\]|\w+)\s*)?\)"
-        )
-
-        def nav_repl(mo: re.Match) -> str:
-            fn = mo.group("fn").lower()
-            if bool(mo.group("m1")) == bool(mo.group("m2")):
-                return mo.group(0)  # not a 2-tuple — leave untouched
-            if fn in ("lag", "lead") and mo.group("n") is None:
-                return mo.group(0)
-            mtxt = mo.group("m1") or mo.group("m2")
-            if not mtxt.startswith("[") and not re.fullmatch(r"\w+", mtxt):
-                return mo.group(0)
-            segs = parse_identifier(mo.group("dim"))
-            # [Time].[Time].PrevMember (dim.hierarchy form) and
-            # [Time].PrevMember both address the dimension
-            try:
-                dim = self.cube.dimension(segs[0])
-            except KeyError:
-                return mo.group(0)
-            if len(segs) > 1 and segs[1].lower() not in (
-                segs[0].lower(),
-                dim.name.lower(),
-            ):
-                return mo.group(0)  # a member path, not a bare hierarchy
+        def navigate(nav: re.Match, mtxt: str) -> str | None:
+            fn = nav.group(2).lower()
+            if fn in ("lag", "lead") and nav.group(3) is None:
+                return None
+            if not re.fullmatch(r"\[.*|\w+", mtxt, re.S):
+                return None
+            dim = hierarchy_dimension(self.cube, nav.group(1))
+            if dim is None:
+                return None  # a member path, not a bare hierarchy
             tcols = grid_levels(dim)
             if not tcols:
-                raise QueryError(
-                    f"{fn}: the axes do not project {dim.name}"
-                )
-            n = int(mo.group("n") or 1)
+                raise QueryError(f"{fn}: the axes do not project {dim.name}")
+            n = int(nav.group(3) or 1)
             wfn = "lag" if fn in ("prevmember", "lag") else "lead"
             mout = measure_out(mtxt)
             part = other_cols(dim)
@@ -2220,37 +2190,8 @@ class Query:
             order = ", ".join(tcols)
             return f"{wfn}({mout}, {n}) OVER ({partition}ORDER BY {order})"
 
-        out = nav.sub(nav_repl, out)
-
-        # Ancestor([T].CurrentMember, [T].[Level]) inside Opening/Closing
-        # period member arguments → a paren-free marker so the tuple
-        # regex below can match the whole call (nested parens otherwise
-        # break its argument capture)
-        anc = re.compile(
-            r"(?i)ancestor\s*\(\s*\[[^\]()]+\]\s*\.\s*currentmember\s*,\s*"
-            r"(\[[^\]()]+\](?:\s*\.\s*\[[^\]()]+\])*)\s*\)"
-        )
-        out = anc.sub(
-            lambda m: "@ancestor:" + re.sub(r"\s", "", m.group(1)), out
-        )
-
-        # tuple forms: (measure, ParallelPeriod(...)) either order,
-        # likewise OpeningPeriod/ClosingPeriod
-        tup = re.compile(
-            r"(?i)\(\s*(?:(?P<m1>\[[^()]+?\]|\w+)\s*,\s*)?"
-            r"(?P<fn>parallelperiod|openingperiod|closingperiod)"
-            r"\s*\(\s*(?P<args>[^()]*)\)\s*(?:,\s*(?P<m2>\[[^()]+?\]|\w+)\s*)?\)"
-        )
-
-        def tup_repl(mo: re.Match) -> str:
-            fn = mo.group("fn").lower()
-            if bool(mo.group("m1")) == bool(mo.group("m2")):
-                raise QueryError(
-                    f"{fn} is supported as a 2-tuple with exactly one "
-                    "measure in this subset"
-                )
-            mout = measure_out(mo.group("m1") or mo.group("m2"))
-            args = split_args(mo.group("args"))
+        def period(fn: str, args: list[str], mtxt: str) -> str:
+            mout = measure_out(mtxt)
             if not args:
                 raise QueryError(
                     f"{fn} needs an explicit level argument in this subset"
@@ -2294,14 +2235,9 @@ class Query:
                 # widens the frame to the LevelB ancestor's descendants;
                 # a bare CurrentMember at the grid's own level is the
                 # degenerate single-row frame (the value itself)
-                m_anc = re.fullmatch(r"@ancestor:(.+)", args[1])
-                m_cur = re.fullmatch(
-                    r"(?i)\[[^\]()]+\](?:\s*\.\s*\[[^\]()]+\])*"
-                    r"\s*\.\s*currentmember",
-                    args[1],
-                )
-                if m_anc:
-                    dim_b, idx_b = time_dim(m_anc.group(1))
+                anc = _call_args(args[1], "ancestor")
+                if anc is not None and len(anc) == 2 and is_current(anc[0]):
+                    dim_b, idx_b = time_dim(anc[1])
                     if dim_b.name != dim.name or idx_b > idx:
                         raise QueryError(
                             f"{fn}: the Ancestor level must be an "
@@ -2310,7 +2246,7 @@ class Query:
                         )
                     part = other_cols(dim) + tcols[: idx_b + 1]
                     order = ", ".join(tcols[idx_b + 1 :]) or tcols[idx_b]
-                elif m_cur:
+                elif is_current(args[1]):
                     part = other_cols(dim) + tcols
                     order = tcols[idx]
                 else:
@@ -2329,88 +2265,46 @@ class Query:
                 "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
             )
 
-        out = tup.sub(tup_repl, out)
-        if "@ancestor:" in out:
-            raise QueryError(
-                "Ancestor(CurrentMember, level) is supported only as the "
-                "member argument of OpeningPeriod/ClosingPeriod in this "
-                "subset"
-            )
-        leftover = _TIME_INTEL_RE.search(out)
+        def repl_tuple(parts: list[str]) -> str | None:
+            # (measure, <period call>) or (measure, <dim navigation>), in
+            # either order
+            for i, part in enumerate(parts):
+                for fn in ("parallelperiod", "openingperiod", "closingperiod"):
+                    args = _call_args(part, fn)
+                    if args is None:
+                        continue
+                    if len(parts) != 2:
+                        raise QueryError(
+                            f"{fn} is supported as a 2-tuple with exactly "
+                            "one measure in this subset"
+                        )
+                    return period(fn, args, parts[1 - i])
+                nav = _NAV_RE.fullmatch(part)
+                if nav is not None and len(parts) == 2:
+                    return navigate(nav, parts[1 - i])
+            return None
+
+        table = {a: make_agg_repl(a) for a in ("sum", "avg", "min", "max", "count")}
+        table[""] = repl_tuple
+        out = lower_member_properties(
+            expr, self.cube, level_of, self.engine.fact.sparkSession,
+            QueryError,
+        )
+        out = rewrite_calls(out, table)
+        leftover = next(
+            (m for m in _TIME_INTEL_RE.finditer(out) if m.group(1)), None
+        )
         if leftover:
             raise QueryError(
                 f"unsupported time-intelligence form at "
-                f"{leftover.group(0)!r}: supported are Sum/Avg/Min/Max/"
+                f"{leftover.group(1)!r}: supported are Sum/Avg/Min/Max/"
                 "Count over Ytd()/Qtd()/Mtd()/Wtd()/PeriodsToDate(level)/"
-                "LastPeriods(n), and 2-tuples with ParallelPeriod/"
-                "OpeningPeriod/ClosingPeriod(level[, n])"
+                "LastPeriods(n), and 2-tuples of a measure with "
+                "ParallelPeriod(level[, n]), OpeningPeriod/ClosingPeriod"
+                "(level[, <dim>.CurrentMember | Ancestor(<dim>.CurrentMember,"
+                " level)]) or <dim>.PrevMember/NextMember/Lag(n)/Lead(n)"
             )
         return out
-
-    def _rewrite_current_member(self, expr: str, axes) -> str:
-        """Rewrite ``[Dim].CurrentMember.<Prop>[(args)]`` in a calc-member
-        formula to an expression over the current row's member column:
-        the DEEPEST level of ``Dim`` projected on any axis.  ``Name`` is
-        the member key as a string, ``Caption`` its caption column when
-        one is declared; any other property must be a registered scalar
-        UDF (:func:`..udf.register_scalar`) and is applied to the member
-        name — the reference's Ruby member-property/method UDF surface
-        (schema_definition_test.rb:1055-1071)."""
-        import re as _re
-
-        from .star import _has_caption
-        from .udf import registered_functions
-
-        udfs = {
-            n.lower()
-            for n in registered_functions(self.engine.fact.sparkSession)
-        }
-
-        def level_of(dim_name: str):
-            best = None
-            for ax in axes:
-                for s in ax.sets:
-                    if s.dimension.name.lower() != dim_name.lower():
-                        continue
-                    levels = self._visible_levels(s)
-                    if levels and (best is None or len(levels) > best[1]):
-                        best = (levels[-1], len(levels))
-            return best[0] if best else None
-
-        def repl(m: _re.Match) -> str:
-            dim_name = m.group(1).replace("]]", "]")
-            prop = m.group(2)
-            args = m.group(4)
-            lv = level_of(dim_name)
-            if lv is None:
-                raise QueryError(
-                    f"CurrentMember of [{dim_name}] needs the dimension on an axis"
-                )
-            name_col = f"cast({lv.out} as string)"
-            p = prop.lower()
-            if p == "name":
-                return name_col
-            if p == "caption":
-                return f"{lv.out}_caption" if _has_caption(lv) else name_col
-            if p in udfs:
-                extra = f", {args}" if args and args.strip() else ""
-                return f"{prop}({name_col}{extra})"
-            raise QueryError(
-                f"unknown member property {prop!r} — Name, Caption, or a "
-                "UDF registered with register_scalar"
-            )
-
-        # the singleton-set sugar `{[Dim].CurrentMember}.prop` (reference
-        # set-property UDFs over a current-member set,
-        # schema_definition_test.rb:1073-1089) is the member form in
-        # braces — same rewrite
-        return _re.sub(
-            r"\{?\s*\[((?:[^\]]|\]\])+)\]\s*\.\s*CurrentMember\s*\}?\s*\.\s*"
-            r"([A-Za-z_][A-Za-z0-9_]*)\s*(\(([^)]*)\))?",
-            repl,
-            expr,
-            flags=_re.IGNORECASE,
-        )
 
     def _visible_levels(self, s) -> list:
         """A set's grouping levels minus any hidden by a level-bounded

@@ -1085,7 +1085,7 @@ def ytd_mdx_gate(spark, sf_dir):
     ``Sum(Ytd(), m)`` lowers to a running window partitioned by the
     TimeYears level, ``Sum(LastPeriods(3), m)`` to a trailing frame over
     the full time order — both resolved per query from the axis's
-    projected time columns (query._rewrite_time_intel)."""
+    projected time columns (query._lower_formula)."""
     eng = get_engine(spark, sf_dir)
     return eng.execute(
         """

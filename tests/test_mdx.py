@@ -4257,3 +4257,20 @@ def test_to_mdx_union_override_with_trailing_drill(engine):
     assert "UNION(" in out and "TOPCOUNT(" in out
     r1 = q1.execute().df
     assert r1.count() > 0
+
+
+def test_generate_of_topcount_axis_columns_are_distinct(engine):
+    """Generate over four years of a TopCount nation set keeps one row
+    key per level column, not one copy per generated set."""
+    r = execute_mdx(
+        engine,
+        """
+        SELECT {[Measures].[Sum Qty]} ON COLUMNS,
+               Generate([Time].[Year].Members,
+                        TopCount([Customer].[Nation].Members, 1,
+                                 [Measures].[Sum Qty])) ON ROWS
+        FROM [Sales]
+        """,
+    )
+    assert r.axis_columns[1] == ["region_name", "nation_name"]
+    assert {len(k) for k in r.row_names} == {2}

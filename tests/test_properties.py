@@ -65,6 +65,54 @@ def test_split_args_escaped_bracket():
     assert split_args("[Customer].[a]],b], 2") == ["[Customer].[a]],b]", "2"]
 
 
+#: text built from the time-intelligence and CurrentMember names and the
+#: characters a scanner could trip on
+_quoted_text = st.lists(
+    st.sampled_from([
+        "(", ")", ",", ".", " ", "'", '"', "[", "]", "Sum", "Ytd", "Qtd",
+        "PeriodsToDate", "LastPeriods", "ParallelPeriod", "OpeningPeriod",
+        "ClosingPeriod", "Ancestor", "Lag", "PrevMember", "CurrentMember",
+        "[Time]", "Name",
+    ]),
+    max_size=12,
+).map("".join)
+
+
+@given(st.lists(
+    st.tuples(st.sampled_from(["'", '"', "["]), _quoted_text),
+    min_size=1,
+    max_size=4,
+))
+@settings(max_examples=300)
+def test_scanners_never_look_inside_literals_or_names(pieces):
+    """Names inside ``'…'``, ``"…"`` or ``[…]`` never reach a call table
+    (not even the ``""`` tuple entry) nor the leftover time-intelligence
+    scan, and the splitter keeps each piece whole."""
+    from mondrian_olap_spark.query import _TIME_INTEL_RE
+
+    quoted = [
+        "'" + t.replace("'", "''") + "'" if q == "'"
+        else '"' + t.replace('"', "") + '"' if q == '"'
+        else quote_segment(t)
+        for q, t in pieces
+    ]
+
+    def fire(args):
+        raise AssertionError(f"table entry fired on {args}")
+
+    names = ["", "sum", "ytd", "qtd", "periodstodate", "lastperiods",
+             "parallelperiod", "openingperiod", "closingperiod", "ancestor",
+             "lag", "prevmember", "currentmember", "name"]
+    text = " + ".join(quoted)
+    assert rewrite_calls(text, dict.fromkeys(names, fire)) == text
+    assert not any(m.group(1) for m in _TIME_INTEL_RE.finditer(text))
+    assert split_args(", ".join(quoted)) == quoted
+
+
+def test_split_args_double_quoted_literal():
+    assert split_args('"a, b", 2') == ['"a, b"', "2"]
+
+
 number_formats = st.sampled_from(
     ["#,##0.00", "#,##0", "0.0%", "$#,##0.00", "0.00;(0.00)", "Percent",
      "Fixed", "Currency", "#.##", "0", "0.000000"]

@@ -618,3 +618,63 @@ def test_currentdatemember_cap_is_position_within_parent(spark):
     assert int(y) == today.year
     assert q == f"Q{(today.month - 1) // 3 + 1}"
     assert int(m) == today.month
+
+
+_REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
+_GEN = (
+    "SELECT {[Measures].[Sum Qty]} ON COLUMNS, GENERATE("
+    "[Customer].[Region].Members, %s) ON ROWS FROM [Sales]"
+)
+_X = (
+    "WITH MEMBER [Measures].[X] AS '%s' SELECT {[Measures].[X]} ON COLUMNS,"
+    " [Customer].[Region].Members ON ROWS FROM [Sales]"
+)
+_OPEN = (
+    "WITH MEMBER [Measures].[X] AS '([Measures].[Sum Qty], OpeningPeriod("
+    "[Time].[Month], Ancestor(%s, [Time].[Year])))' SELECT {[Measures].[X]}"
+    " ON COLUMNS, [Time].[Month].Members ON ROWS FROM [Sales]"
+)
+
+
+@pytest.mark.parametrize(
+    "mdx, want",
+    [
+        # the [Dim].[Dim] hierarchy form is the [Dim] form
+        (
+            _GEN % "[Customer].[Customer].CurrentMember.Children",
+            (_GEN % "[Customer].CurrentMember.Children", 25),
+        ),
+        (
+            _GEN % "[Customer].[Customer].CurrentMember",
+            (_GEN % "[Customer].CurrentMember", 5),
+        ),
+        (_X % "[Customer].[Customer].CurrentMember.Name", _REGIONS),
+        (
+            _X % 'Generate([Customer].[Region].Members, '
+            '[Customer].[Customer].CurrentMember.Name, ",")',
+            [",".join(_REGIONS)] * 5,
+        ),
+        (
+            _OPEN % "[Time].[Time].CurrentMember",
+            (_OPEN % "[Time].CurrentMember", 80),
+        ),
+        # string literals are never lowered
+        (_X % '"[Customer].CurrentMember.Name"', ["[Customer].CurrentMember.Name"] * 5),
+        (
+            _X % '"([Measures].[Sum Qty], [Time].PrevMember)"',
+            ["([Measures].[Sum Qty], [Time].PrevMember)"] * 5,
+        ),
+        (_X % '"Sum(Ytd(), x)"', ["Sum(Ytd(), x)"] * 5),
+        (_X % '"ParallelPeriod(x)"', ["ParallelPeriod(x)"] * 5),
+    ],
+)
+def test_current_member_forms_lower_once_and_never_in_literals(
+    engine, mdx, want
+):
+    rows = sorted(execute_mdx(engine, mdx).df.collect())
+    if isinstance(want, tuple):  # an equivalent statement and its row count
+        ref, n = want
+        assert len(rows) == n
+        assert rows == sorted(execute_mdx(engine, ref).df.collect())
+    else:
+        assert [r["x"] for r in rows] == want
