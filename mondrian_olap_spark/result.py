@@ -24,6 +24,43 @@ class QueryTimeoutError(TimeoutError):
     (``connection.rb:513-515``; behavior ``test/query_test.rb:1290-1336``)."""
 
 
+def _node(plan) -> str:
+    return plan.getClass().getSimpleName()
+
+
+def _fits_one_task(df: DataFrame) -> bool:
+    """Whether Catalyst sizes ``df``'s optimized plan at no more than one
+    advisory partition (``spark.sql.adaptive.advisoryPartitionSizeInBytes``)."""
+    session = df.sparkSession._jsparkSession
+    sql_conf = df.sparkSession._jvm.org.apache.spark.sql.internal.SQLConf
+    advisory = session.sessionState().conf().getConf(
+        sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return size <= advisory
+
+
+def _sorts_through_shuffle(df: DataFrame) -> bool:
+    """Whether the top ``SortExec`` of ``df``'s physical plan (under AQE, of
+    its initial plan) is a global sort reading a ``ShuffleExchangeExec``.
+    Walks node classes over py4j: printing a cache-hit plan would render
+    the whole cached lineage, which costs more than the sort it saves."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if _node(plan) == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    while _node(plan) != "SortExec":
+        children = plan.children()
+        if children.size() != 1:
+            return False
+        plan = children.apply(0)
+    if not getattr(plan, "global")():  # a window's sort: ``orderBy``'s was dropped
+        return False
+    child = plan.child()
+    if _node(child) == "InputAdapter":  # whole-stage codegen boundary
+        child = child.child()
+    return _node(child) == "ShuffleExchangeExec"
+
+
 class Result:
     def __init__(
         self,
@@ -38,6 +75,7 @@ class Result:
         self.axis_columns = axis_columns
         self.measure_columns = measure_columns
         self._sort_spec = sort_spec or []
+        self._ordered: DataFrame | None = None  # memoized ``df``
         self._formats = formats or {}
         #: connection locale for numeric separators in formatted values
         self.locale = locale
@@ -56,13 +94,33 @@ class Result:
 
     @property
     def df(self) -> DataFrame:
-        """The tidy cell DataFrame (sorted if the query ordered an axis)."""
-        if self._sort_spec:
-            return self._df.orderBy(*self._sort_spec)
-        # default: hierarchize order (parents before children ≡ level-path
-        # sort — jar!...HierarchizeFunDef)
-        flat = [c for ax in self.axis_columns for c in ax]
-        return self._df.orderBy(*flat) if flat else self._df
+        """The tidy cell DataFrame, in axis order: the query's sort spec, or
+        by default hierarchize order (parents before children ≡ level-path
+        sort — jar!...HierarchizeFunDef).
+
+        A global ``orderBy`` plans as ``Exchange rangepartitioning``, which
+        costs three Spark jobs (range sampling, shuffle map, result) even
+        for a few cached rows.  So when that plan sorts through a shuffle
+        and Catalyst's size of the unsorted grid is at most
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (Spark's size
+        for one task's data), the grid is instead coalesced to one
+        partition and sorted there: the same rows in the same order, from
+        one job with one task.  A cache-hit read reports the exact bytes of
+        its materialised aggregate, so it takes this path; a cold star
+        grid's estimate is the product of its scans, so it keeps the
+        distributed sort.  ``coalesce(1)`` is narrow, so the size bound
+        also bounds everything that one task computes below it, up to the
+        nearest exchange or cached relation.
+
+        The frame is chosen once and memoized, so ``df``, the collect,
+        ``to_pandas`` and ``profiling_plan`` share one planned Dataset."""
+        if self._ordered is None:
+            spec = self._sort_spec or [c for ax in self.axis_columns for c in ax]
+            ordered = self._df.orderBy(*spec) if spec else self._df
+            if spec and _fits_one_task(ordered) and _sorts_through_shuffle(ordered):
+                ordered = self._df.coalesce(1).sortWithinPartitions(*spec)
+            self._ordered = ordered
+        return self._ordered
 
     @property
     def axes_count(self) -> int:
@@ -150,8 +208,9 @@ class Result:
     def profiling_plan(self) -> str:
         """Physical plan text — the profiling surface
         (``connection.rb:525-539`` profiling_plan; here Catalyst's plan
-        replaces Mondrian's calc-tree dump)."""
-        return self._df._jdf.queryExecution().executedPlan().toString()
+        replaces Mondrian's calc-tree dump) of ``df``, the frame the
+        cell accessors collect."""
+        return self.df._jdf.queryExecution().executedPlan().toString()
 
     @property
     def row_names(self) -> list:

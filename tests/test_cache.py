@@ -6,6 +6,7 @@ mutations stay invisible until a flush, region flush is targeted.
 
 import os
 import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -56,6 +57,111 @@ def test_warm_query_hits_cache_not_fact(cached_engine):
     p = plan_of(warm)
     assert "InMemoryTableScan" in p
     assert p.index("InMemoryTableScan") < p.index("Scan parquet")
+
+
+_RATIO_READ = (
+    "WITH MEMBER [Measures].[Price Per Unit] AS "
+    "'[Measures].[Sum Price] / [Measures].[Sum Qty]' "
+    "SELECT {[Measures].[Sum Qty], [Measures].[Sum Price], "
+    "[Measures].[Price Per Unit]} ON COLUMNS, "
+    "[Customer].[Nation].Members ON ROWS FROM [Sales] WHERE [Time].[1995]"
+)
+_ORDER_READ = (
+    "SELECT {[Measures].[Sum Qty], [Measures].[Count Order]} ON COLUMNS, "
+    "Order(Filter([Part].[Brand].Members, [Measures].[Sum Qty] > 5000), "
+    "[Measures].[Sum Qty], BDESC) ON ROWS FROM [Sales]"
+)
+_TOPCOUNT_READ = (
+    "SELECT {[Measures].[Sum Price]} ON COLUMNS, "
+    "TopCount([Customer].[Nation].Members, 5, [Measures].[Sum Price]) "
+    "ON ROWS FROM [Sales] WHERE [Time].[1995]"
+)
+
+
+@pytest.mark.parametrize(
+    "mdx",
+    [_RATIO_READ, _ORDER_READ, _TOPCOUNT_READ],
+    ids=["level_axis_ratio", "order_filter_bdesc", "topcount"],
+)
+def test_cache_hit_read_runs_one_job(spark, cached_engine, mdx):
+    """A repeated read is answered from the aggregate cache by one Spark
+    job: its few rows are sorted in one task, with no range-partitioning
+    sample or shuffle (Mondrian: a warm repeat runs no SQL,
+    query_test.rb:1162-1213)."""
+    cached_engine.execute(mdx).formatted_values  # fills the aggregate cache
+    res = cached_engine.execute(mdx)
+    sc = spark.sparkContext
+    group = f"second-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        res.formatted_values
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert cached_engine.cache.hits >= 1
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+#: cache-hit grid shapes whose order the single-task sort must keep
+_SORTED_SHAPES = {
+    "hierarchize_rows_and_columns": lambda e: (
+        Query(e).columns("[LineStatus].children", "[Measures].[Sum Qty]")
+        .rows("[ReturnFlag].children").execute()
+    ),
+    "order_bdesc": lambda e: e.execute(_ORDER_READ),
+    "hierarchical_order_asc": lambda e: e.execute(
+        "SELECT {[Measures].[Sum Qty]} ON COLUMNS, "
+        "Order([Customer].[Nation].Members, [Measures].[Sum Qty], ASC) "
+        "ON ROWS FROM [Sales]"
+    ),
+    "hierarchize_post_drilldown": lambda e: (
+        Query(e).columns("[Measures].[Sum Qty]")
+        .rows("[Customer].[Region].Members").drilldown("[Customer].[ASIA]")
+        .hierarchize(post=True).execute()
+    ),
+    "rollup_totals": lambda e: (
+        Query(e).columns("[Measures].[Sum Qty]")
+        .rows("[Customer].[Region].Members").totals("rollup").execute()
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", list(_SORTED_SHAPES))
+def test_single_task_sort_matches_distributed_sort(spark, cached_engine, shape):
+    """The same cache-hit read returns identical rows in identical order
+    whether ``Result.df`` sorts in one task (the default) or through range
+    partitioning (forced by a one-byte advisory partition size)."""
+    read = _SORTED_SHAPES[shape]
+    read(cached_engine).df.collect()  # fills the aggregate cache
+    one_task = read(cached_engine).df
+    rows = one_task.collect()
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        distributed = read(cached_engine).df
+        distributed_rows = distributed.collect()
+    finally:
+        spark.conf.set(key, old)
+    assert rows == distributed_rows
+    one_task_plan, distributed_plan = plan_of(one_task), plan_of(distributed)
+    assert "Coalesce 1" in one_task_plan and "rangepartitioning" not in one_task_plan
+    assert "rangepartitioning" in distributed_plan and "Coalesce" not in distributed_plan
+
+
+def test_cold_reads_keep_the_distributed_sort(cached_engine):
+    """The size gate keeps cold grids on Spark's distributed sort: before
+    the aggregate cache holds the grid, its size estimate is that of the
+    star scans.  A TopCount grid is already in one partition, so its plan
+    has neither a range shuffle nor a coalesce, cold or warm."""
+    cached_engine.flush_schema_cache()
+    cold = plan_of(cached_engine.execute(_RATIO_READ).df)
+    assert "Exchange rangepartitioning" in cold and "Coalesce" not in cold
+    for _ in range(2):
+        top = cached_engine.execute(_TOPCOUNT_READ).df
+        plan = plan_of(top)
+        assert "rangepartitioning" not in plan and "Coalesce" not in plan
+        top.collect()
 
 
 def test_distinct_slicers_are_distinct_entries(cached_engine):

@@ -20,6 +20,25 @@ def test_profiling_plan_and_duration(engine):
     assert r.total_duration is not None and r.total_duration > 0
 
 
+def test_profiling_plan_is_the_plan_that_ran(spark):
+    """``profiling_plan`` prints the plan of the frame the accessors
+    collect: on a cache-hit read, the one-task sort over ``Coalesce 1``,
+    not the unsorted grid nor a range-partitioned sort."""
+    eng = engine_from_parquet(spark, SCHEMA, "Sales", SF_DIR)
+    eng.enable_cache()
+    query = Query(eng).columns("[Measures].[Sum Qty]").rows("[Customer].children")
+    try:
+        query.execute().values  # fills the aggregate cache
+        r = query.execute()
+        r.values
+        plan = r.profiling_plan
+        assert eng.cache.hits >= 1
+        assert "Coalesce 1" in plan and "Sort" in plan
+        assert "Exchange rangepartitioning" not in plan
+    finally:
+        eng.flush_schema_cache()
+
+
 # -------------------------------------------------------------- timeout
 def test_timeout_triggers_on_heavy_query(spark, engine):
     """A short timeout cancels a heavy query (query_test.rb:1290-1336)."""
