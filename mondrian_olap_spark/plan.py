@@ -29,9 +29,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .mdx import references
 from .members import MemberSetRef
 from .model import CalculatedMember, Dimension, Measure
 from .star import CubeEngine
+
+#: the alias of a tuple / Aggregate / set-statistic scalar (``mdx._intern``)
+_SCALAR_ALIAS = re.compile(r"__(?:tuple|aggexpr|setstat)\d+")
 
 
 def measure_column(m: Measure, internal: bool = False) -> Column:
@@ -578,28 +582,17 @@ class Planner:
         Always keeps ≥1 base measure (the aggregate path needs one)."""
         needed_calcs: list = []
         kept: set = set()
-        frontier = list(exprs)
+        refs = set().union(*map(references, exprs))
         changed = True
         while changed:
             changed = False
             for c in calcs:
-                if c.out in kept:
-                    continue
-                if any(
-                    re.search(rf"\b{re.escape(c.out)}\b", e)
-                    for e in frontier
-                ):
+                if c.out not in kept and c.out.lower() in refs:
                     kept.add(c.out)
                     needed_calcs.append(c)
-                    frontier.append(c.expression)
+                    refs.update(references(c.expression))
                     changed = True
-        base = [
-            m
-            for m in self.cube.measures
-            if any(
-                re.search(rf"\b{re.escape(m.out)}\b", e) for e in frontier
-            )
-        ]
+        base = [m for m in self.cube.measures if m.out.lower() in refs]
         if not base:
             base = [self.cube.measures[0]]
         needed_calcs.sort(key=lambda c: calcs.index(c))  # solve order
@@ -622,30 +615,23 @@ class Planner:
             if c.out not in seen_outs:
                 seen_outs.add(c.out)
                 candidates.append(c)
-        scalar_tok = r"__tuple\d|__aggexpr\d|__setstat\d"
+        refs = {c.out: set(references(c.expression)) for c in candidates}
+        expr_refs = set().union(*map(references, expr_sqls))
+        # a scalar alias is tainted, and so is every member reading one
         tainted = {
-            c.out
-            for c in candidates
-            if re.search(scalar_tok, c.expression)
+            r
+            for rs in (expr_refs, *refs.values())
+            for r in rs
+            if _SCALAR_ALIAS.fullmatch(r)
         }
         changed = True
         while changed:  # transitive closure of scalar taint
             changed = False
             for c in candidates:
-                if c.out in tainted:
-                    continue
-                if any(
-                    re.search(rf"\b{re.escape(t)}\b", c.expression)
-                    for t in tainted
-                ):
-                    tainted.add(c.out)
+                if c.out.lower() not in tainted and refs[c.out] & tainted:
+                    tainted.add(c.out.lower())
                     changed = True
-        bad = any(
-            re.search(rf"\b{re.escape(t)}\b", e)
-            for t in tainted
-            for e in expr_sqls
-        )
-        if bad or any(re.search(scalar_tok, e) for e in expr_sqls):
+        if expr_refs & tainted:
             from .query import QueryError
 
             raise QueryError(
@@ -653,7 +639,7 @@ class Planner:
                 "whose formula contains) a tuple/Aggregate/set-statistic "
                 "scalar — nested scalar lowerings are not supported"
             )
-        return [c for c in candidates if c.out not in tainted]
+        return [c for c in candidates if c.out.lower() not in tainted]
 
     def _attach_stat_scalar(self, agg, specs, axes, slicer, totals=None):
         """Set-statistic values in Measures formulas —
@@ -1074,58 +1060,47 @@ class Planner:
         dependency, aggregate the needed base measures, and compute the
         calc chain in solve_order — extras are pruned by the final select.
         """
-        known: dict[str, Measure | CalculatedMember] = {}
-        for m in self.cube.measures:
-            known[m.out] = m
-        for c in self.cube.calculated_members:
-            known[c.out] = c
-        for c in self.extra_measures:
-            known[c.out] = c
-        for m in measures:  # query-scoped WITH members shadow cube entries
-            known[m.out] = m
+        # by lower-case alias; query-scoped WITH members (``measures``)
+        # shadow cube entries
+        known: dict[str, Measure | CalculatedMember] = {
+            m.out.lower(): m
+            for m in (
+                *self.cube.measures,
+                *self.cube.calculated_members,
+                *self.extra_measures,
+                *measures,
+            )
+        }
 
         needed: dict[str, Measure | CalculatedMember] = {}
-
-        def _code_text(expr: str) -> str:
-            # alias tokens are only meaningful OUTSIDE string literals — a
-            # literal containing another member's alias must not create a
-            # phantom dependency edge (false cycles)
-            return re.sub(r"'(?:[^']|'')*'", " ", expr)
+        # formula dependencies: the aliases a formula names outside its
+        # string literals and calls (mdx.references) — a literal holding
+        # another member's alias, or a measure named like a SQL function
+        # (sum, count), makes no edge
+        deps_of: dict[str, list] = {}
 
         def visit(item: Measure | CalculatedMember) -> None:
             if item.out in needed:
                 return
             needed[item.out] = item
             if isinstance(item, CalculatedMember):
-                code = _code_text(item.expression)
-                for m_ in re.finditer(r"[A-Za-z_][A-Za-z0-9_]*", code):
-                    # a token immediately followed by '(' is a function
-                    # call, not a measure alias — a measure named like a
-                    # SQL function (sum, count) must not collide
-                    rest = code[m_.end():].lstrip()
-                    if rest.startswith("("):
-                        continue
-                    dep = known.get(m_.group(0))
-                    if dep is not None and dep.out != item.out:
-                        visit(dep)
+                deps_of[item.out] = [
+                    known[r]
+                    for r in references(item.expression)
+                    if r in known and known[r].out != item.out
+                ]
+                for dep in deps_of[item.out]:
+                    visit(dep)
 
         for m in measures:
             visit(m)
         base = [m for m in needed.values() if isinstance(m, Measure)]
         calc_items = [m for m in needed.values() if isinstance(m, CalculatedMember)]
         calc_outs = {c.out for c in calc_items}
-        deps: dict[str, set[str]] = {}
-        for c in calc_items:
-            d = set()
-            code = _code_text(c.expression)
-            for m_ in re.finditer(r"[A-Za-z_][A-Za-z0-9_]*", code):
-                rest = code[m_.end():].lstrip()
-                if rest.startswith("("):
-                    continue
-                t = m_.group(0)
-                if t in calc_outs and t != c.out:
-                    d.add(t)
-            deps[c.out] = d
+        deps = {
+            c.out: {d.out for d in deps_of[c.out] if d.out in calc_outs}
+            for c in calc_items
+        }
         # dependency-topological order, (solve_order, out) among the ready —
         # a member must compute after every member its formula references
         # even when solve orders tie (Mondrian resolves this through the

@@ -48,6 +48,7 @@ from .mdx import (
     current_members,
     hierarchy_dimension,
     lower_member_properties,
+    references,
     rewrite_calls,
 )
 from .members import MeasureRef, MemberParseError, MemberSetRef, resolve
@@ -92,6 +93,12 @@ _NAV_RE = re.compile(
     r"(prevmember|nextmember|lag|lead)(?:\s*\(\s*(-?\d+)\s*\))?\s*",
     re.I,
 )
+
+
+def _names(cm: CalculatedMember) -> set[str]:
+    """The :func:`mdx.references` entries that name ``cm``: its output
+    alias and its bracketed name."""
+    return {cm.out.lower(), cm.name.strip().lower()}
 
 
 class QueryError(ValueError):
@@ -1120,31 +1127,22 @@ class Query:
         # formula (A = '[Measures].[B] * 2' selected alone must still
         # rewrite B).  Unreferenced members stay out: each rewrite may
         # register grid enrichers (joins).
-        import re as _re
-
         cube_calcs = [
             c
             for c in self.cube.calculated_members
             if c.name.lower() not in with_names
         ]
         used_cube_calcs: dict[str, CalculatedMember] = {}
-        ref_texts = [w.expression for w in self._with]
+        refs = set().union(*(references(w.expression) for w in self._with))
         changed = True
         while changed:
             changed = False
             for c in cube_calcs:
                 if c.name.lower() in used_cube_calcs:
                     continue
-                pat = _re.compile(
-                    rf"\b{_re.escape(c.out)}\b"
-                    rf"|\[\s*{_re.escape(c.name)}\s*\]",
-                    _re.IGNORECASE,
-                )
-                if c.name.lower() in selected or any(
-                    pat.search(t) for t in ref_texts
-                ):
+                if c.name.lower() in selected or _names(c) & refs:
                     used_cube_calcs[c.name.lower()] = c
-                    ref_texts.append(c.expression)
+                    refs.update(references(c.expression))
                     changed = True
 
         rewrite_candidates = list(self._with) + list(
@@ -1189,25 +1187,15 @@ class Query:
         # a used calc member may reference an unrewritable one
         # (solve-order chaining references the OUTPUT alias; MDX-style
         # text may carry the bracketed name) — surface the underlying
-        # error, not a downstream name-not-found.  Word-boundary /
-        # bracketed matching only: a plain substring test would raise for
-        # a member named 'Max' whenever any used expression mentions
+        # error, not a downstream name-not-found.  Whole names only
+        # (mdx.references): a member named 'Max' is not referenced by
         # '[Measures].[Max Price]'.
-        import re as _re
-
-        bad_refs = {}
-        for bad, err in rewrite_errors.items():
-            bad_cm = next(c for c in rewrite_candidates if c.name == bad)
-            pat = _re.compile(
-                rf"\b{_re.escape(bad_cm.out)}\b"
-                rf"|\[\s*{_re.escape(bad)}\s*\]",
-            )
-            bad_refs[pat] = err
         for used in measures:
             if isinstance(used, CalculatedMember):
-                for pat, err in bad_refs.items():
-                    if pat.search(used.expression):
-                        raise err
+                refs = set(references(used.expression))
+                for cm in rewrite_candidates:
+                    if cm.name in rewrite_errors and _names(cm) & refs:
+                        raise rewrite_errors[cm.name]
         tuple_specs = []
         for out, mname, member_strs in self._tuple_scalars:
             # mname None = tuple with no [Measures] component: the Measures
@@ -1778,11 +1766,9 @@ class Query:
                 # its formula references (checking the member's own name
                 # would deny every WITH member under a restrictive role)
                 if role is not None:
-                    import re as _re
-
-                    code = _re.sub(r"'(?:[^']|'')*'", " ", cm.expression)
+                    refs = set(references(cm.expression))
                     for m in self.cube.measures:
-                        if _re.search(rf"\b{_re.escape(m.out)}\b", code):
+                        if m.out.lower() in refs:
                             role.check_measure(self.cube, m.name)
                 return cm
         if role is not None:

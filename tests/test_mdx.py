@@ -7,7 +7,7 @@ import re
 
 import pytest
 
-from mondrian_olap_spark.mdx import MdxError, execute_mdx
+from mondrian_olap_spark.mdx import MdxError, MdxParser, execute_mdx
 from mondrian_olap_spark.query import Query
 
 
@@ -144,6 +144,41 @@ def test_parameter_missing_no_default(engine):
             SELECT [Measures].[X] ON COLUMNS FROM [Sales]
             """,
         )
+
+
+def _one_cell(engine, formula: str, parameters=None):
+    """The value of ``formula`` as a one-member WITH query."""
+    quoted = "'" + formula.replace("'", "''") + "'"
+    return execute_mdx(
+        engine,
+        f"WITH MEMBER [Measures].[X] AS {quoted} "
+        "SELECT [Measures].[X] ON COLUMNS FROM [Sales]",
+        parameters=parameters,
+    ).df.collect()[0]["x"]
+
+
+@pytest.mark.parametrize(
+    "formula, params, expected",
+    [
+        ("\"see ParamRef('p') here\"", {"p": 5}, "see ParamRef('p') here"),
+        (
+            "\"Parameter('p', NUMERIC, 1) txt\"",
+            {"p": 5},
+            "Parameter('p', NUMERIC, 1) txt",
+        ),
+        ('Parameter("p", STRING, "a,b")', None, "a,b"),
+        ('Parameter("p", STRING, "a)b")', None, "a)b"),
+        ('Parameter("p", NUMERIC, 3, "the (x)") + 1', None, 4),
+        ('ParamRef("p") * 2', {"p": 4}, 8),
+    ],
+)
+def test_parameter_calls_split_their_arguments(
+    engine, formula, params, expected
+):
+    """Parameter/ParamRef are calls: their arguments split like any
+    call's (commas and parentheses inside a literal stay in it) and a
+    string literal that spells one is only text."""
+    assert _one_cell(engine, formula, params) == expected
 
 
 # ------------------------------------------------------------ error paths
@@ -4274,3 +4309,46 @@ def test_generate_of_topcount_axis_columns_are_distinct(engine):
     )
     assert r.axis_columns[1] == ["region_name", "nation_name"]
     assert {len(k) for k in r.row_names} == {2}
+
+
+def test_literal_makes_no_dependency(engine):
+    """A string literal that spells a member's name is no reference to
+    it: ``"a"`` in [b] does not make [a] and [b] a cycle."""
+    row = execute_mdx(
+        engine,
+        """
+        WITH MEMBER [Measures].[a] AS '[Measures].[b] + 1'
+             MEMBER [Measures].[b] AS 'IIF("a" = "a", 1, 0)'
+        SELECT {[Measures].[a], [Measures].[b]} ON COLUMNS FROM [Sales]
+        """,
+    ).df.collect()[0]
+    assert (row["a"], row["b"]) == (2, 1)
+
+
+@pytest.mark.parametrize("cond", ["''a'' = ''b''", '"a" = "b"'])
+def test_literal_is_no_scalar_reference(engine, cond):
+    """A set statistic's expression may hold a literal that spells a
+    member whose formula is itself a scalar lowering."""
+    s = "{[Customer].[ASIA], [Customer].[EUROPE]}"
+    row = execute_mdx(
+        engine,
+        f"""
+        WITH MEMBER [Measures].[a] AS 'Max({s}, [Measures].[Sum Qty])'
+             MEMBER [Measures].[c] AS 'Max({s}, IIF({cond}, 1, 2))'
+        SELECT {{[Measures].[a], [Measures].[c]}} ON COLUMNS FROM [Sales]
+        """,
+    ).df.collect()[0]
+    assert row["c"] == 2
+
+
+def test_case_with_many_escaped_quotes_translates_fast(engine):
+    """The CASE…END suffix passes read a literal with k doubled quotes in
+    one way, not 2^k: a formula with 24 of them and no suffix stays as
+    written within a second (the three passes each fail on it)."""
+    import time
+
+    f = "CASE WHEN 1 = 1 THEN 'a" + "''b" * 24 + "' ELSE 'n' END"
+    start = time.perf_counter()
+    out = MdxParser(engine, "SELECT FROM [Sales]").translate_expression_text(f)
+    assert time.perf_counter() - start < 1.0
+    assert out == f

@@ -12,7 +12,13 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mondrian_olap_spark.formats import format_value
-from mondrian_olap_spark.mdx import _VBA_EXCEL, rewrite_calls, split_args
+from mondrian_olap_spark.mdx import (
+    _VBA_EXCEL,
+    MdxParser,
+    references,
+    rewrite_calls,
+    split_args,
+)
 from mondrian_olap_spark.members import format_name, parse_identifier, quote_segment
 
 segments = st.lists(
@@ -53,7 +59,7 @@ def test_call_scanner_keeps_bracketed_names_whole(name):
     the argument splitter (``]]`` escapes ``]``), whatever function
     names, parentheses, commas or quotes the name holds."""
     ref = "[Measures]." + quote_segment(name)
-    assert rewrite_calls(ref, _VBA_EXCEL, []) == ref
+    assert rewrite_calls(ref, _VBA_EXCEL) == ref
     assert split_args(ref) == [ref]
     seen = []
     table = {"f": lambda args: seen.append(args) or "x"}
@@ -111,6 +117,30 @@ def test_scanners_never_look_inside_literals_or_names(pieces):
 
 def test_split_args_double_quoted_literal():
     assert split_args('"a, b", 2') == ['"a, b"', "2"]
+
+
+#: literal bodies built from what the formula passes and the dependency
+#: scan look for
+_literal_bodies = st.lists(
+    st.sampled_from([
+        "Parameter(", "ParamRef(", "IIF(", "IsDirty()", "StrToTuple(",
+        "Dimensions(0)", "CASE", "END", ".Name", ".Item(0)", " MATCHES ",
+        "[Measures].[Sum Qty]", "([Customer].[ASIA])", "sum_qty", "(", ")",
+        ",",
+    ]),
+    max_size=12,
+).map("".join)
+
+
+@given(_literal_bodies, st.sampled_from(["'", '"']))
+@settings(max_examples=300, deadline=None)
+def test_formula_literal_is_opaque(engine, body, quote):
+    """A formula that is one string literal, in either quote style,
+    translates to itself and refers to nothing."""
+    f = quote + body + quote
+    parser = MdxParser(engine, "SELECT FROM [Sales]")
+    assert parser.translate_expression_text(f) == f
+    assert not references(f)
 
 
 number_formats = st.sampled_from(

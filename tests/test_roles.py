@@ -68,6 +68,25 @@ def test_measure_allow_list(engine):
         Query(eng).columns("[Measures].[Sum Price]").execute()
 
 
+def test_with_member_subscript_index_reads_a_measure(engine):
+    """A WITH member that reads a measure only in a SQL subscript's index
+    reads it: the measure is aggregated for it, and a role that denies the
+    measure denies the member."""
+
+    def pick(eng):
+        return (
+            Query(eng)
+            .with_member("Pick")
+            .as_("array(10, 20, 30)[cast(sum_price % 3 as int)]", output="pick")
+            .columns("[Measures].[Pick]")
+        )
+
+    assert pick(engine).execute().df.collect()[0]["pick"] in (10, 20, 30)
+    eng = engine.with_role(Role("limited", allowed_measures=("Sum Qty",)))
+    with pytest.raises(AccessDenied):
+        pick(eng).execute()
+
+
 def test_union_roles(engine):
     asia = Role("asia", grants=(MemberGrant("Customer", ("ASIA",)),))
     europe = Role("europe", grants=(MemberGrant("Customer", ("EUROPE",)),))

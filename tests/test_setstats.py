@@ -494,3 +494,27 @@ def test_int_units_rejects_compound_expressions(spark):
         "CAST(a AS DECIMAL(12,2)) * CAST(b AS DECIMAL(12,4))"
     ) is None
     assert _int_units("sum_qty") is None
+
+
+@pytest.mark.parametrize(
+    "a, b, expected",
+    [
+        ('IIF("X" = "x", 1, 0)', 'IIF("x" = "x", 1, 0)', (0, 1)),
+        ('IIF("a b" = "ab", 1, 0)', 'IIF("ab" = "ab", 1, 0)', (0, 1)),
+        ('IIF("ab" = "ab", 1, 0)', 'IIF("a b" = "ab", 1, 0)', (1, 0)),
+    ],
+)
+def test_statistics_differing_in_a_literal_stay_apart(engine, a, b, expected):
+    """Two set statistics whose expressions differ only inside a string
+    literal — its case or its blanks — are two scalars, in either
+    definition order."""
+    s = "{[Customer].[ASIA], [Customer].[EUROPE]}"
+    row = execute_mdx(
+        engine,
+        f"""
+        WITH MEMBER [Measures].[a] AS 'Max({s}, {a})'
+             MEMBER [Measures].[b] AS 'Max({s}, {b})'
+        SELECT {{[Measures].[a], [Measures].[b]}} ON COLUMNS FROM [Sales]
+        """,
+    ).df.collect()[0]
+    assert (row["a"], row["b"]) == expected
