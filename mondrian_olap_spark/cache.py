@@ -10,6 +10,20 @@ persisted aggregate — zero fact scans, matching the reference's warm-cache
 behavior (``test/query_test.rb:1162-1213``: repeated query does 0 SQL until
 flush).
 
+Two tiers hold the cached grids.  A new entry is a persisted DataFrame: its
+rows live on the executors as an ``InMemoryRelation``, and a read of it
+re-plans the cached star plan.  On a later hit, once that relation is
+materialized, a small entry moves to the driver: its rows are collected
+once into a ``LocalRelation`` (``Dataset.ofRows`` over
+``LocalRelation.fromExternalRows``, fresh attributes) and the executor
+copy is unpersisted.  A read of a resident entry then plans over a few
+local rows — calculated members, casts and filters fold in the optimizer,
+and no Exchange or broadcast is left — as Mondrian answers a warm repeat
+from the cell arrays in its own memory.  The bytes held on the driver stay
+within ``spark.sql.autoBroadcastJoinThreshold``, the size Spark itself
+collects to the driver for a broadcast (``-1`` keeps every entry on the
+executors).  Every flush and eviction drops the driver copy with its entry.
+
 Region flush reproduces ``cube.flush_region_cache_with_segments``
 (``lib/mondrian/olap/cube.rb:519-547``; behavior spec
 ``test/cube_cache_control_test.rb:116-218``): flushing a member region drops
@@ -64,6 +78,10 @@ class _Entry:
     group_cols: tuple = ()
     #: measure output → aggregator
     measures: dict = field(default_factory=dict)
+    #: bytes of this entry's rows held on the driver (0: on the executors)
+    resident_bytes: int = 0
+    #: a hit is collecting this entry's rows to the driver
+    moving: bool = False
 
 
 class AggregateCache:
@@ -100,6 +118,12 @@ class AggregateCache:
     def __len__(self) -> int:
         return len(self._entries)
 
+    @property
+    def resident_bytes(self) -> int:
+        """Bytes of cached rows held on the driver (observability)."""
+        with self._lock:
+            return sum(e.resident_bytes for e in self._entries.values())
+
     def get_or_build(
         self,
         key: tuple,
@@ -115,9 +139,13 @@ class AggregateCache:
             if entry is not None:
                 self.hits += 1
                 self._entries.move_to_end(key)  # LRU touch
-                return entry.df
-            if rollup_fn is not None and measures:
+                if entry.resident_bytes or entry.moving:
+                    return entry.df
+                entry.moving = True  # one hit at a time tries the move
+            elif rollup_fn is not None and measures:
                 src = self._rollup_source(key, group_cols or [], measures)
+        if entry is not None:
+            return self._move_to_driver(key, entry)
         # build OUTSIDE the lock: a Spark job here must never serialize
         # the other threads' unrelated cache lookups
         if src is not None:
@@ -159,6 +187,61 @@ class AggregateCache:
                 old.df.unpersist()
                 self.evictions += 1
         return df
+
+    def _move_to_driver(self, key: tuple, entry: _Entry) -> DataFrame:
+        """Serve a hit on an executor-held entry, first moving its rows to
+        the driver when its cached relation is materialized and fits the
+        driver budget.  The collect runs OUTSIDE the lock; the swap is made
+        under it, and only if the entry is still cached and still fits."""
+        df = entry.df
+        local = None
+        try:
+            fit = self._driver_fit(df)
+            if fit is not None:
+                size, limit = fit
+                # the JVM createDataFrame(rows, schema) is Dataset.ofRows over
+                # LocalRelation.fromExternalRows with fresh attributes; the
+                # rows never pass through Python
+                session, jdf = df.sparkSession, df._jdf
+                local = DataFrame(
+                    session._jsparkSession.createDataFrame(
+                        jdf.collectAsList(), jdf.schema()
+                    ),
+                    session,
+                )
+        finally:
+            with self._lock:
+                entry.moving = False
+                swapped = (
+                    local is not None
+                    and self._entries.get(key) is entry
+                    and size + self.resident_bytes <= limit
+                )
+                if swapped:
+                    entry.df, entry.resident_bytes = local, size
+        if not swapped:
+            return df
+        df.unpersist()
+        return local
+
+    def _driver_fit(self, df: DataFrame) -> tuple[int, int] | None:
+        """``(size, limit)`` when ``df``'s cached relation is materialized
+        and its exact size plus the bytes already on the driver stay within
+        ``limit`` (``spark.sql.autoBroadcastJoinThreshold``); else None."""
+        jsession = df.sparkSession._jsparkSession
+        limit = jsession.sessionState().conf().autoBroadcastJoinThreshold()
+        if limit < 0:
+            return None
+        cached = jsession.sharedState().cacheManager().lookupCachedData(df._jdf)
+        if not cached.isDefined():
+            return None
+        relation = cached.get().cachedRepresentation()
+        if not relation.cacheBuilder().isCachedColumnBuffersLoaded():
+            return None
+        size = int(relation.computeStats().sizeInBytes())
+        if size + self.resident_bytes > limit:
+            return None
+        return size, limit
 
     def _rollup_source(
         self, key: tuple, group_cols: list[str], measures: dict[str, str]

@@ -105,8 +105,10 @@ class Result:
         ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (Spark's size
         for one task's data), the grid is instead coalesced to one
         partition and sorted there: the same rows in the same order, from
-        one job with one task.  A cache-hit read reports the exact bytes of
-        its materialised aggregate, so it takes this path; a cold star
+        one job with one task.  A cache-hit read is sized from its cached
+        aggregate: the exact bytes of the materialised relation on the
+        executors, or, once the cache has moved it to the driver, its few
+        local rows times their row size.  So it takes this path; a cold star
         grid's estimate is the product of its scans, so it keeps the
         distributed sort.  ``coalesce(1)`` is narrow, so the size bound
         also bounds everything that one task computes below it, up to the

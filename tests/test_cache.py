@@ -50,13 +50,12 @@ def test_warm_query_hits_cache_not_fact(cached_engine):
     warm_rows = {r["region_name"]: r["sum_qty"] for r in warm.collect()}
     assert warm_rows == cold_rows
     assert cached_engine.cache.hits == 1
-    # the warm plan reads the in-memory aggregate first; parquet appears
-    # only inside the cached relation's lineage description (reference:
-    # repeated query does 0 SQL — query_test.rb:1162-1213).  The mutation
-    # test below proves the fact is truly not rescanned.
+    # the first hit moved the grid's few rows to the driver: the warm plan
+    # reads them locally, with neither a fact scan nor the cached star plan
+    # (reference: repeated query does 0 SQL — query_test.rb:1162-1213)
     p = plan_of(warm)
-    assert "InMemoryTableScan" in p
-    assert p.index("InMemoryTableScan") < p.index("Scan parquet")
+    assert "LocalTableScan" in p
+    assert "Scan parquet" not in p and "InMemoryTableScan" not in p
 
 
 _RATIO_READ = (
@@ -100,6 +99,9 @@ def test_cache_hit_read_runs_one_job(spark, cached_engine, mdx):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert cached_engine.cache.hits >= 1
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    # the first hit moved the grid to the driver: the read plans over
+    # local rows, with no Exchange (shuffle or broadcast) left
+    assert "Exchange" not in plan_of(res.df)
 
 
 #: cache-hit grid shapes whose order the single-task sort must keep
@@ -147,6 +149,127 @@ def test_single_task_sort_matches_distributed_sort(spark, cached_engine, shape):
     one_task_plan, distributed_plan = plan_of(one_task), plan_of(distributed)
     assert "Coalesce 1" in one_task_plan and "rangepartitioning" not in one_task_plan
     assert "rangepartitioning" in distributed_plan and "Coalesce" not in distributed_plan
+
+
+@pytest.mark.parametrize("shape", list(_SORTED_SHAPES))
+def test_resident_hit_matches_cold_read(cached_engine, shape):
+    """A read served from rows moved to the driver has the cold read's
+    schema (decimal precision, nullability) and its rows in its order."""
+    read = _SORTED_SHAPES[shape]
+    cold = read(cached_engine).df
+    cold_schema, cold_rows = cold.schema, cold.collect()
+    read(cached_engine).df.collect()  # first hit: moves the grid
+    resident = read(cached_engine).df
+    assert cached_engine.cache.resident_bytes > 0
+    assert "InMemoryTableScan" not in plan_of(resident)
+    assert resident.schema == cold_schema
+    assert resident.collect() == cold_rows
+
+
+@pytest.mark.parametrize("limit", ["-1", "10b"], ids=["off", "below_grid"])
+def test_driver_move_respects_broadcast_threshold(spark, cached_engine, limit):
+    """``spark.sql.autoBroadcastJoinThreshold`` bounds the bytes moved to
+    the driver: switched off, or smaller than the grid, every hit keeps
+    reading the executor-held relation, with the same rows."""
+    cold = _q(cached_engine).collect()
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, limit)
+    try:
+        for _ in range(2):
+            warm = _q(cached_engine)
+            assert warm.collect() == cold
+    finally:
+        spark.conf.set(key, old)
+    assert cached_engine.cache.hits == 2
+    assert cached_engine.cache.resident_bytes == 0
+    assert "InMemoryTableScan" in plan_of(warm)
+
+
+def test_flushes_release_driver_bytes(spark, cached_engine):
+    """``resident_bytes`` rises when a hit moves a grid to the driver and
+    falls to 0 on a whole flush, a region flush and an LRU eviction."""
+    cache = cached_engine.cache
+    _q(cached_engine).collect()
+    assert cache.resident_bytes == 0  # a miss keeps the grid on executors
+    _q(cached_engine).collect()
+    assert cache.resident_bytes > 0
+    assert cached_engine.flush_schema_cache() == 1
+    assert cache.resident_bytes == 0
+
+    for _ in range(2):
+        _q(cached_engine, where=("[Customer].[ASIA]",)).collect()
+    assert cache.resident_bytes > 0
+    assert cached_engine.flush_region_cache(["[Customer].[ASIA]"]) == 1
+    assert cache.resident_bytes == 0
+
+    from mondrian_olap_spark.cache import AggregateCache
+
+    lru = AggregateCache(max_entries=1)
+    first = lru.get_or_build(("k", 0), [], lambda: spark.range(4).toDF("v"))
+    first.collect()  # materializes the cached relation
+    lru.get_or_build(("k", 0), [], lambda: spark.range(4).toDF("v"))
+    assert lru.resident_bytes > 0
+    lru.get_or_build(("k", 1), [], lambda: spark.range(2).toDF("v"))
+    assert lru.evictions == 1 and lru.resident_bytes == 0
+    lru.flush_all()
+
+
+def test_rollup_from_resident_source_matches_fact_rescan(cached_engine):
+    """A coarser request rolled up from a driver-resident finer grid
+    equals the same request computed from the fact table."""
+    def nations():
+        return Query(cached_engine).columns(
+            "[Measures].[Sum Qty]", "[Measures].[Sum Price]"
+        ).rows("[Customer].[Nation].Members").execute().df.collect()
+
+    def regions():
+        return {
+            r["region_name"]: r
+            for r in Query(cached_engine).columns(
+                "[Measures].[Sum Qty]", "[Measures].[Sum Price]"
+            ).rows("[Customer].children").execute().df.collect()
+        }
+
+    nations()
+    nations()  # first hit: moves the nation grid
+    assert cached_engine.cache.resident_bytes > 0
+    rolled = regions()
+    assert cached_engine.cache.rollups == 1 and cached_engine.cache.misses == 1
+    cached_engine.flush_schema_cache()
+    rescanned = regions()
+    assert cached_engine.cache.misses == 2
+    assert rolled.keys() == rescanned.keys()
+    for k, r in rescanned.items():
+        assert rolled[k]["sum_price"] == r["sum_price"]
+        assert abs(rolled[k]["sum_qty"] - r["sum_qty"]) < 1e-6
+
+
+def test_concurrent_first_hits_move_once(cached_engine):
+    """Several threads' first hits on one entry return identical rows and
+    leave that one entry resident."""
+    import threading
+
+    cold = _q(cached_engine).collect()
+    start = threading.Barrier(4)
+    results, errors = [], []
+
+    def hit():
+        try:
+            start.wait()
+            results.append(_q(cached_engine).collect())
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=hit) for _ in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    assert results == [cold] * 4
+    assert len(cached_engine.cache) == 1
+    assert cached_engine.cache.resident_bytes > 0
 
 
 def test_cold_reads_keep_the_distributed_sort(cached_engine):

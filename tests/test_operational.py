@@ -14,6 +14,7 @@ from .conftest import SF_DIR
 
 # ----------------------------------------------------------- profiling
 def test_profiling_plan_and_duration(engine):
+    engine.flush_schema_cache()  # the cold star plan, not a cache hit
     r = Query(engine).columns("[Measures].[Sum Qty]").rows("[Customer].children").execute()
     assert "HashAggregate" in r.profiling_plan
     r.values  # materialise
@@ -603,6 +604,7 @@ def test_profiling_golden_parity(engine):
     is positive."""
     import re
 
+    engine.flush_schema_cache()  # the cold star plan, not a cache hit
     r = (
         Query(engine)
         .columns("[Measures].[Sum Qty]")

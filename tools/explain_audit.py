@@ -502,8 +502,10 @@ def main() -> int:
     #     under broken referential integrity, drop rows) — round-7
     #     DefaultMember-as-All wiring.  Checked COLD: with a warm cache
     #     the grand total is legitimately served by rolling up a cached
-    #     finer grid (InMemoryTableScan over 5 rows), whose lineage text
-    #     would spuriously contain the original star joins.
+    #     finer grid (an InMemoryTableScan over 5 rows, whose lineage text
+    #     would spuriously contain the original star joins, or the same
+    #     rows as a LocalTableScan once a hit has moved them to the
+    #     driver), and neither shows the plan this check is about.
     if eng.cache is not None:
         eng.cache.flush_all()
     df = (
