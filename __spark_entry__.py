@@ -8,7 +8,10 @@ implemented in :mod:`mondrian_olap_spark.suite` through the engine API.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -24,354 +27,51 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["flagship_region_quarter"](spark, "/root/testdata/sf0.001")
 
 
-#: round in which each entry was most recently hash-verified GREEN by the
-#: driver (``CORRECTNESS_r{N}.json``).  The driver checks a 50-entry prefix
-#: of ``queries()``, so ordering is a rotation policy:
+#: The driver checks a 50-entry prefix of ``queries()``, so its order is a
+#: rotation policy:
 #:
 #: 1. never-driver-checked entries first (new this round), bit-exact-oracle
 #:    entries before rows-only ones — a hash-verifiable entry must not lose
 #:    its prefix slot to a weak-check entry;
 #: 2. then previously-green entries, OLDEST last-hashed round first, so each
-#:    round re-verifies the most stale hashes on current code (round 7
-#:    re-hashes the r2/r3-era entries, which last passed 4-5 rounds of
-#:    engine churn ago).
+#:    round re-verifies the most stale hashes on current code.
 #:
-#: After each round, fold the new CORRECTNESS_r{N}.json greens back into
-#: this map.  Full local coverage of every entry regardless of prefix
-#: position comes from ``tools/check_oracle.py --exact`` (the gate mirror).
-_LAST_HASHED: dict[str, int] = {
-    # VALUES are authoritative: entry -> the latest round whose
-    # CORRECTNESS_r{N}.json hashed it green (bumped in place each round).
-    # Section comments below record which round FIRST hashed the block,
-    # for provenance only.
-    # first hashed green in CORRECTNESS_r02.json
-    "date_functions_by_year": 11,
-    "drilldown_member_region": 12,
-    "empty_cells_grid": 12,
-    "events_daily_users": 12,
-    "member_lookup_strtomember": 12,
-    "member_properties_parts": 12,
-    "parent_child_rollup": 12,
-    "role_region_grant": 12,
-    "scalar_string_math_functions": 12,
-    "set_union_nations": 12,
-    "udf_scaled_revenue": 12,
-    "virtual_sales_orders": 12,
-    "virtual_valid_measure": 12,
-    "visual_totals_regions": 12,
-    # first hashed green in CORRECTNESS_r03.json
-    "aggregate_routing_gate": 11,
-    "currentdate_member": 11,
-    "dedup_exact_fingerprint": 11,
-    "dedup_keep_list": 12,
-    "dedup_minhash_lsh_pairs": 12,
-    "dedup_ngram_jaccard_pairs": 12,
-    "dedup_simhash_pairs": 12,
-    "descendants_months_mdx": 12,
-    "dimension_calc_member_mdx": 12,
-    "dimension_formula_member": 12,
-    "drilldown_level_top": 12,
-    "drilldown_operator_month": 12,
-    "drillthrough_grouped": 12,
-    "embed_cosine_topk": 12,
-    "embed_ivf_topk": 12,
-    "embed_neardup_pairs": 12,
-    "exists_customers_q1": 12,
-    "extract_hierarchy": 12,
-    "family_navigation_firstchild": 12,
-    "filter_last_regions": 12,
-    "filter_nonempty_grid": 12,
-    "format_strings_gate": 12,
-    "generate_children_drill": 12,
-    "linreg_variance_point": 12,
-    "locale_caption_members": 12,
-    "matches_regex_filter": 12,
-    "measures_allmembers": 12,
-    "member_captions_suppliers": 8,
-    "member_range_years": 8,
-    "mixed_depth_axis": 8,
-    "multimodal_decode_features": 8,
-    "namedset_rank_filter": 8,
-    "nested_filter_crossjoin": 8,
-    "object_accessor_metadata": 8,
-    "pages_axis_3d": 8,
-    "parameter_scaled_measure": 8,
-    "pipeline_split_counts": 8,
-    "ragged_hierarchy_members": 8,
-    "sql_view_fact": 8,
-    "strtotuple_slicer": 8,
-    "text_langid_distribution": 8,
-    "text_winnowing_fingerprints": 8,
-    "toggle_drill_state_year": 8,
-    "tuple_case_contextual": 8,
-    "tuple_item_name": 8,
-    "vba_function_names": 8,
-    "weekly_hierarchy_totals": 8,
-    # first hashed green in CORRECTNESS_r04.json
-    "count_exclude_empty": 12,
-    "descendants_of_member": 8,
-    "drillthrough_cell": 8,
-    "embed_dedup_keep_list": 8,
-    "events_by_type": 8,
-    "events_sessionization": 8,
-    "except_regions": 8,
-    "filter_order_nations": 8,
-    "generate_customer_list": 9,
-    "last_periods_moving_3m": 9,
-    "level_members_metadata": 9,
-    "opening_closing_period": 9,
-    "parallel_period_month": 9,
-    "pipeline_deterministic_sample": 9,
-    "pipeline_split_contamination": 9,
-    "prev_member_month": 9,
-    "subset_nations_by_price": 9,
-    "text_chunking": 9,
-    "text_pii_redaction": 9,
-    "text_quality_features": 9,
-    "text_quality_filter": 9,
-    "text_repetition_features": 9,
-    "text_stats_by_source": 9,
-    "text_token_counts": 9,
-    "tuple_item_implicit_measure": 9,
-    "ytd_monthly": 9,
-    # first hashed green in CORRECTNESS_r05.json
-    "approx_distinct_parts": 9,
-    "bucketed_star_gate": 9,
-    "dedup_source_overlap": 9,
-    "embed_ivf_recall_gate": 9,
-    "embed_label_norm_stats": 9,
-    "embed_lsh_neardup_pairs": 9,
-    "embed_quantization_report": 9,
-    "events_approx_quantiles": 9,
-    "events_asof_attribution": 9,
-    "events_asof_forward_tolerance": 9,
-    "events_funnel_steps": 9,
-    "events_props_json_stats": 9,
-    "events_retention_weekly": 9,
-    "events_salted_join": 9,
-    "events_zorder_cells": 9,
-    "filter_member_property_gate": 9,
-    "multimodal_real_bmp_gate": 9,
-    "multimodal_real_wav_gate": 9,
-    "pipeline_apply_changes": 10,
-    "pipeline_balanced_sample": 10,
-    "pipeline_corpus_diff": 10,
-    "pipeline_decontamination_report": 10,
-    "pipeline_end_to_end_curation": 10,
-    "pipeline_length_histogram": 10,
-    "pipeline_mix_applied": 10,
-    "pipeline_mix_weights": 10,
-    "pipeline_pack_concat": 10,
-    "pipeline_padding_efficiency": 10,
-    "pipeline_quality_topk": 10,
-    "pipeline_shuffle_order": 10,
-    "pipeline_skew_profile": 10,
-    "pipeline_temperature_mix": 10,
-    "pipeline_token_packing": 10,
-    "set_intersect_active_nations": 10,
-    "streaming_cms_gate": 10,
-    "streaming_dedup_gate": 10,
-    "streaming_maintenance_gate": 10,
-    "streaming_sessionization_gate": 10,
-    "streaming_windowed_counts_gate": 10,
-    "text_bigram_entropy": 10,
-    "text_bigram_perplexity": 10,
-    "text_bpe_pair_counts": 10,
-    "text_cms_frequency_gate": 10,
-    "text_inverted_index": 10,
-    "text_kl_from_corpus": 10,
-    "text_segment_dedup": 10,
-    "text_tfidf_top_terms": 10,
-    "text_top_ngrams": 10,
-    "text_unigram_entropy": 10,
-    "vba_val_round_dateserial": 10,
-    # first hashed green in CORRECTNESS_r06.json
-    "advisor_auto_materialize_gate": 10,
-    "aggregate_crossjoin_set": 10,
-    "aggregate_member_set": 10,
-    "aggregate_refresh_gate": 10,
-    "aggregate_value_forms": 10,
-    "bottomcount_nations": 10,
-    "calc_member_chain": 10,
-    "case_coalesce_measures": 10,
-    "corr_linreg_stats": 10,
-    "crossjoin_nation_priority": 10,
-    "cube_flags_totals": 10,
-    "dedup_bloom_append_gate": 10,
-    "dedup_incremental_bloom": 11,
-    "dedup_incremental_neardup": 11,
-    "dedup_index_append_gate": 11,
-    "dispersion_stats": 11,
-    "distinct_count_by_region": 11,
-    "embed_ivf_append_gate": 11,
-    "embed_pq_codes": 11,
-    "embed_pq_topk": 11,
-    "events_daily_anomaly": 11,
-    "events_inter_event_stats": 11,
-    "events_user_sequences": 11,
-    "flagship_region_quarter": 11,
-    "head_nations_hierarchized": 11,
-    "median_percentile_price": 11,
-    "nonempty_crossjoin_nation_brand": 11,
-    "pipeline_column_profile": 11,
-    "pipeline_incremental_curation": 11,
-    "pipeline_length_deciles": 11,
-    "pipeline_negative_samples": 11,
-    "pipeline_stateful_ingest_gate": 11,
-    "pipeline_stateful_neardup_gate": 11,
-    "pricing_summary_flags": 11,
-    "rank_nations": 11,
-    "rollup_region_nation": 11,
-    "sketch_distinct_rollup": 11,
-    "slicer_cross_dim_tuple": 11,
-    "slicer_multi_member_in": 11,
-    "text_blocklist_filter": 11,
-    "text_cdc_chunks": 11,
-    "text_doc_keywords": 11,
-    "text_mojibake_gate": 11,
-    "text_normalize_gate": 11,
-    "text_repeated_segments_removed": 11,
-    "text_script_profile": 11,
-    "text_tokens_to_ids": 11,
-    "topcount_nations": 11,
-    "toppercent_nations": 11,
-    "topsum_nations": 11,
-    # first hashed green in CORRECTNESS_r08.json (round-8 gates)
-    "vba_breadth2_gate": 8,
-    "vba_breadth3_gate": 8,
-    "finance_npv_irr_by_nation": 8,
-    "pipeline_plan_shards": 8,
-    "pipeline_shard_summary": 8,
-    "embed_ann_recall_gate": 8,
-    "documents_quality_cube": 8,
-    "pipeline_shard_append_gate": 8,
-    "dedup_lsh_recall_gate": 8,
-    "text_bpe_train_merges": 8,
-    "embed_scatter_covariance": 8,
-    "web_canonical_urls": 8,
-    "web_host_cap_gate": 8,
-    "web_host_profile": 8,
-    "text_line_dedup_gate": 8,
-    "text_perceptron_gate": 8,
-    "dedup_ngram_collision_gate": 8,
-    "sketch_histogram_quantiles": 8,
-    "sketch_histogram_append_gate": 8,
-    "events_scd2_enrich": 8,
-    "text_line_stats_append_gate": 8,
-    "web_curation_chain_gate": 8,
-    # first hashed green in CORRECTNESS_r07.json (round-7 gates)
-    "default_member_all_gate": 12,
-    "embed_cluster_balanced_sample": 12,
-    "embed_semantic_dedup_gate": 12,
-    "streaming_importance_gate": 12,
-    "text_importance_hashed_gate": 12,
-    "text_importance_sample_gate": 12,
-    "text_importance_weights": 12,
-    "vba_excel_breadth_gate": 12,
-    "vba_financial_gate": 12,
-    # first hashed green in CORRECTNESS_r09.json (round-9 gates)
-    "catalog_xml_import_gate": 9,
-    "dedup_span_ingest_gate": 9,
-    "dedup_substring_spans_gate": 9,
-    "events_pagerank_gate": 9,
-    "linreg_formula_text_gate": 9,
-    "openingperiod_ancestor_gate": 9,
-    "parallelperiod_mdx_gate": 9,
-    "parallelperiod_quarter_gate": 9,
-    "prevmember_formula_gate": 9,
-    "setstat_formula_text_gate": 9,
-    "union_intersect_mdx_gate": 9,
-    "visualtotals_mdx_gate": 9,
-    "ytd_axis_gate": 9,
-    "ytd_mdx_gate": 9,
-    # first hashed green in CORRECTNESS_r10.json
-    "currentdatemember_formula_gate": 10,
-    "generate_measure_concat_gate": 10,
-    "generate_string_formula_gate": 10,
-    "partitioned_fact_dpp_gate": 10,
-    "strtomember_mdx_gate": 10,
-    "xml_aggname_routing_gate": 10,
-    # first hashed green in CORRECTNESS_r11.json (round-11 gates)
-    "count_filter_formula_gate": 11,
-    "descendants_flags_gate": 11,
-    "drilldown_set_expression_gate": 11,
-    "except_set_expression_gate": 11,
-    "existing_context_gate": 11,
-    "exists_set_expression_gate": 11,
-    "generate_per_member_gate": 11,
-    "union_set_expression_gate": 11,
-    # first hashed green in CORRECTNESS_r12.json (round-12 gates)
-    "descendants_ragged_leaves_gate": 12,
-    "exists_mixed_depth_set_gate": 12,
-    "generate_post_ops_gate": 12,
-}
+#: Full local coverage of every entry regardless of prefix position comes
+#: from ``tools/check_oracle.py --exact`` (the gate mirror).
+def _last_hashed() -> dict[str, int]:
+    """Entry name → the latest round whose ``CORRECTNESS_r{N}.json`` (next
+    to this file) hashed it green: rows, schema and value hash all matched.
+    Only names still in the suite count."""
+    import mondrian_olap_spark.suite_pipeline  # noqa: F401 — registers entries
+    from mondrian_olap_spark.suite import QUERIES
 
-#: entries whose IMPLEMENTATION was rewritten by an optimization round
-#: AFTER the round recorded in ``_LAST_HASHED`` — these jump the
-#: correctness queue (round-12 VERDICT "Next round" #3: stalest-first
-#: ordering back-queued exactly the operators that had just changed most;
-#: e.g. the r12 cdc/pq rewrites, last hashed r11, would not have been
-#: driver-re-hashed for several rounds).  Maintained by hand alongside
-#: each optimization: add the touched entry names here, remove them when
-#: a later CORRECTNESS_r{N}.json hashes them green (and bump
-#: ``_LAST_HASHED``).
-_TOUCHED_SINCE_HASH: set[str] = {
-    # round-12 optimization rewrites not re-hashed since:
-    "text_cdc_chunks",          # zero-shuffle array rewrite (r12) + r13 gram vectorization
-    "embed_pq_codes",           # mapInPandas vectorized encode (r12)
-    "embed_pq_topk",            # shares the pq encode path (r12)
-    "embed_quantization_report",  # pq_train shared-codes path (r12)
-    "dedup_lsh_recall_gate",    # single-pass recall report (r12)
-    "embed_ann_recall_gate",    # single-pass recall report (r12)
-    "dedup_bloom_append_gate",  # fsio.tiny_df sidecar writes (r12)
-    "dedup_index_append_gate",  # sidecar writes + cand checkpoint (r12)
-    "embed_ivf_append_gate",    # sidecar writes (r12)
-    "sketch_histogram_append_gate",  # sidecar writes (r12)
-    "pipeline_stateful_ingest_gate",  # sidecar writes (r12)
-    "pipeline_stateful_neardup_gate",  # sidecar writes (r12)
-    "text_line_stats_append_gate",  # sidecar writes (r12)
-    "dedup_span_ingest_gate",   # _grams_with_pos lambda fix (r12)
-    "dedup_substring_spans_gate",  # _grams_with_pos / spans fix (r12)
-    "dedup_incremental_neardup",  # cand checkpoint (r12)
-    "text_bigram_perplexity",   # O(tokens²) lambda fix (r12)
-    "text_top_ngrams",          # O(tokens²) lambda fix (r12)
-    "text_segment_dedup",       # O(tokens²) lambda fix (r12)
-    "text_repeated_segments_removed",  # kept-array materialization (r12)
-    "text_quality_features",    # bigram_entropy lambda fix (r12)
-    "multimodal_decode_features",  # columnar batch assembly (r12)
-    "multimodal_real_wav_gate",  # batched numpy synthesis (r12)
-    "multimodal_real_bmp_gate",  # batched numpy synthesis (r12)
-    "dedup_ngram_collision_gate",  # gram-builder lambda fix (r12)
-    "pipeline_decontamination_report",  # gram-builder lambda fix (r12)
-    "embed_dedup_keep_list",    # dedup_clusters edges checkpoint (r12)
-    # round-13 optimization rewrites:
-    "dedup_minhash_lsh_pairs",  # vectorized minhash_signatures (r13)
-    "dedup_keep_list",          # consumes minhash_dedup_pairs (r13)
-    "streaming_dedup_gate",     # minhash_band_keys per batch (r13)
-}
-
-
-def _rotation_key(name: str) -> tuple:
-    """Sort key for previously-green entries: implementation touched since
-    last hash FIRST (stalest touched first), then untouched stalest-first."""
-    return (
-        name not in _TOUCHED_SINCE_HASH,
-        _LAST_HASHED[name],
-        name,
-    )
+    here = os.path.dirname(os.path.abspath(__file__))
+    rounds: dict[str, int] = {}
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        n = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            records = json.load(f)
+        for name, rec in records.items():
+            green = all(
+                rec.get(k) for k in ("rows_match", "schema_match", "hash_match")
+            )
+            if green and name in QUERIES:
+                rounds[name] = max(rounds.get(name, 0), n)
+    return rounds
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     import mondrian_olap_spark.suite_pipeline  # noqa: F401 — registers entries
     from mondrian_olap_spark.suite import ORACLE, QUERIES
 
-    unchecked = {k: v for k, v in QUERIES.items() if k not in _LAST_HASHED}
+    last = _last_hashed()
+    unchecked = {k: v for k, v in QUERIES.items() if k not in last}
     unchecked = dict(
         sorted(unchecked.items(), key=lambda kv: kv[0] not in ORACLE)
     )
-    checked = {k: v for k, v in QUERIES.items() if k in _LAST_HASHED}
+    checked = {k: v for k, v in QUERIES.items() if k in last}
     checked = dict(
-        sorted(checked.items(), key=lambda kv: _rotation_key(kv[0]))
+        sorted(checked.items(), key=lambda kv: (last[kv[0]], kv[0]))
     )
     return {**unchecked, **checked}
 

@@ -375,16 +375,12 @@ def _canon(text: str) -> str:
 
 
 #: alias prefix of each scalar registry (``Query._tuple_scalars``,
-#: ``_agg_scalars``, ``_stat_scalars``) → the key of an entry, its alias
-#: dropped: entries with one key lower the same value.  Code compares by
-#: :func:`_canon`; a measure name and a Generate separator exactly (the
-#: name up to case).
+#: ``_stat_scalars``) → the key of an entry, its alias dropped: entries
+#: with one key lower the same value.  Code compares by :func:`_canon`; a
+#: measure name and a Generate separator exactly (the name up to case).
 _SCALAR_KEYS = {
     "__tuple": lambda name, members: (
         name and name.lower(), tuple(map(_canon, members))
-    ),
-    "__aggexpr": lambda expr, members: (
-        _canon(expr), tuple(map(_canon, members))
     ),
     "__setstat": lambda fn, exprs, members, arg, _nan, existing, where: (
         fn, tuple(map(_canon, exprs)), tuple(map(_canon, members)), arg,
@@ -3441,6 +3437,14 @@ class MdxParser:
             re.I,
         )
 
+        def _register_stat(
+            fn, exprs, member_strs, arg, nan_wrap, existing=False, where=None
+        ):
+            return _intern(
+                self.q._stat_scalars, "__setstat", fn, tuple(exprs),
+                tuple(member_strs), arg, nan_wrap, existing, where,
+            )
+
         def repl_aggregate_value(args: list[str]):
             # Aggregate() as a VALUE inside a Measures formula
             # (mondrian_test.rb:197-228): three forms —
@@ -3449,8 +3453,9 @@ class MdxParser:
             #   Aggregate({m1, m2}, expr)          expression per member
             # The member-set forms lower through the tuple-scalar machinery
             # (same-dimension members become an IN — exact even for
-            # distinct-count); the expression form lowers to a per-member
-            # sub-aggregate + additive combine (plan._attach_agg_scalar).
+            # distinct-count); the expression form is Sum(set, expr), the
+            # additive combine: the ``sum`` set statistic below
+            # (plan._attach_stat_scalar).
             sets_part = args[0] if args else ""
             sets = re.findall(r"\{(.*?)\}", sets_part)
             if not sets:
@@ -3492,11 +3497,9 @@ class MdxParser:
                         "Aggregate takes a measure in the set OR an "
                         "expression argument, not both"
                     )
-                return _intern(
-                    self.q._agg_scalars,
-                    "__aggexpr",
-                    self.translate_expression_text(expr_part),
-                    tuple(members),
+                return _register_stat(
+                    "sum", (self.translate_expression_text(expr_part),),
+                    members, None, False,
                 )
             return _intern(
                 self.q._tuple_scalars, "__tuple", measure_name, tuple(members)
@@ -3508,8 +3511,8 @@ class MdxParser:
         # Median/Stdev/Var/…(set, expr), Correlation/Covariance/LinReg*
         # (set, y[, x]), LinRegPoint(x0, set, y, x), Percentile(set, expr,
         # p), Count(set[, EXCLUDEEMPTY]) — lowered to a per-member
-        # sub-aggregate + a statistic collapse (plan._attach_stat_scalar),
-        # the non-additive sibling of the Aggregate expression form above.
+        # sub-aggregate + a statistic collapse (plan._attach_stat_scalar);
+        # the Aggregate expression form above is its ``sum``.
         # Reference WITH MEMBER texts (mondrian_test.rb:608-778) parse
         # verbatim, including Rank(<dim>.CurrentMember, <set>) arguments.
         def _parse_set_arg(s: str):
@@ -3580,14 +3583,6 @@ class MdxParser:
                     )
                 conds.append(f"({op[1]})")
             return tuple(ns.base), " AND ".join(conds)
-
-        def _register_stat(
-            fn, exprs, member_strs, arg, nan_wrap, existing=False, where=None
-        ):
-            return _intern(
-                self.q._stat_scalars, "__setstat", fn, tuple(exprs),
-                tuple(member_strs), arg, nan_wrap, existing, where,
-            )
 
         def _translate_stat_expr(raw: str, set_canon: str) -> str:
             # Rank(<dim>.CurrentMember, <this set>) → __setrank, the

@@ -34,8 +34,8 @@ from .members import MemberSetRef
 from .model import CalculatedMember, Dimension, Measure
 from .star import CubeEngine
 
-#: the alias of a tuple / Aggregate / set-statistic scalar (``mdx._intern``)
-_SCALAR_ALIAS = re.compile(r"__(?:tuple|aggexpr|setstat)\d+")
+#: the alias of a tuple / set-statistic scalar (``mdx._intern``)
+_SCALAR_ALIAS = re.compile(r"__(?:tuple|setstat)\d+")
 
 
 def measure_column(m: Measure, internal: bool = False) -> Column:
@@ -184,19 +184,15 @@ class Planner:
         #: refs): the value of ``measure`` with the listed dimensions'
         #: context overridden (mondrian_test.rb:361-380)
         self.tuple_scalars = tuple(tuple_scalars)
-        #: Aggregate(set, expr) scalar references — (out, expr_sql, member
-        #: refs): ``expr`` evaluated per set member and summed
-        #: (mondrian_test.rb:222-228 'aggregate stored members with
-        #: expression')
-        self.agg_scalars: tuple = ()
         #: set-statistic scalar references — (out, fn, expr_sqls, member
-        #: refs, arg, nan_wrap): Median/Stdev/Correlation/LinReg*… over a
-        #: set (mondrian_test.rb:608-778)
+        #: refs, arg, nan_wrap, existing, where): Sum/Median/Stdev/
+        #: Correlation/LinReg*… over a set (mondrian_test.rb:608-778), and
+        #: Aggregate(set, expr) as ``sum`` (mondrian_test.rb:222-228)
         self.stat_scalars: tuple = ()
         #: when True, rollup/cube aggregates emit a ``__grain`` column
         #: (Spark ``grouping_id()``) so callers can tell super-aggregate
         #: marker NULLs from genuine NULL member keys.  Internal — used by
-        #: the Aggregate-scalar totals lowering; bypasses the aggregate
+        #: the set-statistic totals lowering; bypasses the aggregate
         #: cache and summary-table routing (neither carries grain ids).
         self._emit_grain = False
         #: callables df→df applied to the aggregated grid just before the
@@ -343,9 +339,15 @@ class Planner:
         # rolled-up aggregates carry exact decimal sums; one cast here at
         # the cell boundary.  Idempotent for already-cast sources (routed
         # summary tables store the edge type).
-        for m in base_measures:
-            if m.aggregator == "sum" and m.dtype:
-                agg = agg.withColumn(m.out, F.col(m.out).cast(m.dtype))
+        casts = {
+            m.out: m.dtype for m in base_measures
+            if m.aggregator == "sum" and m.dtype
+        }
+        if casts:
+            agg = agg.select(*(
+                F.col(c).cast(casts[c]).alias(c) if c in casts else c
+                for c in agg.columns
+            ))
 
         agg = _ragged_hidden_filter(agg, uses, group_cols, totals)
 
@@ -354,32 +356,21 @@ class Planner:
         # formulas can reference it like any measure alias
         for spec in self.tuple_scalars:
             agg = self._attach_tuple_scalar(agg, spec, axes, slicer, totals)
-        # scalar attachments over the SAME set share one sub-aggregate,
-        # one collapse, and one broadcast attach — a formula block
-        # computing several Aggregate()/Median/Stdev/… scalars over one
-        # level costs one sub-plan per distinct set, not one per scalar
-        def _refs_key(refs):
-            return tuple(
-                (r.dimension.name, r.depth, r.path, r.kind,
-                 r.ordinal_range, r.range_depth)
-                for r in refs
-            )
-
-        agg_groups: dict = {}
-        for spec in self.agg_scalars:
-            agg_groups.setdefault(_refs_key(spec[2]), []).append(spec)
-        for specs in agg_groups.values():
-            agg = self._attach_agg_scalar(agg, specs, axes, slicer, totals)
+        # set statistics over the SAME set share one sub-aggregate, one
+        # collapse, and one broadcast attach — a formula block computing
+        # several Aggregate()/Sum/Median/… scalars over one level costs one
+        # sub-plan per distinct set, not one per scalar.  EXISTING stats
+        # need their own sub-aggregate grain, and a Filter(set, cond)
+        # argument its own row filter — never batch either with the plain
+        # form over the same set
         stat_groups: dict = {}
         for spec in self.stat_scalars:
-            # EXISTING stats need their own sub-aggregate grain, and a
-            # Filter(set, cond) argument its own row filter — never batch
-            # either with the plain form over the same set
-            ex = bool(spec[6]) if len(spec) > 6 else False
-            wh = spec[7] if len(spec) > 7 else None
-            stat_groups.setdefault(
-                (_refs_key(spec[3]), ex, wh), []
-            ).append(spec)
+            refs_key = tuple(
+                (r.dimension.name, r.depth, r.path, r.kind,
+                 r.ordinal_range, r.range_depth)
+                for r in spec[3]
+            )
+            stat_groups.setdefault((refs_key, *spec[6:]), []).append(spec)
         for specs in stat_groups.values():
             agg = self._attach_stat_scalar(agg, specs, axes, slicer, totals)
 
@@ -496,83 +487,6 @@ class Planner:
             return agg.join(F.broadcast(sub), on=sub_cols, how="left")
         return null_safe_attach(sub)
 
-    def _attach_agg_scalar(self, agg, specs, axes, slicer, totals=None):
-        """``Aggregate({m1, m2}, expr)`` in a Measures formula
-        (mondrian_test.rb:222-228; jar!mondrian/olap/fun/AggregateFunDef
-        expression form): ``expr`` evaluated per set member — each member's
-        cells recomputed exactly at the remaining grain — then summed over
-        the set (Mondrian's additive combine for the expression form).
-        ``specs`` is the GROUP of Aggregate scalars sharing one set; they
-        share the sub-aggregate, the collapse, and the broadcast attach.
-
-        Spark lowering: one sub-aggregate at (grid grain MINUS overridden
-        dims) × the set dimension's level over ALL base measures, expr as
-        a projection, a second tiny groupBy collapsing the set dimension,
-        broadcast-joined back onto the grid.
-
-        Totals mode (rollup/cube): the grid's super-aggregate rows need the
-        scalar recomputed at each coarser grain — expr is not additive, so
-        the detail values cannot simply be re-summed.  One pass still
-        suffices: the sub-aggregate groups the SET dimensions first and
-        mirrors the grid's rollup/cube over the remaining columns, emitting
-        ``grouping_id()`` so marker NULLs are distinguished from genuine
-        NULL member keys.  Rows whose set dimensions are rolled up are
-        dropped (their top grouping bits are set); expr evaluates per
-        (grain, set member) on natively-aggregated base measures — avg /
-        distinct-count are exact at every grain, never re-summed — and the
-        collapse groups by (grain, remaining cols) so a genuine-NULL key
-        row never merges with a marker row (the downstream dup probe in
-        _broadcast_attach then falls back to the plain equality join:
-        totals rows get NULL, never a wrong value)."""
-        refs = specs[0][2]
-        all_exprs = tuple(sp[1] for sp in specs)
-        overridden = {r.dimension.name for r in refs}
-        sub_axes = [
-            [s for s in axis if s.dimension.name not in overridden]
-            for axis in axes
-        ]
-        # the set dimension groups at its members' level so expr evaluates
-        # per member; Aggregate-set context overrides the slicer on every
-        # dimension the set mentions.  Under totals the set dims go FIRST:
-        # any grid grain projects onto a prefix/subset of the remaining
-        # columns, so rollup/cube over [set…, rem…] covers every grid grain
-        # once the set-rolled rows (top grouping bits) are filtered out.
-        if totals is None:
-            sub_axes.append(list(refs))
-        else:
-            sub_axes.insert(0, list(refs))
-        kept_slicer = [
-            s for s in slicer if s.dimension.name not in overridden
-        ]
-        calcs = self._scalar_safe_calcs(all_exprs, "Aggregate(set, expr)")
-        base, calcs = self._scalar_sub_measures(all_exprs, calcs)
-        sub_planner = Planner(self.engine, extra_measures=tuple(calcs))
-        sub_planner._emit_grain = totals is not None
-        sub, sub_cols = sub_planner.aggregate(
-            sub_axes, kept_slicer, base + calcs, totals=totals
-        )
-        set_outs = {
-            lv.out for r in refs for lv in r.dimension.levels
-        }
-        rem_cols = [c for c in sub_cols if c not in set_outs]
-        for out, expr_sql, _refs in specs:
-            sub = sub.withColumn(out, F.expr(expr_sql))
-        outs = [sp[0] for sp in specs]
-        sums = [F.sum(o).alias(o) for o in outs]
-        if totals is None:
-            sub = sub.groupBy(*rem_cols).agg(*sums) if rem_cols else sub.agg(*sums)
-            return self._broadcast_attach(agg, sub, rem_cols, outs, totals)
-        # drop rows whose SET dims are rolled up: set cols are the first
-        # grouping columns, i.e. the most-significant grouping_id bits
-        sub = sub.filter(F.col("__grain") < F.lit(2 ** len(rem_cols)))
-        if rem_cols:
-            sub = (
-                sub.groupBy("__grain", *rem_cols).agg(*sums).drop("__grain")
-            )
-        else:
-            sub = sub.agg(*sums)
-        return self._broadcast_attach(agg, sub, rem_cols, outs, totals)
-
     def _scalar_sub_measures(self, exprs: tuple, calcs: list):
         """Prune the scalar sub-plan to the measures the expressions
         actually read: base measures and calc members referenced
@@ -598,7 +512,7 @@ class Planner:
         needed_calcs.sort(key=lambda c: calcs.index(c))  # solve order
         return base, needed_calcs
 
-    def _scalar_safe_calcs(self, expr_sqls: tuple, what: str) -> list:
+    def _scalar_safe_calcs(self, expr_sqls: tuple) -> list:
         """Calculated members safe to compute inside a scalar sub-plan.
 
         An expression may reference calculated members (WITH or cube-level),
@@ -635,30 +549,40 @@ class Planner:
             from .query import QueryError
 
             raise QueryError(
-                f"{what}: the expression contains (or references a member "
-                "whose formula contains) a tuple/Aggregate/set-statistic "
-                "scalar — nested scalar lowerings are not supported"
+                "set statistic or Aggregate(set, expr): the expression "
+                "contains (or references a member whose formula contains) "
+                "a tuple/Aggregate/set-statistic scalar — nested scalar "
+                "lowerings are not supported"
             )
         return [c for c in candidates if c.out.lower() not in tainted]
 
     def _attach_stat_scalar(self, agg, specs, axes, slicer, totals=None):
         """Set-statistic values in Measures formulas —
-        ``Median/Stdev/Var/…(set, expr)``, ``Correlation/Covariance/
+        ``Sum/Median/Stdev/Var/…(set, expr)``, ``Correlation/Covariance/
         LinReg*(set, y[, x])``, ``LinRegPoint(x0, set, y, x)``
         (jar!mondrian/olap/fun/MedianFunDef, StdevFunDef, CorrelationFunDef,
         LinReg$*FunDef; formula-text behavior tests
-        /root/reference/test/mondrian_test.rb:608-778).
+        /root/reference/test/mondrian_test.rb:608-778) — and
+        ``Aggregate({m1, m2}, expr)`` (mondrian_test.rb:222-228;
+        AggregateFunDef expression form), which is ``sum``: Mondrian's
+        additive combine of ``expr`` evaluated per set member.
 
         ``specs`` is the GROUP of stat scalars sharing one set: they share
-        one sub-aggregate, one collapse and one broadcast attach.  Same
-        lowering shape as ``_attach_agg_scalar`` (sub-aggregate at the
-        remaining grain × the set level, broadcast-attached back), except
-        the collapse is the statistics themselves (``functions.stats``
-        deterministic variants) instead of Mondrian's additive combine, and
-        a ``__setrank`` column — the member's 1-based hierarchy-order
-        position, from the member list so it is data-independent — is
-        broadcast-joined in when the expressions use MDX
-        ``Rank(<dim>.CurrentMember, <set>)``.
+        one sub-aggregate at (grid grain MINUS overridden dims) × the set
+        level, so each expression evaluates per member at the remaining
+        grain; one collapse of the set level by the statistics themselves
+        (``functions.stats`` deterministic variants); and one broadcast
+        attach.  A ``__setrank`` column — the member's 1-based
+        hierarchy-order position, from the member list so it is
+        data-independent — is broadcast-joined in when the expressions use
+        MDX ``Rank(<dim>.CurrentMember, <set>)``.
+
+        Totals mode (rollup/cube) recomputes each statistic at every grid
+        grain in one pass: the sub-aggregate emits ``grouping_id()``, rows
+        whose set dims are rolled up are dropped, and the collapse groups
+        by (grain, remaining cols), so a genuine-NULL key row never merges
+        with a marker row (``_broadcast_attach`` then falls back to the
+        plain equality join: totals rows get NULL, never a wrong value).
 
         NaN parity: the two-expression family returns NaN (not NULL) when
         the statistic cannot be computed — all-NULL operands, a single
@@ -669,12 +593,11 @@ class Planner:
         has ANY fact row at the grain."""
         from .functions.stats import stat_column
 
-        refs = specs[0][3]
-        existing = bool(specs[0][6]) if len(specs[0]) > 6 else False
-        #: Filter(set, cond) argument — a row filter on the sub-aggregate
-        #: BEFORE the statistic collapse (FilterFunDef per-member
-        #: evaluation in the current context); part of the group key
-        where = specs[0][7] if len(specs[0]) > 7 else None
+        # ``where``: a Filter(set, cond) argument — a row filter on the
+        # sub-aggregate BEFORE the statistic collapse (FilterFunDef
+        # per-member evaluation in the current context); part of the
+        # group key, as ``existing`` is
+        _out, _fn, _exprs, refs, _arg, _nan, existing, where = specs[0]
         all_exprs = tuple(e for sp in specs for e in sp[2]) + (
             (where,) if where else ()
         )
@@ -697,6 +620,10 @@ class Planner:
             [s for s in axis if s.dimension.name not in overridden]
             for axis in axes
         ]
+        # under totals the set dims go FIRST: any grid grain projects onto
+        # a subset of the remaining columns, so rollup/cube over [set…,
+        # rem…] covers every grid grain once the set-rolled rows (top
+        # grouping bits) are filtered out
         if totals is None:
             sub_axes.append(list(refs))
         else:
@@ -706,7 +633,7 @@ class Planner:
             if existing
             else [s for s in slicer if s.dimension.name not in overridden]
         )
-        calcs = self._scalar_safe_calcs(all_exprs, "set statistic (set, …)")
+        calcs = self._scalar_safe_calcs(all_exprs)
         base, calcs = self._scalar_sub_measures(all_exprs, calcs)
         sub_planner = Planner(self.engine, extra_measures=tuple(calcs))
         sub_planner._emit_grain = totals is not None
@@ -785,7 +712,7 @@ class Planner:
             sub = sub.filter(F.expr(where))
         stat_cols = [
             stat_column(out, fn, *exprs, arg=arg)
-            for out, fn, exprs, _refs, arg, _nan, *_ex in specs
+            for out, fn, exprs, _refs, arg, _nan, _ex, _wh in specs
         ]
         if totals is None:
             sub = (
@@ -804,7 +731,7 @@ class Planner:
                 )
             else:
                 sub = sub.agg(*stat_cols)
-        for out, _fn, _exprs, _refs, _arg, nan_wrap, *_ex in specs:
+        for out, _fn, _exprs, _refs, _arg, nan_wrap, _ex, _wh in specs:
             if nan_wrap:
                 sub = sub.withColumn(
                     out,

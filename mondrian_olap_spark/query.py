@@ -162,11 +162,9 @@ class Query:
         #: tuple scalar references recorded by formula translation:
         #: (output column, measure name, member identifier strings)
         self._tuple_scalars: list[tuple[str, str, tuple[str, ...]]] = []
-        #: Aggregate(set, expr) scalar references from formula translation:
-        #: (out, expr_sql, member identifier strings)
-        self._agg_scalars: list[tuple[str, str, tuple[str, ...]]] = []
-        #: set-statistic scalar references from formula translation:
-        #: (out, fn, expr_sqls, member identifier strings, arg, nan_wrap)
+        #: set-statistic scalar references from formula translation, the
+        #: Aggregate(set, expr) form as ``sum``: (out, fn, expr_sqls,
+        #: member identifier strings, arg, nan_wrap, existing, where)
         self._stat_scalars: list[tuple] = []
         #: Cache(expr) appeared in a formula (CacheFunDef): persist the
         #: evaluated grid for intra-result reuse
@@ -1196,6 +1194,16 @@ class Query:
                 for cm in rewrite_candidates:
                     if cm.name in rewrite_errors and _names(cm) & refs:
                         raise rewrite_errors[cm.name]
+
+        # a scalar's set members resolve to member refs; a Measures member
+        # there is a user error (the measure belongs elsewhere)
+        def member_refs(member_strs, what: str, why: str) -> tuple:
+            refs = tuple(map(self._resolve, member_strs))
+            for mstr, ref in zip(member_strs, refs):
+                if isinstance(ref, MeasureRef):
+                    raise QueryError(f"{what} {mstr!r}: {why}")
+            return refs
+
         tuple_specs = []
         for out, mname, member_strs in self._tuple_scalars:
             # mname None = tuple with no [Measures] component: the Measures
@@ -1207,50 +1215,27 @@ class Query:
                 measure = self.cube.default_measure_obj()
             else:
                 measure = self._measure(mname)
-            refs = []
-            for mstr in member_strs:
-                ref = self._resolve(mstr)
-                if isinstance(ref, MeasureRef):
-                    raise QueryError(
-                        f"tuple component {mstr!r}: only one Measures "
-                        "component is allowed per tuple"
-                    )
-                refs.append(ref)
-            tuple_specs.append((out, measure, tuple(refs)))
-        agg_specs = []
-        for out, expr_sql, member_strs in self._agg_scalars:
-            refs = []
-            for mstr in member_strs:
-                ref = self._resolve(mstr)
-                if isinstance(ref, MeasureRef):
-                    raise QueryError(
-                        f"Aggregate set member {mstr!r}: measures belong in "
-                        "the expression, not the set, for the expression form"
-                    )
-                refs.append(ref)
-            agg_specs.append((out, expr_sql, tuple(refs)))
-        stat_specs = []
-        for out, fn, exprs, member_strs, arg, nan_wrap, existing, where in (
-            self._stat_scalars
-        ):
-            refs = []
-            for mstr in member_strs:
-                ref = self._resolve(mstr)
-                if isinstance(ref, MeasureRef):
-                    raise QueryError(
-                        f"set-statistic set member {mstr!r}: measures "
-                        "belong in the expression arguments, not the set"
-                    )
-                refs.append(ref)
-            stat_specs.append(
-                (out, fn, exprs, tuple(refs), arg, nan_wrap, existing, where)
+            refs = member_refs(
+                member_strs, "tuple component",
+                "only one Measures component is allowed per tuple",
             )
+            tuple_specs.append((out, measure, refs))
+        stat_specs = [
+            (
+                out, fn, exprs,
+                member_refs(
+                    members, "set-statistic set member",
+                    "measures belong in the expression arguments, not the set",
+                ),
+                *rest,
+            )
+            for out, fn, exprs, members, *rest in self._stat_scalars
+        ]
         planner = Planner(
             self.engine,
             extra_measures=with_list,
             tuple_scalars=tuple(tuple_specs),
         )
-        planner.agg_scalars = tuple(agg_specs)
         planner.stat_scalars = tuple(stat_specs)
         planner.grid_enrichers = tuple(grid_enrichers)
         main_axes, shallow_groups = self._split_mixed_depth([ax.sets for ax in axes])

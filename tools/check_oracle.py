@@ -10,9 +10,12 @@ order-insensitive values (floats with tolerance).  Usage:
 
 from __future__ import annotations
 
+import atexit
 import math
 import os
+import shutil
 import sys
+import tempfile
 import time
 import traceback
 
@@ -110,9 +113,15 @@ def main():
            "on": "true", "yes": "true", "1": "true"}.get(aqe, aqe)
     if aqe not in ("true", "false"):
         raise SystemExit(f"SPARK_GRAFT_ORACLE_AQE must be true/false, got {aqe!r}")
+    # a warehouse of its own: entries that save tables drop and rewrite
+    # them by name, so two runs sharing ./spark-warehouse (say, the default
+    # and the adversarial layout at once) would delete each other's files
+    warehouse = tempfile.mkdtemp(prefix="oracle-warehouse-")
+    atexit.register(shutil.rmtree, warehouse, ignore_errors=True)
     spark = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName("oracle-check")
+        .config("spark.sql.warehouse.dir", warehouse)
         .config("spark.sql.shuffle.partitions", parts)
         .config("spark.sql.adaptive.enabled", aqe)
         .config("spark.ui.enabled", "false")

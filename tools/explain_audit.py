@@ -178,9 +178,10 @@ def main() -> int:
         p[:2000],
     )
 
-    # 7d. Aggregate(set, expr) scalars attach the same way: per-member
-    #     sub-aggregate + additive combine rides a BROADCAST join — the
-    #     grid never reshuffles (plan._attach_agg_scalar)
+    # 7d. Aggregate(set, expr) scalars attach the same way: they lower as
+    #     the ``sum`` set statistic, whose per-member sub-aggregate +
+    #     collapse rides a BROADCAST join — the grid never reshuffles
+    #     (plan._attach_stat_scalar)
     df = execute_mdx(
         eng,
         "WITH MEMBER [Measures].[AA2] AS "
