@@ -143,15 +143,14 @@ class MemberMeta:
         return self._members_at(idx)
 
     def property_value(self, prop: str):
-        """Level property value for this member (cube.rb:470-480)."""
-        df = self._engine.level_members(
-            self._dim.name, self.depth, self.path[:-1], include_properties=True
-        )
-        lv = self._dim.levels[self.depth]
-        rows = df.filter(df[lv.out] == self.path[-1]).limit(1).collect()
-        if not rows or prop not in df.columns:
+        """Level property value for this member (cube.rb:470-480); None
+        for an undeclared property or a member the role cannot see."""
+        try:
+            return self._engine.member_property_value(
+                self._dim.name, self.depth, self.path, prop
+            )
+        except KeyError:
             return None
-        return rows[0][prop]
 
     def _members_at(self, idx: int) -> list["MemberMeta"]:
         if idx >= len(self._dim.levels):

@@ -146,59 +146,3 @@ def with_mirr(
     return df.withColumn(
         output, F.expr(mirr_expr(cfs_col, finance_rate, reinvest_rate))
     )
-
-
-def irr_oracle_sql(
-    cfs_cte: str, guess: float = 0.1, steps: int = 40
-) -> str:
-    """DuckDB replay of :func:`irr_expr` — the Newton iteration as a
-    single recursive CTE walking (iteration, position) lexicographically,
-    because DuckDB 1.0's ``list_reduce`` mis-evaluates struct-state
-    lambdas (accumulator fields observed one step ahead).  ``cfs_cte``
-    must be a CTE named ``cf`` with columns ``grp`` (group key) and
-    ``cfs`` (DOUBLE list ordered by period).  Returns SQL yielding
-    ``(grp, irr)`` — the identical ``+ * /`` sequence, bit-for-bit."""
-    return f"""
-WITH RECURSIVE {cfs_cte},
-it AS (
-  SELECT grp, 0 AS n, 0 AS pos,
-         CAST(1.0 AS DOUBLE) AS df, CAST(0.0 AS DOUBLE) AS f,
-         CAST(0.0 AS DOUBLE) AS fp, {_dlit(guess)} AS r
-  FROM cf
-  UNION ALL
-  SELECT it.grp,
-         CASE WHEN pos < len(cfs) THEN n ELSE n + 1 END AS n,
-         CASE WHEN pos < len(cfs) THEN pos + 1 ELSE 0 END AS pos,
-         CASE WHEN pos < len(cfs) THEN df * (1.0 + r)
-              ELSE CAST(1.0 AS DOUBLE) END AS df,
-         CASE WHEN pos < len(cfs) THEN f + list_extract(cfs, pos + 1) / df
-              ELSE CAST(0.0 AS DOUBLE) END AS f,
-         CASE WHEN pos < len(cfs)
-              THEN fp - CAST(pos AS DOUBLE) * list_extract(cfs, pos + 1)
-                   / (df * (1.0 + r))
-              ELSE CAST(0.0 AS DOUBLE) END AS fp,
-         CASE WHEN pos < len(cfs) THEN r ELSE r - f / fp END AS r
-  FROM it JOIN cf USING (grp)
-  WHERE n * (len(cfs) + 1) + pos < {int(steps)} * (len(cfs) + 1)
-)
-SELECT grp, r AS irr FROM it WHERE n = {int(steps)} AND pos = 0
-"""
-
-
-def npv_oracle_sql(cfs_cte: str, rate: float) -> str:
-    """DuckDB replay of :func:`npv_expr` — one sequential pass per group
-    as a recursive CTE over the cashflow position (same reason as
-    :func:`irr_oracle_sql`).  Returns SQL yielding ``(grp, npv)``."""
-    g = f"(1.0 + {_dlit(rate)})"
-    return f"""
-WITH RECURSIVE {cfs_cte},
-np AS (
-  SELECT grp, 0 AS pos, CAST({g} AS DOUBLE) AS df, CAST(0.0 AS DOUBLE) AS v
-  FROM cf
-  UNION ALL
-  SELECT np.grp, pos + 1, df * {g}, v + list_extract(cfs, pos + 1) / df
-  FROM np JOIN cf USING (grp)
-  WHERE pos < len(cfs)
-)
-SELECT np.grp, v AS npv FROM np JOIN cf USING (grp) WHERE pos = len(cfs)
-"""

@@ -6,9 +6,13 @@ The reference engine generates star-join SQL per query
 table on ``foreign_key = primary_key``; snowflake ``Join`` elements chain
 further tables — ``lib/mondrian/olap/schema.rb:169-174``).  Here each
 dimension is assembled *once* into a lazy DataFrame view (pk + one column per
-level + ordinal/property expressions) and reused by every query plan; Spark
-never materialises it until an action runs, and Catalyst prunes unused
-columns per query, so the "assemble once" view costs nothing at scan time.
+level + ordinal/property expressions, all built by ``_level_columns``) and
+reused by every query plan; Spark never materialises it until an action
+runs, and Catalyst prunes unused columns per query, so the "assemble once"
+view costs nothing at scan time.  Every dimension has one such view (a
+degenerate dimension's view projects the fact), and every member lookup
+reads it through one visible-member frame (``CubeEngine._visible_members``),
+the analog of Mondrian's role-restricted member reader.
 
 Scale notes (SURVEY.md §4):
 
@@ -126,22 +130,58 @@ def _apply_member_visibility(df, dim, levels, role, depth):
     return df
 
 
-class DimView:
-    """A pre-joined snowflake dimension view.
+def _level_columns(
+    dim: Dimension, locale: str | None = None, want: set[str] | None = None
+) -> list:
+    """Every level's member columns: key (``level.out``), ``__ord_<out>``
+    ordinal, caption, declared properties and formatted properties — all
+    of them, or only the names in ``want``.  THE single builder: the
+    member views, and the join view the planner ships, both read it."""
+    cols = []
 
-    ``df`` columns: ``__pk`` (join key) + ``level.out`` per level +
-    ``__ord_<out>`` ordinal sort keys + declared member properties.
+    def add(name, make):
+        if want is None or name in want:
+            cols.append(make().alias(name))
+
+    for lv in dim.levels:
+        add(lv.out, lambda: F.expr(lv.column))
+        add(_ordinal_out(dim, lv), lambda: F.expr(lv.ordinal_expr))
+        if _has_caption(lv):
+            add(f"{lv.out}_caption", lambda: _caption_col(lv, locale))
+        for pname, pexpr, pfmt in lv.property_defs:
+            add(pname, lambda: F.expr(pexpr))
+            if pfmt is not None:
+                add(
+                    f"{pname}_formatted",
+                    lambda: _formatted_property_col(pexpr, pfmt),
+                )
+    return cols
+
+
+class DimView:
+    """One dimension's member view — every dimension has one, degenerate
+    dimensions included.
+
+    ``member_df`` holds one row per source row with the columns of
+    :func:`_level_columns`; every member lookup reads it through
+    :meth:`CubeEngine._visible_members`.  ``df`` is the join view
+    (``__pk`` + the same columns) of a table dimension; a degenerate
+    dimension never joins, so its ``df`` is None and its ``member_df``
+    projects the fact.
     """
 
     def __init__(
         self,
         dim: Dimension,
         tables: Mapping[str, DataFrame],
+        fact: DataFrame,
         locale: str | None = None,
     ):
         self.dim = dim
+        level_cols = _level_columns(dim, locale)
         if dim.degenerate:
             self.df = None
+            self.member_df = fact.select(*level_cols)
             return
         base = tables[dim.table]
         for link in dim.joins:
@@ -151,24 +191,7 @@ class DimView:
             # snowflake hop (schema.rb:169-174); equi join, Catalyst picks
             # broadcast for small right sides
             base = base.join(right, F.col(link.left_key) == right[link.right_key], "inner")
-        cols = [F.col(dim.primary_key).alias("__pk")]
-        level_cols = []
-        for lv in dim.levels:
-            level_cols.append(F.expr(lv.column).alias(lv.out))
-            level_cols.append(F.expr(lv.ordinal_expr).alias(_ordinal_out(dim, lv)))
-            if _has_caption(lv):
-                level_cols.append(
-                    _caption_col(lv, locale).alias(f"{lv.out}_caption")
-                )
-            for pname, pexpr, pfmt in lv.property_defs:
-                level_cols.append(F.expr(pexpr).alias(pname))
-                if pfmt is not None:
-                    level_cols.append(
-                        _formatted_property_col(pexpr, pfmt).alias(
-                            f"{pname}_formatted"
-                        )
-                    )
-        self.df = base.select(*cols, *level_cols)
+        self.df = base.select(F.col(dim.primary_key).alias("__pk"), *level_cols)
         # member view: members exist independently of the bridge/fact
         # (members_from_join — model.py); defaults to the joined view
         if dim.members_from_join is None:
@@ -187,12 +210,6 @@ class DimView:
                 )
             self.member_df = mbase.select(*level_cols)
 
-    def joinable(self, needed_outputs: list[str], hint_broadcast: bool) -> DataFrame:
-        """Project to pk + needed columns (column pruning is explicit here so
-        the join ships only what the query groups/filters on)."""
-        df = self.df.select("__pk", *needed_outputs)
-        return F.broadcast(df) if hint_broadcast else df
-
 
 class CubeEngine:
     """Executable cube: semantic model bound to source DataFrames.
@@ -200,7 +217,12 @@ class CubeEngine:
     The Spark analog of a Mondrian connection + RolapCube
     (``lib/mondrian/olap/connection.rb``, ``lib/mondrian/olap/cube.rb``):
     holds the fact view (degenerate level columns materialised as named
-    expressions) and one :class:`DimView` per table dimension.
+    expressions) and one :class:`DimView` per dimension, degenerate ones
+    included.  Every member lookup — listing, navigation, existence,
+    range bounds, property values — reads a dimension's view through one
+    visible-member frame (:meth:`_visible_members`), so the role's level
+    bounds and member grants and the ragged hiding rules apply alike to
+    all of them.
 
     **Concurrency contract** (the reference pools concurrent connections
     against one shared schema — connection.rb:157-181): concurrent query
@@ -601,7 +623,12 @@ class CubeEngine:
 
     def flush_schema_cache(self) -> int:
         """Whole-schema cache flush (``connection.rb:153-181``) — also
-        releases grids pinned by the MDX ``Cache(expr)`` hint."""
+        releases grids pinned by the MDX ``Cache(expr)`` hint and empties
+        the member memos (existence and property values), as Mondrian's
+        schema flush drops its member cache.  The memos are cleared in
+        place: role clones share them."""
+        for memo in ("_exists_memo", "_prop_memo"):
+            self.__dict__.get(memo, {}).clear()
         for df in self.__dict__.pop("_cache_hint_pins", []):
             try:
                 df.unpersist()
@@ -668,9 +695,8 @@ class CubeEngine:
 
     def _rebuild_dims(self) -> None:
         self.dims = {
-            d.name: DimView(d, self.tables, self._locale)
+            d.name: DimView(d, self.tables, self.fact, self._locale)
             for d in self.cube.dimensions
-            if not d.degenerate
         }
 
     @locale.setter
@@ -771,6 +797,26 @@ class CubeEngine:
         ref = resolve(self.cube, identifier)
         return self.level_members(ref.dimension.name, ref.depth, ref.path)
 
+    def _visible_members(self, dim: Dimension, depth: int, path: tuple):
+        """The visible-member frame: ``dim``'s member view under ancestor
+        ``path`` with the members invisible at ``depth`` removed — role
+        level bounds (schema.rb:440-466 top_level/bottom_level; a denied
+        level raises), role member grants (connection_role_test.rb:101-184)
+        and ragged ``hide_member_if`` (schema.rb:222-230).  Mondrian's
+        ``RestrictedMemberReader`` analog: every member lookup reads this
+        frame, so listing, navigation, existence, range bounds and
+        property values never disagree about which members exist.  One
+        row per source row; callers group by the member key."""
+        role = getattr(self, "role", None)
+        if role is not None:
+            role.check_level(dim, depth)
+        df = self.dims[dim.name].member_df
+        for i, key in enumerate(path):
+            df = df.filter(F.col(dim.levels[i].out) == F.lit(key))
+        return _apply_member_visibility(
+            df, dim, dim.levels[: depth + 1], role, depth
+        )
+
     def level_members(
         self,
         dim_name: str,
@@ -789,22 +835,16 @@ class CubeEngine:
         high-cardinality streaming concern disappears, SURVEY.md §4).
         """
         dim = self.cube.dimension(dim_name)
+        df = self._visible_members(dim, depth, tuple(path))
+        # ancestor columns ABOVE a role's top_level stay invisible in
+        # listings; the path and grant predicates above may still read them
         role = getattr(self, "role", None)
-        top_bound = 0
-        if role is not None:
-            # level bounds are absolute: listing members outside them is
-            # denied (schema.rb:440-466 top_level/bottom_level), and
-            # ancestor columns ABOVE top_level stay invisible in listings
-            role.check_level(dim, depth)
-            b = role.level_bounds(dim)
-            if b is not None:
-                top_bound = b[0]
+        bounds = role.level_bounds(dim) if role is not None else None
         levels = dim.levels[: depth + 1]
-        visible_levels = levels[top_bound:]
+        visible_levels = levels[bounds[0] if bounds else 0 :]
         outs = [lv.out for lv in visible_levels]
         props = []
         if include_properties:
-            props = []
             for lv in visible_levels:
                 for p, _e, pf in lv.property_defs:
                     props.append(p)
@@ -813,37 +853,6 @@ class CubeEngine:
             props += [
                 f"{lv.out}_caption" for lv in visible_levels if _has_caption(lv)
             ]
-        # path filter + visibility run BEFORE the visible-columns
-        # projection: under a top_level-bounded role the hidden ancestor
-        # columns are projected away, but the path (and grant predicates)
-        # may legitimately reference them
-        df = self.fact if dim.degenerate else self.dims[dim.name].member_df
-        for i, key in enumerate(path):
-            df = df.filter(F.col(dim.levels[i].out) == key)
-        # role member grants + ragged hiding (shared with the positional
-        # sibling lookups — _apply_member_visibility)
-        df = _apply_member_visibility(df, dim, levels, role, depth)
-        if dim.degenerate:
-            sel = [F.col(o) for o in outs] + [
-                F.expr(lv.ordinal_expr).alias(_ordinal_out(dim, lv)) for lv in levels
-            ]
-            if include_properties:
-                for lv in levels:
-                    if _has_caption(lv):
-                        sel.append(_caption_col(lv, self.locale).alias(f"{lv.out}_caption"))
-                    for pname, pexpr, pfmt in lv.property_defs:
-                        sel.append(F.expr(pexpr).alias(pname))
-                        if pfmt is not None:
-                            sel.append(
-                                _formatted_property_col(pexpr, pfmt).alias(
-                                    f"{pname}_formatted"
-                                )
-                            )
-            df = df.select(*sel)
-        else:
-            df = df.select(
-                *outs, *[_ordinal_out(dim, lv) for lv in levels], *props
-            )
         # dedupe by member key with min() as the deterministic representative
         # for ordinals/properties: Mondrian assumes properties are
         # functionally dependent on the level key (depends_on_level_value,
@@ -1004,35 +1013,13 @@ class CubeEngine:
     def _member_keys_at(self, dim_name: str, depth: int, path: tuple):
         """Distinct (key, min-ordinal) frame of VISIBLE members at ``depth``
         under ``path`` — shared base for the positional sibling lookups
-        below.  Applies the same visibility rules as :meth:`level_members`
-        (role member grants, role level bounds, ragged ``hide_member_if``):
-        a hidden member must neither count toward sibling positions nor be
-        returnable as a lookup result."""
+        below: a hidden member must neither count toward sibling
+        positions nor be returnable as a lookup result."""
         dim = self.cube.dimension(dim_name)
         lv = dim.levels[depth]
-        levels = dim.levels[: depth + 1]
-        if dim.degenerate:
-            df = self.fact
-            sel = [
-                F.expr(l_.column).alias(l_.out)
-                for l_ in levels
-                if l_.out not in df.columns
-            ]
-            df = df.select("*", *sel) if sel else df
-            ord_col = F.expr(lv.ordinal_expr)
-            key_col = F.col(lv.out)
-        else:
-            df = self.dims[dim.name].member_df
-            ord_col = F.col(_ordinal_out(dim, lv))
-            key_col = F.col(lv.out)
-        for i, key in enumerate(path):
-            df = df.filter(F.col(dim.levels[i].out) == key)
-        role = getattr(self, "role", None)
-        if role is not None:
-            role.check_level(dim, depth)
-        df = _apply_member_visibility(df, dim, levels, role, depth)
         return (
-            df.select(key_col.alias("k"), ord_col.alias("o"))
+            self._visible_members(dim, depth, tuple(path))
+            .select(F.col(lv.out).alias("k"), F.col(_ordinal_out(dim, lv)).alias("o"))
             .groupBy("k")
             .agg(F.min("o").alias("o"))
         )
@@ -1060,20 +1047,19 @@ class CubeEngine:
     def member_exists(self, dim_name: str, depth: int, path: tuple) -> bool:
         """1-row existence probe for a full member path (accessor-fold
         validation: a typo'd member must raise the reference's
-        member-not-found error, not fold to a plausible constant).  Shares
-        ``_member_keys_at``'s role/ragged visibility rules; ≤1 row reaches
-        the driver.  Memoized per (path, role): member data is immutable
-        parquet, so repeated accessors on one member cost one job, not one
-        per occurrence — the key includes the active role name because
-        visibility is role-dependent and clones share this dict."""
+        member-not-found error, not fold to a plausible constant); ≤1 row
+        reaches the driver.  Memoized per (path, role): member data is
+        immutable parquet, so repeated accessors on one member cost one
+        job, not one per occurrence — the key includes the active role
+        itself (its grants, not just its name: two roles may share a name)
+        because visibility is role-dependent and clones share this dict."""
         memo = self.__dict__.setdefault("_exists_memo", {})
-        key = (
-            dim_name, depth, tuple(path),
-            self.role.name if getattr(self, "role", None) else None,
-        )
+        key = (dim_name, depth, tuple(path), self.role)
         if key not in memo:
-            df = self._member_keys_at(dim_name, depth, tuple(path[:-1]))
-            memo[key] = df.filter(F.col("k") == F.lit(path[-1])).limit(1).count() > 0
+            dim = self.cube.dimension(dim_name)
+            memo[key] = (
+                self._visible_members(dim, depth, tuple(path)).limit(1).count() > 0
+            )
         return memo[key]
 
     def member_property_value(
@@ -1082,10 +1068,11 @@ class CubeEngine:
         """The VALUE of a level property for one pinned member — the
         evaluation behind ``<member>.Properties('X')`` in a formula
         (mondrian_test.rb:157-190: date/datetime property values feed
-        format strings).  A memoized 1-row lookup (the bounded-collect
-        class of :meth:`member_exists`); raises ``KeyError`` for an
-        unknown property or member.  Values keep their column type —
-        a DATE property arrives as ``datetime.date``, not a string."""
+        format strings).  A memoized 1-row lookup, keyed like
+        :meth:`member_exists`; raises ``KeyError`` for an unknown property
+        or a member the active role cannot see.  Values keep their column
+        type — a DATE property arrives as ``datetime.date``, not a
+        string."""
         dim = self.cube.dimension(dim_name)
         lv = dim.levels[depth]
         by_name = {n.lower(): n for n, _e, _f in lv.property_defs}
@@ -1095,27 +1082,19 @@ class CubeEngine:
             )
         pname = by_name[prop.lower()]
         memo = self.__dict__.setdefault("_prop_memo", {})
-        key = (dim_name, depth, tuple(path), pname)
+        key = (dim_name, depth, tuple(path), pname, self.role)
         if key not in memo:
             # min() instead of limit(1): a deterministic value when source
             # rows disagree on a property (Mondrian assumes functional
             # dependency; an arbitrary row read would vary run-to-run)
-            if dim.degenerate:
-                pexpr = {n: e for n, e, _f in lv.property_defs}[pname]
-                df = self.fact
-                for i, k in enumerate(path):
-                    df = df.filter(F.expr(dim.levels[i].column) == F.lit(k))
-                rows = df.agg(F.min(F.expr(pexpr)).alias("v")).collect()
-                n = df.limit(1).count()
-            else:
-                df = self.dims[dim.name].member_df
-                for i, k in enumerate(path):
-                    df = df.filter(F.col(dim.levels[i].out) == F.lit(k))
-                rows = df.agg(F.min(F.col(pname)).alias("v")).collect()
-                n = df.limit(1).count()
-            if not n:
+            row = (
+                self._visible_members(dim, depth, tuple(path))
+                .agg(F.min(pname).alias("v"), F.count(F.lit(1)).alias("n"))
+                .collect()[0]
+            )
+            if not row["n"]:
                 raise KeyError(f"member {path!r} not found in {dim.name}")
-            memo[key] = rows[0]["v"]
+            memo[key] = row["v"]
         return memo[key]
 
     def member_at_position(
@@ -1142,56 +1121,30 @@ class CubeEngine:
         Mondrian performs at validate time).  Unlike enumerating the level's
         member list, this collects exactly one scalar regardless of level
         cardinality — the range itself is then planned as an
-        ``ordinal BETWEEN lo AND hi`` predicate, never an enumerated set."""
-        dim = self.cube.dimension(dim_name)
-        lv = dim.levels[depth]
-        # range endpoints follow the same visibility rules as every other
-        # lookup path: level-bounded grants are enforced, and a role-hidden
-        # or ragged-hidden member must NOT resolve as a bound (navigation
-        # and range resolution may never disagree about which members exist)
-        role = getattr(self, "role", None)
-        if role is not None:
-            role.check_level(dim, depth)
-        if dim.degenerate:
-            df = self.fact
-            ord_col = F.expr(lv.ordinal_expr)
-        else:
-            df = self.dims[dim.name].member_df
-            ord_col = F.col(_ordinal_out(dim, lv))
-        for i, key in enumerate(path):
-            df = df.filter(F.col(dim.levels[i].out) == key)
-        df = _apply_member_visibility(df, dim, dim.levels[: depth + 1], role, depth)
-        row = df.agg(F.min(ord_col).alias("o"), F.count(F.lit(1)).alias("n")).collect()[0]
-        if row["n"] == 0:
-            raise KeyError(
-                f"member {path!r} not found at {dim.name}.{lv.name}"
-            )
-        return row["o"]
+        ``ordinal BETWEEN lo AND hi`` predicate, never an enumerated set.
+        A member at the full ``path`` is its own first edge, so this is
+        :meth:`edge_ordinal` there: a role-hidden or ragged-hidden member
+        does not resolve as a bound."""
+        return self.edge_ordinal(dim_name, depth, path)
 
     def edge_ordinal(
         self, dim_name: str, depth: int, path: tuple = (), last: bool = False
     ):
-        """Min (or max) ORDINAL value at ``depth`` under ``path`` — the
-        single-scalar lookup backing period-to-date range resolution
-        (``Ytd(member)`` = range from the period parent's FIRST ``depth``
-        member to ``member``, jar!mondrian/olap/fun/XtdFunDef).  Same
-        visibility discipline as :meth:`member_ordinal`."""
+        """Min (or max) ORDINAL value of the visible members at ``depth``
+        under ``path`` — the single-scalar lookup backing period-to-date
+        range resolution (``Ytd(member)`` = range from the period parent's
+        FIRST ``depth`` member to ``member``, jar!mondrian/olap/fun/XtdFunDef)."""
         dim = self.cube.dimension(dim_name)
         lv = dim.levels[depth]
-        role = getattr(self, "role", None)
-        if role is not None:
-            role.check_level(dim, depth)
-        if dim.degenerate:
-            df = self.fact
-            ord_col = F.expr(lv.ordinal_expr)
-        else:
-            df = self.dims[dim.name].member_df
-            ord_col = F.col(_ordinal_out(dim, lv))
-        for i, key in enumerate(path):
-            df = df.filter(F.col(dim.levels[i].out) == key)
-        df = _apply_member_visibility(df, dim, dim.levels[: depth + 1], role, depth)
-        agg = F.max(ord_col) if last else F.min(ord_col)
-        row = df.agg(agg.alias("o"), F.count(F.lit(1)).alias("n")).collect()[0]
+        o = F.col(_ordinal_out(dim, lv))
+        row = (
+            self._visible_members(dim, depth, tuple(path))
+            .agg(
+                (F.max(o) if last else F.min(o)).alias("o"),
+                F.count(F.lit(1)).alias("n"),
+            )
+            .collect()[0]
+        )
         if row["n"] == 0:
             raise KeyError(
                 f"no members at {dim.name}.{lv.name} under {path!r}"
@@ -1227,22 +1180,11 @@ class CubeEngine:
                 base = base.join(
                     right, F.col(link.left_key) == right[link.right_key], "inner"
                 )
+        # drill-through Name(...)/Property(...) fields ship captions and
+        # properties (result.rb:283-419); range predicates read ordinals
         cols = [F.col(dims[0].primary_key).alias("__pk")]
         for d in dims:
-            want = set(needed.get(d.name, ()))
-            for lv in d.levels:
-                if lv.out in want:
-                    cols.append(F.expr(lv.column).alias(lv.out))
-                if _ordinal_out(d, lv) in want:
-                    # range predicates compare against the level's ordinal
-                    cols.append(F.expr(lv.ordinal_expr).alias(_ordinal_out(d, lv)))
-                if f"{lv.out}_caption" in want and _has_caption(lv):
-                    # drill-through Name(...) fields ship the caption source
-                    cols.append(_caption_col(lv, self.locale).alias(f"{lv.out}_caption"))
-                for pname, pexpr, _pf in lv.property_defs:
-                    # drill-through Property(...) fields (result.rb:283-419)
-                    if pname in want:
-                        cols.append(F.expr(pexpr).alias(pname))
+            cols += _level_columns(d, self.locale, set(needed.get(d.name, ())))
         return base.select(*cols)
 
     def drill_through(

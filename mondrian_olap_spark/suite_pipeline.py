@@ -4696,6 +4696,11 @@ def streaming_importance_gate(spark, sf_dir):
 
 # ------------------------------------------------------------- finance
 
+# The oracle replays operators/finance.py's NPV and IRR folds as
+# recursive-CTE state machines walking (iteration, position) in order:
+# DuckDB 1.0's list_reduce mis-evaluates struct-state lambdas (the
+# accumulator's fields are observed one step ahead), so the fold cannot
+# be written as a list_reduce.
 @q(
     "finance_npv_irr_by_nation",
     """

@@ -353,6 +353,20 @@ def test_mutation_invisible_until_flush(spark, tmp_path):
     fresh_eng.flush_schema_cache()
 
 
+def test_schema_flush_drops_member_memos(cached_engine):
+    """A schema flush drops the member memos with the cells, as Mondrian's
+    schema flush drops its member cache: no member state outlives a
+    cold-start flush."""
+    eng = cached_engine
+    brand = eng.level_members("Part", 0).collect()[0]["brand"]
+    part = eng.level_members("Part", 1, (brand,)).collect()[0]["part_name"]
+    assert eng.member_exists("Part", 1, (brand, part))
+    assert eng.member_property_value("Part", 1, (brand, part), "part_size") is not None
+    assert eng._exists_memo and eng._prop_memo
+    eng.flush_schema_cache()
+    assert eng._exists_memo == {} and eng._prop_memo == {}
+
+
 def test_in_memory_rollup_reuse(cached_engine):
     """A coarser request re-aggregates a finer cached entry instead of
     rescanning the fact (EnableInMemoryRollup — SURVEY.md §4)."""

@@ -113,15 +113,19 @@ def test_measure_members(engine):
     assert md.member("[Measures].[NoSuch]") is None
 
 
-def test_member_property_value(engine):
-    """Level properties surface per member (cube.rb:470-480)."""
-    md = engine.metadata()
-    parts = md.member("[Part].[Brand#11]")
-    if parts is None:  # brand keys vary with sf — pick one that exists
-        d = md.dimension("Part")
-        parts = d.level("Brand").members[0]
-    kids = parts.children
-    assert kids  # parts under the brand exist
+def test_member_property_value(engine, duck):
+    """Level properties surface per member (cube.rb:470-480): the value
+    is the member's min(p_size), read through the same lookup as a
+    formula's ``.Properties``; an undeclared property has none."""
+    brand = engine.metadata().dimension("Part").level("Brand").members[0]
+    part = brand.children[0]
+    want = duck.execute(
+        "SELECT min(p_size) FROM part WHERE p_brand = ? AND p_name = ?",
+        [brand.name, part.name],
+    ).fetchone()[0]
+    assert want is not None
+    assert part.property_value("part_size") == want
+    assert part.property_value("nope") is None
 
 
 # ---------------------------------------------------------------- locale

@@ -568,3 +568,90 @@ def test_agg_scalar_subplan_respects_role(engine):
     assert all(v is None for v in restricted.values())  # EUROPE denied
     unrestricted = run(engine)
     assert any(v is not None for v in unrestricted.values())
+
+
+def _first_part_of_another_brand(engine):
+    """(first Part brand, (second brand, its first part))."""
+    brands = [r["brand"] for r in engine.level_members("Part", 0).collect()]
+    part = engine.level_members("Part", 1, (brands[1],)).collect()[0]["part_name"]
+    return brands[0], (brands[1], part)
+
+
+def test_member_property_honours_member_grant(engine):
+    """``.Properties`` reads the same visible-member frame as ``.Name``:
+    a member outside the role's grant has no property value, neither in a
+    formula nor through the lookup — also when the unrestricted engine
+    memoized that value first (role clones share the memo dict)."""
+    from mondrian_olap_spark.mdx import MdxError, execute_mdx
+
+    granted, path = _first_part_of_another_brand(engine)
+    assert engine.member_property_value("Part", 1, path, "part_size") is not None
+    eng = engine.with_role(
+        Role("one_brand", grants=(MemberGrant("Part", (granted,)),))
+    )
+    member = "[Part].[{}].[{}]".format(*path)
+    for accessor in ("Properties(''part_size'')", "Name"):
+        with pytest.raises(MdxError, match="not found"):
+            execute_mdx(
+                eng,
+                f"WITH MEMBER [Measures].[p] AS '{member}.{accessor}' "
+                "SELECT {[Measures].[p]} ON COLUMNS FROM [Sales]",
+            )
+    with pytest.raises(KeyError):
+        eng.member_property_value("Part", 1, path, "part_size")
+
+
+@pytest.mark.parametrize("granted", [False, True], ids=["no_role", "member_grant"])
+def test_member_lookups_agree_at_depth_zero(engine, granted):
+    """Listing, the positional key frame and the edge ordinals read one
+    visible-member frame: at depth 0 of every Sales dimension, degenerate
+    ones included, they agree on the members and on the first and last
+    ordinal — with no role and under member grants."""
+    eng = engine
+    if granted:
+        eng = engine.with_role(
+            Role(
+                "parity",
+                grants=(
+                    MemberGrant("Customer", ("ASIA",)),
+                    MemberGrant("ReturnFlag", ("R",)),
+                ),
+            )
+        )
+    listings = {}
+    for dim in engine.cube.dimensions:
+        out = dim.levels[0].out
+        listed = [r[out] for r in eng.level_members(dim.name, 0).collect()]
+        ords = {
+            r["k"]: r["o"] for r in eng._member_keys_at(dim.name, 0, ()).collect()
+        }
+        assert listed and len(listed) == len(ords), dim.name
+        assert set(listed) == set(ords), dim.name
+        assert eng.edge_ordinal(dim.name, 0) == ords[listed[0]], dim.name
+        assert eng.edge_ordinal(dim.name, 0, last=True) == ords[listed[-1]], dim.name
+        listings[dim.name] = listed
+    assert len(listings) == len(engine.cube.dimensions)
+    if granted:
+        assert listings["Customer"] == ["ASIA"]
+        assert listings["ReturnFlag"] == ["R"]
+    else:
+        assert len(listings["Customer"]) == 5
+
+
+def test_member_memos_key_on_the_role_not_its_name(engine):
+    """Role clones share the member memos, so the memo key is the role's
+    grants, not its name: a second role named like the first but granting
+    another brand must not read the first role's answers."""
+    granted, path = _first_part_of_another_brand(engine)
+    engine.member_exists("Part", 0, (granted,))  # the memo now lives on the base
+    first = engine.with_role(
+        Role("same_name", grants=(MemberGrant("Part", (path[0],)),))
+    )
+    assert first.member_exists("Part", 1, path)
+    assert first.member_property_value("Part", 1, path, "part_size") is not None
+    second = engine.with_role(
+        Role("same_name", grants=(MemberGrant("Part", (granted,)),))
+    )
+    assert not second.member_exists("Part", 1, path)
+    with pytest.raises(KeyError):
+        second.member_property_value("Part", 1, path, "part_size")
