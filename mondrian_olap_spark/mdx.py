@@ -29,10 +29,12 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 from .members import (
+    _NAV_SUFFIXES,
     MeasureRef,
     MemberParseError,
     format_name,
     parse_identifier,
+    parse_identifier_tagged,
     quote_segment,
     resolve,
     resolve_level,
@@ -59,13 +61,23 @@ def _line_col(src: str, pos: int) -> tuple[int, int]:
 
 
 # ------------------------------------------------------------------ lexer
+#: one ``[...]`` identifier segment (``]]`` escapes a ``]``) and a
+#: ``'...'``/``"..."`` string literal — the lexer's rules, shared by every
+#: scan over formula text.  The repeats are possessive, as a lexer reads:
+#: a doubled quote or bracket is always an escape, so a span has one parse
+#: and a pattern that repeats these spans cannot backtrack through the 2^k
+#: splits of k escapes
+_SEG = r"\[(?:[^\]]|\]\])*+\]"
+_LITERAL = r"'(?:[^']|'')*+'|\"[^\"]*+\""
+#: a ``[...]`` identifier chain, ``[A].[B]. … .[Z]``
+_ID_CHAIN = rf"{_SEG}(?:\s*\.\s*{_SEG})*+"
 _TOKEN_RE = re.compile(
-    r"""
+    rf"""
     (?P<ws>\s+)
-  | (?P<bracket>\[(?:[^\]]|\]\])*\])
-  | (?P<string>'(?:[^']|'')*')
+  | (?P<bracket>{_SEG})
+  | (?P<string>{_LITERAL})
   | (?P<number>\d+(?:\.\d+)?)
-  | (?P<op><>|<=|>=|[<>=+\-*/(),.{}:])
+  | (?P<op><>|<=|>=|[<>=+\-*/(),.{{}}:])
   | (?P<word>[A-Za-z_][A-Za-z0-9_]*)
 """,
     re.VERBOSE,
@@ -191,60 +203,54 @@ _VBA_DATE_UNIT = {
     "w": "DAY", "ww": "WEEK", "h": "HOUR", "n": "MINUTE", "s": "SECOND",
 }
 
-#: set-statistic VALUE functions in formula text → functions.stats name
-#: (jar!mondrian/olap/fun/{Median,Percentile,Stdev,Var,Correlation,
-#: Covariance,LinReg$*}FunDef; formula-text behavior tests
-#: /root/reference/test/mondrian_test.rb:608-778).  The dispersion and
-#: two-expression families lower onto the DETERMINISTIC decimal-moment
-#: variants (functions/stats.py) so results are shuffle-order-stable and
-#: oracle-replicable; with exact-typed inputs they are bit-deterministic.
-_SETSTAT_FN = {
-    "sum": "sum", "avg": "avg", "min": "min", "max": "max", "count": "count",
-    "median": "median", "percentile": "percentile",
-    "stdev": "dstdev", "stddev": "dstdev",
-    "stdevp": "dstdevp", "stddevp": "dstdevp",
-    "var": "dvar", "variance": "dvar",
-    "varp": "dvarp", "variancep": "dvarp",
-    "correlation": "dcorrelation",
-    "covariance": "dcovariance", "covariancen": "dcovariancen",
-    "linregslope": "dlinregslope", "linregintercept": "dlinregintercept",
-    "linregr2": "dlinregr2", "linregvariance": "dlinregvariance",
-    "linregpoint": "linregpoint",
-}
-#: single-expression forms (set, expr); the rest take (set, y[, x])
-_SETSTAT_UNARY = {
-    "sum", "avg", "min", "max", "median", "percentile",
-    "stdev", "stddev", "stdevp", "stddevp",
-    "var", "variance", "varp", "variancep",
-}
-#: NaN (not NULL) when the statistic cannot be computed — the reference's
-#: NaN matrix for the two-expression family (mondrian_test.rb:673-686,
-#: 765-778)
-_SETSTAT_NAN = {
-    "correlation", "covariance", "covariancen",
-    "linregslope", "linregintercept", "linregr2", "linregvariance",
-    "linregpoint",
-}
-#: names distinct enough to be unambiguously MDX set statistics: a non-set
-#: first argument is a user error worth a clear message.  The generic
-#: names (sum/min/max/count/var…) pass through untouched instead — they may
-#: be legitimate SQL in a formula.
-_SETSTAT_STRICT = {
-    "median", "percentile", "stdev", "stddev", "stdevp", "stddevp",
-    "correlation", "covariance", "covariancen",
-    "linregslope", "linregintercept", "linregr2", "linregvariance",
-    "linregpoint",
+@dataclass(frozen=True)
+class _SetStat:
+    """A set-statistic VALUE function of formula text
+    (jar!mondrian/olap/fun/{Median,Percentile,Stdev,Var,Correlation,
+    Covariance,LinReg$*}FunDef; mondrian_test.rb:608-778).  ``fn`` is the
+    functions.stats statistic: the dispersion and two-expression families
+    lower onto the DETERMINISTIC decimal-moment variants, so results are
+    shuffle-order-stable and oracle-replicable.  ``family`` names the
+    arguments after the set: ``expr`` (set, expr), ``xy`` (set, y[, x])
+    or ``count`` (set[, expr | EXCLUDEEMPTY]).  ``nan``: NaN, not NULL,
+    when the statistic cannot be computed (mondrian_test.rb:673-686,
+    765-778).  ``strict``: the name is unambiguously an MDX statistic, so
+    a non-set first argument is an error; the generic names
+    (sum/min/max/count/var…) pass through untouched instead — they may be
+    legitimate SQL in a formula."""
+
+    fn: str
+    family: str = "expr"
+    nan: bool = False
+    strict: bool = False
+
+
+_XY = dict(family="xy", nan=True, strict=True)
+#: MDX name → its statistic
+_SETSTAT = {
+    "sum": _SetStat("sum"), "avg": _SetStat("avg"),
+    "min": _SetStat("min"), "max": _SetStat("max"),
+    "count": _SetStat("count", family="count"),
+    "median": _SetStat("median", strict=True),
+    "percentile": _SetStat("percentile", strict=True),
+    "stdev": _SetStat("dstdev", strict=True),
+    "stddev": _SetStat("dstdev", strict=True),
+    "stdevp": _SetStat("dstdevp", strict=True),
+    "stddevp": _SetStat("dstdevp", strict=True),
+    "var": _SetStat("dvar"), "variance": _SetStat("dvar"),
+    "varp": _SetStat("dvarp"), "variancep": _SetStat("dvarp"),
+    "correlation": _SetStat("dcorrelation", **_XY),
+    "covariance": _SetStat("dcovariance", **_XY),
+    "covariancen": _SetStat("dcovariancen", **_XY),
+    "linregslope": _SetStat("dlinregslope", **_XY),
+    "linregintercept": _SetStat("dlinregintercept", **_XY),
+    "linregr2": _SetStat("dlinregr2", **_XY),
+    "linregvariance": _SetStat("dlinregvariance", **_XY),
+    "linregpoint": _SetStat("linregpoint", **_XY),
 }
 
 
 # ------------------------------------------------- calls and their arguments
-#: one ``[...]`` identifier segment (``]]`` escapes a ``]`` — the
-#: ``_TOKEN_RE`` bracket rule) and a ``'...'``/``"..."`` string literal.
-#: The repeats are possessive, as a lexer reads: a doubled quote or
-#: bracket is always an escape, so a span has one parse and a pattern that
-#: repeats these spans cannot backtrack through the 2^k splits of k escapes
-_SEG = r"\[(?:[^\]]|\]\])*+\]"
-_LITERAL = r"'(?:[^']|'')*+'|\"[^\"]*+\""
 #: spans a scan steps over whole
 _OPAQUE = _SEG + "|" + _LITERAL
 _ARG_RE = re.compile(_OPAQUE + r"|[(){},]")
@@ -434,7 +440,7 @@ _CURRENT_RE = re.compile(
     rf"\s*({_SEG}(?:\s*\.\s*{_SEG})?)\s*\.\s*currentmember\b\s*", re.I
 )
 #: a string literal (stepped over) or a ``[...]`` identifier chain
-_CHAIN_RE = re.compile(rf"{_LITERAL}|{_SEG}(?:\s*\.\s*{_SEG})*")
+_CHAIN_RE = re.compile(rf"{_LITERAL}|{_ID_CHAIN}")
 #: ``.<Prop>[(`` after a current member; ``}`` closes the ``{…}`` sugar
 _PROP_RE = re.compile(r"(\}\s*)?\.\s*([A-Za-z_]\w*)(?:\s*(\())?")
 
@@ -1309,11 +1315,8 @@ class MdxParser:
                 re.IGNORECASE,
             ):
                 continue
-            inner = MdxParser.__new__(MdxParser)
-            inner.__dict__.update(self.__dict__)
             quoted = formula.replace("'", "''")
-            inner.toks = _splice_strtomember(tokenize(f"AS '{quoted}'"))
-            inner.i = 0
+            inner = self._over(f"AS '{quoted}'")
             # inner shares this parser's _dim_member_defs list object, so
             # the buffered definition lands directly in self's queue
             inner.parse_dimension_member(segs)
@@ -1462,61 +1465,33 @@ class MdxParser:
             raise MdxError("non-measure WITH MEMBER needs a quoted formula string")
         unstripped = _unquote(t.text)
         body = unstripped.strip()
-        # match against the UNSTRIPPED text so m.start(1) is a true offset
-        # into the quoted string (leading whitespace would otherwise shift
-        # the re-based error positions)
-        m = re.match(
-            r"(?is)^\s*aggregate\s*\(\s*(\{.*\})\s*\)\s*$", unstripped
-        )
-        if m:
-            # one or more {…} sets joined by top-level * (the crossjoin-set
-            # form, mondrian_test.rb:205-212): each set contributes its
-            # member list; members of the home dimension (the WITH MEMBER
-            # name's dimension) define the synthetic member, the rest become
-            # context constraints
-            members: list[str] = []
-            for sm in re.finditer(r"\{(.*?)\}", m.group(1)):
-                inner = MdxParser.__new__(MdxParser)
-                inner.__dict__.update(self.__dict__)
-                inner.toks = _shift_toks(
-                    tokenize(sm.group(1)), t.pos + 1 + m.start(1) + sm.start(1)
-                )
-                inner.i = 0
-                members.append(inner.parse_member_string())
-                while inner.at_op(","):
-                    inner.next()
-                    members.append(inner.parse_member_string())
-            n_sets = len(re.findall(r"\{.*?\}", m.group(1)))
-            between = re.sub(r"\{.*?\}", "", m.group(1))
-            # exactly one * between each pair of sets — '+' (union) and a
-            # bare juxtaposition are both rejected, not silently crossjoined
-            if between.count("*") != n_sets - 1 or re.sub(
-                r"[\s*]", "", between
-            ):
-                raise MdxError(
-                    "Aggregate sets combine only with * (crossjoin) in "
-                    "this subset"
-                )
-            # buffered, not applied: WITH entries may reference calc
-            # members defined LATER in the clause (Mondrian resolves the
-            # whole WITH block lazily); _apply_dim_member_defs orders by
-            # the dependency DAG after the clause closes
+        args = _call_args(body, "aggregate")
+        members = None
+        if args is not None and len(args) == 1:
+            agg = self._over(unstripped, t.pos + 1)
+            agg.i = 2  # past "Aggregate("
+            members = agg._crossjoined_members()
+        if members is not None:
+            # members of the home dimension (the WITH MEMBER name's
+            # dimension) define the synthetic member, the rest become
+            # context constraints.  Buffered, not applied: WITH entries
+            # may reference calc members defined LATER in the clause
+            # (Mondrian resolves the whole WITH block lazily);
+            # _apply_dim_member_defs orders by the dependency DAG after
+            # the clause closes
             self._dim_member_defs.append(("aggregate", name_segs, members))
         elif re.fullmatch(
-            r"(?is)\[(?:[^\]]|\]\])+\](?:\s*\.\s*\[(?:[^\]]|\]\])+\])*"
-            r"\s*\.\s*CurrentDateMember",
-            body,
+            rf"(?is){_ID_CHAIN}\s*\.\s*CurrentDateMember", body
         ):
             # a bare CurrentDateMember member expression as the formula —
             # the reference's schema calc-member idiom
             # (schema_definition_test.rb:580-591): alias of the resolved
             # member, i.e. Aggregate of the singleton set
-            inner = MdxParser.__new__(MdxParser)
-            inner.__dict__.update(self.__dict__)
-            inner.toks = _shift_toks(tokenize(body), t.pos + 1)
-            inner.i = 0
             self._dim_member_defs.append(
-                ("aggregate", name_segs, [inner.parse_member_string()])
+                (
+                    "aggregate", name_segs,
+                    [self._over(body, t.pos + 1).parse_member_string()],
+                )
             )
         else:
             # arithmetic formula over member cells
@@ -1604,11 +1579,7 @@ class MdxParser:
         self.expect_word("as")
         t = self.next()
         if t.kind == "string":
-            inner = MdxParser.__new__(MdxParser)
-            inner.__dict__.update(self.__dict__)
-            inner.toks = _shift_toks(tokenize(_unquote(t.text)), t.pos + 1)
-            inner.i = 0
-            sb = inner.parse_set()
+            sb = self._over(_unquote(t.text), t.pos + 1).parse_set()
         else:
             self.i -= 1
             sb = self.parse_set()
@@ -2060,7 +2031,7 @@ class MdxParser:
                 head_segs = [quote_segment(ref.dimension.name)] + [
                     quote_segment(str(k)) for k in ref.path[: lvl_idx + 1]
                 ]
-                return _SetBuild(base=[".".join(head_segs)])
+                return _SetBuild(base=[".".join(head_segs)], member=True)
             if lvl_idx < ref.depth:
                 raise MdxError("DESCENDANTS level must not be above the member's level")
             # flags select which level span contributes (DescendantsFunDef;
@@ -2169,7 +2140,7 @@ class MdxParser:
                 raise MdxError(
                     f"COUSIN: {m2!r} has no child at sibling position {idx}"
                 )
-            return _SetBuild(base=[f"{m2}.{quote_segment(str(kid_key))}"])
+            return _SetBuild(base=[f"{m2}.{quote_segment(str(kid_key))}"], member=True)
         if (
             t is not None
             and t.kind == "word"
@@ -2210,11 +2181,7 @@ class MdxParser:
             if st.kind != "string":
                 raise MdxError("StrToSet takes a quoted set string")
             self.expect_op(")")
-            inner = MdxParser.__new__(MdxParser)
-            inner.__dict__.update(self.__dict__)
-            inner.toks = _shift_toks(tokenize(_unquote(st.text)), st.pos + 1)
-            inner.i = 0
-            return inner.parse_set()
+            return self._over(_unquote(st.text), st.pos + 1).parse_set()
         if t is not None and t.kind == "word" and t.text.lower() in _SET_FUNCTIONS:
             sb = self.parse_set_function()
             # .Item(i) on a set expression → single-element slice
@@ -2246,13 +2213,14 @@ class MdxParser:
         # is the level's ORDINAL order, which key-sorted slices would get
         # wrong whenever a level declares an ordinal expression.
         if low.endswith(".firstchild") or low.endswith(".lastchild"):
-            return _SetBuild(base=[self._edge_of(first, 1, low.endswith(".lastchild"))])
+            return _SetBuild(base=[self._edge_of(first, 1, low.endswith(".lastchild"))], member=True)
         if low.endswith(".parent"):
-            parent = _parent_of(first)
-            return _SetBuild(base=[parent])
+            return _SetBuild(base=[_parent_of(first)], member=True)
         if low.endswith(".firstsibling") or low.endswith(".lastsibling"):
-            return _SetBuild(base=[self._edge_of(first, 2, low.endswith(".lastsibling"))])
+            return _SetBuild(base=[self._edge_of(first, 2, low.endswith(".lastsibling"))], member=True)
         if low.endswith(".siblings"):
+            if _on_current([first]):  # no fixed parent to list
+                raise MdxError(f"{first!r}: Siblings of a CurrentMember is not supported in this subset")
             segs = _strip_segments(first, 2)  # keyword + own key
             base = format_name(segs) if len(segs) > 1 else quote_segment(segs[0])
             return _SetBuild(base=[f"{base}.Children"])
@@ -2268,35 +2236,100 @@ class MdxParser:
             except KeyError as e:
                 raise MdxError(str(e)) from None
             if dim.has_all:
-                return _SetBuild(
-                    base=[f"{format_name([dim.name])}.DefaultMember"]
-                )
+                return _SetBuild(base=[f"{format_name([dim.name])}.DefaultMember"], member=True)
             try:
                 key = self.engine.edge_member(segs[0], 0, ())
             except KeyError as e:
                 raise MdxError(str(e)) from None
-            return _SetBuild(base=[format_name([segs[0], str(key)])])
+            return _SetBuild(base=[format_name([segs[0], str(key)])], member=True)
         if low.endswith(".[item]") and self.at_op("("):
             # member-set .Item(i) (SetItemFunDef on an enumerated set)
             self.next()
             idx = int(self.next().text)
             self.expect_op(")")
             head = first.rsplit(".", 1)[0]
-            return _SetBuild(base=[head], ops=[("slice", idx, 1, False)])
-        return _SetBuild(base=[first])
+            return _SetBuild(base=[head], ops=[("slice", idx, 1, False)], member=True)
+        # a member chain is a set only when it ends in a bare
+        # Members/AllMembers/Children
+        seg, quoted = parse_identifier_tagged(first)[-1]
+        return _SetBuild(base=[first], member=quoted or seg.lower() not in _NAV_SUFFIXES)
 
     @staticmethod
     def _plain_members(sb: "_SetBuild", where: str) -> list[str]:
         """Set arguments that must be PLAIN member lists (UNION/INTERSECT
-        canonicalize written identities at parse time) — silently dropping
-        a nested set function's operations would return a wrong member set
+        canonicalize written identities at parse time; Aggregate and
+        Generate inside a formula read members) — silently dropping a
+        nested set function's operations would return a wrong member set
         with no error."""
         if sb.ops or sb.set_ops:
             raise MdxError(
-                f"set functions are not supported as the second argument of "
+                f"set functions are not supported as a set argument of "
                 f"{where} in this subset (got a computed set)"
             )
         return list(sb.base)
+
+    def _over(self, text: str, base: int = 0) -> "MdxParser":
+        """A parser over the tokens of ``text`` — a quoted formula or set
+        string, or a set argument inside a formula — sharing this
+        parser's state (query, named sets, parameters).  ``base`` is the
+        offset of ``text`` in the statement, so that syntax errors point
+        at the real location."""
+        inner = MdxParser.__new__(MdxParser)
+        inner.__dict__.update(self.__dict__)
+        inner.toks = _splice_strtomember(_shift_toks(tokenize(text), base))
+        inner.i = 0
+        return inner
+
+    def _set_at_cursor(self) -> "_SetBuild | None":
+        """The set at the cursor, read by :meth:`parse_set` as it would
+        be on an axis; None when the text there is not a set: the set
+        grammar cannot read it, or it reads one member
+        (:attr:`_SetBuild.member`)."""
+        try:
+            sb = self.parse_set()
+        except MdxError:
+            return None
+        return None if sb.member else sb
+
+    def _formula_set(self, text: str) -> "_SetBuild | None":
+        """``text``, a set written inside a formula, read by
+        :meth:`_set_at_cursor`; None when ``text`` is not one whole set or
+        its members depend on the current member (:func:`_on_current`) —
+        a formula reads a set's members once, at parse time."""
+        try:
+            p = self._over(text)
+        except MdxError:
+            return None
+        sb = p._set_at_cursor()
+        if sb is None or p.peek() is not None or _on_current(sb.base):
+            return None
+        return sb
+
+    def _crossjoined_members(self) -> "list[str] | None":
+        """Aggregate's set argument at the cursor: one set, or several
+        joined by ``*`` (the crossjoin-set form, mondrian_test.rb:
+        205-212), each read by :meth:`parse_set` → the members of all of
+        them; None when the argument does not start with a set.  The
+        argument must end there: ``+`` (union) and a bare juxtaposition
+        are rejected, not silently crossjoined."""
+        sb = self._set_at_cursor()
+        if sb is None:
+            return None
+        members = self._plain_members(sb, "Aggregate")
+        while self.at_op("*"):
+            self.next()
+            members += self._plain_members(self.parse_set(), "Aggregate")
+        if self.peek() is not None and not self.at_op(")"):
+            raise MdxError(
+                "Aggregate sets combine only with * (crossjoin) in this "
+                "subset"
+            )
+        if _on_current(members):
+            raise MdxError(
+                "Aggregate: a set that depends on the current member is "
+                "not supported in this subset"
+            )
+        return members
 
     @staticmethod
     def _descendant_chains(
@@ -3305,9 +3338,6 @@ class MdxParser:
             re.I | re.S,
         )
 
-        # a bracketed member identifier (one or more [..]-quoted segments)
-        _id_pat = r"\[(?:[^\]]|\]\])+\](?:\s*\.\s*\[(?:[^\]]|\]\])+\])*"
-
         def case_item(m: re.Match, pick) -> str:
             # CASE … END.Item(i): branches return members or tuples; each
             # result becomes ``pick`` of its i-th component.  A bare member
@@ -3319,11 +3349,11 @@ class MdxParser:
             def lower(body: str) -> str:
                 stripped = body.strip()
                 if re.fullmatch(
-                    r"\(\s*" + _id_pat + r"(?:\s*,\s*" + _id_pat + r")*\s*\)",
+                    rf"\(\s*{_ID_CHAIN}(?:\s*,\s*{_ID_CHAIN})*\s*\)",
                     stripped,
                 ):
-                    parts = re.findall(_id_pat, stripped)
-                elif re.fullmatch(_id_pat, stripped):
+                    parts = re.findall(_ID_CHAIN, stripped)
+                elif re.fullmatch(_ID_CHAIN, stripped):
                     parts = [stripped]
                 else:
                     return body
@@ -3381,7 +3411,7 @@ class MdxParser:
             return m.group(0) if lit is None else lit
 
         out = sub_code(
-            r"(" + _id_pat + r")\s*\.\s*"
+            r"(" + _ID_CHAIN + r")\s*\.\s*"
             r"(?:(Dimension|Hierarchy|Level)\s*\.\s*)?"
             r"(Name|UniqueName|Caption|Ordinal)\b",
             repl_accessor,
@@ -3431,7 +3461,7 @@ class MdxParser:
             return _sql_literal(str(v))
 
         out = sub_code(
-            rf"({_id_pat})\s*\.\s*Properties\s*\(\s*({_LITERAL})\s*\)",
+            rf"({_ID_CHAIN})\s*\.\s*Properties\s*\(\s*({_LITERAL})\s*\)",
             repl_member_property,
             out,
             re.I,
@@ -3456,39 +3486,33 @@ class MdxParser:
             # distinct-count); the expression form is Sum(set, expr), the
             # additive combine: the ``sum`` set statistic below
             # (plan._attach_stat_scalar).
-            sets_part = args[0] if args else ""
-            sets = re.findall(r"\{(.*?)\}", sets_part)
-            if not sets:
+            try:
+                p = self._over(args[0]) if args else None
+            except MdxError:
+                p = None
+            set_members = p._crossjoined_members() if p is not None else None
+            if set_members is None:
                 return None  # not the set form — leave untouched
             if len(args) > 2:
                 raise MdxError("Aggregate takes (set[, expression])")
             expr_part = args[1] if len(args) == 2 else None
-            n_between = re.sub(r"\{.*?\}", "", sets_part)
-            if n_between.count("*") != len(sets) - 1 or re.sub(
-                r"[\s*]", "", n_between
-            ):
-                raise MdxError(
-                    "Aggregate sets combine only with * (crossjoin) in "
-                    "this subset"
-                )
             measure_name = None
             members: list[str] = []
-            for s in sets:
-                for p in re.findall(_id_pat, s):
-                    segs = parse_identifier(p)
-                    if segs[0].lower() == "measures":
-                        if measure_name is not None:
-                            raise MdxError(
-                                "Aggregate set has more than one Measures "
-                                "component"
-                            )
-                        if len(segs) != 2:
-                            raise MdxError(
-                                f"bad measure reference in Aggregate: {p}"
-                            )
-                        measure_name = segs[1]
-                    else:
-                        members.append(p)
+            for mstr in set_members:
+                segs = parse_identifier(mstr)
+                if segs[0].lower() == "measures":
+                    if measure_name is not None:
+                        raise MdxError(
+                            "Aggregate set has more than one Measures "
+                            "component"
+                        )
+                    if len(segs) != 2:
+                        raise MdxError(
+                            f"bad measure reference in Aggregate: {mstr}"
+                        )
+                    measure_name = segs[1]
+                else:
+                    members.append(mstr)
             if not members:
                 raise MdxError("Aggregate needs at least one member in its set")
             if expr_part is not None:
@@ -3515,66 +3539,19 @@ class MdxParser:
         # the Aggregate expression form above is its ``sum``.
         # Reference WITH MEMBER texts (mondrian_test.rb:608-778) parse
         # verbatim, including Rank(<dim>.CurrentMember, <set>) arguments.
-        def _parse_set_arg(s: str):
-            """→ member identifier strings, or None when not set-shaped."""
-            s = s.strip()
-            if s.startswith("{") and s.endswith("}"):
-                inner = s[1:-1]
-                ids = re.findall(_id_pat, inner)
-                if not ids or re.sub(
-                    r"[\s,]", "", re.sub(_id_pat, "", inner)
-                ):
-                    return None
-                return tuple(ids)
-            if re.fullmatch(
-                rf"{_id_pat}\s*\.\s*(Members|AllMembers|Children)",
-                s,
-                re.IGNORECASE,
-            ):
-                return (re.sub(r"\s", "", s),)
-            # a WITH SET name splices its member list (plain-list sets
-            # only — a computed set would need deferred evaluation)
-            if re.fullmatch(_id_pat, s):
-                segs = parse_identifier(s)
-                ns = getattr(self, "named_sets", {}).get(segs[0].lower())
-                if (
-                    len(segs) == 1
-                    and ns is not None
-                    and not ns.ops
-                    and not ns.set_ops
-                ):
-                    return tuple(ns.base)
-            return None
-
-        def _named_set_filter_arg(s: str):
-            """A NAMED SET defined as FILTER(...) used as a statistic's
-            set argument: splice its base members and fold its filter
-            conditions into the sub-aggregate row filter (the same
-            lowering as an inline Filter(set, cond) argument).  Returns
-            (member_strs, where_sql) or None when not that shape."""
-            s = s.strip()
-            if re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", s):
-                segs = [s]  # bare named-set reference
-            elif re.fullmatch(_id_pat, s):
-                try:
-                    segs = parse_identifier(s)
-                except Exception:
-                    return None
-            else:
-                return None
-            if len(segs) != 1:
-                return None
-            ns = getattr(self, "named_sets", {}).get(segs[0].lower())
-            if (
-                ns is None
-                or not ns.base
-                or ns.set_ops
-                or not ns.ops
-                or not all(op[0] == "filter" for op in ns.ops)
+        def _stat_members(text: str):
+            """A statistic's set ``text`` read by _formula_set →
+            (members, where), or None when it is not a set.  A named set
+            defined by FILTER splices its members, and its conditions fold
+            into the sub-aggregate row filter like an inline
+            Filter(set, cond) argument's."""
+            sb = self._formula_set(text)
+            if sb is None or sb.set_ops or any(
+                op[0] != "filter" for op in sb.ops
             ):
                 return None
             conds = []
-            for op in ns.ops:
+            for op in sb.ops:
                 if len(op) > 2 and _alias_self_ref(op[1], op[2]):
                     raise MdxError(
                         "set self-references (ALIAS.Current) are not "
@@ -3582,9 +3559,15 @@ class MdxParser:
                         "argument"
                     )
                 conds.append(f"({op[1]})")
-            return tuple(ns.base), " AND ".join(conds)
+            return list(sb.base), " AND ".join(conds) or None
 
-        def _translate_stat_expr(raw: str, set_canon: str) -> str:
+        def _set_key(read) -> tuple:
+            """What two reads of one set share: members up to case, and
+            the named-set conditions."""
+            members, where = read
+            return tuple(m.lower() for m in members), where
+
+        def _translate_stat_expr(raw: str, set_key: tuple) -> str:
             # Rank(<dim>.CurrentMember, <this set>) → __setrank, the
             # member's 1-based hierarchy-order position (data-independent;
             # the planner joins it from the member list)
@@ -3594,7 +3577,8 @@ class MdxParser:
                     len(ps) != 2
                     or cur is None
                     or cur[1] != len(ps[0])
-                    or _canon(ps[1]) != set_canon
+                    or (read := _stat_members(ps[1])) is None
+                    or _set_key(read) != set_key
                 ):
                     raise MdxError(
                         "Rank() inside a set statistic is supported only as "
@@ -3608,8 +3592,11 @@ class MdxParser:
         def _set_member_count(member_strs) -> int:
             total = 0
             for mstr in member_strs:
-                if re.search(r"(?i)\.(members|allmembers|children)$", mstr):
+                try:
                     ref = resolve(self.cube, mstr)
+                except (KeyError, MemberParseError) as e:
+                    raise MdxError(f"Count: {mstr}: {e}") from None
+                if getattr(ref, "kind", None) in ("children", "level_members"):
                     total += self.engine.level_members(
                         ref.dimension.name, ref.depth, path=ref.path
                     ).count()
@@ -3618,8 +3605,7 @@ class MdxParser:
             return total
 
         def _setstat_handler(mdx_name: str):
-            fn = _SETSTAT_FN[mdx_name]
-            nan_wrap = mdx_name in _SETSTAT_NAN
+            stat = _SETSTAT[mdx_name]
 
             def repl(parts: list[str]):
                 arg = None
@@ -3635,6 +3621,7 @@ class MdxParser:
                             "this subset"
                         ) from None
                     parts = parts[1:]
+                set_src = parts[0] if parts else ""
                 # one-arg EXISTING form (jar!mondrian/olap/fun/
                 # ExistingFunDef; SURVEY §2.3 "filter set to members having
                 # data in current context"): the set evaluates against the
@@ -3642,53 +3629,46 @@ class MdxParser:
                 # grid's own grain for the set's dimension instead of
                 # overriding it, so each cell sees only the members that
                 # share fact rows with its coordinates + the slicer
-                set_src = parts[0] if parts else ""
-                m_ex = re.match(r"(?is)^\s*existing\b(.*)$", set_src)
-                existing = bool(m_ex)
-                if m_ex:
-                    set_src = m_ex.group(1)
+                try:
+                    head = self._over(set_src)
+                except MdxError:
+                    head = None
+                existing = head is not None and head.at_word("existing")
+                if existing:
+                    head.next()
+                    set_src = set_src[head.peek().pos :] if head.peek() else ""
                 # Filter(set, cond) as the set argument (FilterFunDef
                 # inside an evaluator call, e.g. Count(Filter(...)) —
                 # the reference evaluates the filter per member in the
                 # current context): the condition lowers into the stat
                 # sub-aggregate as a row filter before the collapse
-                where_cond = None
                 fparts = _call_args(set_src, "filter")
-                if (
-                    fparts is not None
-                    and len(fparts) == 2
-                    and _parse_set_arg(fparts[0]) is not None
-                ):
-                    set_src = fparts[0]
-                    where_cond = _translate_stat_expr(
-                        fparts[1], _canon(fparts[0])
-                    )
-                member_strs = _parse_set_arg(set_src)
-                if member_strs is None:
-                    # a FILTER-defined named set splices like an inline
-                    # Filter(set, cond) argument
-                    spliced = _named_set_filter_arg(set_src)
-                    if spliced is not None:
-                        member_strs, ns_where = spliced
-                        where_cond = (
-                            ns_where
-                            if where_cond is None
-                            else f"({where_cond}) AND ({ns_where})"
-                        )
-                if member_strs is None:
+                if fparts is not None and len(fparts) == 2:
+                    read = _stat_members(fparts[0])
+                else:
+                    fparts, read = None, _stat_members(set_src)
+                if read is None:
                     if existing:
                         raise MdxError(
                             "EXISTING takes a set ({…} or <level>.Members)"
                         )
-                    if mdx_name in _SETSTAT_STRICT:
+                    if stat.strict:
                         raise MdxError(
                             f"{mdx_name}: first argument must be a set "
                             "({…} or <level>.Members)"
                         )
                     return None  # plausible plain SQL — leave untouched
-                set_canon = _canon(set_src)
+                member_strs, where_cond = read
+                set_key = _set_key(read)
+                if fparts is not None:
+                    cond = _translate_stat_expr(fparts[1], set_key)
+                    where_cond = (
+                        cond
+                        if where_cond is None
+                        else f"({cond}) AND ({where_cond})"
+                    )
                 args = parts[1:]
-                if mdx_name == "count":
+                if stat.family == "count":
                     flag = args[0].strip().lower() if args else "includeempty"
                     if flag == "excludeempty":
                         # non-empty cells of the cube's DEFAULT measure
@@ -3702,7 +3682,7 @@ class MdxParser:
                         )
                     if args and flag != "includeempty":
                         # Count(set, expr): count of non-NULL expr values
-                        e = _translate_stat_expr(args[0], set_canon)
+                        e = _translate_stat_expr(args[0], set_key)
                         return _register_stat(
                             "count", (e,), member_strs, None, False,
                             existing, where_cond,
@@ -3720,7 +3700,7 @@ class MdxParser:
                     # members exist whether or not fact rows do, so the
                     # count folds to a literal at translation time
                     return str(_set_member_count(member_strs))
-                if mdx_name in _SETSTAT_UNARY:
+                if stat.family == "expr":
                     if mdx_name == "percentile":
                         if len(args) != 2:
                             raise MdxError(
@@ -3741,30 +3721,30 @@ class MdxParser:
                             "argument in this subset — Aggregate(set) "
                             "covers the implicit-current-measure form"
                         )
-                    e = _translate_stat_expr(args[0], set_canon)
+                    e = _translate_stat_expr(args[0], set_key)
                     return _register_stat(
-                        fn, (e,), member_strs, arg, nan_wrap, existing,
+                        stat.fn, (e,), member_strs, arg, stat.nan, existing,
                         where_cond,
                     )
                 # two-expression family (set, y[, x]); x defaults to the
                 # member's set position (the LinReg* single-expression form)
                 if len(args) not in (1, 2):
                     raise MdxError(f"{mdx_name} takes (set, y[, x])")
-                y = _translate_stat_expr(args[0], set_canon)
+                y = _translate_stat_expr(args[0], set_key)
                 x = (
-                    _translate_stat_expr(args[1], set_canon)
+                    _translate_stat_expr(args[1], set_key)
                     if len(args) == 2
                     else "__setrank"
                 )
                 return _register_stat(
-                    fn, (y, x), member_strs, arg, nan_wrap, existing,
+                    stat.fn, (y, x), member_strs, arg, stat.nan, existing,
                     where_cond,
                 )
 
             return repl
 
         out = rewrite_calls(
-            out, {name: _setstat_handler(name) for name in _SETSTAT_FN}
+            out, {name: _setstat_handler(name) for name in _SETSTAT}
         )
 
         # ---- GENERATE in VALUE expressions -----------------------------
@@ -3796,7 +3776,7 @@ class MdxParser:
             return dim, depth
 
         def _translate_generate_expr(
-            raw: str, dim, depth: int, set_canon: str
+            raw: str, dim, depth: int, set_key: tuple
         ) -> str:
             """The string expression, per-member: inline WITH-member
             formulas (their CurrentMember text must bind to the ITERATED
@@ -3837,18 +3817,21 @@ class MdxParser:
                     "MEMBER expression — wrap the call in SetToStr for "
                     "the set-returning form"
                 )
-            return _translate_stat_expr(raw, set_canon)
+            return _translate_stat_expr(raw, set_key)
+
+        def _generate_members(text: str, what: str) -> list[str]:
+            sb = self._formula_set(text)
+            if sb is None:
+                raise MdxError(
+                    f"{what}: the first argument must be a set ({{…}} or "
+                    "<level>.Members)"
+                )
+            return self._plain_members(sb, what)
 
         def repl_generate_string(parts: list[str]):
             if len(parts) not in (2, 3):
                 return None
-            member_strs = _parse_set_arg(parts[0])
-            if member_strs is None:
-                raise MdxError(
-                    "Generate in a value expression takes (set, string "
-                    "expr[, separator]) — the first argument must be a "
-                    "set ({…} or <level>.Members)"
-                )
+            member_strs = _generate_members(parts[0], "Generate")
             sep = ""
             if len(parts) == 3:
                 if not re.fullmatch(_LITERAL, parts[2]):
@@ -3860,7 +3843,7 @@ class MdxParser:
                 member_strs, "Generate(string form)"
             )
             expr_sql = _translate_generate_expr(
-                parts[1], dim, depth, _canon(parts[0])
+                parts[1], dim, depth, _set_key((member_strs, None))
             )
             # member-metadata expressions (no measure/calc references)
             # evaluate over the MEMBER LIST, not a fact sub-aggregate:
@@ -3970,12 +3953,9 @@ class MdxParser:
                     "SetToStr(Generate(...)) takes (set, member expr"
                     "[, ALL])"
                 )
-            member_strs = _parse_set_arg(parts[0])
-            if member_strs is None:
-                raise MdxError(
-                    "SetToStr(Generate(...)): the first argument must be "
-                    "a set ({…} or <level>.Members)"
-                )
+            member_strs = _generate_members(
+                parts[0], "SetToStr(Generate(...))"
+            )
             dim, depth = _set_iteration_scope(
                 member_strs, "SetToStr(Generate(...))"
             )
@@ -3992,10 +3972,8 @@ class MdxParser:
                     )
                 # identity: the generated set IS the set, in set order
                 for mstr in member_strs:
-                    if re.search(
-                        r"(?i)\.(members|allmembers|children)$", mstr
-                    ):
-                        ref = resolve(self.cube, mstr)
+                    ref = resolve(self.cube, mstr)
+                    if ref.kind in ("children", "level_members"):
                         outs = [
                             lv.out for lv in ref.dimension.levels[
                                 : ref.depth + 1
@@ -4011,11 +3989,10 @@ class MdxParser:
                                 )
                             )
                     else:
-                        ref = resolve(self.cube, mstr)
                         unames.append(
                             format_name([dim.name, *ref.path])
                         )
-            elif re.fullmatch(_id_pat, mexpr):
+            elif re.fullmatch(_ID_CHAIN, mexpr):
                 # a FIXED member: Generate yields it once per set member
                 ref = resolve(self.cube, mexpr)
                 fixed = format_name([ref.dimension.name, *ref.path])
@@ -4051,7 +4028,7 @@ class MdxParser:
             # (mondrian_test.rb:361-380).  Lowered to a synthetic column;
             # the planner attaches it via a member-scoped sub-aggregate
             # broadcast-joined onto the grid (plan._attach_tuple_scalar).
-            parts = re.findall(_id_pat, m.group(0))
+            parts = re.findall(_ID_CHAIN, m.group(0))
             measure_name = None
             members: list[str] = []
             for p in parts:
@@ -4084,7 +4061,7 @@ class MdxParser:
         # tuples ``([Gender].[F])`` lower too (implicit current measure);
         # ``([Measures].[X])`` falls through repl_tuple unchanged.
         out = sub_code(
-            r"(?<![\w\]])\(\s*" + _id_pat + r"(?:\s*,\s*" + _id_pat + r")*\s*\)",
+            rf"(?<![\w\]])\(\s*{_ID_CHAIN}(?:\s*,\s*{_ID_CHAIN})*\s*\)",
             repl_tuple,
             out,
         )
@@ -4255,12 +4232,26 @@ class _SetBuild:
     #: named-set name when this build came from one — enables
     #: ``Name.Current`` self-references in enclosing FILTERs
     alias: str | None = None
+    #: parse_set read one member (a bare path, Parent, FirstChild…,
+    #: Ancestor, Cousin): a set of one on an axis, "not a set" in a formula
+    member: bool = False
 
     def __post_init__(self):
         if self.ops is None:
             self.ops = []
         if self.set_ops is None:
             self.set_ops = []
+
+
+def _on_current(members: list[str]) -> bool:
+    """True when a member string of ``members`` navigates from a
+    CurrentMember (a bare ``CurrentMember`` segment): its members change
+    with the evaluation context."""
+    return any(
+        not quoted and seg.lower() == "currentmember"
+        for m in members
+        for seg, quoted in parse_identifier_tagged(m)
+    )
 
 
 def _strip_segments(member_with_suffix: str, n: int) -> list[str]:
@@ -4288,7 +4279,9 @@ def _segment(t: Tok) -> str:
 
 
 def _unquote(s: str) -> str:
-    return s[1:-1].replace("''", "'")
+    """The body of a string literal: a single-quoted one doubles its
+    quote to escape it, a double-quoted one has no escape."""
+    return s[1:-1].replace("''", "'") if s[0] == "'" else s[1:-1]
 
 
 def _sql_literal(v) -> str:

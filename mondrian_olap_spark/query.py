@@ -40,10 +40,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .mdx import (
+    _ID_CHAIN,
+    _LITERAL,
     _OPAQUE,
-    _SEG,
     MdxError,
+    _alias_self_ref,
     _call_args,
+    _unquote,
     current_member,
     current_members,
     hierarchy_dimension,
@@ -89,7 +92,7 @@ _TIME_INTEL_RE = re.compile(
 )
 #: ``<hierarchy>.PrevMember|NextMember|Lag(n)|Lead(n)``
 _NAV_RE = re.compile(
-    rf"\s*({_SEG}(?:\s*\.\s*{_SEG})*)\s*\.\s*"
+    rf"\s*({_ID_CHAIN})\s*\.\s*"
     r"(prevmember|nextmember|lag|lead)(?:\s*\(\s*(-?\d+)\s*\))?\s*",
     re.I,
 )
@@ -1785,7 +1788,9 @@ class Query:
 
         from pyspark.sql import functions as F
 
-        prop_re = _re.compile(r"(?i)\.\s*Properties\s*\(\s*'([^']*)'\s*\)")
+        prop_re = _re.compile(
+            rf"(?i)\.\s*Properties\s*\(\s*({_LITERAL})\s*\)"
+        )
         drops: list[str] = []
         joined_dims: set[str] = set()
 
@@ -1839,7 +1844,7 @@ class Query:
         for start, dim, end in current_members(self.cube, cond):
             p = prop_re.match(cond, end)
             if p is not None:
-                out.append(cond[last:start] + repl(dim, p.group(1)))
+                out.append(cond[last:start] + repl(dim, _unquote(p.group(1))))
                 last = p.end()
         out.append(cond[last:])
         return df, "".join(out), [c for c in drops if c in df.columns]
@@ -2331,18 +2336,13 @@ class Query:
                 continue
             if kind == "filter":
                 alias = mod[2] if len(mod) > 2 else None
-                if contextual and alias is not None:
-                    import re as _re
-
-                    if _re.search(
-                        rf"(?i)\[?{_re.escape(alias)}\]?\s*\.\s*CURRENT", mod[1]
-                    ):
-                        raise QueryError(
-                            "set self-references (ALIAS.Current) are not "
-                            "supported when dimension members sit on other "
-                            "axes — the window would rank cells, not the "
-                            "set's members"
-                        )
+                if contextual and _alias_self_ref(mod[1], alias):
+                    raise QueryError(
+                        "set self-references (ALIAS.Current) are not "
+                        "supported when dimension members sit on other "
+                        "axes — the window would rank cells, not the "
+                        "set's members"
+                    )
                 df, cond0, prop_drops = self._attach_member_properties(
                     df, mod[1]
                 )

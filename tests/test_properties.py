@@ -67,6 +67,38 @@ def test_call_scanner_keeps_bracketed_names_whole(name):
     assert seen == [[ref, "2"]]
 
 
+#: member names from the characters the set grammar reads outside a
+#: ``[...]`` segment
+_set_names = st.lists(
+    st.lists(
+        st.sampled_from(["{", "}", "*", ",", "(", ")", "'", "]", "a", " "]),
+        min_size=1,
+        max_size=8,
+    ).map("".join),
+    min_size=1,
+    max_size=4,
+)
+
+
+@given(_set_names)
+@settings(max_examples=200, deadline=None)
+def test_formula_sets_read_like_axis_sets(engine, names):
+    """A ``{…}`` set written inside a formula — as a set statistic's or
+    Aggregate's argument — reads the members :meth:`MdxParser.parse_set`
+    reads on an axis, whatever braces, commas, quotes or brackets the
+    member names hold."""
+    members = [f"[Customer].{quote_segment(n)}" for n in names]
+    text = "{" + ", ".join(members) + "}"
+    assert MdxParser(engine, text).parse_set().base == members
+    parser = MdxParser(engine, "SELECT FROM [Sales]")
+    assert parser._formula_set(text).base == members
+    parser.translate_expression_text(f"Median({text}, [Measures].[Sum Qty])")
+    parser.translate_expression_text(f"Aggregate({text})")
+    (stat,) = parser.q._stat_scalars
+    (tup,) = parser.q._tuple_scalars
+    assert list(stat[3]) == list(tup[2]) == members
+
+
 def test_split_args_escaped_bracket():
     assert split_args("[Customer].[a]],b], 2") == ["[Customer].[a]],b]", "2"]
 

@@ -1282,17 +1282,27 @@ def test_filter_by_member_property(engine, duck):
     got = {row["part_name"] for row in rows}
     # members with fact data and size >= 40 (grid is non-empty by default)
     assert got and got <= expect
-    # MDX surface drives the same path
-    mdx = execute_mdx(
-        engine,
-        """
-        SELECT [Measures].[Sum Qty] ON COLUMNS,
-               FILTER([Part].[Part].Members,
-                      [Part].CurrentMember.Properties('part_size') >= 40)
-               ON ROWS FROM [Sales]
-        """,
-    )
-    assert {row["part_name"] for row in mdx.df.collect()} == got
+    # either quote style names the property, and the MDX surface drives
+    # the same path
+    for prop in ("'part_size'", '"part_size"'):
+        cond = f"[Part].CurrentMember.Properties({prop}) >= 40"
+        built = (
+            Query(engine)
+            .columns("[Measures].[Sum Qty]")
+            .rows("[Part].[Part].Members")
+            .filter(cond)
+            .execute()
+        )
+        assert {row["part_name"] for row in built.df.collect()} == got
+        mdx = execute_mdx(
+            engine,
+            f"""
+            SELECT [Measures].[Sum Qty] ON COLUMNS,
+                   FILTER([Part].[Part].Members, {cond}) ON ROWS
+            FROM [Sales]
+            """,
+        )
+        assert {row["part_name"] for row in mdx.df.collect()} == got
     with pytest.raises(QueryError, match="declares no property"):
         (Query(engine).columns("[Measures].[Sum Qty]")
          .rows("[Part].[Part].Members")

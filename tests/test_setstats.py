@@ -546,3 +546,168 @@ def test_aggregate_expr_shares_the_sum_statistic(engine):
     ]
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert plan.count("Join LeftOuter") == 1, plan
+
+
+#: member names holding every character the set grammar gives a meaning
+#: to outside a ``[...]`` segment: braces, ``*``, ``,``, parentheses, a
+#: quote and a ``]`` (written ``]]``)
+_ODD_NAMES = ["A}B", "{C*D", "E,F(G)", "H'I", "J]K"]
+
+
+def test_odd_member_names_read_alike_everywhere(spark):
+    """One set of odd member names reads the same members on an axis, in
+    a measure Aggregate (both the implicit-measure and the ``*``
+    crossjoin form), in a dimension Aggregate, in Sum and in Median —
+    every reader is the axis grammar, so a ``}`` or a ``,`` inside a
+    name never ends the set — and the cells equal DuckDB over the same
+    rows."""
+    import duckdb
+
+    from mondrian_olap_spark.model import Cube, Dimension, Level, Measure
+    from mondrian_olap_spark.star import CubeEngine
+
+    rows = [
+        (name, float(v))
+        for i, name in enumerate(_ODD_NAMES + ["plain"])
+        for v in (i + 1, 10 * (i + 1) + 3)
+    ]
+    fact = spark.createDataFrame(rows, "nm string, v double")
+    cube = Cube(
+        name="Q",
+        fact="fact",
+        dimensions=(
+            Dimension(name="Odd", levels=(Level("Name", "nm", output="nm"),)),
+        ),
+        measures=(Measure("V", "v", "sum", output="v_sum"),),
+    )
+    eng = CubeEngine(cube, {"fact": fact})
+    s = "{" + ", ".join(
+        "[Odd].[" + n.replace("]", "]]") + "]" for n in _ODD_NAMES
+    ) + "}"
+    quoted = s.replace("'", "''")  # inside a '...' formula string
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (nm VARCHAR, v DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    per_member = dict(
+        con.execute(
+            "SELECT nm, sum(v) FROM t WHERE list_contains(?, nm) GROUP BY nm",
+            [_ODD_NAMES],
+        ).fetchall()
+    )
+    total, median = con.execute(
+        "SELECT sum(s), median(s) FROM (SELECT sum(v) AS s FROM t "
+        "WHERE list_contains(?, nm) GROUP BY nm)",
+        [_ODD_NAMES],
+    ).fetchone()
+    con.close()
+
+    axis = execute_mdx(
+        eng, f"SELECT [Measures].[V] ON COLUMNS, {s} ON ROWS FROM [Q]"
+    ).df.collect()
+    assert {r["nm"]: r["v_sum"] for r in axis} == per_member
+
+    row = execute_mdx(
+        eng,
+        f"""
+        WITH MEMBER [Measures].[Agg] AS 'Aggregate({quoted})'
+             MEMBER [Measures].[AggX] AS
+               'Aggregate({quoted} * {{[Measures].[V]}})'
+             MEMBER [Measures].[Tot] AS 'Sum({quoted}, [Measures].[V])'
+             MEMBER [Measures].[Med] AS 'Median({quoted}, [Measures].[V])'
+        SELECT {{[Measures].[Agg], [Measures].[AggX], [Measures].[Tot],
+                 [Measures].[Med]}} ON COLUMNS FROM [Q]
+        """,
+    ).df.collect()[0]
+    assert row["agg"] == row["agg_x"] == row["tot"] == total
+    assert row["med"] == median
+
+    dim = execute_mdx(
+        eng,
+        f"""
+        WITH MEMBER [Odd].[Odd ones] AS 'Aggregate({quoted})'
+        SELECT [Measures].[V] ON COLUMNS, {{[Odd].[Odd ones]}} ON ROWS
+        FROM [Q]
+        """,
+    ).df.collect()
+    assert [(r["nm"], r["v_sum"]) for r in dim] == [("Odd ones", total)]
+
+
+def test_descendants_set_equals_its_braced_spelling(engine, duck):
+    """A set function that reduces to a member list — here Descendants —
+    is a statistic's set like the braced list of the same members."""
+    nations = [
+        n
+        for (n,) in duck.execute(
+            "SELECT n_name FROM nation JOIN region ON n_regionkey = "
+            "r_regionkey WHERE r_name = 'ASIA' ORDER BY n_name"
+        ).fetchall()
+    ]
+    braced = "{" + ", ".join(
+        f"[Customer].[ASIA].[{n}]" for n in nations
+    ) + "}"
+    row = execute_mdx(
+        engine,
+        f"""
+        WITH MEMBER [Measures].[D] AS
+          'Median(Descendants([Customer].[ASIA], [Customer].[Nation]),
+                  [Measures].[Sum Qty])'
+             MEMBER [Measures].[B] AS 'Median({braced}, [Measures].[Sum Qty])'
+        SELECT {{[Measures].[D], [Measures].[B]}} ON COLUMNS FROM [Sales]
+        """,
+    ).df.collect()[0]
+    assert row["d"] is not None and row["d"] == row["b"]
+
+
+@pytest.mark.parametrize(
+    "stat",
+    [
+        "Median([Customer].CurrentMember.Children, [Measures].[Sum Qty])",
+        "Median([Customer].CurrentMember.Siblings, [Measures].[Sum Qty])",
+        "Median(Descendants([Customer].CurrentMember, [Customer].[Nation]), "
+        "[Measures].[Sum Qty])",
+    ],
+)
+def test_current_member_set_is_not_a_fixed_set(engine, stat):
+    """A set that moves with the current member cannot be read once, at
+    parse time: a strict statistic says it needs a set, a generic one
+    passes the call through as SQL, never folding a count of it."""
+    with pytest.raises(MdxError, match="must be a set"):
+        execute_mdx(
+            engine,
+            f"""
+            WITH MEMBER [Measures].[S] AS '{stat}'
+            SELECT {{[Measures].[S]}} ON COLUMNS,
+                   [Customer].[Region].Members ON ROWS FROM [Sales]
+            """,
+        )
+    parser = MdxParser(engine, "SELECT FROM [Sales]")
+    count = "Count(Descendants([Time].CurrentMember, [Time].[Month]))"
+    assert parser.translate_expression_text(count) != "0"
+    assert not parser.q._stat_scalars
+
+
+def test_aggregate_of_a_current_member_set_raises(engine):
+    for body in (
+        "Aggregate({[Customer].CurrentMember})",
+        "Aggregate([Customer].CurrentMember.Children, [Measures].[Sum Qty])",
+    ):
+        with pytest.raises(MdxError, match="depends on the current member"):
+            execute_mdx(
+                engine,
+                f"""
+                WITH MEMBER [Measures].[S] AS '{body}'
+                SELECT {{[Measures].[S]}} ON COLUMNS FROM [Sales]
+                """,
+            )
+
+
+def test_count_of_an_unknown_member_names_it(engine):
+    with pytest.raises(MdxError, match=r"Count: \[Bogus\]\.\[X\]"):
+        execute_mdx(
+            engine,
+            """
+            WITH MEMBER [Measures].[S] AS 'Count({[Bogus].[X]})'
+            SELECT {[Measures].[S]} ON COLUMNS FROM [Sales]
+            """,
+        )
