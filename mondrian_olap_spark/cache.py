@@ -18,11 +18,14 @@ once into a ``LocalRelation`` (``Dataset.ofRows`` over
 ``LocalRelation.fromExternalRows``, fresh attributes) and the executor
 copy is unpersisted.  A read of a resident entry then plans over a few
 local rows — calculated members, casts and filters fold in the optimizer,
-and no Exchange or broadcast is left — as Mondrian answers a warm repeat
-from the cell arrays in its own memory.  The bytes held on the driver stay
-within ``spark.sql.autoBroadcastJoinThreshold``, the size Spark itself
-collects to the driver for a broadcast (``-1`` keeps every entry on the
-executors).  Every flush and eviction drops the driver copy with its entry.
+and no Exchange or broadcast is left.  When that plan is the axis sort
+over those rows, ``Result.df`` sorts them in the JVM and the read runs no
+Spark job, as Mondrian answers a warm repeat from the cell arrays in its
+own memory; a read with a TopCount window still runs one.  The bytes held
+on the driver stay within ``spark.sql.autoBroadcastJoinThreshold``, the
+size Spark itself collects to the driver for a broadcast (``-1`` keeps
+every entry on the executors).  Every flush and eviction drops the driver
+copy with its entry.
 
 Region flush reproduces ``cube.flush_region_cache_with_segments``
 (``lib/mondrian/olap/cube.rb:519-547``; behavior spec

@@ -1214,6 +1214,16 @@ class MdxParser:
         t = self.peek()
         return t is not None and t.kind == "op" and t.text == op
 
+    def number_arg(self, fname: str, integer: bool = True) -> int | float:
+        """A set function's literal count (TopCount's, Head's, Subset's
+        start): one unsigned number token, without a fraction where
+        ``integer``.  Anything else is an MdxError naming the token."""
+        t = self.next()
+        if t.kind == "number" and not (integer and "." in t.text):
+            return int(t.text) if integer else float(t.text)
+        kind = "integer" if integer else "number"
+        raise self._syntax_error(t, f"a non-negative {kind} in {fname.upper()}")
+
     # -- grammar -------------------------------------------------------
     def parse_statement(self):
         """Top-level: SELECT query → Query, or DRILLTHROUGH statement →
@@ -2763,7 +2773,7 @@ class MdxParser:
             return inner
         if fname in ("topcount", "bottomcount", "toppercent", "bottompercent", "topsum", "bottomsum"):
             self.expect_op(",")
-            n = float(self.next().text)
+            n = self.number_arg(fname, integer=False)
             expr = None
             if self.at_op(","):
                 self.next()
@@ -2776,17 +2786,17 @@ class MdxParser:
             return inner
         if fname in ("head", "tail"):
             self.expect_op(",")
-            n = int(self.next().text)
+            n = self.number_arg(fname)
             self.expect_op(")")
             inner.ops.append(("slice", 0, n, fname == "tail"))
             return inner
         if fname == "subset":
             self.expect_op(",")
-            start = int(self.next().text)
+            start = self.number_arg(fname)
             count = 2**31 - 1
             if self.at_op(","):
                 self.next()
-                count = int(self.next().text)
+                count = self.number_arg(fname)
             self.expect_op(")")
             inner.ops.append(("slice", start, count, False))
             return inner
@@ -2823,7 +2833,7 @@ class MdxParser:
                 if self.at_op(")"):
                     break
                 if n is None and fname != "drilldownlevel":
-                    n = int(self.next().text)
+                    n = self.number_arg(fname)
                     continue
                 # a [Dim].[Level] reference is the optional level argument —
                 # implicit here (the drill always goes one level below the

@@ -12,9 +12,10 @@ definition; anything large should stay a DataFrame).
 
 from __future__ import annotations
 
+import functools
 import threading
 import time
-
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame
 
@@ -28,16 +29,64 @@ def _node(plan) -> str:
     return plan.getClass().getSimpleName()
 
 
-def _fits_one_task(df: DataFrame) -> bool:
-    """Whether Catalyst sizes ``df``'s optimized plan at no more than one
-    advisory partition (``spark.sql.adaptive.advisoryPartitionSizeInBytes``)."""
-    session = df.sparkSession._jsparkSession
-    sql_conf = df.sparkSession._jvm.org.apache.spark.sql.internal.SQLConf
-    advisory = session.sessionState().conf().getConf(
-        sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+@functools.lru_cache(maxsize=4)
+def _catalyst(jvm) -> SimpleNamespace:
+    """The JVM classes ``Result.df`` plans with, resolved once per py4j
+    gateway: each ``jvm.org.apache…`` walk costs one round trip per name."""
+    sql = jvm.org.apache.spark.sql
+    return SimpleNamespace(
+        ordering=sql.catalyst.expressions.InterpretedOrdering,
+        local_relation=sql.catalyst.plans.logical.LocalRelation,
+        dataset=sql.classic.Dataset,
+        sql_conf=sql.internal.SQLConf,
     )
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return size <= advisory
+
+
+def _sorted_on_driver(ordered: DataFrame, qe, plan) -> DataFrame | None:
+    """``ordered`` re-planned over its rows already sorted, when its
+    optimized ``plan`` is a global ``Sort`` directly over driver-held rows:
+    a ``LocalRelation``, or a ``Union`` of them (a drill-down over two
+    cached grids), whose rows are concatenated in order.  Else None.
+
+    The rows are sorted in the JVM by ``InterpretedOrdering`` over the
+    Sort's own ``SortOrder``s, the ordering Catalyst evaluates whenever it
+    does not generate code, so NULL, NaN, decimal and string order is the
+    distributed sort's.  Collecting the new ``LocalRelation`` runs
+    ``LocalTableScanExec.executeCollect``, which starts no Spark job.  Its
+    attributes are the analyzed plan's, so the schema is ``ordered``'s."""
+    if plan.nodeName() != "Sort" or not getattr(plan, "global")():
+        return None
+    child = plan.child()
+    kind = child.nodeName()
+    if kind == "Union":
+        children = child.children()
+        relations = [children.apply(i) for i in range(children.size())]
+        if any(r.nodeName() != "LocalRelation" for r in relations):
+            return None
+    elif kind == "LocalRelation":
+        relations = [child]
+    else:
+        return None
+    session = ordered.sparkSession
+    jvm = _catalyst(session._jvm)
+    data = relations[0].data()
+    for r in relations[1:]:
+        data = data.concat(r.data())
+    rows = data.sorted(jvm.ordering(plan.order(), child.output()))
+    relation = jvm.local_relation(
+        qe.analyzed().output(), rows, child.isStreaming(), relations[0].stream()
+    )
+    return DataFrame(jvm.dataset.ofRows(session._jsparkSession, relation), session)
+
+
+def _fits_one_task(df: DataFrame, plan) -> bool:
+    """Whether Catalyst sizes ``df``'s optimized ``plan`` at no more than
+    one advisory partition
+    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``)."""
+    advisory = df.sparkSession._jsparkSession.sessionState().conf().getConf(
+        _catalyst(df.sparkSession._jvm).sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    return plan.stats().sizeInBytes() <= advisory
 
 
 def _sorts_through_shuffle(df: DataFrame) -> bool:
@@ -93,34 +142,62 @@ class Result:
         self._timings: dict[str, list[float]] = {}
 
     @property
-    def df(self) -> DataFrame:
-        """The tidy cell DataFrame, in axis order: the query's sort spec, or
-        by default hierarchize order (parents before children ≡ level-path
-        sort — jar!...HierarchizeFunDef).
+    def order_spec(self) -> list:
+        """The columns ``df`` is ordered by: the query's sort spec, or by
+        default hierarchize order (parents before children ≡ level-path
+        sort — jar!...HierarchizeFunDef)."""
+        return self._sort_spec or [c for ax in self.axis_columns for c in ax]
 
-        A global ``orderBy`` plans as ``Exchange rangepartitioning``, which
-        costs three Spark jobs (range sampling, shuffle map, result) even
-        for a few cached rows.  So when that plan sorts through a shuffle
-        and Catalyst's size of the unsorted grid is at most
-        ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (Spark's size
-        for one task's data), the grid is instead coalesced to one
-        partition and sorted there: the same rows in the same order, from
-        one job with one task.  A cache-hit read is sized from its cached
-        aggregate: the exact bytes of the materialised relation on the
-        executors, or, once the cache has moved it to the driver, its few
-        local rows times their row size.  So it takes this path; a cold star
-        grid's estimate is the product of its scans, so it keeps the
-        distributed sort.  ``coalesce(1)`` is narrow, so the size bound
-        also bounds everything that one task computes below it, up to the
-        nearest exchange or cached relation.
+    @property
+    def df(self) -> DataFrame:
+        """The tidy cell DataFrame, ordered by ``order_spec``.
+
+        The optimized plan of ``orderBy(order_spec)`` is read once, and
+        picks one of three frames:
+
+        * **No job.**  A read of grids the aggregate cache has moved to the
+          driver plans as a global ``Sort`` over a ``LocalRelation`` (or
+          over a ``Union`` of them, a drill-down over two cached grids).
+          Spark folds projections, filters and limits over local rows but
+          not a sort, so collecting that plan would launch a job to order
+          a few rows already in driver memory.  Those rows are sorted in
+          the JVM with the Sort's own ordering instead and re-planned as a
+          bare ``LocalTableScan``, which collects without a job
+          (Mondrian: a warm repeat runs no SQL, query_test.rb:1162-1213).
+          The rows are already inside the cache's driver budget, so this
+          needs no size gate.
+        * **One task.**  Any other global ``orderBy`` plans as ``Exchange
+          rangepartitioning``, which costs three Spark jobs (range
+          sampling, shuffle map, result) even for a few rows.  So when the
+          plan sorts through that shuffle and Catalyst sizes the grid at
+          most ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (one
+          task's data), the grid is coalesced to one partition and sorted
+          there: the same rows in the same order, from one job with one
+          task.  A hit on an entry still held on the executors is sized
+          from the exact bytes of its materialised relation, so it takes
+          this path; a cold star grid's estimate is the product of its
+          scans, so it keeps the distributed sort.  ``coalesce(1)`` is
+          narrow, so the size bound also bounds everything that one task
+          computes below it, up to the nearest exchange or cached
+          relation.
+        * **As planned.**  Everything else.  A resident read keeps one job
+          when its rows pass operators Spark does not fold over local
+          rows: TopCount's rank window and limit run in a task before the
+          final sort.
 
         The frame is chosen once and memoized, so ``df``, the collect,
         ``to_pandas`` and ``profiling_plan`` share one planned Dataset."""
         if self._ordered is None:
-            spec = self._sort_spec or [c for ax in self.axis_columns for c in ax]
+            spec = self.order_spec
             ordered = self._df.orderBy(*spec) if spec else self._df
-            if spec and _fits_one_task(ordered) and _sorts_through_shuffle(ordered):
-                ordered = self._df.coalesce(1).sortWithinPartitions(*spec)
+            if spec:
+                qe = ordered._jdf.queryExecution()
+                plan = qe.optimizedPlan()
+                local = _sorted_on_driver(ordered, qe, plan)
+                if local is not None:
+                    ordered = local
+                elif _fits_one_task(ordered, plan) and _sorts_through_shuffle(ordered):
+                    ordered = self._df.coalesce(1).sortWithinPartitions(*spec)
             self._ordered = ordered
         return self._ordered
 

@@ -77,34 +77,67 @@ _TOPCOUNT_READ = (
 )
 
 
-@pytest.mark.parametrize(
-    "mdx",
-    [_RATIO_READ, _ORDER_READ, _TOPCOUNT_READ],
-    ids=["level_axis_ratio", "order_filter_bdesc", "topcount"],
-)
-def test_cache_hit_read_runs_one_job(spark, cached_engine, mdx):
-    """A repeated read is answered from the aggregate cache by one Spark
-    job: its few rows are sorted in one task, with no range-partitioning
-    sample or shuffle (Mondrian: a warm repeat runs no SQL,
-    query_test.rb:1162-1213)."""
-    cached_engine.execute(mdx).formatted_values  # fills the aggregate cache
-    res = cached_engine.execute(mdx)
+def _drilldown_read(e):
+    return (
+        Query(e).columns("[Measures].[Sum Qty]")
+        .rows("[Customer].[Region].Members").drilldown("[Customer].[ASIA]")
+        .hierarchize(post=True).execute()
+    )
+
+
+def _jobs_of(spark, read):
+    """``(read(), number of Spark jobs it started)``."""
     sc = spark.sparkContext
-    group = f"second-read-{uuid.uuid4().hex}"
+    group = f"read-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        res.formatted_values
+        out = read()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert cached_engine.cache.hits >= 1
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    # the first hit moved the grid to the driver: the read plans over
-    # local rows, with no Exchange (shuffle or broadcast) left
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "read, jobs",
+    [
+        (lambda e: e.execute(_RATIO_READ), 0),
+        (lambda e: e.execute(_ORDER_READ), 0),
+        (_drilldown_read, 0),
+        # TopCount's rank window and limit are not folded over local rows:
+        # they and the final sort run in one task
+        (lambda e: e.execute(_TOPCOUNT_READ), 1),
+    ],
+    ids=["level_axis_ratio", "order_filter_bdesc", "drilldown_union", "topcount"],
+)
+def test_cache_hit_read_job_count(spark, cached_engine, read, jobs):
+    """A repeated read is answered from the aggregate cache, which moved
+    the grid to the driver on its first hit.  A read that plans as a sort
+    over those local rows (a drill-down over two grids: over their union)
+    runs no Spark job (Mondrian: a warm repeat runs no SQL,
+    query_test.rb:1162-1213); TopCount's window keeps one job, with no
+    range-partitioning sample or shuffle."""
+    read(cached_engine).formatted_values  # fills the aggregate cache
+    res = read(cached_engine)  # its hit moves the grid to the driver
+    _, n = _jobs_of(spark, lambda: res.formatted_values)
+    assert cached_engine.cache.hits >= 1 and cached_engine.cache.resident_bytes > 0
+    assert n == jobs
+    # the read plans over local rows, with no Exchange (shuffle or
+    # broadcast) left
     assert "Exchange" not in plan_of(res.df)
 
 
-#: cache-hit grid shapes whose order the single-task sort must keep
+def test_drilldown_read_sorts_a_union_of_resident_grids(cached_engine):
+    """A drill-down read over two resident grids plans as a sort over
+    their union, and is served as one bare ``LocalTableScan``."""
+    _drilldown_read(cached_engine).df.collect()  # fills the aggregate cache
+    res = _drilldown_read(cached_engine)  # its hits move both grids
+    unsorted = res._df.orderBy(*res.order_spec)._jdf.queryExecution().optimizedPlan()
+    assert unsorted.nodeName() == "Sort" and unsorted.child().nodeName() == "Union"
+    assert plan_of(res.df).startswith("LocalTableScan")
+
+
+#: cache-hit grid shapes whose order the job-free sort must keep
 _SORTED_SHAPES = {
     "hierarchize_rows_and_columns": lambda e: (
         Query(e).columns("[LineStatus].children", "[Measures].[Sum Qty]")
@@ -116,11 +149,7 @@ _SORTED_SHAPES = {
         "Order([Customer].[Nation].Members, [Measures].[Sum Qty], ASC) "
         "ON ROWS FROM [Sales]"
     ),
-    "hierarchize_post_drilldown": lambda e: (
-        Query(e).columns("[Measures].[Sum Qty]")
-        .rows("[Customer].[Region].Members").drilldown("[Customer].[ASIA]")
-        .hierarchize(post=True).execute()
-    ),
+    "hierarchize_post_drilldown": _drilldown_read,
     "rollup_totals": lambda e: (
         Query(e).columns("[Measures].[Sum Qty]")
         .rows("[Customer].[Region].Members").totals("rollup").execute()
@@ -130,25 +159,72 @@ _SORTED_SHAPES = {
 
 @pytest.mark.parametrize("shape", list(_SORTED_SHAPES))
 def test_single_task_sort_matches_distributed_sort(spark, cached_engine, shape):
-    """The same cache-hit read returns identical rows in identical order
-    whether ``Result.df`` sorts in one task (the default) or through range
-    partitioning (forced by a one-byte advisory partition size)."""
+    """A resident cache-hit read, sorted on the driver with no job, returns
+    the rows and order of the same grid sorted by Spark's
+    range-partitioned ``orderBy``."""
     read = _SORTED_SHAPES[shape]
     read(cached_engine).df.collect()  # fills the aggregate cache
-    one_task = read(cached_engine).df
-    rows = one_task.collect()
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "1b")
-    try:
-        distributed = read(cached_engine).df
-        distributed_rows = distributed.collect()
-    finally:
-        spark.conf.set(key, old)
-    assert rows == distributed_rows
-    one_task_plan, distributed_plan = plan_of(one_task), plan_of(distributed)
-    assert "Coalesce 1" in one_task_plan and "rangepartitioning" not in one_task_plan
-    assert "rangepartitioning" in distributed_plan and "Coalesce" not in distributed_plan
+    res = read(cached_engine)  # its hit moves the grid to the driver
+    rows, n = _jobs_of(spark, res.df.collect)
+    distributed = res._df.orderBy(*res.order_spec)
+    assert n == 0
+    assert rows == distributed.collect()
+    assert plan_of(res.df).startswith("LocalTableScan")
+    assert "rangepartitioning" in plan_of(distributed)
+
+
+#: keys and measures whose order Catalyst defines: NULLs, NaN (above every
+#: double), -0.0 equal to 0.0, decimals and strings.  ``id`` breaks ties,
+#: so a sort that put -0.0 before 0.0 would show.
+_EDGE_ROWS = """
+SELECT * FROM VALUES
+  (1, CAST(NULL AS DOUBLE), CAST(2.50 AS DECIMAL(10, 2)), 'b'),
+  (2, CAST('NaN' AS DOUBLE), CAST(NULL AS DECIMAL(10, 2)), 'a'),
+  (3, CAST(0.0 AS DOUBLE), CAST(-1.25 AS DECIMAL(10, 2)), CAST(NULL AS STRING)),
+  (4, CAST('-0.0' AS DOUBLE), CAST(10.00 AS DECIMAL(10, 2)), 'B'),
+  (5, CAST(-3.5 AS DOUBLE), CAST(2.50 AS DECIMAL(10, 2)), ''),
+  (6, CAST('NaN' AS DOUBLE), CAST(-1.25 AS DECIMAL(10, 2)), 'b'),
+  (7, CAST(1e300 AS DOUBLE), CAST(NULL AS DECIMAL(10, 2)), 'ab'),
+  (8, CAST(NULL AS DOUBLE), CAST(0.00 AS DECIMAL(10, 2)), 'a')
+AS t(id, v, d, s)
+"""
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [
+        [("v", "asc_nulls_first"), ("id", "asc")],
+        [("v", "asc_nulls_last"), ("id", "asc")],
+        [("v", "desc_nulls_first"), ("id", "asc")],
+        [("v", "desc_nulls_last"), ("id", "asc")],
+        [("d", "asc_nulls_first"), ("s", "desc_nulls_last"), ("id", "asc")],
+        [("d", "desc_nulls_last"), ("v", "desc_nulls_first"), ("id", "asc")],
+        [("s", "asc_nulls_last"), ("d", "asc_nulls_first"), ("id", "asc")],
+        [("s", "desc_nulls_first"), ("id", "asc")],
+    ],
+    ids=[
+        "v_asc_nulls_first", "v_asc_nulls_last", "v_desc_nulls_first",
+        "v_desc_nulls_last", "d_asc_s_desc", "d_desc_v_desc", "s_asc_d_asc",
+        "s_desc_nulls_first",
+    ],
+)
+def test_driver_sort_matches_executed_sort(spark, spec):
+    """``Result.df`` over local rows orders them with no Spark job, exactly
+    as Spark's executed, range-partitioned sort of the same rows does."""
+    from mondrian_olap_spark.result import Result
+
+    spec = [getattr(F.col(c), how)() for c, how in spec]
+    local = spark.sql(_EDGE_ROWS)
+    res = Result(local, [], ["v"], sort_spec=spec)
+    rows, n = _jobs_of(spark, res.df.collect)
+    executed = local.repartition(3).orderBy(*spec)
+    assert n == 0 and plan_of(res.df).startswith("LocalTableScan")
+    assert "rangepartitioning" in plan_of(executed)
+    assert res.df.schema == local.schema
+    # repr tells NaN (never == itself) and -0.0 from 0.0 apart
+    assert [tuple(map(repr, r)) for r in rows] == [
+        tuple(map(repr, r)) for r in executed.collect()
+    ]
 
 
 @pytest.mark.parametrize("shape", list(_SORTED_SHAPES))

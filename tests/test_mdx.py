@@ -731,6 +731,37 @@ def test_head_tail_subset_mdx(engine):
     assert sub.df.count() == 5
 
 
+@pytest.mark.parametrize(
+    "call, token",
+    [
+        ("TopCount([Customer].[Nation].Members, 'x', [Measures].[Sum Qty])", "'x'"),
+        ("BottomCount([Customer].[Nation].Members, -2, [Measures].[Sum Qty])", "-"),
+        ("TopPercent([Customer].[Nation].Members, [Measures].[Sum Qty])", "[Measures]"),
+        ("BottomSum([Customer].[Nation].Members, x, [Measures].[Sum Qty])", "x"),
+        ("Head([Customer].[Nation].Members, -1)", "-"),
+        ("Tail([Customer].[Nation].Members, 2.5)", "2.5"),
+        ("Subset([Customer].[Nation].Members, 'a')", "'a'"),
+        ("Subset([Customer].[Nation].Members, 1, 'b')", "'b'"),
+        ("DrillDownLevelTop([Customer].[Region].Members, 'c', , [Measures].[Sum Qty])", "'c'"),
+    ],
+    ids=[
+        "topcount", "bottomcount", "toppercent", "bottomsum", "head", "tail",
+        "subset_start", "subset_count", "drilldownleveltop",
+    ],
+)
+def test_set_function_count_must_be_a_number(engine, call, token):
+    """A set function's count that is not a literal number is an MdxError
+    naming the token found, not a bare int()/float() ValueError."""
+    name = call.split("(", 1)[0].upper()
+    with pytest.raises(MdxError) as err:
+        execute_mdx(
+            engine,
+            f"SELECT [Measures].[Sum Qty] ON COLUMNS, {call} ON ROWS FROM [Sales]",
+        )
+    assert name in str(err.value) and f"got {token!r}" in str(err.value)
+    assert f"token '{token}'" in err.value.root_cause_message
+
+
 def test_member_range(engine):
     """a:b member range (jar!...RangeFunDef)."""
     r = execute_mdx(

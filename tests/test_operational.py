@@ -23,8 +23,9 @@ def test_profiling_plan_and_duration(engine):
 
 def test_profiling_plan_is_the_plan_that_ran(spark):
     """``profiling_plan`` prints the plan of the frame the accessors
-    collect: on a cache-hit read, the one-task sort over ``Coalesce 1``,
-    not the unsorted grid nor a range-partitioned sort."""
+    collect: on a cache-hit read of a grid moved to the driver, a bare
+    ``LocalTableScan`` of the rows already sorted, not the unsorted grid
+    nor a sort."""
     eng = engine_from_parquet(spark, SCHEMA, "Sales", SF_DIR)
     eng.enable_cache()
     query = Query(eng).columns("[Measures].[Sum Qty]").rows("[Customer].children")
@@ -34,8 +35,9 @@ def test_profiling_plan_is_the_plan_that_ran(spark):
         r.values
         plan = r.profiling_plan
         assert eng.cache.hits >= 1
-        assert "Coalesce 1" in plan and "Sort" in plan
-        assert "Exchange rangepartitioning" not in plan
+        assert eng.cache.resident_bytes > 0
+        assert plan.startswith("LocalTableScan")
+        assert "Sort" not in plan and "Coalesce" not in plan and "Exchange" not in plan
     finally:
         eng.flush_schema_cache()
 

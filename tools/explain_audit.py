@@ -1008,6 +1008,25 @@ def main() -> int:
         f"plan: {p[:400]}",
     )
 
+    # 50. resident cache-hit read: once a hit has moved a grid to the
+    #     driver, a read whose axis sort sits directly over those local
+    #     rows (Sort <- LocalRelation) is sorted in the JVM and executes
+    #     as a bare LocalTableScan, with no Sort, Coalesce or Exchange
+    eng.flush_schema_cache()
+    query = Query(eng).columns("[Measures].[Sum Qty]").rows("[Customer].children")
+    query.execute().df.collect()  # fills the aggregate cache
+    res = query.execute()  # its hit moves the grid to the driver
+    sort = res._df.orderBy(*res.order_spec)._jdf.queryExecution().optimizedPlan()
+    p = plan_str(res.df)
+    check(
+        "resident_hit.sort_over_local_rows_is_bare_local_scan",
+        sort.nodeName() == "Sort"
+        and sort.child().nodeName() == "LocalRelation"
+        and p.startswith("LocalTableScan")
+        and not any(n in p for n in ("Sort", "Coalesce", "Exchange")),
+        f"optimized: {sort.nodeName()} <- {sort.child().nodeName()}; plan: {p[:400]}",
+    )
+
     print(f"\n{len(failures)} failed properties" if failures else "\nall plan properties hold")
     return 1 if failures else 0
 
