@@ -1636,8 +1636,8 @@ class MdxParser:
             # GENERATE(set1, <computed set2>[, ALL]): set2 ignores
             # CurrentMember (a computed set cannot bind it in this subset),
             # so the result is set2 evaluated — replace the axis set, then
-            # run set2's op chain through the nested-set (slicer-context)
-            # machinery (GenerateFunDef; query.rb:97-108)
+            # run set2's op chain as the axis's own (GenerateFunDef;
+            # query.rb:97-108)
             _, sb, all_flag, raw = d
             if any(current_members(q.cube, b) for b in sb.base):
                 raise MdxError(
@@ -1653,20 +1653,8 @@ class MdxParser:
             # context, making every per-member evaluation identical).
             # Cross-dimension + data-dependent raises instead of
             # silently returning the global evaluation.
-            op_exprs = [
-                (
-                    op[1]
-                    if op[0] in ("filter", "order")
-                    else (op[4] if op[0] == "topbottom" else None)
-                )
-                for op in sb.ops
-            ] + [
-                (
-                    op[1]
-                    if op[0] in ("filter", "order")
-                    else (op[4] if op[0] == "topbottom" else None)
-                )
-                for _, op in sb.set_ops
+            op_exprs = [_op_expr(op) for op in sb.ops] + [
+                _op_expr(op) for se in sb.set_ops for op in se.ops
             ]
             if any(e and q._measures_in(e) for e in op_exprs):
                 set2_refs = [q._resolve(b) for b in sb.base]
@@ -1684,14 +1672,12 @@ class MdxParser:
                         "member; cross-dimension that differs from the "
                         "once-evaluated lowering)"
                     )
+            # the axis set IS set2 now: its op chain runs as the axis's own
             q.generate(*sb.base, all=all_flag, _display=raw)
-            for subset, op in sb.set_ops:
-                MdxParser._apply_set_op(q, subset, op)
+            for se in sb.set_ops:
+                q.nested_set(se)
             for op in sb.ops:
-                if op[0] in ("filter", "topbottom", "slice"):
-                    MdxParser._apply_set_op(q, tuple(sb.base), op)
-                else:
-                    MdxParser._apply_axis_op(q, op)
+                MdxParser._apply_axis_op(q, op)
         elif k == "range":
             q.member_range(d[1], d[2])
         elif k == "xtd":
@@ -1718,32 +1704,6 @@ class MdxParser:
         else:  # pragma: no cover - parser and applier move together
             raise MdxError(f"unknown set operation {k!r}")
 
-    #: descriptor → set-level Query application (nested-function semantics,
-    #: e.g. the right side of a CROSSJOIN)
-    @staticmethod
-    def _apply_set_op(q, members, d):
-        k = d[0]
-        if k == "filter":
-            if len(d) > 2 and _alias_self_ref(d[1], d[2]):
-                raise MdxError(
-                    "set self-references (ALIAS.Current) are only supported "
-                    "in top-level axis FILTERs in this subset"
-                )
-            q.filter_set(members, d[1])
-        elif k == "topbottom":
-            _, side, how, n, expr = d
-            q.topbottom_set(members, side, how, n, expr)
-        elif k == "slice":
-            _, start, count, from_end = d
-            q.slice_set(members, start, count, from_end)
-        elif k in ("distinct", "hierarchize"):
-            pass  # no-ops on a grouped sub-set (grid rows are distinct)
-        else:
-            raise MdxError(
-                f"{k.upper()} is not supported as a nested set argument "
-                "in this subset"
-            )
-
     def parse_axis(self):
         nonempty = False
         if self.at_word("non"):
@@ -1762,8 +1722,8 @@ class MdxParser:
         else:
             raise MdxError(f"bad axis name {t.text!r} at {t.pos}")
         self.q.axis(axis_i, *members.base)
-        for subset, op in members.set_ops:
-            self._apply_set_op(self.q, subset, op)
+        for se in members.set_ops:
+            self.q.nested_set(se)
         skip: set[int] = set()
         for i, op in enumerate(members.ops):
             if i in skip:
@@ -2429,14 +2389,7 @@ class MdxParser:
         (set1) spans a hierarchy set2 does not — the set2 member then
         does NOT replace set1's in context, so a once-evaluated lowering
         would diverge (GenerateFunDef pushes each set1 member)."""
-        exprs = [
-            (
-                op[1]
-                if op[0] in ("filter", "order")
-                else (op[4] if op[0] == "topbottom" else None)
-            )
-            for op in sb.ops
-        ]
+        exprs = [_op_expr(op) for op in sb.ops]
         if not any(e and self.q._measures_in(e) for e in exprs):
             return False
         if sb.set_ops:
@@ -2600,15 +2553,8 @@ class MdxParser:
                         f"supported inside a computed set argument of {where}"
                     )
                 ops.append(("filter", d[1]))
-            elif k in ("topbottom", "slice", "order"):
+            elif k in ("topbottom", "slice", "order", "except"):
                 ops.append(d)
-            elif k == "except":
-                if not isinstance(d[1], (list, tuple)):
-                    raise MdxError(
-                        "EXCEPT of a computed set is not supported inside "
-                        f"a computed set argument of {where}"
-                    )
-                ops.append(("except", list(d[1])))
             elif k in ("distinct", "nonempty"):
                 ops.append((k,))
             elif k == "hierarchize":
@@ -2647,13 +2593,16 @@ class MdxParser:
             inner.base.extend(right.base)
             # a set FUNCTION as the crossjoin argument evaluates against its
             # own set in the slicer context (Mondrian nested-set semantics):
-            # lower each right-side op to a set-level application bound to
-            # the right side's members
-            for op in right.ops:
-                if op[0] == "range":
-                    inner.ops.append(op)  # ranges constrain, not select
-                else:
-                    inner.set_ops.append((tuple(right.base), op))
+            # its whole op chain becomes ONE computed set (ranges constrain
+            # the axis, they do not select)
+            inner.ops.extend(op for op in right.ops if op[0] == "range")
+            chain = [op for op in right.ops if op[0] != "range"]
+            if chain:
+                inner.set_ops.append(
+                    self._set_arg(
+                        _SetBuild(base=right.base, ops=chain), "CROSSJOIN", None
+                    )
+                )
             inner.set_ops.extend(right.set_ops)
             return inner
         if fname in ("union", "intersect"):
@@ -4231,13 +4180,22 @@ class MdxParser:
         )
 
 
+def _op_expr(op: tuple) -> str | None:
+    """The measure expression a set op reads: a FILTER condition, an
+    ORDER key or a TOPCOUNT-family expression (None for other ops)."""
+    if op[0] in ("filter", "order"):
+        return op[1]
+    return op[4] if op[0] == "topbottom" else None
+
+
 @dataclass
 class _SetBuild:
     base: list[str]
     #: whole-set operation descriptors, applied in order
     ops: list = None
-    #: (member-subset, descriptor) pairs from nested set functions —
-    #: evaluated set-level (against their own members in the slicer context)
+    #: computed sets (:class:`~.query.SetExpr`) written as CROSSJOIN
+    #: arguments — each evaluated once against its own members in the
+    #: slicer context, its op chain whole
     set_ops: list = None
     #: named-set name when this build came from one — enables
     #: ``Name.Current`` self-references in enclosing FILTERs

@@ -46,6 +46,7 @@ from .mdx import (
     MdxError,
     _alias_self_ref,
     _call_args,
+    _op_expr,
     _unquote,
     current_member,
     current_members,
@@ -98,6 +99,11 @@ _NAV_RE = re.compile(
 )
 
 
+#: the op kinds :meth:`Query._set_chain` interprets, whatever position
+#: the set is written in
+_SET_OPS = ("filter", "order", "topbottom", "slice", "except")
+
+
 def _names(cm: CalculatedMember) -> set[str]:
     """The :func:`mdx.references` entries that name ``cm``: its output
     alias and its bracketed name."""
@@ -115,20 +121,21 @@ class QueryError(ValueError):
 
 @dataclass(frozen=True)
 class SetExpr:
-    """A *computed set* passed where the engine needs a member list — the
-    second argument of EXISTS/NONEMPTY/EXCEPT/GENERATE/DRILLDOWNMEMBER/
-    TOGGLEDRILLSTATE (jar!mondrian/olap/fun/ExistsFunDef, ExceptFunDef,
-    GenerateFunDef accept any set expression; the reference builder nests
-    freely — lib/mondrian/olap/query.rb:47-57).
+    """A *computed set*: base member identifiers plus the op chain
+    (``("filter", cond)``, ``("order", expr, dir)``,
+    ``("topbottom", side, how, n, expr)``, ``("slice", start, count,
+    from_end)``, ``("except", members | SetExpr)``; ``distinct`` /
+    ``hierarchize`` / ``nonempty`` are no-ops on a set evaluated at its
+    own grain).  ``raw`` keeps the source MDX text for ``to_mdx``.
 
-    Holds the base member identifiers plus the op chain
-    (``("filter", cond)``, ``("topbottom", side, how, n, expr)``,
-    ``("slice", start, count, from_end)``, ``("order", expr, dir)``,
-    ``("except", members)``) and is evaluated LAZILY by
-    :meth:`Query.eval_set_expr` in the owning query's slicer context —
-    Mondrian evaluates nested set arguments against the current context,
-    not per output tuple.  ``raw`` keeps the source MDX text for
-    ``to_mdx`` round-trips."""
+    It is how a nested set reaches the query, whatever position it is
+    written in: the second argument of EXISTS/NONEMPTY/EXCEPT/GENERATE/
+    DRILLDOWNMEMBER/TOGGLEDRILLSTATE (:meth:`Query.eval_set_expr`) and a
+    CROSSJOIN argument (:meth:`Query.nested_set`).  Both evaluate the set
+    in the owning query's slicer context (Mondrian evaluates nested set
+    arguments against the current context, not per output tuple), and
+    both run the op chain through :meth:`Query._set_chain`, the one
+    interpreter an axis's own chain uses too."""
 
     members: tuple
     ops: tuple = ()
@@ -506,7 +513,7 @@ class Query:
         sets)."""
         if len(members) == 1 and isinstance(members[0], SetExpr):
             se = members[0]
-            self._axis().mods.append(("except_expr", se))
+            self._axis().mods.append(("except", se))
             self._axis().display_ops.append(("except", [se.raw or "{…}"]))
             return self
         refs = [self._resolve(m) for m in members]
@@ -692,40 +699,21 @@ class Query:
         return self
 
     # -- set-level operations (nested set functions) --------------------
-    def _subselect(self, members: tuple[str, ...], desc: tuple) -> "Query":
-        """Register a set-level operation: the nested-function semantics of
-        ``CROSSJOIN(A, FILTER(B, cond))`` — ``cond`` is evaluated per B
-        member in the slicer context (Mondrian evaluates nested set
-        functions against the current context, NOT per output tuple), the
-        qualifying members become a semi-join filter on the axis grid."""
-        refs = [self._resolve(m) for m in members]
+    def nested_set(self, se: SetExpr) -> "Query":
+        """A computed set written as a CROSSJOIN argument
+        (``CROSSJOIN(A, HEAD(FILTER(B, cond), 2))``): the set is evaluated
+        once at its own grain in the slicer context, its whole op chain
+        in order (Mondrian evaluates nested set functions against the
+        current context, NOT per output tuple), and the axis grid is
+        semi-joined to the surviving members."""
+        refs = [self._resolve(m) for m in se.members]
         if not refs or any(isinstance(r, MeasureRef) for r in refs):
             raise QueryError("nested set functions need dimension member sets")
         dim = refs[0].dimension
         if any(r.dimension.name != dim.name for r in refs):
             raise QueryError("nested set function members must share a dimension")
-        self._axis().mods.append(("subselect", refs, desc))
+        self._axis().mods.append(("subselect", refs, se.ops, None))
         return self
-
-    def filter_set(self, members: tuple[str, ...], condition: str) -> "Query":
-        """FILTER as a nested set argument (e.g. the right side of a
-        CROSSJOIN): members whose cells — aggregated in the slicer context —
-        satisfy ``condition`` survive; the axis grid is semi-joined to them
-        (jar!mondrian/olap/fun/FilterFunDef nested evaluation)."""
-        return self._subselect(members, ("filter", condition))
-
-    def topbottom_set(
-        self, members: tuple[str, ...], side: str, how: str, n, expr: str | None
-    ) -> "Query":
-        """TOPCOUNT/BOTTOMCOUNT/TOPPERCENT/TOPSUM… as a nested set argument
-        — the top-k of the member set in the slicer context."""
-        return self._subselect(members, ("topbottom", side, how, n, expr))
-
-    def slice_set(
-        self, members: tuple[str, ...], start: int, count: int, from_end: bool
-    ) -> "Query":
-        """HEAD/TAIL/SUBSET/Item(i) as a nested set argument."""
-        return self._subselect(members, ("slice", start, count, from_end))
 
     def exists_(self, *within: str) -> "Query":
         """EXISTS(set1, set2) (jar!mondrian/olap/fun/ExistsFunDef): keep the
@@ -743,7 +731,7 @@ class Query:
             ax = self._axis()
             if not ax.sets:
                 raise QueryError("exists_ needs a set on the current axis")
-            ax.mods.append(("subselect", list(ax.sets), ("exists", se)))
+            ax.mods.append(("subselect", list(ax.sets), (), se))
             ax.display_ops.append(("EXISTS", [se.raw or "{…}"]))
             return self
         refs2 = [self._resolve(m) for m in within]
@@ -752,7 +740,7 @@ class Query:
         ax = self._axis()
         if not ax.sets:
             raise QueryError("exists_ needs a set on the current axis")
-        ax.mods.append(("subselect", list(ax.sets), ("exists", refs2)))
+        ax.mods.append(("subselect", list(ax.sets), (), refs2))
         ax.display_ops.append(("EXISTS", list(within)))
         return self
 
@@ -2312,18 +2300,23 @@ class Query:
         from .plan import _path_predicate
 
         group_cols = self._group_cols_of(ax)
-        # dimension members on OTHER axes: ranking/slicing windows over the
-        # cell grid would pick top-n CELLS, not top-n members of this
-        # axis's set — the set must be evaluated at its own grain (query
-        # context = slicer only; Mondrian evaluates axis set expressions
-        # once, not per cross-cell).  Route through the nested-set
-        # machinery: sub-aggregate at this axis's grain, rank there,
-        # semi-join the qualifying members.
-        contextual = bool(other_cols)
-        # mods already applied to this axis: the contextual re-route
-        # re-evaluates the set FRESH, which cannot compose with them
-        prior_semantic = False
         tiebreak = [F.col(c) for c in group_cols]
+        # dimension members on OTHER axes: a ranking or slicing window over
+        # the cell grid would pick top-n CELLS, not top-n members of this
+        # axis's set.  The axis's whole set-op chain is then evaluated ONCE
+        # at the set's own grain in the slicer context (Mondrian evaluates
+        # an axis set once, not per cross-cell) and the grid is semi-joined
+        # to the surviving members; ORDER still sorts the cells for display.
+        crossed = (
+            [m for m in ax.mods if m[0] in _SET_OPS] if other_cols else []
+        )
+        if any(m[0] == "filter" and _alias_self_ref(m[1], m[2]) for m in crossed):
+            raise QueryError(
+                "set self-references (ALIAS.Current) are not "
+                "supported when dimension members sit on other "
+                "axes — the window would rank cells, not the "
+                "set's members"
+            )
         # the set's own iteration order on THIS axis: hierarchize order
         # until an order/hierarchize mod of this axis changes it.  The
         # cross-axis ``sort_spec`` (threaded for final display ordering)
@@ -2334,25 +2327,28 @@ class Query:
             kind = mod[0]
             if kind == "nonempty":
                 continue
-            if kind == "filter":
-                alias = mod[2] if len(mod) > 2 else None
-                if contextual and _alias_self_ref(mod[1], alias):
-                    raise QueryError(
-                        "set self-references (ALIAS.Current) are not "
-                        "supported when dimension members sit on other "
-                        "axes — the window would rank cells, not the "
-                        "set's members"
+            if kind in _SET_OPS:
+                if crossed:
+                    df = self._apply_subselect(df, list(ax.sets), crossed)
+                    crossed = []
+                if other_cols and kind != "order":
+                    continue
+                drops: list[str] = []
+                if kind == "filter":
+                    # ALIAS.Current / CurrentOrdinal / Rank(S.Current, S):
+                    # windows over the axis grid in the set's order
+                    df, cond, drops = self._rewrite_current(
+                        df, mod[1], mod[2], local_sort or list(tiebreak),
+                        group_cols, measure_outs or [],
                     )
-                df, cond0, prop_drops = self._attach_member_properties(
-                    df, mod[1]
+                    mod = ("filter", cond)
+                df, order = self._set_chain(
+                    df, group_cols, [mod], order=local_sort
                 )
-                df, cond, drops = self._rewrite_current(
-                    df, cond0, alias, local_sort or list(tiebreak),
-                    group_cols, measure_outs or [],
-                )
-                df = df.filter(F.expr(cond))
-                if drops or prop_drops:
-                    df = df.drop(*drops, *prop_drops)
+                if drops:
+                    df = df.drop(*drops)
+                if order is not None:
+                    sort_spec = local_sort = order
             elif kind == "filter_last":
                 # condition applies only to rows of the LAST set; other
                 # sets' rows pass through (query.rb:86-91)
@@ -2379,50 +2375,8 @@ class Query:
                     if memb is None
                     else (F.coalesce(~memb, F.lit(True)) | nonempty)
                 )
-            elif kind in ("except", "except_expr"):
-                # set difference = anti-filter on member paths
-                # (query.rb:59-66; jar!...ExceptFunDef); a computed second
-                # set resolves to concrete members first (eval_set_expr)
-                refs_ = (
-                    self.eval_set_expr(mod[1])
-                    if kind == "except_expr"
-                    else mod[1]
-                )
-                for ref in refs_:
-                    if any(
-                        lv.out not in df.columns
-                        for lv in ref.dimension.levels[: ref.depth + 1]
-                    ):
-                        # a member DEEPER than the grid's grain (e.g. a
-                        # quarter from a mixed-depth computed set against
-                        # a year-level axis) can never match a row —
-                        # ExceptFunDef removes exact tuples only, so it
-                        # is a no-op, not an unresolved-column error
-                        continue
-                    pred = None
-                    for i, key in enumerate(ref.path):
-                        c = F.col(ref.dimension.levels[i].out) == key
-                        pred = c if pred is None else (pred & c)
-                    if pred is not None:
-                        # drop only rows that MATCH: NULL-keyed rows
-                        # (rollup/cube super-aggregates, drilldown parent
-                        # rows) evaluate the predicate to NULL and must
-                        # pass through — the same convention as
-                        # filter_last/_apply_subselect
-                        df = df.filter(~F.coalesce(pred, F.lit(False)))
             elif kind == "distinct":
                 df = df.dropDuplicates()
-            elif kind == "order":
-                _, expr, d = mod
-                key = F.expr(expr)
-                key = key.desc() if d.endswith("DESC") else key.asc()
-                if d.startswith("B"):
-                    sort_spec = [key] + tiebreak
-                else:
-                    # hierarchical: sort within parent levels
-                    parents = [F.col(c) for c in group_cols[:-1]]
-                    sort_spec = parents + [key] + tiebreak
-                local_sort = list(sort_spec)
             elif kind == "hierarchize":
                 post = mod[1]
                 # sort over the GRID's member columns (drilldown adds child
@@ -2508,50 +2462,8 @@ class Query:
                     )
                 df = df.unionByName(parents.select(*df.columns))
             elif kind == "subselect":
-                _, refs, desc = mod
-                df = self._apply_subselect(df, refs, desc)
-            elif kind == "slice":
-                if contextual:
-                    if prior_semantic:
-                        raise QueryError(
-                            "HEAD/TAIL/SUBSET after other set operations is "
-                            "not supported when dimension members sit on "
-                            "other axes (the set re-evaluates fresh at its "
-                            "own grain)"
-                        )
-                    df = self._apply_subselect(df, list(ax.sets), mod)
-                    prior_semantic = True
-                    continue
-                _, start, count, from_end = mod
-                order = local_sort if local_sort else list(tiebreak)
-                w_order = [c.desc() if from_end else c for c in order] if from_end else order
-                # reversing an existing sort spec isn't generally possible on
-                # Column objects; TAIL therefore uses the hierarchize order
-                if from_end and local_sort:
-                    raise QueryError("tail() combined with a custom order is not supported")
-                w = Window.orderBy(*(w_order if w_order else [F.lit(1)]))
-                df = (
-                    df.withColumn("__rn", F.row_number().over(w))
-                    .filter((F.col("__rn") > start) & (F.col("__rn") <= start + count))
-                    .drop("__rn")
-                )
-            elif kind == "topbottom":
-                if contextual:
-                    if prior_semantic:
-                        raise QueryError(
-                            "TOPCOUNT-family after other set operations is "
-                            "not supported when dimension members sit on "
-                            "other axes (the set re-evaluates fresh at its "
-                            "own grain)"
-                        )
-                    df = self._apply_subselect(df, list(ax.sets), mod)
-                    prior_semantic = True
-                    continue
-                _, side, how, n, expr = mod
-                df, sort_spec = _top_bottom(df, side, how, n, expr, tiebreak)
-                local_sort = list(sort_spec)
-            if kind not in ("nonempty", "hierarchize"):
-                prior_semantic = True
+                _, refs, ops, within = mod
+                df = self._apply_subselect(df, refs, ops, within)
         return df, sort_spec
 
 
@@ -2696,6 +2608,132 @@ class Query:
                 out.append(self._measure(m.name))
         return out
 
+    def _chain_measures(self, ops) -> list:
+        """The measures a set's op chain reads, each once."""
+        out: dict = {}
+        for op in ops:
+            for m in self._measures_in(_op_expr(op)):
+                out.setdefault(m.out, m)
+        return list(out.values())
+
+    def _set_chain(self, df: DataFrame, keys: list[str], ops, part=(),
+                   order: list | None = None):
+        """The one interpreter of a set's op chain — FILTER, ORDER, the
+        TOPCOUNT family, HEAD/TAIL/SUBSET/Item and EXCEPT — wherever the
+        set is written: on an axis (:meth:`_apply_mods`), as a CROSSJOIN
+        argument or an axis crossed with other axes
+        (:meth:`_apply_subselect`), and as a computed argument of
+        EXISTS/EXCEPT/GENERATE (:meth:`eval_set_expr_per_member`).
+        Mondrian compiles each set function to one Calc whatever its
+        position (SURVEY.md entry A, steps 2–4).
+
+        ``df`` is a member frame at the set's grain whose member columns
+        are ``keys`` (hierarchy order); ``part`` partitions every window
+        (GENERATE's per-member context); ``order`` is the set's current
+        order (None: hierarchize order, the keys).  Each op runs on the
+        previous op's output.  Returns the surviving frame and the set's
+        current order (None while no ORDER/TOPCOUNT-family op set one).
+
+        * ORDER ASC/DESC sorts within the parent levels (the keys before
+          the last), BASC/BDESC globally; the keys break ties.
+        * TAIL counts back from the end of the current order (the
+          partition's row count: a Column sort cannot be reversed).
+        * EXCEPT removes an exact member (ExceptFunDef removes tuples,
+          never descendants), pinned to its own depth: the frame's level
+          columns below it are NULL.  A member deeper than the frame can
+          match nothing.  NULL-keyed rows (totals, drilldown parents)
+          pass through.
+        * A FILTER condition may read ``[Dim].CurrentMember.Properties``
+          (a broadcast join of the member properties, dropped after)."""
+        tiebreak = [F.col(c) for c in keys]
+        for op in ops:
+            kind = op[0]
+            if kind == "filter":
+                df, cond, drops = self._attach_member_properties(df, op[1])
+                df = df.filter(F.expr(cond))
+                if drops:
+                    df = df.drop(*drops)
+            elif kind == "order":
+                _, expr, d = op
+                key = F.expr(expr)
+                key = key.desc() if d.endswith("DESC") else key.asc()
+                parents = [] if d.startswith("B") else tiebreak[:-1]
+                order = parents + [key] + tiebreak
+            elif kind == "topbottom":
+                _, side, how, n, expr = op
+                df, order = _top_bottom(
+                    df, side, how, n, expr, tiebreak, partition_by=part
+                )
+            elif kind == "slice":
+                _, start, count, from_end = op
+                w = Window.partitionBy(*part).orderBy(
+                    *(order or tiebreak or [F.lit(1)])
+                )
+                df = df.withColumn("__rn", F.row_number().over(w))
+                lo, hi = F.lit(start), F.lit(start + count)
+                if from_end:
+                    n = Window.partitionBy(*(part or [F.lit(1)]))
+                    df = df.withColumn("__n", F.count(F.lit(1)).over(n))
+                    lo, hi = F.col("__n") - start - count, F.col("__n") - start
+                df = df.filter(
+                    (F.col("__rn") > lo) & (F.col("__rn") <= hi)
+                ).drop("__rn", "__n")
+            elif kind == "except":
+                arg = op[1]
+                refs = (
+                    self.eval_set_expr(arg)
+                    if isinstance(arg, SetExpr)
+                    else [
+                        m if isinstance(m, MemberSetRef) else self._resolve(m)
+                        for m in arg
+                    ]
+                )
+                for ref in refs:
+                    if isinstance(ref, MeasureRef) or not ref.path:
+                        raise QueryError(
+                            "EXCEPT needs concrete member paths"
+                        )
+                    levels = ref.dimension.levels
+                    if any(
+                        lv.out not in df.columns
+                        for lv in levels[: ref.depth + 1]
+                    ):
+                        continue
+                    pred = F.lit(True)
+                    for lv, key in zip(levels, ref.path):
+                        pred = pred & (F.col(lv.out) == key)
+                    for lv in levels[ref.depth + 1:]:
+                        if lv.out in df.columns:
+                            pred = pred & F.col(lv.out).isNull()
+                    df = df.filter(~F.coalesce(pred, F.lit(False)))
+            elif kind not in ("distinct", "hierarchize", "nonempty"):
+                raise QueryError(
+                    f"{kind.upper()} is not supported inside a computed "
+                    "set argument"
+                )
+        return df, order
+
+    def _set_frame(self, refs, measures, slicer):
+        """A set's member frame at its own grain: one sub-aggregate of its
+        members in ``slicer`` → (frame, member columns).  A MIXED-DEPTH
+        set ({[2019], [2019].[Q1]}) unions one sub-aggregate per depth,
+        NULL-padded in the deeper level columns, so each member's
+        condition/sort value is its OWN grain's cell (Mondrian's evaluator
+        iterates the TupleList, jar!mondrian/olap/fun/FilterFunDef) — the
+        lowering the axis grid uses (_split_mixed_depth)."""
+        planner = Planner(self.engine, extra_measures=tuple(self._with))
+        (main,), shallow = self._split_mixed_depth([list(refs)])
+        sub, group = planner.aggregate([main], slicer, measures)
+        types = dict(sub.dtypes)
+        for _, dim, shallow_refs in shallow:
+            other = [r for r in main if r.dimension.name != dim.name]
+            s, _ = planner.aggregate([other + shallow_refs], slicer, measures)
+            sub = sub.unionByName(s.select(*(
+                c if c in s.columns else F.lit(None).cast(types[c]).alias(c)
+                for c in sub.columns
+            )))
+        return sub, group
+
     def eval_set_expr(self, se: "SetExpr") -> list[MemberSetRef]:
         """Materialize a computed set argument into concrete member refs.
 
@@ -2708,7 +2746,7 @@ class Query:
         by the dimension, never the fact.
 
         This is the zero-context case of the per-member evaluator (empty
-        partition → global windows) — ONE op interpreter serves both."""
+        partition → global windows)."""
         return self.eval_set_expr_per_member([], se)
 
     def eval_set_expr_per_member(
@@ -2735,217 +2773,63 @@ class Query:
         ctx = [
             r for r in context_refs if r.dimension.name != dim2.name
         ]
-        measures, seen = [], set()
-        for d in se.ops:
-            e = (
-                d[1] if d[0] in ("filter", "order")
-                else (d[4] if d[0] == "topbottom" else None)
-            )
-            for m in self._measures_in(e):
-                if m.out not in seen:
-                    seen.add(m.out)
-                    measures.append(m)
-        planner = Planner(self.engine, extra_measures=tuple(self._with))
-        # MIXED-DEPTH sets ({[2019], [2019].[Q1]}): one sub-aggregate per
-        # depth (each member's condition/sort value is its OWN grain's
-        # cell — Mondrian's evaluator iterates the TupleList and evaluates
-        # per member, jar!mondrian/olap/fun/FilterFunDef), NULL-padded in
-        # the deeper level columns and unioned — the same lowering the
-        # axis grid uses for mixed-level sets (_split_mixed_depth).  The
-        # op chain then runs ONCE over the union (single keyed shuffle).
-        depths = sorted({r.depth for r in refs2})
-        deep_ref = max(refs2, key=lambda r: r.depth)
-        subs: dict[int, DataFrame] = {}
-        sub_group: list[str] = []
-        for d in depths:
-            grp = [r for r in refs2 if r.depth == d]
-            s, s_group = planner.aggregate(
-                [list(ctx) + grp], list(self._slicer), measures
-            )
-            subs[d] = s
-            if d == depths[-1]:
-                sub_group = s_group
+        sub, sub_group = self._set_frame(
+            ctx + refs2, self._chain_measures(se.ops), list(self._slicer)
+        )
         set2_cols = [
-            lv.out for lv in deep_ref.group_levels if lv.out in sub_group
+            lv.out
+            for lv in max(refs2, key=lambda r: r.depth).group_levels
+            if lv.out in sub_group
         ]
         ctx_cols = [c for c in sub_group if c not in set2_cols]
-        deep_types = dict(subs[depths[-1]].dtypes)
-        sub = subs[depths[-1]].withColumn(
-            "__set_depth", F.lit(depths[-1])
+        sub, _ = self._set_chain(
+            sub, set2_cols, se.ops, part=[F.col(c) for c in ctx_cols]
         )
-        for d in depths[:-1]:
-            s = subs[d]
-            for c in set2_cols:
-                if c not in s.columns:
-                    s = s.withColumn(c, F.lit(None).cast(deep_types[c]))
-            s = s.withColumn("__set_depth", F.lit(d))
-            sub = sub.unionByName(s.select(*sub.columns))
-        #: visible level columns per member depth (role level bounds can
-        #: hide top levels uniformly across depths)
-        cols_for_depth = {
-            d: [
-                lv.out
-                for lv in dim2.levels[: d + 1]
-                if lv.out in set2_cols
-            ]
-            for d in depths
+        # a member's depth reads off its row: its own level columns are
+        # set, the deeper ones NULL (role level bounds may hide the top
+        # levels, uniformly across depths)
+        widths = {
+            len([lv for lv in dim2.levels[: r.depth + 1] if lv.out in set2_cols])
+            for r in refs2
         }
-        keys = [F.col(c) for c in set2_cols]
-        part = [F.col(c) for c in ctx_cols]
-        local_sort: list | None = None
-        for d in se.ops:
-            k = d[0]
-            if k == "filter":
-                sub = sub.filter(F.expr(d[1]))
-            elif k == "topbottom":
-                _, side, how, n, e = d
-                sub, spec = _top_bottom(
-                    sub, side, how, n, e, keys, partition_by=part
-                )
-                local_sort = list(spec)
-            elif k == "order":
-                col = F.expr(d[1])
-                desc_ = d[2].upper().endswith("DESC")
-                local_sort = [col.desc() if desc_ else col.asc()] + keys
-            elif k == "slice":
-                _, start, count, from_end = d
-                order = local_sort if local_sort else list(keys)
-                w = Window.partitionBy(*part).orderBy(*order)
-                sub = sub.withColumn("__rn", F.row_number().over(w))
-                if from_end:
-                    # TAIL honors the set's CURRENT order (incl. a custom
-                    # ORDER — jar!mondrian/olap/fun/HeadTailFunDef slices
-                    # the evaluated list): last ``count`` after skipping
-                    # ``start`` from the end, via the partition row count
-                    # (the sort itself is never reversed — Column sort
-                    # specs are opaque)
-                    wt = Window.partitionBy(*part) if part else (
-                        Window.partitionBy(F.lit(1))
-                    )
-                    sub = (
-                        sub.withColumn("__cnt", F.count(F.lit(1)).over(wt))
-                        .filter(
-                            (F.col("__rn") > F.col("__cnt") - start - count)
-                            & (F.col("__rn") <= F.col("__cnt") - start)
-                        )
-                        .drop("__rn", "__cnt")
-                    )
-                else:
-                    sub = sub.filter(
-                        (F.col("__rn") > start)
-                        & (F.col("__rn") <= start + count)
-                    ).drop("__rn")
-            elif k == "except":
-                for m in d[1]:
-                    r = self._resolve(m)
-                    if isinstance(r, MeasureRef) or not r.path:
-                        raise QueryError(
-                            "EXCEPT inside a computed set argument needs "
-                            "concrete member paths"
-                        )
-                    if any(
-                        lv.out not in sub.columns
-                        for lv in r.dimension.levels[: r.depth + 1]
-                    ):
-                        # a member DEEPER than the set's grain (or of
-                        # another dimension) can never match a member of
-                        # the set — ExceptFunDef removes exact tuples
-                        # only, so it is a no-op, not an
-                        # unresolved-column error (mirrors the axis-grid
-                        # except guard)
-                        continue
-                    pred = None
-                    for i, key in enumerate(r.path):
-                        c = F.col(r.dimension.levels[i].out) == key
-                        pred = c if pred is None else (pred & c)
-                    if r.dimension.name == dim2.name:
-                        # an EXCEPT member removes only the member ITSELF
-                        # (ExceptFunDef removes exact tuples, never
-                        # descendants) — a year's quarters share the year
-                        # key and a shallower member shares its
-                        # descendants' prefix, so pin the row depth
-                        pred = pred & (
-                            F.col("__set_depth") == F.lit(r.depth)
-                        )
-                    sub = sub.filter(~F.coalesce(pred, F.lit(False)))
-            elif k in ("distinct", "hierarchize", "nonempty"):
-                pass
-            else:
-                raise QueryError(
-                    f"{k.upper()} is not supported inside a computed set "
-                    "argument"
-                )
-        rows = (
-            sub.select(*set2_cols, "__set_depth").dropDuplicates().collect()
-        )
-        out = []
-        seen_paths: set[tuple] = set()
-        for row in sorted(
-            rows,
-            key=lambda r: tuple(
-                str(r[c]) for c in cols_for_depth[r["__set_depth"]]
-            ),
-        ):
-            cols = cols_for_depth[row["__set_depth"]]
-            path = tuple(row[c] for c in cols)
-            if any(v is None for v in path) or path in seen_paths:
-                continue
-            seen_paths.add(path)
-            out.append(
-                MemberSetRef(
-                    dim2,
-                    depth=len(cols) - 1,
-                    path=tuple(str(v) for v in path),
-                    kind="member",
-                )
-            )
-        return out
+        paths: set[tuple] = set()
+        for row in sub.select(*set2_cols).dropDuplicates().collect():
+            vals = tuple(row)
+            n = next((i for i, v in enumerate(vals) if v is None), len(vals))
+            if n in widths and not any(v is not None for v in vals[n:]):
+                paths.add(tuple(str(v) for v in vals[:n]))
+        return [
+            MemberSetRef(dim2, depth=len(p) - 1, path=p, kind="member")
+            for p in sorted(paths)
+        ]
 
-    def _apply_subselect(self, df: DataFrame, refs, desc) -> DataFrame:
-        """Evaluate a nested set function over its own member sub-grid
-        (grouped at the set's grain, slicer context, measures the expression
-        needs), then semi-join the axis grid to the qualifying members.  The
-        qualifying list is axis-sized → broadcast semi-join, no extra
-        shuffle of the grid."""
-        from .plan import Planner
-
-        planner = Planner(self.engine, extra_measures=tuple(self._with))
-        kind = desc[0]
-        expr = desc[1] if kind == "filter" else (desc[4] if kind == "topbottom" else None)
-        if kind == "exists":
+    def _apply_subselect(self, df: DataFrame, refs, ops=(),
+                         within=None) -> DataFrame:
+        """Evaluate a set over its own member sub-grid (grouped at the
+        set's grain, slicer context, the measures its ops read), then
+        semi-join the axis grid to the qualifying members.  ``ops`` is
+        the set's op chain (a CROSSJOIN argument, or an axis crossed with
+        other axes), run by :meth:`_set_chain`; ``within`` is EXISTS's
+        second set — plain member refs or a :class:`SetExpr` — which
+        slices the sub-grid instead.  The qualifying list is axis-sized →
+        broadcast semi-join, no extra shuffle of the grid."""
+        extra_slice = []
+        if isinstance(within, SetExpr):
             # a computed second set resolves to concrete members first
             # (slicer-context evaluation — eval_set_expr), then slices the
             # exists sub-aggregate exactly like a plain member list
-            arg = desc[1]
-            if isinstance(arg, SetExpr):
-                extra_slice = self.eval_set_expr(arg)
-                if not extra_slice:
-                    # EXISTS against an EMPTY computed set is the EMPTY
-                    # set — an empty slice would otherwise mean "no
-                    # constraint" and silently keep every member
-                    return df.filter(F.lit(False))
-            else:
-                extra_slice = list(arg)
-        else:
-            extra_slice = []
-        sub, sub_group = planner.aggregate(
-            [list(refs)], list(self._slicer) + extra_slice, self._measures_in(expr)
+            extra_slice = self.eval_set_expr(within)
+            if not extra_slice:
+                # EXISTS against an EMPTY computed set is the EMPTY
+                # set — an empty slice would otherwise mean "no
+                # constraint" and silently keep every member
+                return df.filter(F.lit(False))
+        elif within is not None:
+            extra_slice = list(within)
+        sub, sub_group = self._set_frame(
+            refs, self._chain_measures(ops), list(self._slicer) + extra_slice
         )
-        keys = [F.col(c) for c in sub_group]
-        if kind == "filter":
-            sub = sub.filter(F.expr(desc[1]))
-        elif kind == "topbottom":
-            _, side, how, n, e = desc
-            sub, _ = _top_bottom(sub, side, how, n, e, keys)
-        elif kind == "slice":
-            _, start, count, from_end = desc
-            order = [c.desc() for c in keys] if from_end else keys
-            w = Window.orderBy(*order)
-            sub = (
-                sub.withColumn("__rn", F.row_number().over(w))
-                .filter((F.col("__rn") > start) & (F.col("__rn") <= start + count))
-                .drop("__rn")
-            )
+        sub, _ = self._set_chain(sub, sub_group, ops)
         members = sub.select(*sub_group).dropDuplicates()
         # totals / drilldown parent rows carry NULL in the member columns; a
         # semi-join would silently drop them (NULL never equi-matches) —

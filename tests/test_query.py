@@ -1314,6 +1314,122 @@ def test_filter_by_member_property(engine, duck):
          .execute())
 
 
+_CUST_STAR = (
+    "lineitem JOIN orders ON l_orderkey = o_orderkey "
+    "JOIN customer ON o_custkey = c_custkey "
+    "JOIN nation ON c_nationkey = n_nationkey "
+    "JOIN region ON n_regionkey = r_regionkey"
+)
+_BY_REGION = f"SELECT r_name, sum(l_quantity) AS q FROM {_CUST_STAR} GROUP BY 1"
+_BY_NATION = (
+    f"SELECT r_name, n_name, sum(l_quantity) AS q FROM {_CUST_STAR} GROUP BY 1, 2"
+)
+_QUARTERS = (
+    "SELECT DISTINCT year(o_orderdate), 'Q' || quarter(o_orderdate) "
+    "FROM lineitem JOIN orders ON l_orderkey = o_orderkey"
+)
+#: every member of a level, as DuckDB keys (a shallower member a position
+#: picks covers the level members under it)
+_LEVEL_MEMBERS = {
+    "[Customer].[Region]": f"SELECT DISTINCT r_name FROM {_CUST_STAR}",
+    "[Customer].[Nation]": f"SELECT DISTINCT r_name, n_name FROM {_CUST_STAR}",
+    "[Time].[Quarter]": _QUARTERS,
+}
+
+
+@pytest.mark.parametrize(
+    "chain, level, expected_sql",
+    [
+        pytest.param(
+            "Head(Filter([Customer].[Region].Members, "
+            "[Measures].[Sum Qty] > 31000), 2)",
+            "[Customer].[Region]",
+            f"SELECT r_name FROM ({_BY_REGION}) WHERE q > 31000 "
+            "ORDER BY r_name LIMIT 2",
+            id="head_filter",
+        ),
+        pytest.param(
+            "TopCount(Filter([Customer].[Region].Members, "
+            "[Measures].[Sum Qty] < 31000), 2, [Measures].[Sum Qty])",
+            "[Customer].[Region]",
+            f"SELECT r_name FROM ({_BY_REGION}) WHERE q < 31000 "
+            "ORDER BY q DESC, r_name LIMIT 2",
+            id="topcount_filter",
+        ),
+        pytest.param(
+            "Tail(Order([Customer].[Region].Members, [Measures].[Sum Qty], "
+            "BDESC), 2)",
+            "[Customer].[Region]",
+            f"SELECT r_name FROM ({_BY_REGION}) ORDER BY q, r_name DESC LIMIT 2",
+            id="tail_order_bdesc",
+        ),
+        pytest.param(
+            "Subset(Order([Customer].[Region].Members, [Measures].[Sum Qty], "
+            "BDESC), 1, 2)",
+            "[Customer].[Region]",
+            f"SELECT r_name FROM ({_BY_REGION}) ORDER BY q DESC, r_name "
+            "LIMIT 2 OFFSET 1",
+            id="subset_order_bdesc",
+        ),
+        pytest.param(
+            "Except({[Time].[1995], [Time].[1995].[Q1], [Time].[1996]}, "
+            "{[Time].[1995]})",
+            "[Time].[Quarter]",
+            f"{_QUARTERS} WHERE year(o_orderdate) = 1996 "
+            "OR (year(o_orderdate) = 1995 AND quarter(o_orderdate) = 1)",
+            id="except_mixed_depth",
+        ),
+        pytest.param(
+            "Head(Order([Customer].[Nation].Members, [Measures].[Sum Qty], "
+            "DESC), 3)",
+            "[Customer].[Nation]",
+            f"SELECT r_name, n_name FROM ({_BY_NATION}) "
+            "ORDER BY r_name, q DESC, n_name LIMIT 3",
+            id="head_order_desc_parents_first",
+        ),
+    ],
+)
+def test_set_chain_picks_the_same_members_in_every_position(
+    engine, duck, chain, level, expected_sql
+):
+    """A set's op chain picks the same members on rows, on rows crossed
+    with members on columns, as a CROSSJOIN argument and as the second
+    set of Exists(<level>.Members, <set>), and they are DuckDB's answer:
+    each op runs on the previous op's output, TAIL counts back from the
+    end of the set's current order, EXCEPT removes the exact member only,
+    and ORDER DESC keeps parents first."""
+    from mondrian_olap_spark.mdx import execute_mdx
+
+    every = [tuple(map(str, t)) for t in duck.execute(_LEVEL_MEMBERS[level]).fetchall()]
+    not_members = {m.out for m in engine.cube.measures} | {"return_flag"}
+
+    def covered(rows) -> set:
+        """The level members the picked members cover: a member is its
+        key path, a shallower one has NULL in the deeper columns."""
+        out = set()
+        for row in rows:
+            d = row.asDict()
+            path = tuple(
+                str(v) for k, v in d.items()
+                if k not in not_members and v is not None
+            )
+            out |= {t for t in every if t[: len(path)] == path}
+        return out
+
+    expected = {tuple(map(str, t)) for t in duck.execute(expected_sql).fetchall()}
+    expected = {t for t in every if any(t[: len(e)] == e for e in expected)}
+    measure = "[Measures].[Sum Qty]"
+    flags = "[ReturnFlag].[ReturnFlag].Members"
+    for columns, rows in (
+        (measure, chain),
+        (f"CrossJoin({{{measure}}}, {flags})", chain),
+        (measure, f"CrossJoin({flags}, {chain})"),
+        (measure, f"Exists({level}.Members, {chain})"),
+    ):
+        mdx = f"SELECT {columns} ON COLUMNS, {rows} ON ROWS FROM [Sales]"
+        assert covered(execute_mdx(engine, mdx).df.collect()) == expected, mdx
+
+
 def test_builder_setexpr_surface(engine):
     """SetExpr is the builder-level computed-set argument (the package
     exports it): exists_/except_ accept one directly — reference-style

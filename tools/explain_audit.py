@@ -1008,7 +1008,28 @@ def main() -> int:
         f"plan: {p[:400]}",
     )
 
-    # 50. resident cache-hit read: once a hit has moved a grid to the
+    # 50. a nested set's op chain is ONE computed set: a CROSSJOIN argument
+    #     Head(Filter(...)) plans one set sub-aggregate (2 lineitem scans:
+    #     the grid's + the set's) and one semi-join, not one per op
+    eng.flush_schema_cache()  # scan counts need a cold aggregate cache
+    r = execute_mdx(
+        eng,
+        "SELECT [Measures].[Sum Qty] ON COLUMNS, "
+        "CrossJoin([ReturnFlag].[ReturnFlag].Members, "
+        "  Head(Filter([Customer].[Region].Members, "
+        "       [Measures].[Sum Qty] > 31000), 2)) "
+        "ON ROWS FROM [Sales]",
+    )
+    p = plan_str(r.df)
+    n_scans = len(fact_scan_lines(p, "lineitem"))
+    n_semis = sum("LeftSemi" in line for line in p.splitlines())
+    check(
+        "nested_set.one_subaggregate_one_semi_join",
+        n_scans == 2 and n_semis == 1,
+        f"{n_scans} lineitem scans (want 2), {n_semis} semi-joins (want 1)",
+    )
+
+    # 51. resident cache-hit read: once a hit has moved a grid to the
     #     driver, a read whose axis sort sits directly over those local
     #     rows (Sort <- LocalRelation) is sorted in the JVM and executes
     #     as a bare LocalTableScan, with no Sort, Coalesce or Exchange
