@@ -14,9 +14,11 @@ share one planner:
   ``.Children``, ``CROSSJOIN`` / ``NONEMPTYCROSSJOIN``, ``FILTER``,
   ``ORDER``, ``TOPCOUNT`` / ``BOTTOMCOUNT`` / ``TOPPERCENT`` / ``TOPSUM``
   (+ BOTTOM variants), ``EXCEPT``, ``DISTINCT``, ``HIERARCHIZE``
-* value expressions over measures with arithmetic / comparisons / CASE-less
-  boolean logic, ``Parameter("name", TYPE, default)`` and
-  ``ParamRef("name")`` (``test/schema_definition_test.rb:1298-1427``).
+* value expressions, parsed once into a formula tree (``_Node``) and
+  lowered by one visitor to Spark SQL: arithmetic, comparisons, boolean
+  logic, CASE, MATCHES, tuples and measure references, the object
+  accessors, ``Parameter("name", TYPE, default)`` and ``ParamRef("name")``
+  (``test/schema_definition_test.rb:1298-1427``).
 
 Parse errors raise :class:`MdxError` carrying the offending fragment
 (error-path parity: ``test/query_test.rb:761-803``).
@@ -26,7 +28,7 @@ from __future__ import annotations
 
 import re
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, field, replace
 
 from .members import (
     _NAV_SUFFIXES,
@@ -89,46 +91,66 @@ class Tok:
     kind: str
     text: str
     pos: int
+    #: where the token's source ends when it stands for more than its own
+    #: text: a folded ``Dimensions(n)`` or a spliced ``StrToMember`` call
+    stop: int | None = None
+
+    @property
+    def end(self) -> int:
+        return self.pos + len(self.text) if self.stop is None else self.stop
 
 
-def _splice_strtomember(toks: list[Tok]) -> list[Tok]:
-    """``StrToMember('[A].[B]')`` → the member's own tokens spliced inline
-    (jar!mondrian/olap/fun/StrToMemberFunDef).  With a literal argument —
-    the whole subset, since formulas have no string variables — the call
-    is a parse-time constant, so the splice makes the spelling valid
-    ANYWHERE a member expression is: slicer, axis, tuple and set
-    positions all see the plain identifier.  Non-literal arguments pass
-    through and fail loudly at the ordinary parse site."""
+def _fold_calls(toks: list[Tok], names: tuple, fold) -> list[Tok]:
+    """Each one-argument call ``name(<token>)`` in ``toks``, ``name`` one
+    of ``names`` and not a ``.name(`` accessor, replaced by the tokens
+    ``fold(<token>)`` returns, spanning the whole call; a None return
+    keeps the call."""
     out: list[Tok] = []
     i = 0
     while i < len(toks):
         t = toks[i]
+        new = None
         if (
-            t.kind == "word"
-            and t.text.lower() == "strtomember"
-            and i + 3 < len(toks)
-            and toks[i + 1].text == "("
-            and toks[i + 2].kind == "string"
-            and toks[i + 3].text == ")"
+            t.kind == "word" and t.text.lower() in names and i + 3 < len(toks)
+            and toks[i + 1].text == "(" and toks[i + 3].text == ")"
+            and not (out and out[-1].text == ".")
         ):
-            out.extend(
-                _shift_toks(
-                    tokenize(_unquote(toks[i + 2].text)),
-                    toks[i + 2].pos + 1,
-                )
-            )
-            i += 4
+            new = fold(toks[i + 2])
+        if new is None:
+            out.append(t)
+            i += 1
             continue
-        out.append(t)
-        i += 1
+        if new:
+            new[0] = replace(new[0], pos=t.pos, stop=new[0].end)
+            new[-1] = replace(new[-1], stop=toks[i + 3].end)
+        out.extend(new)
+        i += 4
     return out
+
+
+def _splice_strtomember(toks: list[Tok]) -> list[Tok]:
+    """``StrToMember('[A].[B]')`` / ``StrToTuple('(…)')`` → the member's
+    or tuple's own tokens spliced inline (jar!mondrian/olap/fun/
+    StrToMemberFunDef, StrToTupleFunDef).  With a literal argument — the
+    whole subset, since formulas have no string variables — the call is a
+    parse-time constant, so the splice makes the spelling valid ANYWHERE
+    a member or tuple is: slicer, axis, tuple, set and value positions
+    all see the plain identifier.  Non-literal arguments pass through and
+    fail loudly at the ordinary parse site."""
+    return _fold_calls(toks, ("strtomember", "strtotuple"), lambda a: (
+        _shift_toks(tokenize(_unquote(a.text)), a.pos + 1)
+        if a.kind == "string" else None
+    ))
 
 
 def _shift_toks(toks: list[Tok], base: int) -> list[Tok]:
     """Re-base token positions of a nested string's tokens onto the OUTER
     statement (base = offset of the string content), so syntax-error
     line/column diagnostics point at the real location."""
-    return [Tok(t.kind, t.text, base + t.pos) for t in toks]
+    return [
+        Tok(t.kind, t.text, base + t.pos, t.stop and base + t.stop)
+        for t in toks
+    ]
 
 
 def tokenize(s: str) -> list[Tok]:
@@ -150,6 +172,72 @@ def tokenize(s: str) -> list[Tok]:
             out.append(Tok(kind, m.group(), i))
         i = m.end()
     return out
+
+
+# ---------------------------------------------------------- formula tree
+@dataclass(eq=False)
+class _Node:
+    """One node of a parsed formula (:meth:`MdxParser._expr`).  ``kind``:
+
+    * ``lit`` — a number or string literal (``op`` is the token kind);
+    * ``ref`` — an identifier chain ``[A].[B]``, or a bare word; ``op`` is
+      its canonical text, ``segs`` its segment names;
+    * ``tuple`` — a parenthesized list (one item: a grouping);
+    * ``set`` — a ``{…}`` span, read by :meth:`MdxParser.parse_set` where
+      it is used;
+    * ``call`` — ``Name(args)``;
+    * ``access`` — ``<kids[0]>.Name`` (``.UniqueName``, ``.CurrentMember``,
+      ``.Item(i)``, ``.Properties('x')``…), any arguments after the object;
+    * ``unary`` — NOT, EXISTING, ``-``, ``+``;
+    * ``binary`` — arithmetic, comparison, AND/OR/XOR, ``[NOT] MATCHES``,
+      IS, AS, ``:``;
+    * ``case`` — kids: the selector or None, WHEN/THEN pairs, ELSE or None.
+
+    ``op`` is the call, accessor or operator name, lower case, and
+    ``text[start:end]`` the node's source."""
+
+    kind: str
+    text: str
+    start: int
+    end: int
+    op: str = ""
+    kids: list = field(default_factory=list)
+    segs: tuple = ()
+
+    @property
+    def src(self) -> str:
+        return self.text[self.start : self.end]
+
+
+#: binary operator → binding power, tighter binding higher: MDX's order
+#: (OR, AND, NOT, comparisons with MATCHES, + -, * /), with ``AS``
+#: (``Filter({…} AS S, …)``, ``CAST(x AS DOUBLE)``) loosest and the ``:``
+#: range tightest
+_BINARY = {
+    "as": 1, "or": 2, "and": 3,
+    "=": 5, "<>": 5, "<": 5, ">": 5, "<=": 5, ">=": 5, "matches": 5,
+    "+": 6, "-": 6, "*": 7, "/": 7, ":": 8,
+}
+#: NOT's operand is a comparison, not a conjunction; a sign's or
+#: EXISTING's, one primary
+_NOT_BP, _UNARY_BP = 4, 9
+#: words that are syntax, never an operand
+_KEYWORDS = {"as", "or", "and", "matches", "not", "case", "when", "then",
+             "else", "end"}
+
+
+def _bp(n: "_Node") -> int:
+    """How tightly ``n``'s own operator binds (a primary: tightest)."""
+    if n.kind == "binary" and not n.op.endswith("matches"):
+        return _BINARY[n.op]
+    if n.kind == "unary":
+        return _NOT_BP if n.op == "not" else _UNARY_BP
+    return _UNARY_BP + 1
+
+
+#: the VALUE calls the visitor lowers itself → (fewest, most) arguments
+_ARITY = {"iif": (3, 3), "coalesceempty": (1, None), "cache": (1, 1),
+          "isdirty": (0, 0)}
 
 
 # ----------------------------------------------------------------- parser
@@ -255,7 +343,6 @@ _SETSTAT = {
 _OPAQUE = _SEG + "|" + _LITERAL
 _ARG_RE = re.compile(_OPAQUE + r"|[(){},]")
 _CALL_RE = re.compile(_OPAQUE + r"|\b([A-Za-z_]\w*+)\s*\(|[()]")
-_PAREN_RE = re.compile(_OPAQUE + r"|[()]")
 #: every ``NAME(``, literals and identifiers not stepped over
 _CALL_NAME_RE = re.compile(r"\b([A-Za-z_]\w*+)\s*\(")
 
@@ -341,34 +428,6 @@ def _call_args(text: str, name: str) -> list[str] | None:
     if close == len(text) or text[close + 1 :].strip():
         return None
     return split_args(inner)
-
-
-def _code_re(pattern: str, flags) -> re.Pattern:
-    """``pattern`` or, failing it at a position, a whole string literal or
-    ``[...]`` identifier (group ``_opaque``): a match of ``pattern`` then
-    starts in code — never inside a literal or identifier, though at its
-    opening quote or ``[`` — and may run over one (an operand)."""
-    return re.compile(f"(?:{pattern})|(?P<_opaque>{_OPAQUE})", flags)
-
-
-def sub_code(pattern: str, repl, text: str, flags=0) -> str:
-    """``re.sub`` over formula text: only the matches of ``pattern`` that
-    start in code (:func:`_code_re`) become ``repl(match)``."""
-    return _code_re(pattern, flags).sub(
-        lambda m: m.group() if m.group("_opaque") else repl(m), text
-    )
-
-
-def search_code(pattern: str, text: str, flags=0) -> re.Match | None:
-    """The first match of ``pattern`` that starts in code, or None."""
-    return next(
-        (
-            m
-            for m in _code_re(pattern, flags).finditer(text)
-            if m.group("_opaque") is None
-        ),
-        None,
-    )
 
 
 def _canon(text: str) -> str:
@@ -515,10 +574,12 @@ def lower_member_properties(text, cube, level_of, spark, error=MdxError):
         if p.group(3):
             inner, close = _scan(text, p.end(), {}, True)
             if close < len(text):
-                stop, args = close + 1, inner
+                stop, args = close + 1, inner.strip()
         lv = level_of(dim)
         name_col = f"cast({lv.out} as string)"
         prop = p.group(2)
+        if prop.lower() == "properties" and re.fullmatch(_LITERAL, args):
+            prop, args = _unquote(args), ""  # .Properties('X') names X
         if prop.lower() == "name":
             sql = name_col
         elif prop.lower() == "caption":
@@ -940,8 +1001,8 @@ def _val(x):
     )
 
 
-#: lower-case VBA/Excel name → arity + builder; applied by
-#: :func:`rewrite_calls` (MdxParser.translate_expression_text)
+#: lower-case VBA/Excel name → arity + builder, applied to a call's
+#: lowered arguments (MdxParser._lower_call)
 _VBA_EXCEL: dict[str, _Fn] = {
     # same arguments, another Spark name; DateSerial(y, m, d) → DATE
     # (mondrian_test.rb:526 CoalesceEmpty fallback)
@@ -1065,13 +1126,18 @@ class MdxParser:
         self.engine = engine
         self.cube = engine.cube
         self.src = mdx
-        self.toks = _splice_strtomember(tokenize(mdx))
+        #: the text the tokens were read from and its offset in ``src``:
+        #: formula nodes slice ``text``, syntax errors point into ``src``
+        self.text, self.base = mdx, 0
+        self.toks = self._tokens(mdx)
         self.i = 0
         self.q = Query(engine)
-        #: WITH MEMBER [Measures] name (lower case) → its formula as
-        #: written; Generate's string form translates an inlined formula
-        #: again, and MDX, unlike the formula's SQL, lowers exactly once
-        self._with_mdx: dict[str, str] = {}
+        #: WITH MEMBER [Measures] name (lower case) → its parsed formula;
+        #: Generate's string form lowers an inlined formula's tree again
+        self._with_mdx: dict[str, _Node] = {}
+        #: while Generate lowers its expression: the WITH members it
+        #: inlines (name → tree) — their CurrentMember binds to the set
+        self._inline: dict[str, _Node] | None = None
         self.params = dict(parameters or {})
         self.defined_params: dict[str, object] = {}
         # schema-declared parameters: type + modifiability enforced on
@@ -1111,7 +1177,6 @@ class MdxParser:
         #: dependency order once the WITH clause closes (forward
         #: references between aggregate members are legal in Mondrian)
         self._dim_member_defs: list[tuple[str, list[str], object]] = []
-        self._rewrite_dimensions_calls()
 
     def _dimension_by_index_or_name(self, arg: int | str) -> str:
         """``Dimensions(n)`` / ``Dimensions('name')`` resolution
@@ -1131,45 +1196,26 @@ class MdxParser:
                 return d
         raise MdxError(f"Dimensions({arg!r}): no such dimension")
 
-    def _rewrite_dimensions_calls(self) -> None:
-        """Fold ``Dimensions(n)`` / ``Dimensions('name')`` calls in the
-        token stream into the named dimension's bracketed identifier, so
-        every downstream position (axis sets, suffix navigation,
-        expressions) sees an ordinary dimension reference."""
-        out: list[Tok] = []
-        i = 0
-        toks = self.toks
-        while i < len(toks):
-            t = toks[i]
-            if (
-                t.kind == "word"
-                and t.text.lower() == "dimensions"
-                and i + 3 < len(toks)
-                and toks[i + 1].text == "("
-                and toks[i + 3].text == ")"
-                and not (out and out[-1].text == ".")
-            ):
-                argt = toks[i + 2]
-                if argt.kind == "number":
-                    if "." in argt.text:
-                        raise MdxError(
-                            f"Dimensions({argt.text}): index must be an integer"
-                        )
-                    name = self._dimension_by_index_or_name(int(argt.text))
-                elif argt.kind == "string":
-                    name = self._dimension_by_index_or_name(_unquote(argt.text))
-                else:
-                    raise MdxError(
-                        "Dimensions() takes a numeric index or a quoted name"
-                    )
-                out.append(
-                    Tok("bracket", "[" + name.replace("]", "]]") + "]", t.pos)
-                )
-                i += 4
-                continue
-            out.append(t)
-            i += 1
-        self.toks = out
+    def _tokens(self, text: str, base: int = 0) -> list[Tok]:
+        """``text``'s tokens at offset ``base``, the parse-time constant
+        calls folded: ``StrToMember('…')`` to the member's tokens and
+        ``Dimensions(n)`` / ``Dimensions('name')`` to the dimension's
+        identifier, so every position — axis sets, suffix navigation,
+        expressions — reads an ordinary reference."""
+        return _fold_calls(
+            _splice_strtomember(_shift_toks(tokenize(text), base)),
+            ("dimensions",), self._dimension_token,
+        )
+
+    def _dimension_token(self, arg: Tok) -> list[Tok]:
+        if arg.kind == "number" and "." in arg.text:
+            raise MdxError(f"Dimensions({arg.text}): index must be an integer")
+        if arg.kind not in ("number", "string"):
+            raise MdxError("Dimensions() takes a numeric index or a quoted name")
+        name = self._dimension_by_index_or_name(
+            int(arg.text) if arg.kind == "number" else _unquote(arg.text)
+        )
+        return [Tok("bracket", "[" + name.replace("]", "]]") + "]", arg.pos)]
 
     # -- token helpers -------------------------------------------------
     def peek(self, k: int = 0) -> Tok | None:
@@ -1178,6 +1224,8 @@ class MdxParser:
     def next(self) -> Tok:
         t = self.peek()
         if t is None:
+            if self.toks:
+                raise self._syntax_error(self.toks[-1], "more after it")
             raise MdxError("unexpected end of MDX")
         self.i += 1
         return t
@@ -1185,7 +1233,7 @@ class MdxParser:
     def _syntax_error(self, t: Tok, expected: str) -> MdxError:
         # the reference's parse-error root cause names line/column/token
         # (query_test.rb:766-772)
-        line, col = _line_col(self.src, t.pos)
+        line, col = _line_col(self.src if self.base else self.text, t.pos)
         return MdxError(
             f"expected {expected} at {t.pos}, got {t.text!r}",
             root_cause=(
@@ -1427,17 +1475,14 @@ class MdxParser:
         self._defining_measure = name_segs[1]
         try:
             if t.kind == "string":
-                formula = _unquote(t.text)
-                expr_sql = self.translate_expression_text(formula)
-            else:
-                # unquoted expression form: re-parse from this token
+                tree = self._over(_unquote(t.text))._formula()
+            else:  # the unquoted form: the expression at this token
                 self.i -= 1
-                start = self.i
-                expr_sql = self.parse_value_expression()
-                formula = " ".join(x.text for x in self.toks[start : self.i])
+                tree = self._expr()
+            expr_sql = self._lower(tree)
         finally:
             self._defining_measure = None
-        self._with_mdx[name_segs[1].lower()] = formula
+        self._with_mdx[name_segs[1].lower()] = tree
         solve_order = 0
         format_string = None
         while self.at_op(","):
@@ -1800,27 +1845,6 @@ class MdxParser:
             self.q.nonempty()
 
     def parse_where(self):
-        if (
-            self.at_word("strtotuple")
-            and self.peek(1) is not None
-            and self.peek(1).text == "("
-        ):
-            # StrToTuple("(…)") in the slicer (jar!mondrian/olap/fun/
-            # StrToTupleFunDef; completes the StrToSet/SetToStr/TupleToStr
-            # string-bridge family): splice the string's tokens in and let
-            # the ordinary tuple parsing below consume them
-            self.next()
-            self.expect_op("(")
-            st = self.next()
-            if st.kind != "string":
-                raise MdxError("StrToTuple takes a quoted tuple string")
-            self.expect_op(")")
-            self.toks = (
-                self.toks[: self.i]
-                + _shift_toks(tokenize(_unquote(st.text)), st.pos + 1)
-                + self.toks[self.i :]
-            )
-
         def one() -> str:
             m, op = self._braced_member_nav(self.parse_member_string())
             if op is not None:
@@ -2189,8 +2213,8 @@ class MdxParser:
         if low.endswith(".firstsibling") or low.endswith(".lastsibling"):
             return _SetBuild(base=[self._edge_of(first, 2, low.endswith(".lastsibling"))], member=True)
         if low.endswith(".siblings"):
-            if _on_current([first]):  # no fixed parent to list
-                raise MdxError(f"{first!r}: Siblings of a CurrentMember is not supported in this subset")
+            if _on_current([first]):  # no fixed parent, like .Children
+                return _SetBuild(base=[first])
             segs = _strip_segments(first, 2)  # keyword + own key
             base = format_name(segs) if len(segs) > 1 else quote_segment(segs[0])
             return _SetBuild(base=[f"{base}.Children"])
@@ -2246,8 +2270,8 @@ class MdxParser:
         at the real location."""
         inner = MdxParser.__new__(MdxParser)
         inner.__dict__.update(self.__dict__)
-        inner.toks = _splice_strtomember(_shift_toks(tokenize(text), base))
-        inner.i = 0
+        inner.toks = self._tokens(text, base)
+        inner.i, inner.text, inner.base = 0, text, base
         return inner
 
     def _set_at_cursor(self) -> "_SetBuild | None":
@@ -2261,18 +2285,26 @@ class MdxParser:
             return None
         return None if sb.member else sb
 
-    def _formula_set(self, text: str) -> "_SetBuild | None":
-        """``text``, a set written inside a formula, read by
-        :meth:`_set_at_cursor`; None when ``text`` is not one whole set or
-        its members depend on the current member (:func:`_on_current`) —
-        a formula reads a set's members once, at parse time."""
+    def _formula_set(
+        self, text: str, where: str = "a set statistic"
+    ) -> "_SetBuild | None":
+        """``text``, a set written inside a formula (an argument of
+        ``where``), read by :meth:`_set_at_cursor`; None when ``text`` is
+        not one whole set.  A formula reads a set's members once, at parse
+        time, so a set whose members depend on the current member
+        (:func:`_on_current`) is an error."""
         try:
             p = self._over(text)
         except MdxError:
             return None
         sb = p._set_at_cursor()
-        if sb is None or p.peek() is not None or _on_current(sb.base):
+        if sb is None or p.peek() is not None:
             return None
+        if _on_current(sb.base):
+            raise MdxError(
+                "a set that depends on the current member is not supported "
+                f"in {where} in this subset: {text}"
+            )
         return sb
 
     def _crossjoined_members(self) -> "list[str] | None":
@@ -2966,465 +2998,590 @@ class MdxParser:
 
     # -- value expressions --------------------------------------------
     def parse_value_expression(self) -> str:
-        """Parse an expression until an unbalanced ')' or a top-level ','
-        and translate it to Spark SQL over measure output aliases."""
-        depth = 0
-        parts: list[str] = []
-        while True:
-            t = self.peek()
-            if t is None:
-                break
-            if t.kind == "op" and t.text == "(":
-                depth += 1
-            elif t.kind == "op" and t.text == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif t.kind == "op" and t.text == "," and depth == 0:
-                break
-            parts.append(self.next().text)
-        if not parts:
+        """The value expression at the cursor, parsed into a formula tree
+        (:meth:`_expr`) up to the first token that cannot continue it — a
+        closing ``)``, a top-level ``,``, the next clause — and lowered
+        to Spark SQL over measure output aliases (:meth:`_lower`)."""
+        return self._lower(self._expr())
+
+    def _formula(self) -> _Node:
+        """The whole token list as one expression: a token left over is a
+        syntax error naming it."""
+        if not self.toks:
             raise MdxError("empty expression")
-        return self.translate_expression_text(" ".join(parts))
+        node = self._expr()
+        if self.peek() is not None:
+            raise self._syntax_error(self.peek(), "an operator or the end")
+        return node
 
-    def _object_accessor_literal(self, ident: str, obj: str, prop: str) -> str | None:
+    def _expr(self, floor: int = 0) -> _Node:
+        """Precedence climbing: the operand at the cursor, then every
+        binary operator (:data:`_BINARY`) binding at least ``floor``."""
+        left = self._prefix()
+        while (t := self.peek()) is not None and t.kind in ("op", "word"):
+            op = t.text.lower()
+            if op == "not" and (n := self.peek(1)) is not None and (
+                n.kind == "word" and n.text.lower() == "matches"
+            ):
+                op = "not matches"
+            bp = _BINARY.get(op.removeprefix("not "))
+            if bp is None or bp < floor:
+                break
+            self.i += len(op.split())
+            right = self._expr(bp + 1)
+            left = _Node(
+                "binary", self.text, left.start, right.end, op, [left, right]
+            )
+        return left
+
+    def _prefix(self) -> _Node:
+        t = self.next()
+        op = t.text.lower() if t.kind in ("op", "word") else ""
+        if op in ("not", "existing", "-", "+"):
+            arg = self._expr(_NOT_BP if op == "not" else _UNARY_BP)
+            return _Node(
+                "unary", self.text, t.pos - self.base, arg.end, op, [arg]
+            )
+        self.i -= 1
+        return self._postfix(self._primary())
+
+    def _primary(self) -> _Node:
+        t = self.next()
+        start = t.pos - self.base
+        if t.kind in ("number", "string"):
+            return _Node("lit", self.text, start, t.end - self.base, t.kind)
+        if t.kind == "word" and t.text.lower() == "case":
+            return self._case(t)
+        name = t.kind == "word" and t.text.lower() not in _KEYWORDS
+        if name and self.at_op("("):
+            self.next()
+            args = self._args(t, ")")
+            return _Node(
+                "call", self.text, start, self._end(), t.text.lower(), args
+            )
+        if name or t.kind == "bracket":
+            toks = [t]
+            while self.at_op(".") and (n := self.peek(1)) is not None and (
+                n.kind == "bracket"
+            ):
+                self.i += 2
+                toks.append(n)
+            return _Node(
+                "ref", self.text, start, toks[-1].end - self.base,
+                ".".join(x.text for x in toks), segs=tuple(map(_segment, toks)),
+            )
+        if t.text == "(":
+            items = self._args(t, ")")
+            if not items:
+                raise self._syntax_error(t, "an expression inside '()'")
+            return _Node("tuple", self.text, start, self._end(), kids=items)
+        if t.text == "{":  # read as a set where it is used
+            depth = 1
+            while depth:
+                u = self.peek()
+                if u is None:
+                    raise self._syntax_error(t, "a closing '}' for it")
+                self.i += 1
+                depth += {"{": 1, "}": -1}.get(u.text, 0) if u.kind == "op" else 0
+            return _Node("set", self.text, start, self._end())
+        raise self._syntax_error(t, "an expression")
+
+    def _end(self) -> int:
+        """The end of the last token read, in ``text``."""
+        return self.toks[self.i - 1].end - self.base
+
+    def _close(self, opener: Tok, word: str) -> None:
+        """Step over ``word`` (``)``, THEN, END…), which ``opener`` needs;
+        at the end of the tokens, a syntax error naming ``opener``."""
+        t = self.peek()
+        if t is None:
+            raise self._syntax_error(opener, f"{word!r} to follow it")
+        if not self._skip(word):
+            raise self._syntax_error(t, repr(word))
+
+    def _skip(self, word: str) -> bool:
+        """Step over ``word`` when it is next."""
+        t = self.peek()
+        if t is None or t.kind not in ("op", "word") or t.text.lower() != word:
+            return False
+        self.i += 1
+        return True
+
+    def _args(self, opener: Tok, close: str) -> list[_Node]:
+        """The comma-separated expressions up to ``opener``'s close."""
+        args: list[_Node] = []
+        if not self.at_op(close):
+            args.append(self._expr())
+            while self.at_op(","):
+                self.next()
+                args.append(self._expr())
+        self._close(opener, close)
+        return args
+
+    def _postfix(self, node: _Node) -> _Node:
+        """``node`` followed by its accessors: ``.Name``,
+        ``.CurrentMember``, ``.Item(i)``, ``.Properties('x')``…"""
+        while self.at_op("."):
+            self.next()
+            t = self.next()
+            if t.kind not in ("word", "bracket"):
+                raise self._syntax_error(t, "a member, property or function")
+            args = []
+            if t.kind == "word" and self.at_op("("):
+                self.next()
+                args = self._args(t, ")")
+            node = _Node(
+                "access", self.text, node.start, self._end(),
+                _segment(t).lower(), [node, *args],
+            )
+        return node
+
+    def _case(self, case: Tok) -> _Node:
+        """``CASE [selector] WHEN … THEN … [ELSE …] END``."""
+        kids = [None if self.at_word("when") else self._expr()]
+        self._close(case, "when")
+        while True:
+            kids.append(self._expr())
+            self._close(case, "then")
+            kids.append(self._expr())
+            if not self._skip("when"):
+                break
+        kids.append(self._expr() if self._skip("else") else None)
+        self._close(case, "end")
+        return _Node(
+            "case", self.text, case.pos - self.base, self._end(), "case", kids
+        )
+
+    def _object_accessor_literal(
+        self, segs: tuple, via: str, prop: str
+    ) -> str | None:
         """Fold ``X[.Dimension|.Hierarchy|.Level].Name/UniqueName/Caption/
-        Ordinal`` to a SQL literal.  ``X`` may be a member path, a level
-        identifier, a bare dimension, or a measure reference — all static
-        metadata.  Returns ``None`` when the identifier doesn't resolve
-        (the expression is left untouched for later passes)."""
-        def s(lit: str) -> str:
-            return "'" + lit.replace("'", "''") + "'"
-
-        def uname(segs: list[str]) -> str:
-            return format_name(segs)
-
-        try:
-            segs = parse_identifier(ident)
-        except Exception:
-            return None
+        Ordinal`` to a SQL literal.  ``X`` (``segs``) may be a member path,
+        a level identifier, a bare dimension, or a measure reference — all
+        static metadata.  None when X names nothing foldable: the accessor
+        stays as written."""
+        path = list(segs[1:])
+        caption = level = None
         if segs[0].lower() == "measures":
-            # the Measures dimension: its single level is named
-            # "MeasuresLevel" in Mondrian
-            if len(segs) >= 2 and segs[1].lower() == "measureslevel":
-                if len(segs) == 2:
-                    if obj in ("dimension", "hierarchy"):
-                        return {
-                            "name": s("Measures"),
-                            "uniquename": s("[Measures]"),
-                            "caption": s("Measures"),
-                        }.get(prop)
-                    # the level identifier itself — fold its own props
-                    return {
-                        "name": s("MeasuresLevel"),
-                        "uniquename": s("[Measures].[MeasuresLevel]"),
-                        "caption": s("MeasuresLevel"),
-                        "ordinal": "0",
-                    }.get(prop)
-                # [Measures].[MeasuresLevel].[X]… → the measure X's
-                # level-qualified unique-name form; drop the level segment
-                segs = [segs[0]] + segs[2:]
-            if len(segs) == 2:
+            # the Measures dimension's one level is "MeasuresLevel";
+            # [Measures].[MeasuresLevel].[X] is X's level-qualified form
+            if path and path[0].lower() == "measureslevel":
+                via = via or ("" if path[1:] else "level")
+                del path[0]
+            if len(path) > 1:
+                return None
+            name = dim_caption = "Measures"
+            if via == "level":
+                level = ("MeasuresLevel", "MeasuresLevel", 0)
+            if path:
                 # validate existence BEFORE folding any chain — a typo'd
                 # measure must raise not-found, not produce a plausible
                 # constant (query_test.rb:774-781)
                 try:
-                    self.cube.measure(segs[1])
+                    measure = self.cube.measure(path[0])
                 except KeyError:
+                    measure = None
                     if not any(
-                        cm.name.lower() == segs[1].lower()
-                        for cm in self.q._with
+                        cm.name.lower() == path[0].lower() for cm in self.q._with
                     ):
                         raise MdxError(
-                            f"MDX object '[Measures].{quote_segment(segs[1])}'"
+                            f"MDX object '[Measures].{quote_segment(path[0])}'"
                             f" not found in cube '{self.cube.name}'"
                         ) from None
-            elif len(segs) > 2:
+                caption = getattr(measure, "caption", None) or path[0]
+        else:
+            try:
+                dim = self.cube.dimension(segs[0])
+            except KeyError:
                 return None
-            if obj in ("dimension", "hierarchy"):
-                return {
-                    "name": s("Measures"),
-                    "uniquename": s("[Measures]"),
-                    "caption": s("Measures"),
-                }.get(prop)
-            if obj == "level":
-                return {
-                    "name": s("MeasuresLevel"),
-                    "uniquename": s("[Measures].[MeasuresLevel]"),
-                    "caption": s("MeasuresLevel"),
-                    "ordinal": "0",
-                }.get(prop)
-            if len(segs) == 1:  # bare [Measures] dimension reference
-                return {
-                    "name": s("Measures"),
-                    "uniquename": s("[Measures]"),
-                    "caption": s("Measures"),
-                }.get(prop)
-            if len(segs) == 2 and prop in ("name", "uniquename", "caption"):
-                # existence was already validated above — only the cube
-                # lookup (None for query-scoped WITH members) is needed
-                # for the declared caption
-                try:
-                    measure = self.cube.measure(segs[1])
-                except KeyError:
-                    measure = None  # a validated WITH member
-                if prop == "uniquename":
-                    return s(uname(segs))
-                if prop == "caption":
-                    cap = getattr(measure, "caption", None)
-                    return s(cap or segs[1])
-                return s(segs[1])
-            return None
-        try:
-            dim = self.cube.dimension(segs[0])
-        except KeyError:
-            return None
-        rest = segs[1:]
-        # classify: level identifier beats member path on name collision
-        # (Mondrian's resolution order)
-        level_idx: int | None = None
-        member_path: list[str] | None = None
-        if len(rest) == 1 and dim.level_index(rest[0]) is not None:
-            level_idx = dim.level_index(rest[0])
-        elif rest:
-            if len(rest) > len(dim.levels):
-                return None
-            member_path = rest
-            level_idx = len(rest) - 1
-        if member_path is not None:
-            # validate existence BEFORE folding anything, like the measure
-            # branch: [Customer].[Bogus].Name (or .Dimension.Name etc.)
-            # must raise the reference's member-not-found error, not fold
-            # to a plausible constant.  Query-scoped WITH members on this
-            # dimension are exempt — not in the data by construction.
-            # ≤1-row probe sharing level_members' visibility rules.
-            is_query_member = any(
-                dm[1].lower() == member_path[-1].lower()
-                for dm in self.q._dim_members
-            )
-            if not is_query_member:
-                # WITH entries parse in order, so a formula may reference a
-                # dimension calc member DEFINED LATER in the same clause —
-                # scan the raw statement for such a definition before
-                # probing the data (parse-order independence).  The scan is
-                # scoped to THIS dimension: a later [Measures] (or other-
-                # dimension) member with a colliding name must not exempt a
-                # typo'd member from the not-found error.
-                later_def = re.compile(
-                    r"(?is)\bmember\s+\[((?:[^\]]|\]\])*)\]"
-                    r"\s*\.\s*(?:\[(?:[^\]]|\]\])*\]\s*\.\s*)*\["
-                    + re.escape(member_path[-1])
-                    + r"\]\s*as\b"
-                )
-                want = dim.name.replace(".", "").lower()
-                for dm_match in later_def.finditer(
-                    getattr(self, "src", "") or ""
-                ):
-                    first = dm_match.group(1).replace("]]", "]")
-                    # secondary hierarchies are written [Dim.Hierarchy] but
-                    # the dimension object is the squashed name (TimeWeekly)
-                    # — compare through the same squashing rule
-                    if first.replace(".", "").lower() == want:
-                        is_query_member = True
-                        break
-            if not is_query_member and not self.engine.member_exists(
-                dim.name, level_idx, tuple(member_path)
-            ):
-                raise MdxError(
-                    f"MDX object '{uname([dim.name, *member_path])}' not "
-                    f"found in cube '{self.cube.name}'"
-                )
-        if obj in ("dimension", "hierarchy"):
-            return {
-                "name": s(dim.name),
-                "uniquename": s(uname([dim.name])),
-                "caption": s(getattr(dim, "caption", None) or dim.name),
-            }.get(prop)
-        if obj == "level":
-            if level_idx is None:
-                return None
-            lv = dim.levels[level_idx]
-            return {
-                "name": s(lv.name),
-                "uniquename": s(uname([dim.name, lv.name])),
+            name = dim.name
+            dim_caption = getattr(dim, "caption", None) or dim.name
+            # a level identifier beats a member path on a name collision
+            # (Mondrian's resolution order)
+            li = dim.level_index(path[0]) if len(path) == 1 else None
+            if li is not None:
+                path = []
+            elif path:
+                if len(path) > len(dim.levels):
+                    return None
+                li = len(path) - 1
+                self._check_member(dim, li, path)
+            if li is not None:
+                lv = dim.levels[li]
                 # the level's DISPLAY caption — lv.caption is the member-
                 # caption SQL expression and must never leak as a constant
-                "caption": s(lv.display_caption or lv.name),
-                "ordinal": str(level_idx),
-            }.get(prop)
-        # no object step: property directly on the identifier
-        if member_path is not None:
-            if prop == "caption":
-                lv = dim.levels[level_idx]
-                if lv.caption or lv.formatter or lv.caption_locales:
+                level = (lv.name, lv.display_caption or lv.name, li)
+                if path and not via and prop == "caption" and (
+                    lv.caption or lv.formatter or lv.caption_locales
+                ):
                     # member captions with a caption expression are DATA,
                     # not metadata — refuse to constant-fold a wrong value
                     raise MdxError(
-                        f"{ident}.Caption is data-dependent (the level "
-                        f"declares a caption expression); read it via "
-                        f"level_members(include_properties=True)"
+                        f"{format_name(segs)}.Caption is data-dependent (the "
+                        "level declares a caption expression); read it via "
+                        "level_members(include_properties=True)"
                     )
-                return s(member_path[-1])
-            # member .Ordinal is data-dependent (position within its level)
-            # — not a metadata constant, so leave it to raise loudly
-            return {
-                "name": s(member_path[-1]),
-                "uniquename": s(uname([dim.name, *member_path])),
-            }.get(prop)
-        if level_idx is not None:  # level identifier
-            lv = dim.levels[level_idx]
-            return {
-                "name": s(lv.name),
-                "uniquename": s(uname([dim.name, lv.name])),
-                "caption": s(lv.display_caption or lv.name),
-                "ordinal": str(level_idx),
-            }.get(prop)
-        # bare dimension reference
-        return {
-            "name": s(dim.name),
-            "uniquename": s(uname([dim.name])),
-            "caption": s(getattr(dim, "caption", None) or dim.name),
-        }.get(prop)
+            caption = path[-1] if path else None
+        if via in ("dimension", "hierarchy") or not (via or path or level):
+            props = {"name": name, "uniquename": format_name([name]),
+                     "caption": dim_caption}
+        elif via == "level" or not path:
+            if level is None:
+                return None
+            props = {"name": level[0], "caption": level[1],
+                     "uniquename": format_name([name, level[0]]),
+                     "ordinal": level[2]}
+        else:
+            # a member's .Ordinal is its position within its level: data,
+            # not a metadata constant — it stays as written
+            props = {"name": path[-1], "caption": caption,
+                     "uniquename": format_name([name, *path])}
+        v = props.get(prop)
+        return None if v is None else _sql_literal(v)
+
+    def _defined_later(self, dim: str, name: str) -> bool:
+        """The statement defines a member ``name`` of ``dim`` — WITH
+        entries parse in order, but a formula may reference a member
+        DEFINED LATER in the same clause (mondrian_test.rb:580-590).  A
+        secondary hierarchy is written [Dim.Hierarchy], its dimension
+        object is the squashed name (TimeWeekly)."""
+        later_def = (
+            r"(?is)\bmember\s+\[((?:[^\]]|\]\])*)\]"
+            r"\s*\.\s*(?:\[(?:[^\]]|\]\])*\]\s*\.\s*)*\["
+            + re.escape(name) + r"\]\s*as\b"
+        )
+        want = dim.replace(".", "").lower()
+        return any(
+            m.group(1).replace("]]", "]").replace(".", "").lower() == want
+            for m in re.finditer(later_def, self.src or "")
+        )
+
+    def _check_member(self, dim, li: int, path: list[str]) -> None:
+        """Raise the reference's member-not-found error unless ``path``
+        names a member of ``dim`` — before anything about it folds to a
+        plausible constant.  Query-scoped WITH members on the dimension
+        are exempt: not in the data by construction."""
+        if any(
+            dm[1].lower() == path[-1].lower() for dm in self.q._dim_members
+        ) or self._defined_later(dim.name, path[-1]):
+            return
+        # a ≤1-row probe sharing level_members' visibility rules
+        if not self.engine.member_exists(dim.name, li, tuple(path)):
+            raise MdxError(
+                f"MDX object '{format_name([dim.name, *path])}' not found in "
+                f"cube '{self.cube.name}'"
+            )
 
     def translate_expression_text(self, text: str) -> str:
         """MDX value expression → Spark SQL over output aliases.
 
-        The passes, in order: ``Parameter("p", TYPE, default)`` /
-        ``ParamRef("p")`` substitution, ``Dimensions(i)`` and
-        ``StrToTuple("…")``; CASE…END suffixes, object accessors and
-        ``.Properties('X')``; Aggregate, the set statistics,
-        SetToStr/TupleToStr and Generate; the VBA/Excel table; tuples,
-        ``[Measures].[X]`` references and MATCHES; CoalesceEmpty, Cache,
-        IsDirty and IIF.  A call-shaped construct is a
-        :func:`rewrite_calls` entry, any other a :func:`sub_code` regex,
-        so no pass looks inside a string literal — one of the input's or a
-        constant an earlier pass folded.  Arithmetic/boolean operators
-        pass through (AND/OR/NOT/CASE are shared syntax)."""
+        ``text`` is tokenized and parsed once (:meth:`_formula`, by
+        precedence climbing) into a :class:`_Node` tree of literals,
+        identifier refs, tuples, ``{…}`` sets, calls, member accesses
+        (``.Name``, ``.Item(i)``, ``.Properties('x')``, ``.CurrentMember``
+        …), unary and binary operators and CASE; a token left over or
+        missing is an MdxError naming it, its line and its column.  The
+        one visitor, :meth:`_lower`, then emits the SQL text the planner
+        reads (``references``, ``F.expr``, the query's CurrentMember and
+        time-intelligence lowering).
 
-        def param_value(name: str, default: str | None) -> str:
-            if name in self.params:
-                return _sql_literal(self.params[name])
-            if name in self.defined_params:
-                return _sql_literal(self.defined_params[name])
-            if default is not None:
-                return default
-            raise MdxError(f"parameter {name!r} has no value and no default")
+        The visitor lowers itself: literals and operators (``<>`` → ``!=``,
+        ``[NOT] MATCHES`` → an anchored ``rlike``, parentheses where
+        Spark's precedence differs); CASE with its ``.Name``, ``.Item(i)``
+        and ``.Item(i).Name`` suffixes; tuple scalars and
+        ``[Measures].[X]`` references (forward definitions and the
+        infinite-loop rule included); the object accessors and
+        ``.Properties('X')`` of a pinned member; IIF, CoalesceEmpty, Cache
+        and IsDirty, their arity checked; Parameter and ParamRef.
+        ``Dimensions(n)``, ``StrToMember`` and ``StrToTuple`` fold in the
+        token stream (:meth:`_tokens`).  Any other node renders as its
+        source with its children lowered — CurrentMember and the
+        time-intelligence forms among them, which the query lowers once it
+        knows the axes (:meth:`..query.Query._lower_formula`).
 
-        def repl_parameter(args: list[str]):
-            # Parameter("p", TYPE, default[, description])
-            if not 3 <= len(args) <= 4 or not re.fullmatch(_LITERAL, args[0]):
-                return None
-            name, default = _unquote(args[0]), args[2]
-            self.defined_params.setdefault(
-                name, self.params.get(name, _parse_literal(default))
+        Still text: Aggregate, the set statistics, Generate and
+        SetToStr/TupleToStr (:meth:`_text_handlers`) receive their
+        arguments' source text and translate their value arguments
+        again; the ``_VBA_EXCEL`` builders receive lowered arguments."""
+        return self._lower(self._over(text)._formula())
+
+    def _lower(self, n: _Node) -> str:
+        """The visitor: one formula node → Spark SQL text, by its kind's
+        ``_lower_<kind>``; a literal, a set and a CASE are their source
+        with their children lowered."""
+        lower = getattr(self, "_lower_" + n.kind, None)
+        return self._splice(n) if lower is None else lower(n)
+
+    def _lower_unary(self, n: _Node) -> str:
+        arg = n.kids[0]
+        return _join([n.text[n.start : arg.start], self._operand(arg, _bp(n))])
+
+    def _lower_binary(self, n: _Node) -> str:
+        if n.op.endswith("matches"):
+            left, right = map(self._lower, n.kids)
+            # X [NOT] MATCHES pattern (mondrian_test.rb:556-579): Mondrian
+            # runs java.util.regex Matcher.matches() — a FULL match, so the
+            # pattern is anchored — and a NULL operand is no match; numeric
+            # operands coerce to string
+            sql = (
+                f"coalesce(rlike(cast(({left}) as string), "
+                f"concat('^(?:', {right}, ')$')), false)"
             )
-            return param_value(name, default)
+            return f"(not {sql})" if n.op == "not matches" else sql
+        mid = "!=" if n.op == "<>" else n.text[n.kids[0].end : n.kids[1].start]
+        bp = _bp(n)
+        return _join([
+            self._operand(n.kids[0], bp), f" {mid.strip()} ",
+            self._operand(n.kids[1], bp, right=True),
+        ])
 
-        def repl_paramref(args: list[str]):
-            if len(args) != 1 or not re.fullmatch(_LITERAL, args[0]):
-                return None
-            return param_value(_unquote(args[0]), None)
+    def _operand(self, n: _Node, bp: int, right: bool = False) -> str:
+        """``n`` lowered as an operand of an operator binding ``bp``: in
+        parentheses where Spark would read the text otherwise — a looser
+        operand (``a * NOT b``, ``a - (b - c)``) or one comparison inside
+        another."""
+        sql = self._lower(n)
+        own = _bp(n)
+        loose = own < bp or own == bp and (right or bp == _BINARY["="])
+        return f"({sql})" if loose else sql
 
-        def repl_dimensions(args: list[str]) -> str:
-            # Dimensions(n) / Dimensions("name") inside a value expression
-            # — folds to the dimension's bracketed identifier so the
-            # object-accessor pass below can take .Name/.UniqueName of it
-            arg = args[0] if len(args) == 1 else ""
-            if re.fullmatch(_LITERAL, arg):
-                key: int | str = _unquote(arg)
-            elif re.fullmatch(r"[0-9]+", arg):
-                key = int(arg)
-            else:
-                raise MdxError(
-                    "Dimensions() takes a numeric index or a quoted name"
+    def _splice(self, n: _Node, lower=None) -> str:
+        """``n``'s source with each child replaced by its lowering —
+        ``lower(index, child)`` when given."""
+        out, last = [], n.start
+        for i, k in enumerate(n.kids):
+            if k is not None:
+                out += n.text[last : k.start], (
+                    lower(i, k) if lower else self._lower(k)
                 )
-            name = self._dimension_by_index_or_name(key)
-            return "[" + name.replace("]", "]]") + "]"
+                last = k.end
+        out.append(n.text[last : n.end])
+        return _join(out)
 
-        def repl_strtotuple(args: list[str]):
-            # StrToTuple("(…)") as a value expression: the string's MDX, for
-            # the tuple-scalar lowering below
-            if len(args) != 1 or not re.fullmatch(_LITERAL, args[0]):
-                return None
-            return _unquote(args[0])
-
-        out = rewrite_calls(
-            text,
-            {
-                "parameter": repl_parameter,
-                "paramref": repl_paramref,
-                "dimensions": repl_dimensions,
-                "strtotuple": repl_strtotuple,
-            },
-        )
-
-        # ``[Measures].[X]``, the name in group 1
-        measure_ref = r"\[Measures\]\s*\.\s*\[((?:[^\]]|\]\])*)\]"
-
-        def case_results(inner: str, lower) -> str:
-            # each THEN/ELSE *result* of a CASE…END text through
-            # ``lower(body)``; WHEN conditions and the selector keep their
-            # cell values
-            return sub_code(
-                rf"\b(THEN\s+|ELSE\s+)((?:{_OPAQUE}|[^'\"\[])*?)"
-                r"(?=\bWHEN\b|\bELSE\b|\bEND\b)",
-                lambda rm: rm.group(1) + lower(rm.group(2)),
-                inner,
-                re.I | re.S,
-            )
-
-        # ``CASE … END.``, tempered: no nested CASE/END inside, so a suffix
-        # binds to the nearest preceding CASE and never swallows an earlier
-        # one
-        case_end = (
-            rf"(\bCASE\b(?:{_OPAQUE}|(?!\bCASE\b|\bEND\b)[^'\"\[])*\bEND\b)"
-            r"\s*\.\s*"
-        )
-        # CASE … END.Name returns the winning *member's name* as a string
-        # (mondrian_test.rb:382-397): member references in the result
-        # positions become their names and the .Name drops
-        out = sub_code(
-            case_end + r"Name\b",
-            lambda m: case_results(
-                m.group(1),
-                lambda body: sub_code(
-                    measure_ref,
-                    lambda mm: _sql_literal(mm.group(1).replace("]]", "]")),
-                    body,
-                ),
+    def _node_error(self, n: _Node, message: str) -> MdxError:
+        line, col = _line_col(n.text, n.start)
+        token = re.match(_SEG + r"|\w+|\S", n.src).group()
+        return MdxError(
+            message,
+            root_cause=(
+                f"Syntax error at line {line}, column {col}, token '{token}'"
             ),
-            out,
-            re.I | re.S,
         )
 
-        def case_item(m: re.Match, pick) -> str:
-            # CASE … END.Item(i): branches return members or tuples; each
-            # result becomes ``pick`` of its i-th component.  A bare member
-            # coerces to a 1-tuple (Item(0) = itself, like Mondrian's
-            # member→tuple coercion); scalar branches stay as written
-            # (scalar.Item(i) = the scalar)
-            idx = int(m.group(2))
-
-            def lower(body: str) -> str:
-                stripped = body.strip()
-                if re.fullmatch(
-                    rf"\(\s*{_ID_CHAIN}(?:\s*,\s*{_ID_CHAIN})*\s*\)",
-                    stripped,
-                ):
-                    parts = re.findall(_ID_CHAIN, stripped)
-                elif re.fullmatch(_ID_CHAIN, stripped):
-                    parts = [stripped]
-                else:
-                    return body
-                if idx >= len(parts):
-                    raise MdxError(
-                        f"Item({idx}): CASE result tuple has only "
-                        f"{len(parts)} component(s)"
-                    )
-                return pick(parts[idx]) + body[len(body.rstrip()):]
-
-            return case_results(m.group(1), lower)
-
-        # CASE … END.Item(i).Name (mondrian_test.rb:388-397): the winning
-        # result's i-th component's NAME
-        out = sub_code(
-            case_end + r"Item\s*\(\s*(\d+)\s*\)\s*\.\s*Name\b",
-            lambda m: case_item(
-                m, lambda comp: _sql_literal(parse_identifier(comp)[-1])
-            ),
-            out,
-            re.I | re.S,
-        )
-        # bare CASE … END.Item(i) as a VALUE (mondrian_test.rb:361-380
-        # family): the i-th component evaluated as a cell value in the
-        # current context — a [Measures] component is that measure's
-        # reference; any other member becomes a single-member tuple scalar
-        # (implicit current measure → the cube's default measure)
-        out = sub_code(
-            case_end + r"Item\s*\(\s*(\d+)\s*\)(?!\s*\.)",
-            lambda m: case_item(
-                m,
-                lambda comp: comp
-                if parse_identifier(comp)[0].lower() == "measures"
-                else "(" + comp + ")",
-            ),
-            out,
-            re.I | re.S,
-        )
-        if search_code(r"\bEND\s*\.\s*Item\b", out, re.I):
+    def _lower_ref(self, n: _Node) -> str:
+        """``[Measures].[X]`` → X's output alias; any other identifier
+        stays as written."""
+        if len(n.segs) != 2 or n.segs[0].lower() != "measures":
+            return n.op
+        name = n.segs[1]
+        if self._inline and name.lower() in self._inline:
+            tree = self._inline.pop(name.lower())
+            try:
+                return "(" + self._lower(tree) + ")"
+            finally:
+                self._inline[name.lower()] = tree
+        try:
+            return self.cube.measure(name).out
+        except KeyError:
+            pass
+        for cm in self.q._with:
+            if cm.name.lower() == name.lower():
+                return cm.out
+        defining = getattr(self, "_defining_measure", None)
+        if defining and defining.lower() == name.lower():
             raise MdxError(
-                "CASE … END.Item(i): only .Name / bare-value suffixes over "
-                "non-nested CASE expressions are supported in this subset"
+                f"Infinite loop while evaluating calculated member "
+                f"'[Measures].{quote_segment(name)}'"
             )
+        if self._defined_later("Measures", name):
+            # the alias the later with_member will produce — the planner's
+            # calc chain orders by the dependency DAG
+            from .model import _snake
 
-        def repl_accessor(m: re.Match) -> str:
-            # object-accessor family on metadata identifiers
-            # (jar!mondrian/olap/fun/DimensionDimensionFunDef,
-            # LevelLevelFunDef, …): X.Dimension/.Hierarchy/.Level chains
-            # and direct .Name/.UniqueName/.Caption/.Ordinal — all
-            # compile-time metadata constants, folded to literals here
-            ident = m.group(1)
-            obj = (m.group(2) or "").lower()
-            prop = m.group(3).lower()
-            lit = self._object_accessor_literal(ident, obj, prop)
-            return m.group(0) if lit is None else lit
-
-        out = sub_code(
-            r"(" + _ID_CHAIN + r")\s*\.\s*"
-            r"(?:(Dimension|Hierarchy|Level)\s*\.\s*)?"
-            r"(Name|UniqueName|Caption|Ordinal)\b",
-            repl_accessor,
-            out,
-            re.I,
+            return _snake(name)
+        # exact reference root-cause shape (query_test.rb:779-780)
+        raise MdxError(
+            f"MDX object '[Measures].{quote_segment(name)}' not "
+            f"found in cube '{self.cube.name}'"
         )
 
-        def repl_member_property(m: re.Match) -> str:
-            # <pinned member>.Properties('X') as a VALUE
-            # (mondrian_test.rb:157-190: date/datetime property values feed
-            # format strings): the member is fixed, so the property value
-            # is ONE scalar — fetched via a memoized 1-row lookup and
-            # inlined as a TYPED literal (DATE/TIMESTAMP literals keep
-            # date-format strings working on the result)
-            ident = m.group(1)
-            pname = _unquote(m.group(2))
-            try:
-                segs = parse_identifier(ident)
-                dim = self.cube.dimension(segs[0])
-            except Exception:
-                return m.group(0)
-            path = segs[1:]
-            if not path or len(path) > len(dim.levels):
-                return m.group(0)
-            # a bare level reference has no single property value
-            if len(path) == 1 and dim.level_index(path[0]) is not None:
-                return m.group(0)
-            try:
-                v = self.engine.member_property_value(
-                    dim.name, len(path) - 1, tuple(path), pname
+    def _lower_tuple(self, n: _Node) -> str:
+        """A tuple of members — ``([Measures].[X], [Dim].[M], …)`` — is the
+        cell value of X with the listed dimensions' context overridden
+        (mondrian_test.rb:361-380): a synthetic column the planner
+        attaches from a member-scoped sub-aggregate
+        (plan._attach_tuple_scalar).  Without a [Measures] component the
+        cube's default measure is read (Cube defaultMeasure —
+        schema.rb:61), marked by measure None.  ``([Measures].[X])`` and
+        any other parenthesized expression is a grouping."""
+        if all(map(_is_chain, n.kids)):
+            measure, members = _split_measure([k.op for k in n.kids], "tuple")
+            if members:
+                return _intern(
+                    self.q._tuple_scalars, "__tuple", measure, tuple(members)
                 )
-            except KeyError as e:
-                raise MdxError(str(e)) from None
-            import datetime as _dt
-            from decimal import Decimal as _Dec
+        return self._splice(n)
 
-            if v is None:
-                return "null"
-            if isinstance(v, bool):
-                return "true" if v else "false"
-            if isinstance(v, _dt.datetime):
-                return f"TIMESTAMP '{v.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
-            if isinstance(v, _dt.date):
-                return f"DATE '{v.isoformat()}'"
-            if isinstance(v, (int, float, _Dec)):
-                return str(v)
-            return _sql_literal(str(v))
+    def _lower_call(self, n: _Node) -> str:
+        name, kids = n.op, n.kids
+        if name in _ARITY:
+            lo, hi = _ARITY[name]
+            if len(kids) < lo or hi is not None and len(kids) > hi:
+                want = f"{lo}" if lo == hi else f"at least {lo}"
+                raise self._node_error(
+                    n, f"{name.upper()} takes {want} argument(s), got "
+                    f"{len(kids)}",
+                )
+            args = [self._lower(k) for k in kids]
+            if name == "iif":  # IifFunDef → Spark if()
+                return "if(" + ", ".join(args) + ")"
+            if name == "isdirty":
+                # cache-dirty introspection (mondrian_test.rb:241-247): a
+                # cell is never served from a stale segment here, so the
+                # honest answer is constant false
+                return "false"
+            if name == "cache":
+                # Cache(expr) (CacheFunDef): transparent for values; the
+                # wrapper pins the evaluated grid (Query._cache_hint)
+                self.q._cache_hint = True
+                return "(" + args[0] + ")"
+            return _coalesce_empty(args)
+        literal = bool(kids) and kids[0].kind == "lit" and kids[0].op == "string"
+        if literal and (name, len(kids)) in (
+            ("parameter", 3), ("parameter", 4), ("paramref", 1)
+        ):
+            # Parameter("p", TYPE, default[, description]) / ParamRef("p")
+            # (schema_definition_test.rb:1298-1427)
+            pname = _unquote(kids[0].src)
+            if name == "parameter":
+                self.defined_params.setdefault(
+                    pname,
+                    self.params.get(pname, _parse_literal(kids[2].src)),
+                )
+            for values in (self.params, self.defined_params):
+                if pname in values:
+                    return _sql_literal(values[pname])
+            raise MdxError(f"parameter {pname!r} has no value and no default")
+        handler = self._text_handlers().get(name)
+        if handler is not None:
+            sql = handler([k.src for k in kids])
+            if sql is not None:
+                return sql
+        fn = _VBA_EXCEL.get(name)
+        if fn is None:
+            return self._splice(n)
+        args = [self._lower(k) for k in kids]
+        sql = fn(args)
+        return self._splice(n, lambda i, _k: args[i]) if sql is None else sql
 
-        out = sub_code(
-            rf"({_ID_CHAIN})\s*\.\s*Properties\s*\(\s*({_LITERAL})\s*\)",
-            repl_member_property,
-            out,
-            re.I,
-        )
+    def _lower_access(self, n: _Node) -> str:
+        obj, *args = n.kids
+        if obj.kind == "case" or (
+            obj.kind == "access" and obj.op == "item"
+            and obj.kids[0].kind == "case"
+        ):
+            return self._case_suffix(n)
+        if n.op in ("name", "uniquename", "caption", "ordinal") and not args:
+            # the object-accessor family on metadata identifiers
+            # (DimensionDimensionFunDef, LevelLevelFunDef, …):
+            # X[.Dimension|.Hierarchy|.Level].Name/… — compile-time
+            # constants, folded to literals
+            via = ""
+            if obj.kind == "access" and len(obj.kids) == 1 and obj.op in (
+                "dimension", "hierarchy", "level"
+            ):
+                obj, via = obj.kids[0], obj.op
+            if _is_chain(obj):
+                lit = self._object_accessor_literal(obj.segs, via, n.op)
+                if lit is not None:
+                    return lit
+        elif n.op == "properties" and _is_chain(obj) and len(args) == 1 and (
+            args[0].kind == "lit" and args[0].op == "string"
+        ):
+            lit = self._pinned_property(obj, _unquote(args[0].src))
+            if lit is not None:
+                return lit
+        if _is_value(obj):  # a member expression keeps its accessors
+            raise self._node_error(
+                n, f".{n.op} of {obj.src!r} is not supported in this subset"
+            )
+        return self._splice(n)
+
+    def _case_suffix(self, n: _Node) -> str:
+        """``CASE … END.Name`` (mondrian_test.rb:382-397): the winning
+        result member's name; ``CASE … END.Item(i)`` (mondrian_test.rb:
+        361-380): component i of the winning tuple as a cell value — a
+        [Measures] component is that measure, another member a tuple
+        scalar; ``CASE … END.Item(i).Name``: that component's name.  A
+        bare member result is a 1-tuple; a scalar result stays itself."""
+        obj, *args = n.kids
+        name = n.op == "name" and not args
+        item = obj if obj.kind == "access" else n if n.op == "item" else None
+        if not (name or item is n) or item is not None and not (
+            len(item.kids) == 2 and item.kids[1].src.isdigit()
+        ):
+            raise self._node_error(
+                n, "CASE … END takes only the .Name, .Item(i) and "
+                ".Item(i).Name suffixes in this subset",
+            )
+        case = item.kids[0] if item is obj else obj
+        idx = None if item is None else int(item.kids[1].src)
+
+        def result(r: _Node) -> str:
+            parts = [r] if _is_chain(r) else r.kids if (
+                r.kind == "tuple" and idx is not None
+                and all(map(_is_chain, r.kids))
+            ) else None
+            if parts is None:
+                return self._lower(r)
+            if idx is not None and idx >= len(parts):
+                raise MdxError(
+                    f"Item({idx}): CASE result tuple has only "
+                    f"{len(parts)} component(s)"
+                )
+            comp = parts[idx or 0]
+            if name:
+                return _sql_literal(comp.segs[-1])
+            if comp.segs[0].lower() == "measures":
+                return self._lower(comp)
+            return _intern(self.q._tuple_scalars, "__tuple", None, (comp.op,))
+
+        # THEN/ELSE results sit at the even places after the selector and
+        # last; the selector and the WHEN conditions keep their values
+        last = len(case.kids) - 1
+        return self._splice(case, lambda i, k: (
+            result(k) if i == last or (i and i % 2 == 0) else self._lower(k)
+        ))
+
+    def _pinned_property(self, ref: _Node, pname: str) -> str | None:
+        """``<member>.Properties('X')`` of a pinned member as a VALUE
+        (mondrian_test.rb:157-190): one scalar, fetched by a memoized
+        1-row lookup and inlined as a TYPED literal (DATE/TIMESTAMP keep
+        date format strings working); None when ``ref`` is no member."""
+        try:
+            dim = self.cube.dimension(ref.segs[0])
+        except KeyError:
+            return None
+        path = ref.segs[1:]
+        if not path or len(path) > len(dim.levels) or (
+            len(path) == 1 and dim.level_index(path[0]) is not None
+        ):
+            return None  # a level has no single property value
+        try:
+            v = self.engine.member_property_value(
+                dim.name, len(path) - 1, tuple(path), pname
+            )
+        except KeyError as e:
+            raise MdxError(str(e)) from None
+        return _sql_literal(v)
+
+    def _text_handlers(self) -> dict:
+        """The call families not yet lowered from the tree — Aggregate, the
+        set statistics, Generate, SetToStr/TupleToStr — by lower-case
+        name: each takes its arguments' source text and returns SQL, or
+        None to keep the call as written.  Built once per statement."""
+        if self.__dict__.get("_handlers") is not None:
+            return self._handlers
 
         def _register_stat(
             fn, exprs, member_strs, arg, nan_wrap, existing=False, where=None
@@ -3455,23 +3612,7 @@ class MdxParser:
             if len(args) > 2:
                 raise MdxError("Aggregate takes (set[, expression])")
             expr_part = args[1] if len(args) == 2 else None
-            measure_name = None
-            members: list[str] = []
-            for mstr in set_members:
-                segs = parse_identifier(mstr)
-                if segs[0].lower() == "measures":
-                    if measure_name is not None:
-                        raise MdxError(
-                            "Aggregate set has more than one Measures "
-                            "component"
-                        )
-                    if len(segs) != 2:
-                        raise MdxError(
-                            f"bad measure reference in Aggregate: {mstr}"
-                        )
-                    measure_name = segs[1]
-                else:
-                    members.append(mstr)
+            measure_name, members = _split_measure(set_members, "Aggregate set")
             if not members:
                 raise MdxError("Aggregate needs at least one member in its set")
             if expr_part is not None:
@@ -3487,8 +3628,6 @@ class MdxParser:
             return _intern(
                 self.q._tuple_scalars, "__tuple", measure_name, tuple(members)
             )
-
-        out = rewrite_calls(out, {"aggregate": repl_aggregate_value})
 
         # ---- set statistics as VALUE expressions ----------------------
         # Median/Stdev/Var/…(set, expr), Correlation/Covariance/LinReg*
@@ -3527,6 +3666,9 @@ class MdxParser:
             return tuple(m.lower() for m in members), where
 
         def _translate_stat_expr(raw: str, set_key: tuple) -> str:
+            return _rank(self.translate_expression_text(raw), set_key)
+
+        def _rank(sql: str, set_key: tuple) -> str:
             # Rank(<dim>.CurrentMember, <this set>) → __setrank, the
             # member's 1-based hierarchy-order position (data-independent;
             # the planner joins it from the member list)
@@ -3545,8 +3687,7 @@ class MdxParser:
                     )
                 return " __setrank "
 
-            raw = rewrite_calls(raw, {"rank": repl_rank})
-            return self.translate_expression_text(raw)
+            return rewrite_calls(sql, {"rank": repl_rank})
 
         def _set_member_count(member_strs) -> int:
             total = 0
@@ -3702,9 +3843,6 @@ class MdxParser:
 
             return repl
 
-        out = rewrite_calls(
-            out, {name: _setstat_handler(name) for name in _SETSTAT}
-        )
 
         # ---- GENERATE in VALUE expressions -----------------------------
         # (jar!mondrian/olap/fun/GenerateFunDef; reference WITH MEMBER
@@ -3737,25 +3875,11 @@ class MdxParser:
         def _translate_generate_expr(
             raw: str, dim, depth: int, set_key: tuple
         ) -> str:
-            """The string expression, per-member: inline WITH-member
-            formulas (their CurrentMember text must bind to the ITERATED
-            set, not the query axes), rewrite the set dimension's
-            CurrentMember properties onto the set level's member column,
-            then translate the remainder."""
-            for cm in self.q._with:
-                pat = (
-                    r"\[Measures\]\s*\.\s*\["
-                    + r"\s+".join(re.escape(p) for p in cm.name.split())
-                    + r"\]"
-                )
-                raw = sub_code(
-                    pat,
-                    lambda _m, _e=self._with_mdx.get(
-                        cm.name.lower(), cm.expression
-                    ): "(" + _e + ")",
-                    raw,
-                    re.I,
-                )
+            """The string expression, per-member: WITH-member formulas
+            inline as their trees (their CurrentMember must bind to the
+            ITERATED set, not the query axes), then the set dimension's
+            CurrentMember properties become the set level's member
+            column."""
 
             def level_of(cur_dim):
                 if cur_dim.name != dim.name:
@@ -3767,19 +3891,24 @@ class MdxParser:
                     )
                 return dim.levels[depth]
 
-            raw = lower_member_properties(
-                raw, self.cube, level_of, self.engine.fact.sparkSession
+            outer, self._inline = self._inline, dict(self._with_mdx)
+            try:
+                sql = self.translate_expression_text(raw)
+            finally:
+                self._inline = outer
+            sql = lower_member_properties(
+                sql, self.cube, level_of, self.engine.fact.sparkSession
             )
-            if current_members(self.cube, raw):
+            if current_members(self.cube, sql):
                 raise MdxError(
                     "Generate(string form): a bare CurrentMember is a "
                     "MEMBER expression — wrap the call in SetToStr for "
                     "the set-returning form"
                 )
-            return _translate_stat_expr(raw, set_key)
+            return _rank(sql, set_key)
 
         def _generate_members(text: str, what: str) -> list[str]:
-            sb = self._formula_set(text)
+            sb = self._formula_set(text, what)
             if sb is None:
                 raise MdxError(
                     f"{what}: the first argument must be a set ({{…}} or "
@@ -3813,27 +3942,19 @@ class MdxParser:
             # sub-plan (fact values need the fact).
             # a WITH member's out may textually equal a set-dim LEVEL
             # column (the reference's own '[Measures].[Gender name]' idiom
-            # snakes to the gender level's out): after the inline pass a
+            # snakes to the gender level's out): once inlined, a
             # bracketed WITH reference is gone, so a remaining token that
             # names a set-dim level column IS the level column — exclude
-            # those outs or the metadata path would never fire.  Cube
-            # validation forbids measure/calc outs colliding with level
-            # outs, so only the WITH list needs the exclusion.
+            # those outs or the metadata path would never fire (cube
+            # validation forbids cube measure outs colliding with them).
             set_level_outs = {lv.out for lv in dim.levels}
-            refs = set(references(expr_sql))
-            refs_data = any(
-                o.lower() in refs
-                for o in (
-                    *(m.out for m in self.cube.measures),
-                    *(c.out for c in self.cube.calculated_members),
-                    *(
-                        c.out
-                        for c in self.q._with
-                        if c.out not in set_level_outs
-                    ),
-                )
-            )
-            if not refs_data:
+            data_outs = {
+                m.out.lower()
+                for m in (*self.cube.measures, *self.cube.calculated_members,
+                          *self.q._with)
+                if m.out not in set_level_outs
+            }
+            if not data_outs & set(references(expr_sql)):
                 vals: list[str] = []
                 try:
                     for mstr in member_strs:
@@ -3932,25 +4053,16 @@ class MdxParser:
                 # identity: the generated set IS the set, in set order
                 for mstr in member_strs:
                     ref = resolve(self.cube, mstr)
-                    if ref.kind in ("children", "level_members"):
-                        outs = [
-                            lv.out for lv in ref.dimension.levels[
-                                : ref.depth + 1
-                            ]
-                        ]
-                        for row in self.engine.level_members(
+                    if ref.kind not in ("children", "level_members"):
+                        unames.append(format_name([dim.name, *ref.path]))
+                        continue
+                    levels = ref.dimension.levels[: ref.depth + 1]
+                    unames += [
+                        format_name([dim.name, *(str(r[lv.out]) for lv in levels)])
+                        for r in self.engine.level_members(
                             ref.dimension.name, ref.depth, path=ref.path
-                        ).collect():
-                            unames.append(
-                                format_name(
-                                    [dim.name]
-                                    + [str(row[o]) for o in outs]
-                                )
-                            )
-                    else:
-                        unames.append(
-                            format_name([dim.name, *ref.path])
-                        )
+                        ).collect()
+                    ]
             elif re.fullmatch(_ID_CHAIN, mexpr):
                 # a FIXED member: Generate yields it once per set member
                 ref = resolve(self.cube, mexpr)
@@ -3966,218 +4078,89 @@ class MdxParser:
                 unames = list(dict.fromkeys(unames))
             return _sql_literal("{" + ", ".join(unames) + "}")
 
-        # SetToStr first: its handler reads the Generate call it wraps
-        out = rewrite_calls(
-            out,
-            {
-                "settostr": repl_settostr,
-                "tupletostr": lambda args: set_udf_str(args, "(", ")"),
-            },
-        )
-        out = rewrite_calls(out, {"generate": repl_generate_string})
+        self._handlers = {
+            "aggregate": repl_aggregate_value,
+            **{name: _setstat_handler(name) for name in _SETSTAT},
+            # SetToStr reads the Generate call it wraps
+            "settostr": repl_settostr,
+            "tupletostr": lambda args: set_udf_str(args, "(", ")"),
+            "generate": repl_generate_string,
+        }
+        return self._handlers
 
-        # VBA/Excel functions, after the passes above so that the
-        # sub-expressions they translate again still hold MDX: every call
-        # is lowered exactly once
-        out = rewrite_calls(out, _VBA_EXCEL)
 
-        def repl_tuple(m: re.Match) -> str:
-            # tuple scalar ([Measures].[X], [Dim].[M], …): the cell value
-            # of X with the listed dimensions' context overridden
-            # (mondrian_test.rb:361-380).  Lowered to a synthetic column;
-            # the planner attaches it via a member-scoped sub-aggregate
-            # broadcast-joined onto the grid (plan._attach_tuple_scalar).
-            parts = re.findall(_ID_CHAIN, m.group(0))
-            measure_name = None
-            members: list[str] = []
-            for p in parts:
-                segs = parse_identifier(p)
-                if segs[0].lower() == "measures":
-                    if measure_name is not None:
-                        raise MdxError(
-                            "tuple has more than one Measures component"
-                        )
-                    if len(segs) != 2:
-                        raise MdxError(f"bad measure reference in tuple: {p}")
-                    measure_name = segs[1]
-                else:
-                    members.append(p)
-            if not members:
-                return m.group(0)  # ([Measures].[X]) — plain parenthesized
-            # implicit current measure (no [Measures] component): the
-            # Measures hierarchy's default member resolves the context,
-            # like Mondrian's unpinned-Measures evaluation (Cube
-            # defaultMeasure — schema.rb:61; falls back to the first
-            # stored measure).  measure_name None is the marker; the
-            # query layer substitutes cube.default_measure_obj().
-            return _intern(
-                self.q._tuple_scalars, "__tuple", measure_name, tuple(members)
-            )
+def _is_chain(n: _Node) -> bool:
+    """``n`` is a ``[A].[B]…`` identifier: a member, level, dimension or
+    measure."""
+    return n.kind == "ref" and n.op[0] == "["
 
-        # the lookbehind keeps function CALLS out: in ``Fn([A].[B], [C].[D])``
-        # the char before ``(`` is part of the function name, so the
-        # parenthesized argument list is not a tuple literal.  Single-member
-        # tuples ``([Gender].[F])`` lower too (implicit current measure);
-        # ``([Measures].[X])`` falls through repl_tuple unchanged.
-        out = sub_code(
-            rf"(?<![\w\]])\(\s*{_ID_CHAIN}(?:\s*,\s*{_ID_CHAIN})*\s*\)",
-            repl_tuple,
-            out,
-        )
 
-        def repl_measure(m: re.Match) -> str:
-            name = m.group(1).replace("]]", "]")
-            try:
-                return self.cube.measure(name).out
-            except KeyError:
-                for cm in self.q._with:
-                    if cm.name.lower() == name.lower():
-                        return cm.out
-                # WITH entries parse in order, but a formula may reference a
-                # calc member DEFINED LATER in the same clause
-                # (mondrian_test.rb:580-590 parent-before-child): scan the
-                # raw statement and emit the alias the later with_member
-                # will produce — the planner's calc chain orders by the
-                # dependency DAG, so evaluation order is still correct
-                from .model import _snake
+def _is_value(n: _Node) -> bool:
+    """``n`` is a scalar, which has no accessors: a literal, an operation,
+    a measure, a property, a call the visitor lowers or such a call's name
+    without its arguments."""
+    return n.kind in ("lit", "tuple", "unary", "binary") or (
+        n.kind == "ref" and len(n.segs) == 2 and n.segs[0].lower() == "measures"
+    ) or n.kind == "access" and n.op in (
+        "name", "uniquename", "caption", "ordinal", "properties"
+    ) or n.kind in ("call", "ref") and n.op.lower() in (*_ARITY, *_VBA_EXCEL)
 
-                defining = getattr(self, "_defining_measure", None)
-                if defining and defining.lower() == name.lower():
-                    raise MdxError(
-                        f"Infinite loop while evaluating calculated member "
-                        f"'[Measures].{quote_segment(name)}'"
-                    )
-                later_def = (
-                    r"(?is)\bmember\s+\[Measures\]\s*\.\s*\["
-                    + re.escape(name)
-                    + r"\]\s*as\b"
-                )
-                if re.search(later_def, self.src or ""):
-                    return _snake(name)
-                # exact reference root-cause shape (query_test.rb:779-780)
-                raise MdxError(
-                    f"MDX object '[Measures].{quote_segment(name)}' not "
-                    f"found in cube '{self.cube.name}'"
-                )
 
-        out = sub_code(measure_ref, repl_measure, out)
+def _split_measure(idents: list[str], what: str) -> tuple:
+    """A tuple's or an Aggregate set's members → (the name of its one
+    [Measures] component or None, the other members)."""
+    measure, members = None, []
+    for ident in idents:
+        segs = parse_identifier(ident)
+        if segs[0].lower() != "measures":
+            members.append(ident)
+        elif measure is not None:
+            raise MdxError(f"{what} has more than one Measures component")
+        elif len(segs) != 2:
+            raise MdxError(f"bad measure reference in {what}: {ident}")
+        else:
+            measure = segs[1]
+    return measure, members
 
-        def _rewrite_matches(text: str) -> str:
-            # X [NOT] MATCHES pattern as a VALUE expression
-            # (mondrian_test.rb:556-579; jar!mondrian/olap/fun/fun resource
-            # MATCHES operator): regex match with NULL-as-false semantics —
-            # a NULL operand yields false (true under NOT), and numeric
-            # operands coerce to string.  Runs AFTER measure rewriting so
-            # the left operand is an alias/parenthesized expr/literal.
-            def left_operand(s: str, end: int) -> int:
-                i = len(s[:end].rstrip())
-                opens: list[int] = []
-                for t in _PAREN_RE.finditer(s, 0, i):
-                    if t.group() == "(":
-                        opens.append(t.start())
-                    elif t.group() == ")":
-                        top = opens.pop() if opens else 0
-                        if t.end() == i:  # a group, with its function name
-                            i = top
-                            break
-                    elif t.end() == i:  # a literal
-                        return t.start()
-                while i > 0 and (s[i - 1].isalnum() or s[i - 1] in "_."):
-                    i -= 1
-                return i
 
-            def right_operand(s: str, start: int) -> int:
-                i = len(s) - len(s[start:].lstrip())
-                t = _PAREN_RE.match(s, i)
-                if t is not None and t.group() != ")":
-                    if t.group() != "(":  # a literal
-                        return t.end()
-                    return min(_scan(s, i + 1, {}, True)[1] + 1, len(s))
-                while i < len(s) and (s[i].isalnum() or s[i] in "_."):
-                    i += 1
-                # a function-call pattern (Trim(p)): absorb the argument list
-                k = len(s) - len(s[i:].lstrip())
-                if k < len(s) and s[k] == "(":
-                    return min(_scan(s, k + 1, {}, True)[1] + 1, len(s))
-                return i
+def _join(parts: list[str]) -> str:
+    """``parts`` joined, with a space where two would otherwise read as one
+    token (word characters meeting) or start a comment (``--``)."""
+    out = parts[:1]
+    for p in parts[1:]:
+        if p and out[-1] and (
+            (out[-1][-1] + p[0]).isidentifier() or out[-1][-1] + p[0] == "--"
+        ):
+            out.append(" ")
+        out.append(p)
+    return "".join(out)
 
-            while m2 := search_code(r"\b(NOT\s+)?MATCHES\b", text, re.I):
-                ls = left_operand(text, m2.start())
-                re_end = right_operand(text, m2.end())
-                left = text[ls : m2.start()].strip()
-                right = text[m2.end() : re_end].strip()
-                if not left or not right:
-                    raise MdxError("MATCHES needs two operands")
-                # Mondrian's MATCHES is java.util.regex Matcher.matches() —
-                # a FULL match, not rlike's substring search — so anchor
-                # the pattern
-                repl = (
-                    f"coalesce(rlike(cast(({left}) as string), "
-                    f"concat('^(?:', {right}, ')$')), false)"
-                )
-                if m2.group(1):
-                    repl = f"(not {repl})"
-                text = text[:ls] + repl + text[re_end:]
-            return text
 
-        out = _rewrite_matches(out)
-        out = sub_code(r"<>", lambda m: "!=", out)
-        # COALESCEEMPTY → coalesce (first non-empty; CoalesceEmptyFunDef).
-        # Type discipline for the mondrian_test.rb:532-543 mixed-type
-        # matrix: a LITERAL argument (number or string) is provably
-        # non-empty, so every later branch is DEAD — truncate there.  This
-        # reproduces the reference's per-branch typing exactly for the
-        # matrix: CoalesceEmpty(123, 'dummy') = 123 AS A NUMBER (single
-        # live branch, no coalesce emitted, native type kept) and
-        # CoalesceEmpty(CASE WHEN 1=2 THEN 1 END, 'dummy') = 'dummy'.
-        # Residual deviation (documented, pinned by test): when a
-        # NON-constant numeric branch mixes with a string branch and both
-        # can win on different rows, a Spark column is monotyped — the
-        # args unify as strings (the one lossless common type), where the
-        # reference keeps the winning branch's own type per cell.
-        def repl_coalesceempty(args: list[str]):
-            if not args:
-                return None
-            for i, a in enumerate(args):
-                if re.fullmatch(
-                    _LITERAL + r"|[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?", a
-                ):
-                    args = args[: i + 1]  # later branches are dead
-                    break
-            if len(args) == 1:
-                return args[0]  # single live branch: native type
-            is_str = [bool(re.fullmatch(_LITERAL, a)) for a in args]
-            if any(is_str) and not all(is_str):
-                args = [
-                    a if s else f"cast(({a}) as string)"
-                    for a, s in zip(args, is_str)
-                ]
-            return "coalesce(" + ", ".join(args) + ")"
-
-        # Cache(expr) (jar!mondrian/olap/fun/CacheFunDef): transparent for
-        # values — unwrap and evaluate; the wrapper sets the query's cache
-        # hint so the evaluated grid persists (intra-result reuse; the
-        # engine aggregate cache covers cross-query reuse when enabled)
-        def repl_cache(args: list[str]) -> str:
-            self.q._cache_hint = True
-            return "(" + ", ".join(args) + ")"
-
-        # IsDirty(): cache-dirty introspection (mondrian_test.rb:241-247).
-        # Aggregates here are always (re)computed from consistent source
-        # snapshots — a cell is never served from a stale segment — so the
-        # honest answer is constant false, matching the reference's expected
-        # value on a clean cache.  IIF(cond, a, b) → Spark if(); CASE WHEN …
-        # THEN … END is shared syntax and passes through untouched
-        # (jar!mondrian/olap/fun/IifFunDef, CaseTestFunDef)
-        return rewrite_calls(
-            out,
-            {
-                "coalesceempty": repl_coalesceempty,
-                "cache": repl_cache,
-                "isdirty": lambda args: None if args else "false",
-                "iif": lambda args: "if(" + ", ".join(args) + ")",
-            },
-        )
+def _coalesce_empty(args: list[str]) -> str:
+    """COALESCEEMPTY → coalesce (first non-empty; CoalesceEmptyFunDef).
+    Type discipline for the mondrian_test.rb:532-543 mixed-type matrix: a
+    LITERAL argument (number or string) is provably non-empty, so every
+    later branch is DEAD — truncated there.  This reproduces the
+    reference's per-branch typing for the matrix: CoalesceEmpty(123,
+    'dummy') = 123 AS A NUMBER (one live branch, no coalesce, native type
+    kept) and CoalesceEmpty(CASE WHEN 1=2 THEN 1 END, 'dummy') = 'dummy'.
+    Residual deviation (documented, pinned by test): when a NON-constant
+    numeric branch mixes with a string branch and both can win on
+    different rows, a Spark column is monotyped — the args unify as
+    strings (the one lossless common type), where the reference keeps
+    the winning branch's own type per cell."""
+    for i, a in enumerate(args):
+        if re.fullmatch(_LITERAL + r"|[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?", a):
+            args = args[: i + 1]  # later branches are dead
+            break
+    if len(args) == 1:
+        return args[0]  # single live branch: native type
+    is_str = [bool(re.fullmatch(_LITERAL, a)) for a in args]
+    if any(is_str) and not all(is_str):
+        args = [
+            a if s else f"cast(({a}) as string)" for a, s in zip(args, is_str)
+        ]
+    return "coalesce(" + ", ".join(args) + ")"
 
 
 def _op_expr(op: tuple) -> str | None:
@@ -4253,11 +4236,22 @@ def _unquote(s: str) -> str:
 
 
 def _sql_literal(v) -> str:
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
+    """``v`` as a typed Spark SQL literal (DATE/TIMESTAMP keep date format
+    strings working on the result)."""
+    import datetime as _dt
+    from decimal import Decimal
+
+    if v is None:
+        return "null"
     if isinstance(v, bool):
         return "true" if v else "false"
-    return repr(v)
+    if isinstance(v, _dt.datetime):
+        return f"TIMESTAMP '{v.strftime('%Y-%m-%d %H:%M:%S.%f')}'"
+    if isinstance(v, _dt.date):
+        return f"DATE '{v.isoformat()}'"
+    if isinstance(v, (int, float, Decimal)):
+        return str(v)
+    return "'" + str(v).replace("'", "''") + "'"
 
 
 def _parse_literal(s: str):

@@ -26,6 +26,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -384,17 +385,23 @@ class Planner:
         for cm in calc_chain:
             try:
                 agg = agg.withColumn(cm.out, F.expr(cm.expression))
-            except Exception as e:  # map analysis errors to reference shape
-                bad = _unresolved_routine_name(e)
-                if bad is None:
-                    raise
+            except AnalysisException as e:  # map to the reference shape
+                if isinstance(e, ParseException):
+                    raise  # lowered formula text is always Spark SQL
                 from .query import QueryError
 
                 # reference root cause: "No function matches signature
-                # 'Dummy(<Numeric Expression>)'" (query_test.rb:783-790)
+                # 'Dummy(<Numeric Expression>)'" (query_test.rb:783-790);
+                # any other formula that does not type-check (a
+                # non-boolean WHEN, a tuple in arithmetic) keeps Spark's
+                # reason
+                bad = _unresolved_routine_name(e)
                 raise QueryError(
                     f"formula for [Measures].[{cm.name}] failed to resolve",
-                    root_cause=f"No function matches signature '{bad}'",
+                    root_cause=(
+                        str(e).split("\n", 1)[0] if bad is None
+                        else f"No function matches signature '{bad}'"
+                    ),
                 ) from None
         if role is not None and getattr(role, "rollup_policy", "") == "hidden":
             agg = self._hide_rollups(agg, role, group_cols, measures)

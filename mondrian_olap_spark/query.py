@@ -1164,22 +1164,27 @@ class Query:
             # measures, where first-per-out wins over the raw cube copy
             and (cm.name.lower() in with_names or cm.name in rewritten)
         )
-        measures: list[Measure | CalculatedMember] = []
-        for ax in axes:
-            for name in ax.measure_names:
-                m = self._measure(name)
-                if isinstance(m, CalculatedMember):
-                    if m.name in rewrite_errors:
-                        raise rewrite_errors[m.name]
-                    m = rewritten.get(m.name, m)
-                measures.append(m)
+        shown = [self._measure(n) for ax in axes for n in ax.measure_names]
+        # a measure an axis op reads (FILTER/ORDER/TOPCOUNT by it) that no
+        # axis selects: a hidden grid column, dropped before the result
+        hidden = {m.out: m for ax in axes for m in self._chain_measures(ax.mods)}
+        for m in shown:
+            hidden.pop(m.out, None)
+        grid: list[Measure | CalculatedMember] = []
+        for m in shown + list(hidden.values()):
+            if isinstance(m, CalculatedMember):
+                if m.name in rewrite_errors:
+                    raise rewrite_errors[m.name]
+                m = rewritten.get(m.name, m)
+            grid.append(m)
+        measures = grid[: len(shown)]
         # a used calc member may reference an unrewritable one
         # (solve-order chaining references the OUTPUT alias; MDX-style
         # text may carry the bracketed name) — surface the underlying
         # error, not a downstream name-not-found.  Whole names only
         # (mdx.references): a member named 'Max' is not referenced by
         # '[Measures].[Max Price]'.
-        for used in measures:
+        for used in grid:
             if isinstance(used, CalculatedMember):
                 refs = set(references(used.expression))
                 for cm in rewrite_candidates:
@@ -1239,7 +1244,7 @@ class Query:
                 "totals()/include_empty() in this subset"
             )
         df, group_cols = planner.aggregate(
-            main_axes, self._slicer, measures, totals=self._totals
+            main_axes, self._slicer, grid, totals=self._totals
         )
         # an axis whose only set for a dimension is the All member
         # ([Dim].DefaultMember / [Dim].[All]) grouped by NOTHING for that
@@ -1285,16 +1290,16 @@ class Query:
                 )
                 for i, sets in enumerate(main_axes)
             ]
-            synth, _ = planner.aggregate(synth_axes, self._slicer, measures)
+            synth, _ = planner.aggregate(synth_axes, self._slicer, grid)
             types = dict(df.dtypes)
             for c in df.columns:
                 if c not in synth.columns:
                     synth = synth.withColumn(c, F.lit(None).cast(types[c]))
             df = df.unionByName(synth.select(*df.columns))
         for dm in self._dim_members:
-            df = self._union_dimension_member(planner, df, axes, measures, group_cols, dm)
+            df = self._union_dimension_member(planner, df, axes, grid, group_cols, dm)
         for ref, limit in self._drilldowns:
-            df = self._union_drilldown(planner, df, axes, measures, ref, limit)
+            df = self._union_drilldown(planner, df, axes, grid, ref, limit)
         # each axis's ordering is INDEPENDENT (MDX axes order separately);
         # the tidy frame's display sort concatenates them in axis order —
         # a later axis's order() must compose with, not overwrite, an
@@ -1314,6 +1319,8 @@ class Query:
             )
             sort_specs.append(ax_spec)
         sort_spec = [e for spec in sort_specs for e in spec]
+        if hidden:
+            df = df.drop(*hidden)  # a sort by one still resolves
         axis_cols = [self._group_cols_of(ax) for ax in axes]
         formats: dict = {m.out: m.format_string for m in measures if m.format_string}
         # schema-declared cell formatters (model.Measure.cell_formatter,
@@ -2597,16 +2604,12 @@ class Query:
 
     def _measures_in(self, expr: str | None):
         """Measures referenced (by output alias) in a condition/sort key."""
-        import re as _re
-
-        if not expr:
-            return []
-        toks = set(_re.findall(r"[A-Za-z_][A-Za-z0-9_]*", expr))
-        out = []
-        for m in (*self.cube.measures, *self.cube.calculated_members, *self._with):
-            if m.out in toks:
-                out.append(self._measure(m.name))
-        return out
+        refs = set(references(expr or ""))
+        return [
+            self._measure(m.name)
+            for m in (*self.cube.measures, *self.cube.calculated_members, *self._with)
+            if m.out.lower() in refs
+        ]
 
     def _chain_measures(self, ops) -> list:
         """The measures a set's op chain reads, each once."""

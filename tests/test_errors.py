@@ -23,6 +23,36 @@ def test_invalid_mdx_statement_names_line_column_token(engine):
     assert "token 'COLUMNS'" in rc
 
 
+@pytest.mark.parametrize(
+    "formula, token",
+    [
+        ("[Measures].[Sum Qty] AND", "AND"),
+        ("[Measures].[Sum Qty] +", "+"),
+        ("1 +* 2", "*"),
+        ("((([Measures].[Sum Qty]))", "("),
+        ("CASE WHEN 1 = 1 THEN 1", "CASE"),
+        ("IIf(1 = 1, 2)", "IIf"),
+        ("CoalesceEmpty()", "CoalesceEmpty"),
+        ("1 + AND (2)", "AND"),
+        ("IIf(1 = 1, 2, 3).Name", "IIf"),
+    ],
+)
+def test_malformed_formula_names_line_column_token(engine, formula, token):
+    """A formula is parsed whole before it is lowered: a missing operand,
+    a stray operator, an unclosed group or CASE and a wrong argument
+    count raise MdxError naming the token, its line and its column — not
+    a Spark ParseException, and a trailing AND is no longer dropped."""
+    with pytest.raises(MdxError) as ei:
+        execute_mdx(
+            engine,
+            "WITH MEMBER [Measures].[X] AS '" + formula.replace("'", "''")
+            + "' SELECT [Measures].[X] ON COLUMNS FROM [Sales]",
+        )
+    rc = ei.value.root_cause_message
+    assert rc.startswith("Syntax error at line 1, column ")
+    assert rc.endswith(f", token '{token}'")
+
+
 def test_unknown_measure_builder_root_cause(engine):
     """query_test.rb:774-781: "MDX object '[Measures].[Dummy]' not found
     in cube 'Sales'"."""

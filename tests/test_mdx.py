@@ -8,7 +8,7 @@ import re
 import pytest
 
 from mondrian_olap_spark.mdx import MdxError, MdxParser, execute_mdx
-from mondrian_olap_spark.query import Query
+from mondrian_olap_spark.query import Query, QueryError
 
 
 def like(a: str, b: str) -> bool:
@@ -2659,6 +2659,100 @@ def test_matches_value_operator(engine):
     row = r.df.collect()[0]
     assert [row["m1"], row["m2"], row["m3"]] == [True, False, False]
     assert [row["m4"], row["m5"], row["m6"]] == [True, True, True]
+
+
+def test_matches_reads_the_whole_accessor_chain(engine):
+    """The left operand of MATCHES is the whole ``[Customer].CurrentMember
+    .Name`` chain: written bare, inside IIf and parenthesized, the formula
+    answers the same over the regions."""
+    forms = [
+        "[Customer].CurrentMember.Name MATCHES 'A.*'",
+        "IIf([Customer].CurrentMember.Name MATCHES 'A.*', 1, 0)",
+        "([Customer].CurrentMember.Name) MATCHES 'A.*'",
+    ]
+    members = " ".join(
+        f"MEMBER [Measures].[m{i}] AS '{f.replace(chr(39), chr(39) * 2)}'"
+        for i, f in enumerate(forms)
+    )
+    r = execute_mdx(
+        engine,
+        f"WITH {members} SELECT {{[Measures].[m0], [Measures].[m1], "
+        "[Measures].[m2]} ON COLUMNS, [Customer].[Region].Members ON ROWS "
+        "FROM [Sales]",
+    )
+    rows = r.df.collect()
+    assert [x["m0"] for x in rows] == [True, True, True, False, False]
+    assert [x["m1"] for x in rows] == [1, 1, 1, 0, 0]
+    assert [x["m2"] for x in rows] == [x["m0"] for x in rows]
+
+
+def test_current_member_unknown_property_is_named(engine):
+    """``.Properties('nope')`` after a CurrentMember names ``nope`` in its
+    error, not the word Properties."""
+    with pytest.raises(QueryError, match="'nope'"):
+        execute_mdx(
+            engine,
+            "WITH MEMBER [Measures].[P] AS "
+            "'[Customer].CurrentMember.Properties(''nope'')' "
+            "SELECT [Measures].[P] ON COLUMNS, "
+            "[Customer].[Region].Members ON ROWS FROM [Sales]",
+        )
+
+
+def test_set_statistic_over_a_current_member_set_raises(engine):
+    """A set statistic reads its set once, at parse time: a set that moves
+    with the current member is an MdxError saying so."""
+    with pytest.raises(MdxError, match="depends on the current member"):
+        execute_mdx(
+            engine,
+            "WITH MEMBER [Measures].[S] AS "
+            "'Sum([Customer].CurrentMember.Children, [Measures].[Sum Qty])' "
+            "SELECT [Measures].[S] ON COLUMNS, "
+            "[Customer].[Region].Members ON ROWS FROM [Sales]",
+        )
+
+
+@pytest.mark.parametrize(
+    "rows, sql_tail",
+    [
+        (
+            "Filter([Customer].[Region].Members, [Measures].[Sum Qty] > 31000)",
+            "HAVING sum(l_quantity) > 31000 ORDER BY r_name",
+        ),
+        (
+            "Order([Customer].[Region].Members, [Measures].[Sum Qty], BDESC)",
+            "ORDER BY sum(l_quantity) DESC",
+        ),
+        (
+            "TopCount([Customer].[Region].Members, 2, [Measures].[Sum Qty])",
+            "ORDER BY sum(l_quantity) DESC LIMIT 2",
+        ),
+    ],
+)
+def test_axis_op_reads_an_unselected_measure(engine, duck, rows, sql_tail):
+    """An axis FILTER/ORDER/TOPCOUNT may read a measure no axis selects:
+    the grid aggregates it as a hidden column and the result shows only
+    the selected measure, in the op's order."""
+    r = execute_mdx(
+        engine,
+        f"SELECT [Measures].[Sum Price] ON COLUMNS, {rows} ON ROWS "
+        "FROM [Sales]",
+    )
+    assert r.df.columns == ["region_name", "sum_price"]
+    got = [(x["region_name"], x["sum_price"]) for x in r.df.collect()]
+    expected = duck.execute(
+        f"""
+        SELECT r_name, sum(CAST(l_extendedprice AS DECIMAL(12,2)))::DOUBLE
+        FROM lineitem
+        JOIN orders ON l_orderkey = o_orderkey
+        JOIN customer ON o_custkey = c_custkey
+        JOIN nation ON c_nationkey = n_nationkey
+        JOIN region ON n_regionkey = r_regionkey
+        GROUP BY r_name {sql_tail}
+        """
+    ).fetchall()
+    assert [g[0] for g in got] == [e[0] for e in expected]
+    assert [g[1] for g in got] == pytest.approx([e[1] for e in expected])
 
 
 def test_coalesceempty_mixed_types(engine):

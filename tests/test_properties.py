@@ -11,14 +11,23 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from pyspark.errors import (
+    ArithmeticException,
+    NumberFormatException,
+    SparkRuntimeException,
+)
+
 from mondrian_olap_spark.formats import format_value
 from mondrian_olap_spark.mdx import (
     _VBA_EXCEL,
+    MdxError,
     MdxParser,
+    execute_mdx,
     references,
     rewrite_calls,
     split_args,
 )
+from mondrian_olap_spark.query import QueryError
 from mondrian_olap_spark.members import format_name, parse_identifier, quote_segment
 
 segments = st.lists(
@@ -173,6 +182,36 @@ def test_formula_literal_is_opaque(engine, body, quote):
     parser = MdxParser(engine, "SELECT FROM [Sales]")
     assert parser.translate_expression_text(f) == f
     assert not references(f)
+
+
+#: tokens of the formula family the tree lowers itself
+_family_tokens = st.sampled_from([
+    "1", "2.5", "'a'", "'A.*'", "[Measures].[Sum Qty]",
+    "[Measures].[Sum Price]", "+", "-", "*", "/", "=", "<>", "<", ">",
+    "AND", "OR", "NOT", "(", ")", ",", "CASE", "WHEN", "THEN", "ELSE",
+    "END", "IIf", "CoalesceEmpty", "MATCHES", ".Name", ".Item(0)",
+])
+
+
+@given(st.lists(_family_tokens, min_size=1, max_size=10))
+@settings(max_examples=150, deadline=None)
+def test_formula_answers_or_raises_a_typed_error(engine, toks):
+    """A ``WITH MEMBER`` formula of the migrated family's tokens, in any
+    order, answers or raises MdxError/QueryError — never a Spark
+    ParseException or AnalysisException on text the engine produced.
+    Runtime cast and arithmetic errors (``'a' * 2`` under ANSI) are a
+    separate matter: the formula is well-formed."""
+    formula = " ".join(toks)
+    mdx = (
+        "WITH MEMBER [Measures].[F] AS '" + formula.replace("'", "''")
+        + "' SELECT [Measures].[F] ON COLUMNS FROM [Sales]"
+    )
+    try:
+        execute_mdx(engine, mdx).df.collect()
+    except (MdxError, QueryError):
+        pass
+    except (ArithmeticException, NumberFormatException, SparkRuntimeException):
+        pass
 
 
 number_formats = st.sampled_from(

@@ -118,6 +118,9 @@ def main():
     # and the adversarial layout at once) would delete each other's files
     warehouse = tempfile.mkdtemp(prefix="oracle-warehouse-")
     atexit.register(shutil.rmtree, warehouse, ignore_errors=True)
+    # the smallest heap under which both layouts pass side by side at
+    # sf0.01 (peak JVM RSS about 2.5 GB each); at 1g broadcast builds
+    # run out of memory
     spark = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName("oracle-check")
@@ -125,7 +128,7 @@ def main():
         .config("spark.sql.shuffle.partitions", parts)
         .config("spark.sql.adaptive.enabled", aqe)
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "6g")
+        .config("spark.driver.memory", "1536m")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
